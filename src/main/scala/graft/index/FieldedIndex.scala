@@ -1753,7 +1753,8 @@ object FieldedIndex {
     // ONE hits⋈source join for every query (round 6): each hit row carries
     // its qid, so the per-query wrapping is a qid-selected CASE over the
     // same row instead of one join + union branch per query — row-identical
-    // to the former per-qid frames (a hit has exactly one qid), with half
+    // to the former per-qid frames (a hit has exactly one qid, and the
+    // search above rejects a batch with a duplicate qid), with half
     // the codegen/stage count on multi-query highlights.
     val fragByQid = termsByQid.map { case (qid, terms) =>
       qid -> array_join(transform(split(col("value"), " "),

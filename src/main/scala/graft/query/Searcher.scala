@@ -22,10 +22,11 @@ import graft.query.BlockMaxWand.{QueryTerm, WandQuery}
   *
   *  1. analyze the query with the indexing chain (rank-identity
   *     precondition);
-  *  2. a query-sized df lookup: one narrow job over the cached shard
-  *     indexes that hash-looks-up ONLY the query's terms and sums their
-  *     per-shard posting counts (df(term) = Σ_shards postings, exactly the
-  *     term_stats value — each doc contributes one posting per term). No
+  *  2. a query-sized df lookup for terms the handle's df cache has not
+  *     seen: one narrow job over the cached shard indexes that
+  *     hash-looks-up ONLY those terms and sums their per-shard posting
+  *     counts (df(term) = Σ_shards postings, exactly the term_stats
+  *     value — each doc contributes one posting per term). No
   *     full-vocabulary state ever reaches the driver: at 10^12 docs the
   *     dictionary stays sharded on the executors;
   *  3. the scoring fan-out: one narrow job where every shard runs the
@@ -34,8 +35,11 @@ import graft.query.BlockMaxWand.{QueryTerm, WandQuery}
   *  4. per-shard top-k hits (k × shards × queries tuples, tiny) merge on the
   *     driver under the deterministic global ordering.
   *
-  * No shuffle, no sort, no scan of non-query terms anywhere on the query
-  * path — the per-query plan is two short jobs over cached partitions.
+  * A warm search is one fan-out job, plus one df-lookup job on a cache
+  * miss; the top-k frame is a driver-ordered local relation, so collecting
+  * it launches nothing more. A batch in which no query keeps a scorable
+  * term launches no fan-out at all. No shuffle, no sort, no scan of
+  * non-query terms anywhere on the query path.
   */
 object Searcher {
 
@@ -231,7 +235,13 @@ object Searcher {
     val shareTheta = sys.env.getOrElse("GRAFT_SHARED_THETA", "1") != "0"
     val runId = java.util.UUID.randomUUID().toString
 
-    val merged = treeTopK(mh.shards, kk) { si =>
+    // every cursor absent from the corpus, or a filter no doc carries:
+    // nothing can match, so no fan-out job
+    val live = (specs.nonEmpty || phraseSpecs.nonEmpty) &&
+      (!hasFilter || filterKeys.exists(dfByKey.contains))
+    // single bool query ⇒ one qid (0); the shared frame builder keeps the
+    // deterministic-ordering contract in ONE place
+    fanOutTopK(mh.spark, mh.shards, kk, live) { si =>
       val cursors = specs.flatMap { s =>
         val tp = si.terms.get(s.key)
         if (tp == null) None
@@ -268,11 +278,7 @@ object Searcher {
         tb, ArraySeq.unsafeWrapArray(phraseCursors),
         ArraySeq.unsafeWrapArray(nblocks), reqMask)
         .iterator.map { case (d, s) => (0, d, s) }
-    }
-
-    // single bool query ⇒ one qid (0); the shared frame builder keeps the
-    // deterministic-ordering contract in ONE place
-    topKFrame(mh.spark, merged).drop("qid")
+    }.drop("qid")
   }
 
   private val BlockCols = Seq("doc_shard", "term", "block_id", "n",
@@ -521,7 +527,18 @@ object Searcher {
       depth = math.max(2, (math.log(parts.toDouble) / math.log(64.0)).ceil.toInt))
   }
 
-  /** Build the (qid, rnk, doc_id, score_x6) frame from merged top-k. */
+  /** The serving fan-out end to end: [[treeTopK]] over the shards, then the
+    * driver-ordered frame. `live = false` (no query kept a scorable term)
+    * skips the job and returns the empty frame. */
+  private def fanOutTopK(spark: SparkSession, shards: RDD[ShardIndex], k: Int,
+      live: Boolean)(perShard: ShardIndex => Iterator[(Int, Long, Double)])
+      : DataFrame =
+    topKFrame(spark, if (live) treeTopK(shards, k)(perShard) else Map.empty)
+
+  /** Build the (qid, rnk, doc_id, score_x6) frame from merged top-k: a local
+    * relation whose rows are already in (qid, rnk) order, so collecting it
+    * runs no job (a cluster sort here would add a sampling job, a shuffle-map
+    * job and a result job to every search). */
   private def topKFrame(spark: SparkSession,
       merged: Map[Int, Array[(Long, Long)]]): DataFrame = {
     val rows = new java.util.ArrayList[Row]()
@@ -537,17 +554,27 @@ object Searcher {
       StructField("rnk", LongType, nullable = false),
       StructField("doc_id", LongType, nullable = false),
       StructField("score_x6", LongType, nullable = false)))
-    spark.createDataFrame(rows, schema).orderBy("qid", "rnk")
+    spark.createDataFrame(rows, schema)
   }
 
-  /** Search via a resident handle: two short jobs over the cached shard
-    * indexes, tree-merged top-k. `chain` analyzes the query string
+  /** One batch ranks each qid once: hits merge by qid ([[treeTopK]]) and θ
+    * boards are keyed by it, so two queries sharing a qid would fuse into
+    * one ranking and prune each other. */
+  private def requireDistinctQids(qids: Seq[Int]): Unit = {
+    val seen = mutable.HashSet.empty[Int]
+    qids.foreach(q => require(seen.add(q), s"duplicate qid $q in one search batch"))
+  }
+
+  /** Search via a resident handle: one fan-out job over the cached shard
+    * indexes, plus one df-lookup job on a df-cache miss; the top-k frame is
+    * a driver-ordered local relation. `chain` analyzes the query string
     * with the target field's analyzer (reference semantics: ES analyzes
     * query text with the queried field's mapped chain,
     * elastic/settings.go:87-138) — default is the stopword text chain the
     * single-field indexes use. */
   def search(h: Handle, rawQueries: Seq[(Int, String)], k: Int,
              chain: String => Array[String] = Analyzer.analyzeStop): DataFrame = {
+    requireDistinctQids(rawQueries.map(_._1))
     // analyzed terms with query-occurrence weights (Lucene: a repeated query
     // term contributes once per occurrence)
     val analyzed: Seq[(Int, Map[String, Int])] = rawQueries.map { case (qid, q) =>
@@ -580,7 +607,8 @@ object Searcher {
     val kk = k
     val shareTheta = sys.env.getOrElse("GRAFT_SHARED_THETA", "1") != "0"
     val runId = java.util.UUID.randomUUID().toString
-    val merged = treeTopK(h.shards, kk) { si =>
+    val live = wandQueries.exists(_.terms.nonEmpty)
+    fanOutTopK(h.spark, h.shards, kk, live) { si =>
       wandQueries.iterator.flatMap { q =>
         val byTerm: Map[String, IndexedSeq[PostingBlock]] =
           q.terms.iterator.flatMap { t =>
@@ -595,7 +623,6 @@ object Searcher {
           .iterator.map { case (doc, s) => (q.qid, doc, s) }
       }
     }
-    topKFrame(h.spark, merged)
   }
 
   /** ES match with `fuzziness` (the Lucene FuzzyQuery rewrite): each
@@ -668,7 +695,10 @@ object Searcher {
   def termSuggest(h: Handle, text: String, size: Int,
       chain: String => Array[String] = Analyzer.analyzeStop): DataFrame = {
     import h.spark.implicits._
-    val terms = chain(text).distinct.sorted
+    // Spark's string order (UTF-8 bytes, not UTF-16 units), so the rows
+    // below come out in the order a sort on `input` would give
+    val terms = chain(text).distinct
+      .sortBy(org.apache.spark.unsafe.types.UTF8String.fromString)
     val present = resolveDfs(h, terms.toArray)
     val missing = terms.filterNot(present.contains)
       .map(t => t -> Fuzzy.autoEdits(t)).filter(_._2 > 0).toArray
@@ -681,13 +711,14 @@ object Searcher {
         case ((t, df, d), i) => (q, (i + 1).toLong, t, df, d.toLong)
       }
     }.toSeq
+    // already in (input, rnk) order: terms are sorted, ranks ascend
     rows.toDF("input", "rnk", "suggestion", "df", "distance")
-      .orderBy("input", "rnk")
   }
 
   def fuzzySearch(h: Handle, rawQueries: Seq[(Int, String)], k: Int,
       chain: String => Array[String] = Analyzer.analyzeStop,
       fuzziness: Int = -1, maxExpansions: Int = 50): DataFrame = {
+    requireDistinctQids(rawQueries.map(_._1))
     val analyzed: Seq[(Int, Map[String, Int])] = rawQueries.map { case (qid, q) =>
       qid -> chain(q).groupBy(identity).view.mapValues(_.length).toMap
     }
@@ -859,6 +890,7 @@ object Searcher {
     * nothing (conjunction). */
   def phraseSearch(h: Handle, rawQueries: Seq[(Int, String)], k: Int,
       chain: String => Array[(String, Int)]): DataFrame = {
+    requireDistinctQids(rawQueries.map(_._1))
     val analyzed: Seq[(Int, Array[(String, Int)])] =
       rawQueries.map { case (qid, q) => qid -> chain(q) }
     val uniqueTerms = analyzed.flatMap(_._2.map(_._1)).distinct.toArray
@@ -873,7 +905,7 @@ object Searcher {
           occs.iterator.map(o => Bm25.idf(nDocs, dfByTerm(o._1))).sum)
     }.toArray
 
-    val merged = treeTopK(h.shards, kk) { si =>
+    fanOutTopK(h.spark, h.shards, kk, pqs.nonEmpty) { si =>
       pqs.iterator.flatMap { case (qid, occs, sumIdf) =>
         val lookup: String => Array[PostingBlock] = t => {
           val tp = si.terms.get(t)
@@ -883,7 +915,6 @@ object Searcher {
           .iterator.map { case (doc, s) => (qid, doc, s) }
       }
     }
-    topKFrame(h.spark, merged)
   }
 
   /** ES span_near (in_order) — ordered proximity: each query is (qid, raw
@@ -898,6 +929,7 @@ object Searcher {
     * from every clause). Returns (qid, rnk, doc_id, score_x6). */
   def spanNearSearch(h: Handle, rawQueries: Seq[(Int, String, Int)], k: Int,
       chain: String => Array[String], inOrder: Boolean = true): DataFrame = {
+    requireDistinctQids(rawQueries.map(_._1))
     val analyzed: Seq[(Int, Array[String], Int)] =
       rawQueries.map { case (qid, q, slop) => (qid, chain(q), slop) }
     val uniqueTerms = analyzed.flatMap(_._2).distinct.toArray
@@ -912,7 +944,7 @@ object Searcher {
     }.toArray
 
     val ordered = inOrder
-    val merged = treeTopK(h.shards, kk) { si =>
+    fanOutTopK(h.spark, h.shards, kk, pqs.nonEmpty) { si =>
       pqs.iterator.flatMap { case (qid, ts, slop, sumIdf) =>
         val lookup: String => Array[PostingBlock] = t => {
           val tp = si.terms.get(t)
@@ -927,7 +959,6 @@ object Searcher {
         hits.iterator.map { case (doc, s) => (qid, doc, s) }
       }
     }
-    topKFrame(h.spark, merged)
   }
 
   /** ES match_phrase_prefix (Lucene MultiPhrasePrefixQuery rewritten to a
@@ -943,6 +974,7 @@ object Searcher {
   def phrasePrefixSearch(h: Handle, rawQueries: Seq[(Int, String)], k: Int,
       chain: String => Array[(String, Int)],
       expand: String => Seq[(String, Long)]): DataFrame = {
+    requireDistinctQids(rawQueries.map(_._1))
     val analyzed: Seq[(Int, Array[(String, Int)])] =
       rawQueries.map { case (qid, q) => qid -> chain(q) }
     val fixedTerms =
@@ -970,7 +1002,7 @@ object Searcher {
           }
       }.flatten.toArray
 
-    val merged = treeTopK(h.shards, kk) { si =>
+    fanOutTopK(h.spark, h.shards, kk, pqs.nonEmpty) { si =>
       pqs.iterator.flatMap { case (qid, slots, sumIdf) =>
         val lookup: String => Array[PostingBlock] = t => {
           val tp = si.terms.get(t)
@@ -980,7 +1012,6 @@ object Searcher {
           .iterator.map { case (doc, s) => (qid, doc, s) }
       }
     }
-    topKFrame(h.spark, merged)
   }
 
   /** ES term-query analogue (filter context — set-valued, no scoring): all

@@ -1,0 +1,139 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.analysis.Analyzer
+import graft.harness.{FieldedQueries, QuerySet, TextQueries}
+import graft.index.{FieldedIndex, PostingsBuilder}
+import graft.io.TableIO
+import graft.query.Searcher
+
+/** The per-query job budget of the serving path: a warm search is one
+  * fan-out job plus one df-lookup job on a df-cache miss, and collecting the
+  * driver-ordered top-k frame launches nothing more. Jobs are counted by a
+  * listener filtered on this thread's job group. */
+class ServingJobsSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private lazy val dir: String = {
+    val d = s"${sys.props("user.dir")}/target/test-idx/serving-jobs"
+    new TableIO(d).deleteAll()
+    PostingsBuilder.build(spark, TextQueries.docs(spark, "/root/testdata/sf0.001"),
+      d, PostingsBuilder.Config(shardSize = 128, shardGroups = 2))
+    d
+  }
+  private lazy val handle = Searcher.open(spark, dir)
+
+  /** Runs `body`, returning its result and the number of Spark jobs it
+    * launched. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"serving-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "serving job budget")
+    try {
+      val out = body
+      Bridge.drainListenerBus(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq)
+
+  test("a warm search is one job on a df-cache hit and two when a term is new") {
+    val q = Seq(1 -> "fast join merge")
+    val first = rows(Searcher.search(handle, q, QuerySet.K))
+    assert(first.nonEmpty)
+    val (hit, hitJobs) = jobsOf(rows(Searcher.search(handle, q, QuerySet.K)))
+    assert(hitJobs === 1)
+    assert(hit === first)
+    // a term the handle has never looked up costs the df-lookup job too
+    val (_, missJobs) = jobsOf(
+      rows(Searcher.search(handle, Seq(1 -> "fast join merge zqxjvw"), QuerySet.K)))
+    assert(missJobs === 2)
+  }
+
+  test("multiSearch on a warm multi-field handle is one job") {
+    val mh = Searcher.openMulti(spark, Seq("body" -> dir))
+    try {
+      val legs = Seq(Searcher.MultiLeg("body",
+        Analyzer.analyzeStop("hash join").groupBy(identity).view
+          .mapValues(_.length).toMap))
+      val first = rows(Searcher.multiSearch(mh, legs, QuerySet.K))
+      assert(first.nonEmpty)
+      val (hit, jobs) = jobsOf(rows(Searcher.multiSearch(mh, legs, QuerySet.K)))
+      assert(jobs === 1)
+      assert(hit === first)
+    } finally mh.close()
+  }
+
+  test("the 20-query batch collects in (qid, rnk) order") {
+    val df = Searcher.search(handle, QuerySet.queries, QuerySet.K)
+    val got = rows(df)
+    assert(QuerySet.queries.length === 20)
+    assert(got.map(_.take(2)).distinct.length === got.length)
+    assert(got === rows(df.orderBy("qid", "rnk")))
+    assert(got.map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long])) ===
+      got.map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long])).sorted)
+  }
+
+  test("no surviving query term launches no job and keeps the schema") {
+    val schema = Searcher.search(handle, QuerySet.queries, QuerySet.K).schema
+    val (empty, emptyJobs) =
+      jobsOf(Searcher.search(handle, Seq.empty, QuerySet.K))
+    val (stop, stopJobs) =
+      jobsOf(Searcher.search(handle, Seq(1 -> "the of and"), QuerySet.K))
+    assert(emptyJobs === 0 && stopJobs === 0)
+    assert(empty.schema === schema && stop.schema === schema)
+    val ((e, s), collectJobs) = jobsOf((rows(empty), rows(stop)))
+    assert(e.isEmpty && s.isEmpty && collectJobs === 0)
+    // the phrase paths skip the fan-out the same way
+    val (phrase, phraseJobs) = jobsOf(rows(Searcher.phraseSearch(handle,
+      Seq(1 -> "the of and"), QuerySet.K,
+      Analyzer.analyzeChainPos(Analyzer.TextStop, _))))
+    assert(phrase.isEmpty && phraseJobs === 0)
+  }
+
+  test("a batch with a duplicate qid is rejected; an empty highlight is empty") {
+    val dup = Seq(7 -> "fast join", 7 -> "hash join")
+    val pos = Analyzer.analyzeChainPos(Analyzer.TextStop, _: String)
+    val calls: Seq[() => DataFrame] = Seq(
+      () => Searcher.search(handle, dup, QuerySet.K),
+      () => Searcher.fuzzySearch(handle, dup, QuerySet.K),
+      () => Searcher.phraseSearch(handle, dup, QuerySet.K, pos),
+      () => Searcher.spanNearSearch(handle, dup.map { case (q, t) => (q, t, 1) },
+        QuerySet.K, Analyzer.analyzeStop),
+      () => Searcher.phrasePrefixSearch(handle, dup, QuerySet.K, pos,
+        _ => Seq.empty))
+    calls.foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("duplicate qid 7"))
+    }
+    // highlighting searches first, so it refuses the same batch
+    val idx = FieldedQueries.ensureFieldedIndex(spark)
+    val title = FieldedIndex.CrossrefMapping.find(_.field == "title").get
+    intercept[IllegalArgumentException] {
+      FieldedIndex.highlight(spark, idx, title, Seq(1 -> "record", 1 -> "title"), 2)
+    }
+    assert(FieldedIndex.highlight(spark, idx, title, Seq.empty, 2).collect().isEmpty)
+  }
+}
