@@ -57,13 +57,15 @@ object BlockMaxWand {
   final case class Cursor(blocks: IndexedSeq[PostingBlock], idf: Double,
       weight: Int, avgdl: Double, tightBounds: Boolean, leg: Int = 0)
 
-  /** A match_phrase clause inside a bool query: per unique phrase term its
-    * blocks within the current shard, the occurrence list as (unique-term
-    * index, relative tokenizer offset), and the phrase's summed idf. The
-    * kernel walks it as ONE composite cursor (Lucene's bool-over-phrase:
-    * the PhraseQuery is a clause scorer like any other). */
+  /** A positional clause (match_phrase, span_near, match_phrase_prefix;
+    * alone or inside a bool query): per unique term its blocks within the
+    * current shard (empty when the shard lacks the term), the position slots
+    * as member-term indexes in query order, the frequency law, and the
+    * clause's summed idf. The kernel walks it as ONE composite cursor
+    * (Lucene's bool-over-phrase: the PhraseQuery is a clause scorer like
+    * any other). See [[Phrase]] for slots and laws. */
   final case class PhraseCursor(termBlocks: IndexedSeq[IndexedSeq[PostingBlock]],
-      occTerm: Array[Int], occOff: Array[Int], sumIdf: Double,
+      slots: Array[Array[Int]], law: Phrase.Law, sumIdf: Double,
       avgdl: Double, tightBounds: Boolean, leg: Int = 0)
 
   private final val Slack = 0.6e-6 // half a micro-unit + FP headroom
@@ -196,53 +198,89 @@ object BlockMaxWand {
     }
   }
 
-  /** Composite two-phase cursor for a match_phrase clause — Lucene's
-    * PhraseScorer as a WANDScorer clause (bool-over-phrase). The
-    * APPROXIMATION is the leapfrog conjunction of the phrase's unique terms
-    * (curDoc = next doc containing all of them, candidates bounded by the
-    * rarest term); [[matches]] confirms position alignment lazily and
-    * caches the phrase frequency (Lucene TwoPhaseIterator). Every bound is
-    * sumIdf · min over terms of the term's RAW block bound — valid because
-    * phraseFreq ≤ tf of every phrase term and tfNorm is monotone in tf, so
-    * sumIdf·tfNorm(pf, dl) ≤ sumIdf·tfNorm(tf_i, dl) ≤ sumIdf·bound_i for
-    * each i. Boundaries take the min over terms, so the shallow-check
-    * contract ("bound valid through blockBoundary") is inherited from the
-    * per-term cursors. */
+  /** The composite two-phase clause cursor — Lucene's PhraseScorer as a
+    * WANDScorer clause. Its inner cursors are [[TermIter]]s grouped into the
+    * clause's position slots. The APPROXIMATION is the leapfrog conjunction
+    * of the slots (a slot is on a doc if any member term is; curDoc = next
+    * doc every slot is on, candidates bounded by the rarest slot);
+    * [[matches]] decodes the slots' positions lazily and caches the law's
+    * frequency (Lucene TwoPhaseIterator).
+    *
+    * Every bound is sumIdf · min(1, raw block bounds of the singleton
+    * slots' terms), the min taken only under a slot-bounded law. Valid
+    * because such a law counts freq ≤ tf of each singleton slot's term and
+    * tfNorm is monotone in tf, so sumIdf·tfNorm(freq, dl) ≤
+    * sumIdf·tfNorm(tf_i, dl) ≤ sumIdf·bound_i; and tfNorm < 1 for any freq,
+    * which covers union slots and both span laws. Boundaries take the min
+    * over all inner terms, so the shallow-check contract ("bound valid
+    * through blockBoundary") is inherited from the per-term cursors. */
   private final class PhraseIter(pc: PhraseCursor) extends ScoreIter(pc.leg) {
     // inner cursors with idf=1, weight=1: their ub/blockUbAt are RAW tfNorm
-    // bounds, scaled by the phrase's summed idf here
+    // bounds, scaled by the clause's summed idf here
     private val inner: Array[TermIter] =
       pc.termBlocks.iterator.map(bs =>
         new TermIter(bs, 1.0, 1, pc.avgdl, pc.tightBounds)).toArray
+    private val slots = pc.slots
+    private val bounding: Array[Int] =
+      if (pc.law.slotBounded) slots.filter(_.length == 1).map(_(0)).distinct
+      else Array.empty
+    // a slot no member posts in this shard: the conjunction is empty
+    private val dead = slots.exists(_.forall(pc.termBlocks(_).isEmpty))
+    private val pos = new Array[Array[Int]](slots.length)
     private var alignedDoc = Long.MaxValue
-    private var pf = -1
-    realign()
+    private var freq = -1.0
+    if (!dead) realign()
 
-    val ub: Double = {
-      var m = Double.MaxValue
+    /** sumIdf · min(1, the bounding terms' raw bounds): their global
+      * bounds when `d` < 0, their block bounds at doc `d` otherwise. */
+    private def bound(d: Long): Double =
+      if (dead) 0.0
+      else {
+        var m = 1.0
+        var i = 0
+        while (i < bounding.length) {
+          val t = inner(bounding(i))
+          val b = if (d < 0) t.ub else t.blockUbAt(d)
+          if (b < m) m = b
+          i += 1
+        }
+        pc.sumIdf * m
+      }
+
+    val ub: Double = bound(-1L)
+
+    private def slotDoc(s: Int): Long = {
+      val ms = slots(s)
+      var m = Long.MaxValue
       var i = 0
-      while (i < inner.length) { if (inner(i).ub < m) m = inner(i).ub; i += 1 }
-      pc.sumIdf * m
+      while (i < ms.length) {
+        val c = inner(ms(i)).curDoc
+        if (c < m) m = c
+        i += 1
+      }
+      m
     }
 
-    /** Leapfrog the conjunction to the next doc all terms share. */
+    /** Leapfrog the slot conjunction to the next doc every slot is on. */
     private def realign(): Unit = {
-      pf = -1
+      freq = -1.0
       var d = 0L
-      var i = 0
-      while (i < inner.length) {
-        val c = inner(i).curDoc
+      var s = 0
+      while (s < slots.length) {
+        val c = slotDoc(s)
         if (c > d) d = c
-        i += 1
+        s += 1
       }
       while (d != Long.MaxValue) {
         var m = d
-        i = 0
-        while (i < inner.length) {
-          inner(i).advanceTo(d)
-          val c = inner(i).curDoc
+        s = 0
+        while (s < slots.length) {
+          val ms = slots(s)
+          var i = 0
+          while (i < ms.length) { inner(ms(i)).advanceTo(d); i += 1 }
+          val c = slotDoc(s)
           if (c > m) m = c
-          i += 1
+          s += 1
         }
         if (m == d) { alignedDoc = d; return }
         d = m
@@ -252,16 +290,7 @@ object BlockMaxWand {
 
     def curDoc: Long = alignedDoc
 
-    def blockUbAt(d: Long): Double = {
-      var m = Double.MaxValue
-      var i = 0
-      while (i < inner.length) {
-        val b = inner(i).blockUbAt(d)
-        if (b < m) m = b
-        i += 1
-      }
-      pc.sumIdf * m
-    }
+    def blockUbAt(d: Long): Double = bound(d)
 
     def blockBoundary(d: Long): Long = {
       var m = Long.MaxValue
@@ -274,35 +303,56 @@ object BlockMaxWand {
       m
     }
 
-    /** Position confirm at the aligned doc: count starts s in the lead
-      * occurrence's positions where every other occurrence has its term at
-      * s + relative offset (the exact PhraseScorer alignment — stopword
-      * gaps and the multi-value increment gap are baked into the offsets
-      * and the stored positions). */
-    def matches: Boolean = {
-      if (pf < 0) {
-        val lead = inner(pc.occTerm(0)).positions
-        var c = 0
-        var i = 0
-        while (i < lead.length) {
-          val s = lead(i)
-          var ok = true
-          var j = 1
-          while (ok && j < pc.occTerm.length) {
-            ok = java.util.Arrays.binarySearch(
-              inner(pc.occTerm(j)).positions, s + pc.occOff(j)) >= 0
-            j += 1
+    /** Slot s's positions at the aligned doc: its one on-doc member's, or
+      * the on-doc members' merged distinct positions. */
+    private def slotPositions(s: Int): Array[Int] = {
+      val ms = slots(s)
+      if (ms.length == 1) return inner(ms(0)).positions
+      val on = ms.filter(inner(_).curDoc == alignedDoc)
+      if (on.length == 1) return inner(on(0)).positions
+      val arrs = on.map(inner(_).positions)
+      val out = new Array[Int](arrs.iterator.map(_.length).sum)
+      val idx = new Array[Int](arrs.length)
+      var n = 0
+      var last = Int.MinValue
+      var more = true
+      while (more) {
+        var best = -1
+        var bv = Int.MaxValue
+        var j = 0
+        while (j < arrs.length) {
+          if (idx(j) < arrs(j).length && arrs(j)(idx(j)) < bv) {
+            bv = arrs(j)(idx(j)); best = j
           }
-          if (ok) c += 1
-          i += 1
+          j += 1
         }
-        pf = c
+        if (best < 0) more = false
+        else {
+          idx(best) += 1
+          if (bv != last) { out(n) = bv; n += 1; last = bv }
+        }
       }
-      pf > 0
+      java.util.Arrays.copyOf(out, n)
     }
 
-    def score: Double =
-      pc.sumIdf * Bm25.tfNorm(pf.toDouble, inner(0).dl.toDouble, pc.avgdl)
+    /** Position confirm at the aligned doc: the law's frequency over the
+      * slots' positions (stopword gaps and the multi-value increment gap
+      * are baked into the stored positions and the law's offsets). */
+    def matches: Boolean = {
+      if (freq < 0) {
+        var s = 0
+        while (s < slots.length) { pos(s) = slotPositions(s); s += 1 }
+        freq = pc.law.freq(pos)
+      }
+      freq > 0
+    }
+
+    def score: Double = {
+      val lead = slots(0)
+      var i = 0
+      while (inner(lead(i)).curDoc != alignedDoc) i += 1
+      pc.sumIdf * Bm25.tfNorm(freq, inner(lead(i)).dl.toDouble, pc.avgdl)
+    }
 
     def next(): Unit = {
       val t = alignedDoc + 1
@@ -317,6 +367,36 @@ object BlockMaxWand {
       while (i < inner.length) { inner(i).advanceTo(d); i += 1 }
       realign()
     }
+  }
+
+  /** The one bounded top-k of the kernel: hits under the final ordering,
+    * head = weakest (lowest score_x6; ties: highest doc_id). Grows on
+    * demand — an unbounded caller passes k = Int.MaxValue. */
+  private final class TopK(k: Int) {
+    private val heap = mutable.PriorityQueue.empty[(Long, Long, Double)](
+      Ordering.by[(Long, Long, Double), (Long, Long)] {
+        case (x6, d, _) => (-x6, d)
+      })
+
+    def full: Boolean = heap.size >= k
+
+    /** Micro-rounded score of the weakest kept hit (when [[full]]). */
+    def kthX6: Long = heap.head._1
+
+    def offer(doc: Long, s: Double): Unit = {
+      val x6 = math.round(s * 1e6)
+      if (heap.size < k) heap.enqueue((x6, doc, s))
+      else {
+        val (hx6, hdoc, _) = heap.head
+        if (x6 > hx6 || (x6 == hx6 && doc < hdoc)) {
+          heap.dequeue(); heap.enqueue((x6, doc, s))
+        }
+      }
+    }
+
+    /** The kept (doc_id, exact score) hits, unordered. */
+    def drain(): Array[(Long, Double)] =
+      heap.dequeueAll.map((e: (Long, Long, Double)) => (e._2, e._3)).toArray
   }
 
   /** Run one query against one shard's blocks. Returns up to k
@@ -374,8 +454,9 @@ object BlockMaxWand {
       "leg ids must fit the minimum_should_match bitmask (0..63)")
     require(disMaxTieBreaker <= 1.0,
       "dis_max tie_breaker must be ≤ 1 (θ pruning bounds by the leg SUM)")
-    require(phrases.forall(p => p.occTerm.nonEmpty && p.termBlocks.nonEmpty),
-      "phrase clauses need ≥1 occurrence and the blocks of every unique term")
+    require(phrases.forall(p => p.slots.nonEmpty && p.slots.forall(s =>
+        s.nonEmpty && s.forall(i => i >= 0 && i < p.termBlocks.length))),
+      "positional clauses need ≥1 slot, each naming ≥1 of the clause's terms")
     // cursor order = (term cursors in caller order, then phrase cursors):
     // the kernel's FP sum order — and so the exact emitted doubles — is
     // deterministic across runs
@@ -411,11 +492,7 @@ object BlockMaxWand {
     }
     val legSums = if (disMax) new Array[Double](maxLeg + 1) else null
 
-    // heap of (score_x6, doc_id, exactScore); head = weakest under the final
-    // ordering (lowest x6; ties: highest doc_id)
-    implicit val ord: Ordering[(Long, Long, Double)] =
-      Ordering.by[(Long, Long, Double), (Long, Long)] { case (x6, d, _) => (-x6, d) }
-    val heap = mutable.PriorityQueue.empty[(Long, Long, Double)]
+    val top = new TopK(k)
 
     // Cross-shard θ traffic discipline: `sharedSeen` caches the highest
     // global kth this shard has observed (via read OR its own publish), and
@@ -427,8 +504,8 @@ object BlockMaxWand {
 
     def theta: Double = {
       val local =
-        if (heap.size < k) Double.NegativeInfinity
-        else heap.head._1 / 1e6 - Slack
+        if (!top.full) Double.NegativeInfinity
+        else top.kthX6 / 1e6 - Slack
       if (shared == null) local
       else {
         val sx6 = shared.get()
@@ -438,23 +515,13 @@ object BlockMaxWand {
       }
     }
 
-    def drain(): Array[(Long, Double)] =
-      heap.dequeueAll.map((e: (Long, Long, Double)) => (e._2, e._3)).toArray
-
     def offer(doc: Long, s: Double): Unit = {
-      val x6 = math.round(s * 1e6)
-      if (heap.size < k) heap.enqueue((x6, doc, s))
-      else {
-        val (hx6, hdoc, _) = heap.head
-        if (x6 > hx6 || (x6 == hx6 && doc < hdoc)) {
-          heap.dequeue(); heap.enqueue((x6, doc, s))
-        }
-      }
+      top.offer(doc, s)
       // publish the kth-best as a global lower bound only when it ADVANCES
       // the observed global max (max-fold: monotone, race-free — a stale
       // read only weakens pruning, never correctness)
-      if (shared != null && heap.size == k && heap.head._1 > sharedSeen)
-        sharedSeen = shared.accumulateAndGet(heap.head._1,
+      if (shared != null && top.full && top.kthX6 > sharedSeen)
+        sharedSeen = shared.accumulateAndGet(top.kthX6,
           (a, b) => math.max(a, b))
     }
 
@@ -472,10 +539,10 @@ object BlockMaxWand {
         if (acc > theta) p = i
         i += 1
       }
-      if (p == -1) return drain()
+      if (p == -1) return top.drain()
       val pivot = iters(sorted(p)).curDoc
       if (pivot == Long.MaxValue)
-        return drain()
+        return top.drain()
       // fold ties into the pivot set so every term that can contribute to
       // the pivot doc is counted by the block-max check below
       while (p + 1 < n && iters(sorted(p + 1)).curDoc == pivot) p += 1

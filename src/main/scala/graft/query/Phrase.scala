@@ -1,525 +1,167 @@
 package graft.query
 
-import scala.collection.mutable
-
-import graft.index.Codec
-import graft.model.PostingBlock
-
-/** Exact match_phrase scoring over positioned posting blocks — the last
-  * ES-visible capability of the reference's text fields (ES `text` indexes
-  * positions by default, elastic/settings.go:87-138; clients may post
-  * `match_phrase` against title/journal/bibliographic).
+/** Positional frequency laws: match_phrase, match_phrase_prefix and
+  * span_near over positioned posting blocks (ES `text` indexes positions by
+  * default, elastic/settings.go:87-138; clients may post `match_phrase`
+  * against title/journal/bibliographic).
   *
-  * Semantics (Lucene PhraseQuery/PhraseScorer, public behavior):
-  *  - the phrase's analyzed tokens carry their TOKENIZER positions, so a
-  *    stopword dropped from the query leaves the same gap it left in the
-  *    document ("united of states" requires a one-position gap);
-  *  - a doc matches if some start s aligns every occurrence: doc has
-  *    term_i at s + (qpos_i − qpos_0) for all i;
-  *  - score = (Σ_i idf(term_i)) · tfNorm(phraseFreq, dl, avgdl), with
-  *    phraseFreq = the number of alignments (Lucene's ExactPhraseMatcher
-  *    feeding the similarity with phrase frequency; the idf sums over
-  *    phrase positions, duplicates included).
+  * A positional clause is a list of position SLOTS in query order. A slot
+  * is a set of terms: one term for an ordinary query token, the prefix
+  * expansions for the last token of a match_phrase_prefix. A slot is on a
+  * doc if any member term posts it, and its positions there are the
+  * members' merged distinct positions (Lucene's UnionPostingsEnum). A doc
+  * is a candidate only if every slot is on it (conjunction); the law then
+  * counts a frequency from the slots' positions, and the clause scores
+  * sumIdf · tfNorm(freq, dl, avgdl) with sumIdf summed over every slot
+  * member, duplicates included.
   *
-  * Execution shape: a leapfrog conjunction over the phrase terms' cursors
-  * (candidates are bounded by the RAREST term's posting list — the classic
-  * phrase cost), positions decoded only for docs where every term aligns.
-  * No θ pruning: the conjunction is already the selective step, and the
-  * per-shard work is a few block decodes per candidate. */
+  * Execution: a law is the confirm step of one two-phase clause cursor of
+  * the block-max WAND walk ([[BlockMaxWand.PhraseCursor]], Lucene's
+  * TwoPhaseIterator). The slot conjunction is the approximation, positions
+  * decode only at the conjunction docs the pivot walk reaches, and the
+  * clause prunes against θ (and the per-query θ board) like any term
+  * cursor — alone (phrase/span/prefix search) or inside a bool query. */
 object Phrase {
 
-  /** Cursor over one term's blocks with lazy position decode. */
-  private final class PosIter(blocks: Array[PostingBlock]) {
-    private var bi = 0
-    private var pi = 0
-    private var ids: Array[Long] = _
-    private var tfs: Array[Int] = _
-    private var dls: Array[Int] = _
-    private var poss: Array[Array[Int]] = _
-    private var decodedBi = -1
-    private var decodedPosBi = -1
-
-    private def decode(): Unit =
-      if (decodedBi != bi && bi < blocks.length) {
-        val b = blocks(bi)
-        ids = Codec.decodeDocIds(b.doc_ids, b.n)
-        tfs = Codec.decodeTfs(b.tfs, b.n)
-        dls = Codec.decodeTfs(b.dls, b.n)
-        decodedBi = bi
-      }
-
-    def exhausted: Boolean = bi >= blocks.length
-
-    def curDoc: Long =
-      if (exhausted) Long.MaxValue
-      else { decode(); ids(pi) }
-
-    def dl: Int = { decode(); dls(pi) }
-
-    /** Positions of the current posting; throws if the index stores none
-      * (a docs/freqs-only index cannot serve phrases). */
-    def positions: Array[Int] = {
-      decode()
-      if (decodedPosBi != bi) {
-        poss = Codec.decodePositions(blocks(bi).pos, tfs)
-        decodedPosBi = bi
-      }
-      require(poss != null,
-        "index stores no positions (index_options docs/freqs) — phrase queries need a positioned build")
-      poss(pi)
-    }
-
-    def advanceTo(d: Long): Unit = {
-      while (bi < blocks.length && blocks(bi).last_doc_id < d) { bi += 1; pi = 0 }
-      if (exhausted) return
-      decode()
-      var lo = pi
-      var hi = blocks(bi).n - 1
-      if (ids(lo) >= d) return
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (ids(mid) < d) lo = mid + 1 else hi = mid
-      }
-      pi = lo
-    }
+  /** A frequency law over the slots' positions at one conjunction doc
+    * (`pos(j)` = slot j's ascending distinct positions); 0 = no match. */
+  sealed abstract class Law extends Serializable {
+    def freq(pos: Array[Array[Int]]): Double
+    /** freq ≤ |pos(j)| for every slot j, so a singleton slot's stored
+      * per-term block bound also bounds the clause. */
+    def slotBounded: Boolean = false
   }
 
-  /** Number of phrase alignments in the current doc: for each candidate
-    * start from the first occurrence's positions, every other occurrence
-    * must contain start + its relative offset (binary search — arrays are
-    * strictly increasing). */
-  private def phraseFreq(rel: Array[(PosIter, Int)]): Int = {
-    val lead = rel(0)._1.positions
-    var pf = 0
-    var i = 0
-    while (i < lead.length) {
-      val s = lead(i)
-      var ok = true
-      var j = 1
-      while (ok && j < rel.length) {
-        val (it, off) = rel(j)
-        ok = java.util.Arrays.binarySearch(it.positions, s + off) >= 0
-        j += 1
-      }
-      if (ok) pf += 1
-      i += 1
-    }
-    pf
-  }
-
-  /** Score one analyzed phrase (term-occurrence array with tokenizer
-    * positions) against one shard's blocks. Returns up to k (doc_id, exact
-    * score) hits, unordered. */
-  def scoreShard(blocksByTerm: String => Array[PostingBlock],
-                 occs: Array[(String, Int)], sumIdf: Double, avgdl: Double,
-                 k: Int): Array[(Long, Double)] = {
-    if (occs.isEmpty) return Array.empty
-    val uniq = occs.map(_._1).distinct
-    val tps = uniq.map(blocksByTerm)
-    if (tps.exists(_ == null)) return Array.empty // conjunction: all terms
-    val iterByTerm = uniq.zip(tps.map(new PosIter(_))).toMap
-    val base = occs(0)._2
-    val rel: Array[(PosIter, Int)] =
-      occs.map { case (t, p) => (iterByTerm(t), p - base) }
-    val iters = iterByTerm.values.toArray
-
-    // heap under the deterministic ordering (score_x6 asc at head, doc
-    // desc), exactly the WAND heap shape
-    implicit val ord: Ordering[(Long, Long, Double)] =
-      Ordering.by[(Long, Long, Double), (Long, Long)] { case (x6, d, _) => (-x6, d) }
-    val heap = mutable.PriorityQueue.empty[(Long, Long, Double)]
-    def offer(doc: Long, s: Double): Unit = {
-      val x6 = math.round(s * 1e6)
-      if (heap.size < k) heap.enqueue((x6, doc, s))
-      else {
-        val (hx6, hdoc, _) = heap.head
-        if (x6 > hx6 || (x6 == hx6 && doc < hdoc)) {
-          heap.dequeue(); heap.enqueue((x6, doc, s))
+  /** Exact phrase and multi-phrase (Lucene PhraseQuery/PhraseScorer,
+    * MultiPhraseQuery), public behavior:
+    *  - the phrase's analyzed tokens carry their TOKENIZER positions, so a
+    *    stopword dropped from the query leaves the same gap it left in the
+    *    document ("united of states" requires a one-position gap); `off(j)`
+    *    is slot j's position relative to slot 0;
+    *  - freq = the number of starts s in slot 0's positions where every
+    *    slot j has a position s + off(j) (ExactPhraseMatcher's phrase
+    *    frequency). With singleton slots this is match_phrase; the last
+    *    slot of a match_phrase_prefix holds its expansions (term order, up
+    *    to max_expansions), and its idf sums over the full term set, as
+    *    MultiPhraseWeight collects statistics for every term. */
+  final case class Aligned(off: Array[Int]) extends Law {
+    override def slotBounded: Boolean = true
+    def freq(pos: Array[Array[Int]]): Double = {
+      val lead = pos(0)
+      var pf = 0
+      var i = 0
+      while (i < lead.length) {
+        val s = lead(i)
+        var ok = true
+        var j = 1
+        while (ok && j < pos.length) {
+          ok = java.util.Arrays.binarySearch(pos(j), s + off(j)) >= 0
+          j += 1
         }
-      }
-    }
-
-    // leapfrog conjunction
-    var d = 0L
-    var i = 0
-    while (i < iters.length) {
-      val c = iters(i).curDoc
-      if (c > d) d = c
-      i += 1
-    }
-    while (d != Long.MaxValue) {
-      var m = d
-      i = 0
-      while (i < iters.length) {
-        iters(i).advanceTo(d)
-        val c = iters(i).curDoc
-        if (c > m) m = c
+        if (ok) pf += 1
         i += 1
       }
-      if (m == d) { // all aligned on d
-        val pf = phraseFreq(rel)
-        if (pf > 0) offer(d, sumIdf * Bm25.tfNorm(pf.toDouble,
-          iters(0).dl.toDouble, avgdl))
-        d += 1
-      } else d = m
+      pf.toDouble
     }
-    heap.dequeueAll.map((e: (Long, Long, Double)) => (e._2, e._3)).toArray
   }
 
-  // ---- SpanNear (ordered proximity with slop — ES span_near) -------------
-
-  /** Score one ordered span_near (clauses = the analyzed tokens in query
-    * order, each a span_term; duplicates allowed) against one shard's
-    * blocks — ES `span_near` with `in_order: true`.
+  /** Ordered span_near (ES `span_near` with `in_order: true`; slots = the
+    * analyzed tokens in query order, duplicates allowed).
     *
-    * Match law: a match starts at each lead-clause position p0 whose
-    * MINIMAL ordered completion p0 < p1 < … < p_{n−1} (p_j from clause
-    * j's positions) uses slopUsed = (p_{n−1} − p0 + 1) − n ≤ slop. The
-    * greedy completion (each p_j = the first clause-j position past
-    * p_{j−1}) IS the minimum: taking the earliest feasible position never
-    * shrinks later choices (SpanNearPropertySpec proves greedy ≡
-    * exhaustive-min on random corpora). Gaps survive arithmetic untouched,
-    * so bridging the multi-value position_increment_gap costs ≥ gap slop
-    * — the ES contract.
+    * Match law: a match starts at each lead-slot position p0 whose MINIMAL
+    * ordered completion p0 < p1 < … < p_{n−1} (p_j from slot j's positions)
+    * uses slopUsed = (p_{n−1} − p0 + 1) − n ≤ slop. The greedy completion
+    * (each p_j = the first slot-j position past p_{j−1}) IS the minimum:
+    * taking the earliest feasible position never shrinks later choices
+    * (SpanNearPropertySpec proves greedy ≡ exhaustive-min on random
+    * corpora). Gaps survive arithmetic untouched, so bridging the
+    * multi-value position_increment_gap costs ≥ gap slop — the ES contract.
     *
-    * Scoring (Lucene SloppyPhraseScorer's sloppyFreq law, quantized):
-    * each match weighs 1/(1 + slopUsed); the engine accumulates
+    * Scoring (Lucene SloppyPhraseScorer's sloppyFreq law, quantized): each
+    * match weighs 1/(1 + slopUsed); the engine accumulates
     * round(1e6 · weight) as an INTEGER so the per-doc frequency is
     * order-independent and bit-identical across engines (the repo's
     * micro-unit convention applied to Lucene's float accumulation —
-    * documented deviation), then freq = fx6/1e6 feeds the usual
-    * sumIdf · tfNorm(freq, dl, avgdl). A single-clause query degrades to
-    * freq = tf exactly. Returns up to k (doc_id, score), unordered. */
-  def scoreShardSpanNear(blocksByTerm: String => Array[PostingBlock],
-                         terms: Array[String], slop: Int, sumIdf: Double,
-                         avgdl: Double, k: Int): Array[(Long, Double)] = {
-    if (terms.isEmpty) return Array.empty
-    val uniq = terms.distinct
-    val tps = uniq.map(blocksByTerm)
-    if (tps.exists(_ == null)) return Array.empty // conjunction: all clauses
-    val iterByTerm = uniq.zip(tps.map(new PosIter(_))).toMap
-    val clauses: Array[PosIter] = terms.map(iterByTerm)
-    val iters = iterByTerm.values.toArray
-
-    implicit val ord: Ordering[(Long, Long, Double)] =
-      Ordering.by[(Long, Long, Double), (Long, Long)] { case (x6, d, _) => (-x6, d) }
-    val heap = mutable.PriorityQueue.empty[(Long, Long, Double)]
-    def offer(doc: Long, s: Double): Unit = {
-      val x6 = math.round(s * 1e6)
-      if (heap.size < k) heap.enqueue((x6, doc, s))
-      else {
-        val (hx6, hdoc, _) = heap.head
-        if (x6 > hx6 || (x6 == hx6 && doc < hdoc)) {
-          heap.dequeue(); heap.enqueue((x6, doc, s))
+    * documented deviation), then freq = fx6/1e6. A single-slot query
+    * degrades to freq = tf exactly. */
+  final case class OrderedSpan(slop: Int) extends Law {
+    def freq(pos: Array[Array[Int]]): Double = {
+      val lead = pos(0)
+      var fx6 = 0L
+      var i = 0
+      while (i < lead.length) {
+        var prev = lead(i)
+        var ok = true
+        var j = 1
+        while (ok && j < pos.length) {
+          val pj = pos(j)
+          var idx = java.util.Arrays.binarySearch(pj, prev + 1)
+          if (idx < 0) idx = -idx - 1
+          if (idx >= pj.length) ok = false else prev = pj(idx)
+          j += 1
         }
-      }
-    }
-
-    // leapfrog conjunction over the UNIQUE terms' cursors
-    var d = 0L
-    var i = 0
-    while (i < iters.length) {
-      val c = iters(i).curDoc
-      if (c > d) d = c
-      i += 1
-    }
-    while (d != Long.MaxValue) {
-      var m = d
-      i = 0
-      while (i < iters.length) {
-        iters(i).advanceTo(d)
-        val c = iters(i).curDoc
-        if (c > m) m = c
+        if (ok) {
+          val sl = (prev - lead(i) + 1) - pos.length
+          if (sl <= slop) fx6 += math.round(1e6 / (1 + sl))
+        }
         i += 1
       }
-      if (m == d) {
-        val pos: Array[Array[Int]] = clauses.map(_.positions)
-        val lead = pos(0)
-        var fx6 = 0L
-        i = 0
-        while (i < lead.length) {
-          var prev = lead(i)
+      fx6 / 1e6
+    }
+  }
+
+  /** Unordered span_near (ES `span_near` with `in_order: false`); `term(j)`
+    * identifies slot j's term, so duplicate clauses can be recognized.
+    *
+    * Match law (this engine's deterministic contract, inspired by Lucene's
+    * NearSpansUnordered but defined set-wise so both engines replay it
+    * bit-identically — Lucene's own enumeration is a stateful pointer race
+    * whose tie order is queue-internal): every slot occurrence (c, p)
+    * anchors at most one window — each OTHER slot contributes its FIRST
+    * position ≥ p (so p is the window's minimum by construction), except a
+    * slot sharing the ANCHOR's TERM, which contributes its first position
+    * STRICTLY past p: the anchor consumed that occurrence, so
+    * `span_near {a, a}` needs two distinct occurrences of `a` (the Lucene
+    * distinct-spans requirement — without the exception one occurrence
+    * would satisfy both duplicate clauses through a width-1 window); the
+    * window matches iff slopUsed = max(window) − p + 1 − n, clamped at 0
+    * for overlapping duplicate positions, is ≤ slop. Weights accumulate
+    * micro-quantized exactly like the ordered law. Order never matters:
+    * "b a" finds "a b". Single-slot queries degrade to freq = tf. */
+  final case class UnorderedSpan(slop: Int, term: Array[Int]) extends Law {
+    def freq(pos: Array[Array[Int]]): Double = {
+      var fx6 = 0L
+      var c = 0
+      while (c < pos.length) {
+        val anchor = pos(c)
+        var i = 0
+        while (i < anchor.length) {
+          val p = anchor(i)
+          var hi = p
           var ok = true
-          var j = 1
+          var j = 0
           while (ok && j < pos.length) {
-            val pj = pos(j)
-            var idx = java.util.Arrays.binarySearch(pj, prev + 1)
-            if (idx < 0) idx = -idx - 1
-            if (idx >= pj.length) ok = false else prev = pj(idx)
+            if (j != c) {
+              val pj = pos(j)
+              // first position ≥ p; STRICTLY > p for a slot sharing the
+              // anchor's term: the anchor consumed occurrence p
+              val floor = if (term(j) == term(c)) p + 1 else p
+              var idx = java.util.Arrays.binarySearch(pj, floor)
+              if (idx < 0) idx = -idx - 1
+              if (idx >= pj.length) ok = false
+              else if (pj(idx) > hi) hi = pj(idx)
+            }
             j += 1
           }
           if (ok) {
-            val sl = (prev - lead(i) + 1) - pos.length
+            val sl = math.max(0, (hi - p + 1) - pos.length)
             if (sl <= slop) fx6 += math.round(1e6 / (1 + sl))
           }
           i += 1
         }
-        if (fx6 > 0) offer(d, sumIdf * Bm25.tfNorm(fx6 / 1e6,
-          iters(0).dl.toDouble, avgdl))
-        d += 1
-      } else d = m
-    }
-    heap.dequeueAll.map((e: (Long, Long, Double)) => (e._2, e._3)).toArray
-  }
-
-  /** Score one UNORDERED span_near (ES `span_near` with `in_order: false`)
-    * against one shard's blocks.
-    *
-    * Match law (this engine's deterministic contract, inspired by Lucene's
-    * NearSpansUnordered but defined set-wise so both engines replay it
-    * bit-identically — Lucene's own enumeration is a stateful pointer
-    * race whose tie order is queue-internal): every clause occurrence
-    * (c, p) anchors at most one window — each OTHER clause contributes its
-    * FIRST position ≥ p (so p is the window's minimum by construction),
-    * except a clause sharing the ANCHOR's TERM, which contributes its
-    * first position STRICTLY past p: the anchor consumed that occurrence,
-    * so `span_near {a, a}` needs two distinct occurrences of `a` (the
-    * Lucene distinct-spans requirement — without the exception one
-    * occurrence would satisfy both duplicate clauses through a width-1
-    * window); the window matches iff
-    * slopUsed = max(window) − p + 1 − n, clamped at
-    * 0 for overlapping duplicate positions, is ≤ slop. Weights accumulate
-    * micro-quantized exactly like the ordered kernel. A clause term absent
-    * from a doc kills that doc (conjunction), and order never matters:
-    * "b a" finds "a b". Single-clause queries degrade to freq = tf. */
-  def scoreShardSpanNearUnordered(blocksByTerm: String => Array[PostingBlock],
-                                  terms: Array[String], slop: Int,
-                                  sumIdf: Double, avgdl: Double,
-                                  k: Int): Array[(Long, Double)] = {
-    if (terms.isEmpty) return Array.empty
-    val uniq = terms.distinct
-    val tps = uniq.map(blocksByTerm)
-    if (tps.exists(_ == null)) return Array.empty
-    val iterByTerm = uniq.zip(tps.map(new PosIter(_))).toMap
-    val clauses: Array[PosIter] = terms.map(iterByTerm)
-    val iters = iterByTerm.values.toArray
-
-    implicit val ord: Ordering[(Long, Long, Double)] =
-      Ordering.by[(Long, Long, Double), (Long, Long)] { case (x6, d, _) => (-x6, d) }
-    val heap = mutable.PriorityQueue.empty[(Long, Long, Double)]
-    def offer(doc: Long, s: Double): Unit = {
-      val x6 = math.round(s * 1e6)
-      if (heap.size < k) heap.enqueue((x6, doc, s))
-      else {
-        val (hx6, hdoc, _) = heap.head
-        if (x6 > hx6 || (x6 == hx6 && doc < hdoc)) {
-          heap.dequeue(); heap.enqueue((x6, doc, s))
-        }
+        c += 1
       }
+      fx6 / 1e6
     }
-
-    var d = 0L
-    var i = 0
-    while (i < iters.length) {
-      val c = iters(i).curDoc
-      if (c > d) d = c
-      i += 1
-    }
-    while (d != Long.MaxValue) {
-      var m = d
-      i = 0
-      while (i < iters.length) {
-        iters(i).advanceTo(d)
-        val c = iters(i).curDoc
-        if (c > m) m = c
-        i += 1
-      }
-      if (m == d) {
-        val pos: Array[Array[Int]] = clauses.map(_.positions)
-        var fx6 = 0L
-        var c = 0
-        while (c < pos.length) {
-          val anchor = pos(c)
-          i = 0
-          while (i < anchor.length) {
-            val p = anchor(i)
-            var hi = p
-            var ok = true
-            var j = 0
-            while (ok && j < pos.length) {
-              if (j != c) {
-                val pj = pos(j)
-                // first position ≥ p; STRICTLY > p for a clause sharing
-                // the anchor's term: the anchor consumed occurrence p
-                val floor = if (terms(j) == terms(c)) p + 1 else p
-                var idx = java.util.Arrays.binarySearch(pj, floor)
-                if (idx < 0) idx = -idx - 1
-                if (idx >= pj.length) ok = false
-                else if (pj(idx) > hi) hi = pj(idx)
-              }
-              j += 1
-            }
-            if (ok) {
-              val sl = math.max(0, (hi - p + 1) - pos.length)
-              if (sl <= slop) fx6 += math.round(1e6 / (1 + sl))
-            }
-            i += 1
-          }
-          c += 1
-        }
-        if (fx6 > 0) offer(d, sumIdf * Bm25.tfNorm(fx6 / 1e6,
-          iters(0).dl.toDouble, avgdl))
-        d += 1
-      } else d = m
-    }
-    heap.dequeueAll.map((e: (Long, Long, Double)) => (e._2, e._3)).toArray
-  }
-
-  // ---- MultiPhrase (term-set slots — the match_phrase_prefix rewrite) ----
-
-  /** Union cursor over several terms' iterators — one MultiPhraseQuery
-    * slot. A slot is on doc d if ANY of its terms posts d; its positions
-    * at d are the merged distinct positions of those terms (Lucene's
-    * UnionPostingsEnum). */
-  private final class SlotIter(iters: Array[PosIter]) {
-    def curDoc: Long = {
-      var m = Long.MaxValue
-      var i = 0
-      while (i < iters.length) {
-        val c = iters(i).curDoc
-        if (c < m) m = c
-        i += 1
-      }
-      m
-    }
-
-    def advanceTo(d: Long): Unit = {
-      var i = 0
-      while (i < iters.length) { iters(i).advanceTo(d); i += 1 }
-    }
-
-    /** Merged ascending distinct positions of the terms posting doc `d`
-      * (callers guarantee curDoc == d). */
-    def positionsAt(d: Long): Array[Int] = {
-      var only: Array[Int] = null
-      var n = 0
-      var i = 0
-      while (i < iters.length) {
-        if (iters(i).curDoc == d) { only = iters(i).positions; n += 1 }
-        i += 1
-      }
-      if (n == 1) return only
-      val arrs = iters.iterator.filter(_.curDoc == d).map(_.positions).toArray
-      val out = new Array[Int](arrs.iterator.map(_.length).sum)
-      val idx = new Array[Int](arrs.length)
-      var k = 0
-      var last = Int.MinValue
-      var more = true
-      while (more) {
-        var best = -1
-        var bv = Int.MaxValue
-        var j = 0
-        while (j < arrs.length) {
-          if (idx(j) < arrs(j).length && arrs(j)(idx(j)) < bv) {
-            bv = arrs(j)(idx(j)); best = j
-          }
-          j += 1
-        }
-        if (best < 0) more = false
-        else {
-          idx(best) += 1
-          if (bv != last) { out(k) = bv; k += 1; last = bv }
-        }
-      }
-      java.util.Arrays.copyOf(out, k)
-    }
-
-    def dlAt(d: Long): Int = {
-      var i = 0
-      while (i < iters.length) {
-        if (iters(i).curDoc == d) return iters(i).dl
-        i += 1
-      }
-      throw new IllegalStateException("dlAt called off-doc")
-    }
-  }
-
-  /** Alignments where every SLOT has some member term at start + offset
-    * (each slot's union positions merged once per doc, not per start). */
-  private def multiPhraseFreq(rel: Array[(SlotIter, Int)], d: Long): Int = {
-    val pos: Array[Array[Int]] = rel.map(_._1.positionsAt(d))
-    val lead = pos(0)
-    var pf = 0
-    var i = 0
-    while (i < lead.length) {
-      val s = lead(i)
-      var ok = true
-      var j = 1
-      while (ok && j < rel.length) {
-        ok = java.util.Arrays.binarySearch(pos(j), s + rel(j)._2) >= 0
-        j += 1
-      }
-      if (ok) pf += 1
-      i += 1
-    }
-    pf
-  }
-
-  /** Score one MultiPhrase (slot = set of terms at a tokenizer position —
-    * singleton slots are exact occurrences, the last slot of a
-    * match_phrase_prefix carries the prefix expansions) against one
-    * shard's blocks. Lucene MultiPhraseQuery semantics: a doc matches if
-    * some start aligns every slot on ANY member term; phraseFreq counts
-    * such starts; the caller's `sumIdf` sums idf over ALL terms (fixed
-    * occurrences + every expansion — MultiPhraseWeight collects term
-    * statistics for the full term set). Slots whose every term is absent
-    * from the shard kill the conjunction; absent members only shrink a
-    * slot's union. Returns up to k (doc_id, exact score), unordered. */
-  def scoreShardMulti(blocksByTerm: String => Array[PostingBlock],
-                      slots: Array[(Array[String], Int)], sumIdf: Double,
-                      avgdl: Double, k: Int): Array[(Long, Double)] = {
-    if (slots.isEmpty) return Array.empty
-    val uniq = slots.flatMap(_._1).distinct
-    val present: Map[String, PosIter] = uniq.iterator.flatMap { t =>
-      val bs = blocksByTerm(t)
-      if (bs == null) Iterator.empty
-      else Iterator.single(t -> new PosIter(bs))
-    }.toMap
-    val slotLive: Array[Array[PosIter]] =
-      slots.map { case (ts, _) => ts.flatMap(present.get) }
-    if (slotLive.exists(_.isEmpty)) return Array.empty // slot unmatchable
-    val slotIters: Array[SlotIter] = slotLive.map(new SlotIter(_))
-    val base = slots(0)._2
-    val rel: Array[(SlotIter, Int)] =
-      slotIters.zip(slots.map(_._2 - base))
-
-    implicit val ord: Ordering[(Long, Long, Double)] =
-      Ordering.by[(Long, Long, Double), (Long, Long)] { case (x6, doc, _) => (-x6, doc) }
-    val heap = mutable.PriorityQueue.empty[(Long, Long, Double)]
-    def offer(doc: Long, s: Double): Unit = {
-      val x6 = math.round(s * 1e6)
-      if (heap.size < k) heap.enqueue((x6, doc, s))
-      else {
-        val (hx6, hdoc, _) = heap.head
-        if (x6 > hx6 || (x6 == hx6 && doc < hdoc)) {
-          heap.dequeue(); heap.enqueue((x6, doc, s))
-        }
-      }
-    }
-
-    var d = 0L
-    var i = 0
-    while (i < slotIters.length) {
-      val c = slotIters(i).curDoc
-      if (c > d) d = c
-      i += 1
-    }
-    while (d != Long.MaxValue) {
-      var m = d
-      i = 0
-      while (i < slotIters.length) {
-        slotIters(i).advanceTo(d)
-        val c = slotIters(i).curDoc
-        if (c > m) m = c
-        i += 1
-      }
-      if (m == d) {
-        val pf = multiPhraseFreq(rel, d)
-        if (pf > 0) offer(d, sumIdf * Bm25.tfNorm(pf.toDouble,
-          slotIters(0).dlAt(d).toDouble, avgdl))
-        d += 1
-      } else d = m
-    }
-    heap.dequeueAll.map((e: (Long, Long, Double)) => (e._2, e._3)).toArray
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.analysis.Analyzer
 import graft.io.TableIO
 import graft.model.{CorpusStats, PostingBlock}
-import graft.query.BlockMaxWand.{QueryTerm, WandQuery}
+import graft.query.BlockMaxWand.QueryTerm
 
 /** Top-k BM25 search over the on-disk doc-sharded index (SURVEY §3.3).
   *
@@ -132,12 +132,52 @@ object Searcher {
   private final case class CursorSpec(key: String, idf: Double, weight: Int,
       avgdl: Double, tight: Boolean, leg: Int)
 
-  /** Serializable phrase-clause spec: field-qualified keys of the phrase's
-    * UNIQUE terms, the occurrence list as (unique-term index, offset
-    * relative to the first occurrence), and the clause's scoring stats. */
-  private final case class PhraseSpec(keys: Array[String], occTerm: Array[Int],
-      occOff: Array[Int], sumIdf: Double, avgdl: Double, tight: Boolean,
-      leg: Int)
+  /** Serializable positional-clause spec: the keys of the clause's UNIQUE
+    * terms, its position slots as indexes into them, its frequency law and
+    * its scoring stats — a [[BlockMaxWand.PhraseCursor]] once a shard
+    * supplies the blocks. */
+  private final case class PhraseSpec(keys: Array[String],
+      slots: Array[Array[Int]], law: Phrase.Law, sumIdf: Double,
+      avgdl: Double, tight: Boolean, leg: Int)
+
+  /** One query of a scoring fan-out: term cursors, positional clauses and
+    * the ES bool context. `filterKeys`: None = no filter, Some = OR over the
+    * corpus-present filter values (empty: no doc qualifies). */
+  private final case class QuerySpec(qid: Int, terms: Array[CursorSpec],
+      phrases: Array[PhraseSpec] = Array.empty,
+      filterKeys: Option[Array[String]] = None,
+      mustNotKeys: Array[String] = Array.empty, msm: Int = 1,
+      tieBreaker: Double = -1.0, requiredMask: Long = 0L) {
+    /** Some doc can match: a scorable clause, and a filter some doc carries. */
+    def live: Boolean =
+      (terms.nonEmpty || phrases.nonEmpty) && filterKeys.forall(_.nonEmpty)
+  }
+
+  /** A positional clause over `slots` of (key, df) members, or None when
+    * some slot has no corpus-present member (the conjunction matches
+    * nothing). sumIdf sums idf over every member, slot by slot, times
+    * `boost`; `law` sees the slots as indexes into the unique keys. */
+  private def phraseSpec(slots: Seq[Seq[(String, Long)]], stats: CorpusStats,
+      tight: Boolean, leg: Int, boost: Double = 1.0)(
+      law: Array[Array[Int]] => Phrase.Law): Option[PhraseSpec] =
+    if (slots.isEmpty || slots.exists(_.forall(_._2 <= 0L))) None
+    else {
+      val keys = slots.flatten.map(_._1).distinct.toArray
+      val idx = keys.zipWithIndex.toMap
+      val indexed = slots.map(_.map(m => idx(m._1)).toArray).toArray
+      Some(PhraseSpec(keys, indexed, law(indexed),
+        slots.iterator.map(_.iterator.map(m =>
+          Bm25.idf(stats.n_docs, m._2)).sum).sum * boost,
+        stats.avgdl, tight, leg))
+    }
+
+  /** A one-term position slot with the term's df (0 = corpus-absent). */
+  private def slot(term: String, dfs: Map[String, Long]): Seq[(String, Long)] =
+    Seq(term -> dfs.getOrElse(term, 0L))
+
+  /** The exact-phrase law of an analyzed (term, tokenizer position) list. */
+  private def aligned(occs: Seq[(String, Int)]): Phrase.Law =
+    Phrase.Aligned(occs.map(_._2 - occs.head._2).toArray)
 
   /** Open a multi-field handle over per-field sub-index directories
     * (field → dir). Includes committed streamed segments per field; each
@@ -183,6 +223,11 @@ object Searcher {
                   phraseLegs: Seq[PhraseLeg] = Seq.empty,
                   mustNot: Option[(String, Seq[String])] = None,
                   requiredLegs: Seq[Int] = Seq.empty): DataFrame = {
+    // clause ids (match legs, then phrase legs) index a 64-bit mask in the
+    // kernel: refuse before any job runs
+    require(legs.length + phraseLegs.length <= 64,
+      s"a bool query takes at most 64 clauses, got " +
+        s"${legs.length + phraseLegs.length}")
     require(requiredLegs.forall(l => l >= 0 && l < 64),
       "required leg ids must fit the bool-context bitmask (0..63)")
     require(legs.forall(_.boost > 0.0) && phraseLegs.forall(_.boost > 0.0),
@@ -213,72 +258,17 @@ object Searcher {
     // phrase clauses number their legs AFTER the should-legs; a clause with
     // any corpus-absent term matches nothing (conjunction) and is dropped
     val phraseSpecs: Array[PhraseSpec] = phraseLegs.zipWithIndex.flatMap {
-      case (pl, pi) if pl.occs.nonEmpty &&
-          pl.occs.forall(o => dfByKey.contains(pl.field + FieldSep + o._1)) =>
-        val st = mh.fieldStats(pl.field)
-        val uniq = pl.occs.map(_._1).distinct
-        val tIdx = uniq.zipWithIndex.toMap
-        val base = pl.occs(0)._2
-        Some(PhraseSpec(uniq.map(pl.field + FieldSep + _),
-          pl.occs.map(o => tIdx(o._1)), pl.occs.map(_._2 - base),
-          pl.occs.iterator.map(o =>
-            Bm25.idf(st.n_docs, dfByKey(pl.field + FieldSep + o._1))).sum
-            * pl.boost,
-          st.avgdl, mh.fieldTight(pl.field), legs.length + pi))
-      case _ => None
+      case (pl, pi) =>
+        val slots =
+          pl.occs.toSeq.map(o => slot(pl.field + FieldSep + o._1, dfByKey))
+        phraseSpec(slots, mh.fieldStats(pl.field), mh.fieldTight(pl.field),
+          legs.length + pi, pl.boost)(_ => aligned(pl.occs.toSeq))
     }.toArray
-    val hasFilter = filter.isDefined
-    val kk = k
-    val msm = minShouldMatch
-    val tb = disMaxTieBreaker
-    val reqMask = requiredLegs.foldLeft(0L)((m, l) => m | (1L << l))
-    val shareTheta = sys.env.getOrElse("GRAFT_SHARED_THETA", "1") != "0"
-    val runId = java.util.UUID.randomUUID().toString
-
-    // every cursor absent from the corpus, or a filter no doc carries:
-    // nothing can match, so no fan-out job
-    val live = (specs.nonEmpty || phraseSpecs.nonEmpty) &&
-      (!hasFilter || filterKeys.exists(dfByKey.contains))
-    // single bool query ⇒ one qid (0); the shared frame builder keeps the
-    // deterministic-ordering contract in ONE place
-    fanOutTopK(mh.spark, mh.shards, kk, live) { si =>
-      val cursors = specs.flatMap { s =>
-        val tp = si.terms.get(s.key)
-        if (tp == null) None
-        else Some(BlockMaxWand.Cursor(ArraySeq.unsafeWrapArray(tp.blocks),
-          s.idf, s.weight, s.avgdl, s.tight, s.leg))
-      }
-      val fblocks: Array[IndexedSeq[PostingBlock]] = filterKeys.flatMap { fk =>
-        val tp = si.terms.get(fk)
-        if (tp == null) None
-        else Some(ArraySeq.unsafeWrapArray(tp.blocks): IndexedSeq[PostingBlock])
-      }
-      // a phrase clause needs EVERY unique term present in this shard
-      // (conjunction); otherwise it matches nothing here
-      val phraseCursors = phraseSpecs.flatMap { ps =>
-        val tbs = ps.keys.map(si.terms.get)
-        if (tbs.exists(_ == null)) None
-        else Some(BlockMaxWand.PhraseCursor(
-          ArraySeq.unsafeWrapArray(tbs.map(tp =>
-            ArraySeq.unsafeWrapArray(tp.blocks): IndexedSeq[PostingBlock])),
-          ps.occTerm, ps.occOff, ps.sumIdf, ps.avgdl, ps.tight, ps.leg))
-      }
-      // must_not exclusion lists: absence in a shard just means nothing to
-      // exclude there (unlike filter, whose absence empties the shard)
-      val nblocks: Array[IndexedSeq[PostingBlock]] = mustNotKeys.flatMap { nk =>
-        val tp = si.terms.get(nk)
-        if (tp == null) None
-        else Some(ArraySeq.unsafeWrapArray(tp.blocks): IndexedSeq[PostingBlock])
-      }
-      if ((cursors.isEmpty && phraseCursors.isEmpty) ||
-          (hasFilter && fblocks.isEmpty)) Iterator.empty
-      else BlockMaxWand.scoreCursors(ArraySeq.unsafeWrapArray(cursors),
-        ArraySeq.unsafeWrapArray(fblocks), kk, msm,
-        if (shareTheta) BlockMaxWand.ThetaBoards.boardFor(runId) else null,
-        tb, ArraySeq.unsafeWrapArray(phraseCursors),
-        ArraySeq.unsafeWrapArray(nblocks), reqMask)
-        .iterator.map { case (d, s) => (0, d, s) }
-    }.drop("qid")
+    // single bool query ⇒ one qid (0)
+    fanOutTopK(mh.spark, mh.shards, k, Seq(QuerySpec(0, specs, phraseSpecs,
+      filter.map(_ => filterKeys.filter(dfByKey.contains)), mustNotKeys,
+      minShouldMatch, disMaxTieBreaker,
+      requiredLegs.foldLeft(0L)((m, l) => m | (1L << l))))).drop("qid")
   }
 
   private val BlockCols = Seq("doc_shard", "term", "block_id", "n",
@@ -307,11 +297,8 @@ object Searcher {
     // path. With active segments the slow path is REQUIRED: a partially
     // filled tail shard continues into the segment's files, and its blocks
     // must merge into one serving index.
-    val shards0 =
-      if (batches.isEmpty && sys.env.getOrElse("GRAFT_OPEN_SHUFFLE", "0") != "1")
-        openUnshuffled(spark, io)
-      else None
-    val shards = shards0.getOrElse(openShuffled(spark, io))
+    val shards = (if (batches.isEmpty) openUnshuffled(spark, io) else None)
+      .getOrElse(openShuffled(spark, io))
     shards.count() // materialize now: open pays the build, queries don't
     new Handle(spark, indexDir, stats, tight, shards)
   }
@@ -527,13 +514,52 @@ object Searcher {
       depth = math.max(2, (math.log(parts.toDouble) / math.log(64.0)).ceil.toInt))
   }
 
-  /** The serving fan-out end to end: [[treeTopK]] over the shards, then the
-    * driver-ordered frame. `live = false` (no query kept a scorable term)
-    * skips the job and returns the empty frame. */
+  /** The serving fan-out end to end: every shard runs [[scoreOn]] for
+    * every live query, [[treeTopK]] merges, and the driver orders the frame.
+    * Shards sharing a JVM share one θ board per (run, qid)
+    * (BlockMaxWand.ThetaBoards): head-term pruning tightens as soon as ANY
+    * co-resident shard fills its heap, so a shard may return fewer than k
+    * hits — only ones the merged top-k could use. A batch with no live
+    * query skips the job and returns the empty frame. */
   private def fanOutTopK(spark: SparkSession, shards: RDD[ShardIndex], k: Int,
-      live: Boolean)(perShard: ShardIndex => Iterator[(Int, Long, Double)])
-      : DataFrame =
-    topKFrame(spark, if (live) treeTopK(shards, k)(perShard) else Map.empty)
+      queries: Seq[QuerySpec]): DataFrame = {
+    val qs = queries.filter(_.live).toArray
+    val runId = java.util.UUID.randomUUID().toString
+    val kk = k
+    topKFrame(spark, if (qs.isEmpty) Map.empty else treeTopK(shards, kk) { si =>
+      qs.iterator.flatMap { q =>
+        scoreOn(si, q, kk,
+          BlockMaxWand.ThetaBoards.boardFor(s"$runId/${q.qid}"))
+          .iterator.map { case (d, s) => (q.qid, d, s) }
+      }
+    })
+  }
+
+  /** Score one query against one shard's index — the per-query body of
+    * every serving path. A key the shard lacks drops its term cursor, its
+    * filter or exclusion list, or its clause slot member (a clause whose
+    * slot loses every member matches nothing here). */
+  private def scoreOn(si: ShardIndex, q: QuerySpec, k: Int,
+      board: java.util.concurrent.atomic.AtomicLong): Array[(Long, Double)] = {
+    def blocks(key: String): IndexedSeq[PostingBlock] = {
+      val tp = si.terms.get(key)
+      if (tp == null) IndexedSeq.empty else ArraySeq.unsafeWrapArray(tp.blocks)
+    }
+    val cursors = q.terms.toSeq.flatMap { c =>
+      val bs = blocks(c.key)
+      if (bs.isEmpty) None
+      else Some(BlockMaxWand.Cursor(bs, c.idf, c.weight, c.avgdl, c.tight, c.leg))
+    }
+    val clauses = q.phrases.toSeq.map(p => BlockMaxWand.PhraseCursor(
+      ArraySeq.unsafeWrapArray(p.keys.map(blocks)), p.slots, p.law, p.sumIdf,
+      p.avgdl, p.tight, p.leg))
+    val filters = q.filterKeys.map(_.toSeq.map(blocks).filter(_.nonEmpty))
+    // filter context: a shard holding no filter doc has no qualifying doc
+    if (filters.exists(_.isEmpty)) Array.empty
+    else BlockMaxWand.scoreCursors(cursors, filters.getOrElse(Seq.empty), k,
+      q.msm, board, q.tieBreaker, clauses,
+      q.mustNotKeys.toSeq.map(blocks).filter(_.nonEmpty), q.requiredMask)
+  }
 
   /** Build the (qid, rnk, doc_id, score_x6) frame from merged top-k: a local
     * relation whose rows are already in (qid, rnk) order, so collecting it
@@ -584,46 +610,19 @@ object Searcher {
     val dfByTerm: Map[String, Long] = resolveDfs(h, uniqueTerms)
 
     val nDocs = h.stats.n_docs
-    val wandQueries: Array[WandQuery] = analyzed.map { case (qid, tw) =>
-      WandQuery(qid, tw.toSeq.sortBy(_._1).collect {
+    fanOutTopK(h.spark, h.shards, k, analyzed.map { case (qid, tw) =>
+      termQuery(h, qid, tw.toSeq.sortBy(_._1).collect {
         case (t, w) if dfByTerm.contains(t) =>
           QueryTerm(t, Bm25.idf(nDocs, dfByTerm(t)), w)
-      }.toArray)
-    }.toArray
-    runWand(h, wandQueries, k)
+      })
+    })
   }
 
-  /** WAND fan-out + tree merge over a handle's resident shards: each shard
-    * scores every query from its own hash index; partition-level top-k
-    * partials combine pairwise, so only O(queries × k) tuples ever reach
-    * the driver (treeTopK). Unique run id: shards sharing a JVM share one
-    * θ board per query (BlockMaxWand.ThetaBoards) — head-term pruning
-    * tightens as soon as ANY co-resident shard fills its heap.
-    * GRAFT_SHARED_THETA=0 disables (A/B benchmarking knob). */
-  private def runWand(h: Handle, wandQueries: Array[WandQuery],
-      k: Int): DataFrame = {
-    val avgdl = h.stats.avgdl
-    val tight = h.tightBounds
-    val kk = k
-    val shareTheta = sys.env.getOrElse("GRAFT_SHARED_THETA", "1") != "0"
-    val runId = java.util.UUID.randomUUID().toString
-    val live = wandQueries.exists(_.terms.nonEmpty)
-    fanOutTopK(h.spark, h.shards, kk, live) { si =>
-      wandQueries.iterator.flatMap { q =>
-        val byTerm: Map[String, IndexedSeq[PostingBlock]] =
-          q.terms.iterator.flatMap { t =>
-            val tp = si.terms.get(t.term)
-            if (tp == null) Iterator.empty
-            else Iterator.single(t.term -> ArraySeq.unsafeWrapArray(tp.blocks))
-          }.toMap
-        if (byTerm.isEmpty) Iterator.empty
-        else BlockMaxWand.scoreShard(q, byTerm, avgdl, kk, tight,
-          if (shareTheta) BlockMaxWand.ThetaBoards.boardFor(s"$runId/${q.qid}")
-          else null)
-          .iterator.map { case (doc, s) => (q.qid, doc, s) }
-      }
-    }
-  }
+  /** A bag-of-terms query on a single-field handle: one leg, no bool
+    * context. */
+  private def termQuery(h: Handle, qid: Int, terms: Seq[QueryTerm]): QuerySpec =
+    QuerySpec(qid, terms.map(t => CursorSpec(t.term, t.idf, t.weight,
+      h.stats.avgdl, h.tightBounds, 0)).toArray)
 
   /** ES match with `fuzziness` (the Lucene FuzzyQuery rewrite): each
     * analyzed query term expands to the dictionary terms within its edit
@@ -637,8 +636,8 @@ object Searcher {
     * Expansion runs against each shard's [[FuzzyDict]] sidecar — length
     * bands + class-mask popcount prefilters, DP only on survivors — NOT a
     * full-dictionary sweep, so per-query cost tracks the ±e length bands,
-    * not the vocabulary (FuzzyProbe measures the gap; GRAFT_FUZZY_SWEEP=1
-    * re-enables the sweep as the A/B reference). Lucene intersects an FST
+    * not the vocabulary (4-6x at 5M docs, identical results; FuzzySidecarSpec
+    * pins set identity with the sweep). Lucene intersects an FST
     * with a Levenshtein automaton instead — sublinear in band size, the
     * documented next rung; at 10^12 docs either structure belongs NEXT TO
     * each shard's hash index (the dictionaries stay sharded on executors;
@@ -652,23 +651,12 @@ object Searcher {
     * fuzzy-match rewrite and the term suggester. */
   private def fuzzyCandidates(h: Handle, uniq: Array[(String, Int)],
       max: Int): Map[String, Array[(String, Long, Int)]] = {
-    val sweep = sys.props.getOrElse("graft.fuzzy.sweep",
-      sys.env.getOrElse("GRAFT_FUZZY_SWEEP", "0")) == "1"
     val rows: Array[(String, String, Long, Int)] = h.shards.flatMap { si =>
       val out = mutable.ArrayBuffer.empty[(String, String, Long, Int)]
       uniq.foreach { case (q, maxE) =>
         if (maxE == 0) {
           val tp = si.terms.get(q)
           if (tp != null) out += ((q, q, tp.df, 0))
-        } else if (sweep) {
-          // the retired full-vocab sweep, kept ONLY as the A/B reference
-          // (GRAFT_FUZZY_SWEEP=1): DP against every dictionary key
-          val it = si.terms.entrySet().iterator()
-          while (it.hasNext) {
-            val e = it.next()
-            val d = Fuzzy.damerau(q, e.getKey, maxE)
-            if (d <= maxE) out += ((q, e.getKey, e.getValue.df, d))
-          }
         } else {
           si.fuzzyDict.candidates(q, maxE).foreach { case (t, df, d) =>
             out += ((q, t, df, d))
@@ -728,14 +716,13 @@ object Searcher {
     val cands = fuzzyCandidates(h, uniq, maxExpansions)
     val nDocs = h.stats.n_docs
     // cursor order (query term, expansion term): deterministic FP sums
-    val wandQueries: Array[WandQuery] = analyzed.map { case (qid, tw) =>
-      WandQuery(qid, tw.toSeq.sortBy(_._1).flatMap { case (q, w) =>
+    fanOutTopK(h.spark, h.shards, k, analyzed.map { case (qid, tw) =>
+      termQuery(h, qid, tw.toSeq.sortBy(_._1).flatMap { case (q, w) =>
         cands.getOrElse(q, Array.empty).sortBy(_._1).map { case (t, df, dd) =>
           QueryTerm(t, Fuzzy.boost(q, t, dd) * Bm25.idf(nDocs, df), w)
         }
-      }.toArray)
-    }.toArray
-    runWand(h, wandQueries, k)
+      })
+    })
   }
 
   /** Cold-start variant: open a transient handle, search, release. */
@@ -856,109 +843,68 @@ object Searcher {
   }
 
   /** Full per-doc phrase score list against this handle's index — the
-    * naive twin of a phrase CLAUSE: every conjunction doc is position-
-    * confirmed and scored (exact but unpruned; the production path is the
-    * PhraseIter clause inside the combined-bound WAND). Emits (doc_id,
-    * contrib) for pf > 0 docs only, so a downstream leg count sees phrase
-    * clauses exactly like match legs. Distributed end to end. */
+    * naive twin of a phrase CLAUSE: the clause cursor runs unbounded
+    * (k = Int.MaxValue, no θ board), so every conjunction doc is position-
+    * confirmed and scored (the production path is the same clause inside
+    * the combined-bound WAND). Emits (doc_id, contrib) for pf > 0 docs
+    * only, so a downstream leg count sees phrase clauses exactly like
+    * match legs. Distributed end to end. */
   def phraseContribs(h: Handle, occs: Array[(String, Int)],
                      boost: Double = 1.0): DataFrame = {
     import h.spark.implicits._
-    val empty = h.spark.emptyDataset[(Long, Double)].toDF("doc_id", "contrib")
-    if (occs.isEmpty) return empty
     val dfByTerm = resolveDfs(h, occs.map(_._1).distinct)
-    if (!occs.forall(o => dfByTerm.contains(o._1))) return empty
-    val nDocs = h.stats.n_docs
-    val avgdl = h.stats.avgdl
-    val sumIdf =
-      occs.iterator.map(o => Bm25.idf(nDocs, dfByTerm(o._1))).sum * boost
-    h.shards.flatMap { si =>
-      val lookup: String => Array[PostingBlock] = t => {
-        val tp = si.terms.get(t)
-        if (tp == null) null else tp.blocks
-      }
-      Phrase.scoreShard(lookup, occs, sumIdf, avgdl, Int.MaxValue).iterator
-    }.toDF("doc_id", "contrib")
+    val q = clauseQuery(h, 0, occs.toSeq.map(o => slot(o._1, dfByTerm)),
+      boost)(_ => aligned(occs.toSeq))
+    h.shards.flatMap(scoreOn(_, q, Int.MaxValue, null))
+      .toDF("doc_id", "contrib")
   }
 
+  /** One standalone positional query on a single-field handle. */
+  private def clauseQuery(h: Handle, qid: Int, slots: Seq[Seq[(String, Long)]],
+      boost: Double = 1.0)(law: Array[Array[Int]] => Phrase.Law): QuerySpec =
+    QuerySpec(qid, Array.empty,
+      phraseSpec(slots, h.stats, h.tightBounds, 0, boost)(law).toArray)
+
   /** ES match_phrase against a positioned index: analyze each phrase with
-    * the field's chain keeping tokenizer positions, then run the exact
-    * phrase kernel ([[Phrase.scoreShard]]) per shard — one narrow job over
-    * the resident shard indexes, candidates bounded by the rarest term's
-    * postings. Returns (qid, rnk, doc_id, score_x6) under the
-    * deterministic ordering; phrases with any corpus-absent term match
-    * nothing (conjunction). */
+    * the field's chain keeping tokenizer positions, then score it as one
+    * exact-phrase clause ([[Phrase.Aligned]]) of the block-max WAND walk —
+    * one narrow job over the resident shard indexes, candidates bounded by
+    * the rarest term's postings and pruned against the per-query θ board.
+    * Returns (qid, rnk, doc_id, score_x6) under the deterministic ordering;
+    * phrases with any corpus-absent term match nothing (conjunction). */
   def phraseSearch(h: Handle, rawQueries: Seq[(Int, String)], k: Int,
       chain: String => Array[(String, Int)]): DataFrame = {
     requireDistinctQids(rawQueries.map(_._1))
-    val analyzed: Seq[(Int, Array[(String, Int)])] =
-      rawQueries.map { case (qid, q) => qid -> chain(q) }
-    val uniqueTerms = analyzed.flatMap(_._2.map(_._1)).distinct.toArray
-    val dfByTerm = resolveDfs(h, uniqueTerms)
-    val nDocs = h.stats.n_docs
-    val avgdl = h.stats.avgdl
-    val kk = k
-    val pqs: Array[(Int, Array[(String, Int)], Double)] = analyzed.collect {
-      case (qid, occs) if occs.nonEmpty &&
-          occs.forall(o => dfByTerm.contains(o._1)) =>
-        (qid, occs,
-          occs.iterator.map(o => Bm25.idf(nDocs, dfByTerm(o._1))).sum)
-    }.toArray
-
-    fanOutTopK(h.spark, h.shards, kk, pqs.nonEmpty) { si =>
-      pqs.iterator.flatMap { case (qid, occs, sumIdf) =>
-        val lookup: String => Array[PostingBlock] = t => {
-          val tp = si.terms.get(t)
-          if (tp == null) null else tp.blocks
-        }
-        Phrase.scoreShard(lookup, occs, sumIdf, avgdl, kk)
-          .iterator.map { case (doc, s) => (qid, doc, s) }
-      }
-    }
+    val analyzed = rawQueries.map { case (qid, q) => qid -> chain(q).toSeq }
+    val dfByTerm = resolveDfs(h,
+      analyzed.flatMap(_._2.map(_._1)).distinct.toArray)
+    fanOutTopK(h.spark, h.shards, k, analyzed.map { case (qid, occs) =>
+      clauseQuery(h, qid, occs.map(o => slot(o._1, dfByTerm)))(
+        _ => aligned(occs))
+    })
   }
 
   /** ES span_near (in_order) — ordered proximity: each query is (qid, raw
-    * text, slop); the analyzed tokens in order are the span_term clauses.
-    * Same distributed shape as [[phraseSearch]] (the conjunction over the
-    * rarest clause's postings is the selective step; positions decode only
-    * on conjunction docs), the kernel is
-    * [[Phrase.scoreShardSpanNear]]'s greedy-minimal ordered matcher
-    * (`inOrder = false` swaps in the anchored-window unordered matcher,
-    * [[Phrase.scoreShardSpanNearUnordered]]). idf
-    * sums over clause terms, duplicates included (SpanWeight collects
-    * from every clause). Returns (qid, rnk, doc_id, score_x6). */
+    * text, slop); the analyzed tokens in order are the span_term clauses,
+    * scored as one clause of the block-max WAND walk under
+    * [[Phrase.OrderedSpan]]'s greedy-minimal ordered law (`inOrder = false`
+    * swaps in the anchored-window [[Phrase.UnorderedSpan]] law). Same
+    * distributed shape as [[phraseSearch]]. idf sums over clause terms,
+    * duplicates included (SpanWeight collects from every clause). Returns
+    * (qid, rnk, doc_id, score_x6). */
   def spanNearSearch(h: Handle, rawQueries: Seq[(Int, String, Int)], k: Int,
       chain: String => Array[String], inOrder: Boolean = true): DataFrame = {
     requireDistinctQids(rawQueries.map(_._1))
-    val analyzed: Seq[(Int, Array[String], Int)] =
-      rawQueries.map { case (qid, q, slop) => (qid, chain(q), slop) }
-    val uniqueTerms = analyzed.flatMap(_._2).distinct.toArray
-    val dfByTerm = resolveDfs(h, uniqueTerms)
-    val nDocs = h.stats.n_docs
-    val avgdl = h.stats.avgdl
-    val kk = k
-    val pqs: Array[(Int, Array[String], Int, Double)] = analyzed.collect {
-      case (qid, ts, slop) if ts.nonEmpty && ts.forall(dfByTerm.contains) =>
-        (qid, ts, slop,
-          ts.iterator.map(t => Bm25.idf(nDocs, dfByTerm(t))).sum)
-    }.toArray
-
-    val ordered = inOrder
-    fanOutTopK(h.spark, h.shards, kk, pqs.nonEmpty) { si =>
-      pqs.iterator.flatMap { case (qid, ts, slop, sumIdf) =>
-        val lookup: String => Array[PostingBlock] = t => {
-          val tp = si.terms.get(t)
-          if (tp == null) null else tp.blocks
-        }
-        val hits =
-          if (ordered)
-            Phrase.scoreShardSpanNear(lookup, ts, slop, sumIdf, avgdl, kk)
-          else
-            Phrase.scoreShardSpanNearUnordered(lookup, ts, slop, sumIdf,
-              avgdl, kk)
-        hits.iterator.map { case (doc, s) => (qid, doc, s) }
-      }
+    val analyzed = rawQueries.map { case (qid, q, slop) =>
+      (qid, chain(q).toSeq, slop)
     }
+    val dfByTerm = resolveDfs(h, analyzed.flatMap(_._2).distinct.toArray)
+    fanOutTopK(h.spark, h.shards, k, analyzed.map { case (qid, ts, slop) =>
+      clauseQuery(h, qid, ts.map(slot(_, dfByTerm))) { slots =>
+        if (inOrder) Phrase.OrderedSpan(slop)
+        else Phrase.UnorderedSpan(slop, slots.map(_(0)))
+      }
+    })
   }
 
   /** ES match_phrase_prefix (Lucene MultiPhrasePrefixQuery rewritten to a
@@ -975,43 +921,17 @@ object Searcher {
       chain: String => Array[(String, Int)],
       expand: String => Seq[(String, Long)]): DataFrame = {
     requireDistinctQids(rawQueries.map(_._1))
-    val analyzed: Seq[(Int, Array[(String, Int)])] =
-      rawQueries.map { case (qid, q) => qid -> chain(q) }
-    val fixedTerms =
-      analyzed.flatMap(_._2.dropRight(1).map(_._1)).distinct.toArray
-    val dfByTerm = resolveDfs(h, fixedTerms)
-    val nDocs = h.stats.n_docs
-    val avgdl = h.stats.avgdl
-    val kk = k
-    val pqs: Array[(Int, Array[(Array[String], Int)], Double)] =
-      analyzed.collect {
-        case (qid, occs) if occs.nonEmpty &&
-            occs.dropRight(1).forall(o => dfByTerm.contains(o._1)) =>
-          val (lastTerm, lastPos) = occs.last
-          val exps = expand(lastTerm)
-          if (exps.isEmpty) None
-          else {
-            val slots: Array[(Array[String], Int)] =
-              occs.dropRight(1).map { case (t, p) => (Array(t), p) } :+
-                (exps.map(_._1).toArray, lastPos)
-            val sumIdf =
-              occs.dropRight(1).iterator
-                .map(o => Bm25.idf(nDocs, dfByTerm(o._1))).sum +
-              exps.iterator.map { case (_, df) => Bm25.idf(nDocs, df) }.sum
-            Some((qid, slots, sumIdf))
-          }
-      }.flatten.toArray
-
-    fanOutTopK(h.spark, h.shards, kk, pqs.nonEmpty) { si =>
-      pqs.iterator.flatMap { case (qid, slots, sumIdf) =>
-        val lookup: String => Array[PostingBlock] = t => {
-          val tp = si.terms.get(t)
-          if (tp == null) null else tp.blocks
-        }
-        Phrase.scoreShardMulti(lookup, slots, sumIdf, avgdl, kk)
-          .iterator.map { case (doc, s) => (qid, doc, s) }
-      }
-    }
+    val analyzed = rawQueries.map { case (qid, q) => qid -> chain(q).toSeq }
+    val dfByTerm = resolveDfs(h,
+      analyzed.flatMap(_._2.dropRight(1).map(_._1)).distinct.toArray)
+    fanOutTopK(h.spark, h.shards, k, analyzed.map { case (qid, occs) =>
+      val fixed = occs.dropRight(1).map(o => slot(o._1, dfByTerm))
+      // expand only a prefix whose fixed terms can all match
+      val slots =
+        if (occs.isEmpty || fixed.exists(_.head._2 == 0L)) Seq.empty
+        else fixed :+ expand(occs.last._1)
+      clauseQuery(h, qid, slots)(_ => aligned(occs))
+    })
   }
 
   /** ES term-query analogue (filter context — set-valued, no scoring): all

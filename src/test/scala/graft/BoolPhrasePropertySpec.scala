@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.analysis.Analyzer
 import graft.index.PostingsBuilder
 import graft.model.{PostingBlock, TfRow}
-import graft.query.{BlockMaxWand, Bm25}
+import graft.query.{BlockMaxWand, Bm25, Phrase}
 import graft.query.BlockMaxWand.{Cursor, PhraseCursor}
 
 /** Randomized exactness property for PHRASE CLAUSES INSIDE BOOL queries:
@@ -224,7 +224,8 @@ class BoolPhrasePropertySpec extends AnyFunSuite {
         if (tbs.exists(_.isEmpty)) None
         else Some(PhraseCursor(
           scala.collection.immutable.ArraySeq.unsafeWrapArray(tbs.map(_.get)),
-          occT, occO, sumIdf, pr.faAvgdl, true, leg))
+          occT.map(Array(_)), Phrase.Aligned(occO), sumIdf, pr.faAvgdl, true,
+          leg))
       }
       val fblocks = filterKeys.flatMap(blocks.get)
       val nblocks = mustNotKeys.flatMap(blocks.get)

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -8,17 +11,21 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.analysis.Analyzer
 import graft.index.PostingsBuilder
 import graft.model.{PostingBlock, TfRow}
-import graft.query.{Bm25, Phrase}
+import graft.query.{BlockMaxWand, Bm25, Phrase}
+import graft.query.BlockMaxWand.PhraseCursor
 
-/** Randomized exactness property for the phrase kernel: random multi-valued
+/** Randomized exactness property for the phrase clause: random multi-valued
   * corpora (stopwords included, so position gaps and the multi-value
   * increment gap appear everywhere) indexed through the REAL position
-  * pipeline (chainCountsPos → TfRow.pos → block codec), then
-  * [[Phrase.scoreShard]] must reproduce a brute-force alignment scorer
+  * pipeline (chainCountsPos → TfRow.pos → block codec), then a
+  * [[PhraseCursor]] under the [[Phrase.Aligned]] law, walked alone by the
+  * block-max WAND kernel, must reproduce a brute-force alignment scorer
   * exactly under the deterministic ordering — leapfrog, lazy position
-  * decode, block boundaries, repeated phrase terms, and single-term
-  * phrases all land in the same property. */
+  * decode, block boundaries, θ pruning with and without a cross-shard θ
+  * board, repeated phrase terms, and single-term phrases all land in the
+  * same property. */
 class PhrasePropertySpec extends AnyFunSuite {
+  import PhrasePropertySpec.walk
 
   private def check(name: String, p: Prop): Unit = {
     val res = SCTest.check(
@@ -30,15 +37,18 @@ class PhrasePropertySpec extends AnyFunSuite {
   private val vocab = Seq("aa", "bb", "cc", "dd", "the", "of")
 
   /** doc = values = token lists; rendered as space-joined strings. */
-  private val docGen: Gen[Seq[Seq[String]]] = for {
-    nv <- Gen.chooseNum(1, 3)
-    vals <- Gen.listOfN(nv, Gen.listOf(Gen.oneOf(vocab)).map(_.take(8)))
-  } yield vals
+  private def corpusGenOf(v: Seq[String]): Gen[Seq[Seq[Seq[String]]]] = {
+    val docGen: Gen[Seq[Seq[String]]] = for {
+      nv <- Gen.chooseNum(1, 3)
+      vals <- Gen.listOfN(nv, Gen.listOf(Gen.oneOf(v)).map(_.take(8)))
+    } yield vals
+    for {
+      n <- Gen.chooseNum(1, 40)
+      docs <- Gen.listOfN(n, docGen)
+    } yield docs
+  }
 
-  private val corpusGen: Gen[Seq[Seq[Seq[String]]]] = for {
-    n <- Gen.chooseNum(1, 40)
-    docs <- Gen.listOfN(n, docGen)
-  } yield docs
+  private val corpusGen = corpusGenOf(vocab)
 
   private val phraseGen: Gen[String] =
     Gen.nonEmptyListOf(Gen.oneOf(vocab)).map(_.take(3).mkString(" "))
@@ -79,7 +89,7 @@ class PhrasePropertySpec extends AnyFunSuite {
   }
 
   private def kernel(corpus: Seq[Seq[Seq[String]]], phrase: String, k: Int,
-      shardSize: Int, blockSize: Int): Seq[(Long, Long)] = {
+      shardSize: Int, blockSize: Int, shared: Boolean): Seq[(Long, Long)] = {
     val occs = Analyzer.analyzeChainPos(Analyzer.TextStop, phrase)
     if (occs.isEmpty) return Nil
     val docs = corpus.map(analyzed)
@@ -104,19 +114,17 @@ class PhrasePropertySpec extends AnyFunSuite {
         shard -> blocks.groupBy(_.term).view
           .mapValues(_.sortBy(_.block_id).toArray).toMap
       }
-    byShard.toSeq.sortBy(_._1).flatMap { case (_, blocks) =>
-      Phrase.scoreShard(t => blocks.getOrElse(t, null),
-        occs, sumIdf, avgdl, k)
-        .map { case (d, s) => (d, math.round(s * 1e6)) }.toSeq
-    }.sortBy { case (id, x6) => (-x6, id) }.take(k)
+    walk(byShard, occs.map(o => Array(o._1)),
+      Phrase.Aligned(occs.map(_._2 - occs(0)._2)), sumIdf, avgdl, k, shared)
   }
 
   test("phrase kernel == brute-force alignment scorer on random corpora") {
     val p = Prop.forAll(corpusGen, phraseGen, Gen.oneOf(1, 3, 10),
       Gen.oneOf(3, 8, 64), Gen.oneOf(2, 4)) {
       (corpus, phrase, k, shardSize, blockSize) =>
-        brute(corpus, phrase, k) ==
-          kernel(corpus, phrase, k, shardSize, blockSize)
+        val expected = brute(corpus, phrase, k)
+        expected == kernel(corpus, phrase, k, shardSize, blockSize, shared = false) &&
+          expected == kernel(corpus, phrase, k, shardSize, blockSize, shared = true)
     }
     check("phrase-exactness", p)
   }
@@ -130,11 +138,16 @@ class PhrasePropertySpec extends AnyFunSuite {
     * (the engine's rule), and a prefix matching only stopwords expands to
     * nothing (stopwords never reach the dictionary). */
   private val prefixGen: Gen[String] =
-    Gen.oneOf("a", "aa", "b", "bb", "c", "cc", "d", "dd", "t", "th",
+    Gen.oneOf("a", "aa", "ab", "b", "bb", "c", "cc", "d", "dd", "t", "th",
       "the", "o", "of")
 
+  /** The phrase vocabulary plus terms sharing the prefixes "a"/"ab", so an
+    * expanded last slot can hold several member terms (a union slot whose
+    * merged positions can outnumber any one member's tf). */
+  private val prefixVocab = vocab ++ Seq("ab", "abb")
+
   private val fixedGen: Gen[List[String]] =
-    Gen.listOf(Gen.oneOf(vocab)).map(_.take(2))
+    Gen.listOf(Gen.oneOf(prefixVocab)).map(_.take(2))
 
   /** (slots, sumIdf) under MultiPhrasePrefixQuery semantics, or None when
     * the query matches nothing by construction (absent fixed term / empty
@@ -192,7 +205,8 @@ class PhrasePropertySpec extends AnyFunSuite {
   }
 
   private def kernelPrefix(corpus: Seq[Seq[Seq[String]]], raw: String,
-      k: Int, maxExp: Int, shardSize: Int, blockSize: Int): Seq[(Long, Long)] = {
+      k: Int, maxExp: Int, shardSize: Int, blockSize: Int,
+      shared: Boolean): Seq[(Long, Long)] = {
     val docs = corpus.map(analyzed)
     prefixQueryPlan(docs, raw, maxExp) match {
       case None => Nil
@@ -212,22 +226,44 @@ class PhrasePropertySpec extends AnyFunSuite {
             shard -> blocks.groupBy(_.term).view
               .mapValues(_.sortBy(_.block_id).toArray).toMap
           }
-        byShard.toSeq.sortBy(_._1).flatMap { case (_, blocks) =>
-          Phrase.scoreShardMulti(t => blocks.getOrElse(t, null),
-            slots, sumIdf, avgdl, k)
-            .map { case (d, s) => (d, math.round(s * 1e6)) }.toSeq
-        }.sortBy { case (id, x6) => (-x6, id) }.take(k)
+        walk(byShard, slots.map(_._1),
+          Phrase.Aligned(slots.map(_._2 - slots(0)._2)), sumIdf, avgdl, k,
+          shared)
     }
   }
 
   test("multi-phrase (prefix) kernel == brute-force union-slot scorer") {
-    val p = Prop.forAll(corpusGen, fixedGen, prefixGen,
+    val p = Prop.forAll(corpusGenOf(prefixVocab), fixedGen, prefixGen,
       Gen.oneOf(1, 3, 10), Gen.oneOf(1, 2, 50), Gen.oneOf(3, 8, 64)) {
       (corpus, fixed, prefix, k, maxExp, shardSize) =>
         val raw = (fixed :+ prefix).mkString(" ")
-        brutePrefix(corpus, raw, k, maxExp) ==
-          kernelPrefix(corpus, raw, k, maxExp, shardSize, blockSize = 2)
+        val expected = brutePrefix(corpus, raw, k, maxExp)
+        expected ==
+          kernelPrefix(corpus, raw, k, maxExp, shardSize, 2, shared = false) &&
+          expected ==
+          kernelPrefix(corpus, raw, k, maxExp, shardSize, 2, shared = true)
     }
     check("multi-phrase-prefix-exactness", p)
+  }
+}
+
+object PhrasePropertySpec {
+  /** Walk one clause over each shard's blocks (absent terms = no blocks)
+    * with the production kernel; one θ board shared by every shard when
+    * `shared`. Returns the merged top-k as (doc_id, score_x6). */
+  def walk(byShard: Map[Int, Map[String, Array[PostingBlock]]],
+      slots: Array[Array[String]], law: Phrase.Law, sumIdf: Double,
+      avgdl: Double, k: Int, shared: Boolean): Seq[(Long, Long)] = {
+    val keys = slots.flatten.distinct
+    val idx = slots.map(_.map(keys.indexOf(_)))
+    val board = if (shared) new AtomicLong(Long.MinValue) else null
+    byShard.toSeq.sortBy(_._1).flatMap { case (_, blocks) =>
+      val pc = PhraseCursor(ArraySeq.unsafeWrapArray(keys.map(t =>
+        ArraySeq.unsafeWrapArray(blocks.getOrElse(t, Array.empty[PostingBlock])))),
+        idx, law, sumIdf, avgdl, tightBounds = true)
+      BlockMaxWand.scoreCursors(Seq.empty, Seq.empty, k, 1, board,
+        phrases = Seq(pc))
+        .map { case (d, s) => (d, math.round(s * 1e6)) }.toSeq
+    }.sortBy { case (id, x6) => (-x6, id) }.take(k)
   }
 }

@@ -86,6 +86,46 @@ class ServingJobsSpec extends AnyFunSuite {
     } finally mh.close()
   }
 
+  test("warm phrase, span_near and phrase-prefix searches are one job on a df-cache hit") {
+    // positional queries need a positioned build: the fielded title field
+    // (values "Record $i title", "second title $i")
+    val th = FieldedIndex.handleFor(spark, FieldedQueries.ensureFieldedIndex(spark),
+      "title")
+    val pos = Analyzer.analyzeChainPos(Analyzer.TextStop, _: String)
+    val titleDf = Searcher.termDfs(th, Array("title"))("title")
+    val spans = Seq((1, "record title", 1), (2, "second 7", 1))
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "phrase" -> (() => Searcher.phraseSearch(th,
+        Seq(1 -> "second title", 2 -> "title 42"), QuerySet.K, pos)),
+      "span_near" -> (() => Searcher.spanNearSearch(th, spans, QuerySet.K,
+        Analyzer.analyzeStop)),
+      "span_near unordered" -> (() => Searcher.spanNearSearch(th, spans,
+        QuerySet.K, Analyzer.analyzeStop, inOrder = false)),
+      "phrase prefix" -> (() => Searcher.phrasePrefixSearch(th,
+        Seq(1 -> "second titl", 2 -> "titl"), QuerySet.K, pos,
+        p => if ("title".startsWith(p)) Seq("title" -> titleDf) else Seq.empty)))
+    calls.foreach { case (name, call) =>
+      val first = rows(call())
+      assert(first.map(_.head).distinct === Seq(1L, 2L), name)
+      val (hit, jobs) = jobsOf(rows(call()))
+      assert(jobs === 1, name)
+      assert(hit === first, name)
+    }
+  }
+
+  test("a bool query past 64 clauses is refused on the driver, launching no job") {
+    val mh = Searcher.openMulti(spark, Seq("body" -> dir))
+    try {
+      val legs = Seq.fill(65)(Searcher.MultiLeg("body", Map("join" -> 1)))
+      val (e, jobs) = jobsOf(intercept[IllegalArgumentException](
+        Searcher.multiSearch(mh, legs, QuerySet.K)))
+      assert(e.getMessage.contains("at most 64 clauses"))
+      assert(jobs === 0)
+      // 64 clauses is the limit, not past it
+      assert(rows(Searcher.multiSearch(mh, legs.take(64), QuerySet.K)).nonEmpty)
+    } finally mh.close()
+  }
+
   test("the 20-query batch collects in (qid, rnk) order") {
     val df = Searcher.search(handle, QuerySet.queries, QuerySet.K)
     val got = rows(df)

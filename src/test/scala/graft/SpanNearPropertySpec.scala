@@ -10,15 +10,19 @@ import graft.index.PostingsBuilder
 import graft.model.{PostingBlock, TfRow}
 import graft.query.{Bm25, Phrase}
 
-/** Randomized exactness property for the span_near kernel: random
+/** Randomized exactness property for the span_near clause: random
   * multi-valued corpora (stopwords included → position gaps everywhere)
-  * indexed through the REAL position pipeline, then
-  * [[Phrase.scoreShardSpanNear]] must reproduce a brute-force scorer whose
-  * per-lead minimal slopUsed comes from EXHAUSTIVE enumeration of ordered
-  * completions — so the property simultaneously proves the kernel's greedy
-  * completion IS the minimum, and that leapfrog/lazy-decode/block
-  * boundaries/duplicate clauses/single-clause degradation are exact. */
+  * indexed through the REAL position pipeline, then a clause cursor under
+  * the [[Phrase.OrderedSpan]] law, walked alone by the block-max WAND
+  * kernel, must reproduce a brute-force scorer whose per-lead minimal
+  * slopUsed comes from EXHAUSTIVE enumeration of ordered completions — so
+  * the property simultaneously proves the law's greedy completion IS the
+  * minimum, and that leapfrog/lazy-decode/block boundaries/θ pruning (with
+  * and without a cross-shard θ board)/duplicate clauses/single-clause
+  * degradation are exact. The [[Phrase.UnorderedSpan]] law gets the same
+  * property against a set-wise recompute. */
 class SpanNearPropertySpec extends AnyFunSuite {
+  import PhrasePropertySpec.walk
 
   private def check(name: String, p: Prop): Unit = {
     val res = SCTest.check(
@@ -91,7 +95,8 @@ class SpanNearPropertySpec extends AnyFunSuite {
   }
 
   private def kernel(corpus: Seq[Seq[Seq[String]]], raw: String, slop: Int,
-      k: Int, shardSize: Int, blockSize: Int): Seq[(Long, Long)] = {
+      k: Int, shardSize: Int, blockSize: Int, inOrder: Boolean,
+      shared: Boolean): Seq[(Long, Long)] = {
     val ts = Analyzer.analyzeChain(Analyzer.TextStop, raw)
     if (ts.isEmpty) return Nil
     val docs = corpus.map(analyzed)
@@ -115,19 +120,21 @@ class SpanNearPropertySpec extends AnyFunSuite {
         shard -> blocks.groupBy(_.term).view
           .mapValues(_.sortBy(_.block_id).toArray).toMap
       }
-    byShard.toSeq.sortBy(_._1).flatMap { case (_, blocks) =>
-      Phrase.scoreShardSpanNear(t => blocks.getOrElse(t, null),
-        ts, slop, sumIdf, avgdl, k)
-        .map { case (d, s) => (d, math.round(s * 1e6)) }.toSeq
-    }.sortBy { case (id, x6) => (-x6, id) }.take(k)
+    val law =
+      if (inOrder) Phrase.OrderedSpan(slop)
+      else Phrase.UnorderedSpan(slop, ts.map(ts.distinct.indexOf(_)))
+    walk(byShard, ts.map(Array(_)), law, sumIdf, avgdl, k, shared)
   }
 
   test("span_near kernel == exhaustive-minimum ordered-span scorer") {
     val p = Prop.forAll(corpusGen, queryGen, slopGen, Gen.oneOf(1, 3, 10),
       Gen.oneOf(3, 8, 64), Gen.oneOf(2, 4)) {
       (corpus, raw, slop, k, shardSize, blockSize) =>
-        brute(corpus, raw, slop, k) ==
-          kernel(corpus, raw, slop, k, shardSize, blockSize)
+        val expected = brute(corpus, raw, slop, k)
+        expected == kernel(corpus, raw, slop, k, shardSize, blockSize,
+          inOrder = true, shared = false) &&
+          expected == kernel(corpus, raw, slop, k, shardSize, blockSize,
+            inOrder = true, shared = true)
     }
     check("span-near-exactness", p)
   }
@@ -170,43 +177,15 @@ class SpanNearPropertySpec extends AnyFunSuite {
     }.sortBy { case (id, x6) => (-x6, id) }.take(k)
   }
 
-  private def kernelUnordered(corpus: Seq[Seq[Seq[String]]], raw: String,
-      slop: Int, k: Int, shardSize: Int, blockSize: Int): Seq[(Long, Long)] = {
-    val ts = Analyzer.analyzeChain(Analyzer.TextStop, raw)
-    if (ts.isEmpty) return Nil
-    val docs = corpus.map(analyzed)
-    val n = docs.length.toLong
-    val df = ts.distinct.map(t =>
-      t -> docs.count(_._2.contains(t)).toLong).toMap
-    if (ts.exists(t => df(t) == 0)) return Nil
-    val avgdl = if (n == 0) 0.0 else docs.map(_._1).sum.toDouble / n
-    val sumIdf = ts.iterator.map(t => Bm25.idf(n, df(t))).sum
-    val rows = docs.zipWithIndex.flatMap { case ((dl, terms), id) =>
-      terms.toSeq.sortBy(_._1).map { case (t, (tf, pos)) =>
-        TfRow(id / shardSize, t, id.toLong, tf, dl, pos)
-      }
-    }
-    val byShard: Map[Int, Map[String, Array[PostingBlock]]] =
-      rows.groupBy(_.doc_shard).map { case (shard, rs) =>
-        val sorted = rs.sortBy(r => (r.term, r.doc_id))
-        val blocks = PostingsBuilder.encodePartition(avgdl, blockSize)(
-          sorted.iterator).toIndexedSeq
-        shard -> blocks.groupBy(_.term).view
-          .mapValues(_.sortBy(_.block_id).toArray).toMap
-      }
-    byShard.toSeq.sortBy(_._1).flatMap { case (_, blocks) =>
-      Phrase.scoreShardSpanNearUnordered(t => blocks.getOrElse(t, null),
-        ts, slop, sumIdf, avgdl, k)
-        .map { case (d, s) => (d, math.round(s * 1e6)) }.toSeq
-    }.sortBy { case (id, x6) => (-x6, id) }.take(k)
-  }
-
   test("unordered span_near kernel == set-wise anchored-window scorer") {
     val p = Prop.forAll(corpusGen, queryGen, slopGen, Gen.oneOf(1, 3, 10),
       Gen.oneOf(3, 8, 64), Gen.oneOf(2, 4)) {
       (corpus, raw, slop, k, shardSize, blockSize) =>
-        bruteUnordered(corpus, raw, slop, k) ==
-          kernelUnordered(corpus, raw, slop, k, shardSize, blockSize)
+        val expected = bruteUnordered(corpus, raw, slop, k)
+        expected == kernel(corpus, raw, slop, k, shardSize, blockSize,
+          inOrder = false, shared = false) &&
+          expected == kernel(corpus, raw, slop, k, shardSize, blockSize,
+            inOrder = false, shared = true)
     }
     check("span-near-unordered-exactness", p)
   }
