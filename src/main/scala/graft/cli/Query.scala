@@ -172,13 +172,20 @@ object Query {
         // deep snapshot-pinned export: walk the scroll to exhaustion,
         // --k is the page size; prints `page rank key score_x6`
         val sc = FieldedIndex.scroll(spark, a.indexDir, spec, a.query, a.k)
-        val dm = FieldedIndex.docMap(spark, a.indexDir).collect()
-          .map(r => r.getLong(0) -> r.getString(1)).toMap
+        val docMap = FieldedIndex.docMap(spark, a.indexDir)
+        val keyCol = col(docMap.columns.last)
         val out = Seq.newBuilder[String]
         var page = 1
         while (sc.hasMore) {
-          sc.next().foreach { case (rnk, doc, s6) =>
-            out += s"$page $rnk ${dm(doc)} $s6"
+          val hits = sc.next()
+          // keys for this page's doc ids only: the export never holds more
+          // of doc_map than one page
+          val keys = if (hits.isEmpty) Map.empty[Long, String]
+            else docMap.where(col("doc_id").isin(hits.map(_._2): _*))
+              .select(col("doc_id"), keyCol).collect()
+              .map(r => r.getLong(0) -> r.getString(1)).toMap
+          hits.foreach { case (rnk, doc, s6) =>
+            out += s"$page $rnk ${keys(doc)} $s6"
           }
           page += 1
         }

@@ -325,6 +325,10 @@ object Dedup {
       p.unpersist()
       return out.toSeq.toDF("doc_id", "cluster_id").orderBy("doc_id")
     }
+    // the saturated limit cached only the partitions it scanned: fill the
+    // cache now, or each union branch below would recompute the rest of
+    // the pair generator on first touch
+    p.count()
     val sym = p.select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(p.select(col("b_id").as("src"), col("a_id").as("dst")))
 

@@ -2,7 +2,9 @@ package graft.query
 
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,6 +42,16 @@ import graft.query.BlockMaxWand.QueryTerm
   * it launches nothing more. A batch in which no query keeps a scorable
   * term launches no fan-out at all. No shuffle, no sort, no scan of
   * non-query terms anywhere on the query path.
+  *
+  * Every job over a handle's resident shards that returns to the driver
+  * (open's materialization, the df lookup, fuzzy candidates and the
+  * fan-out) goes through [[runShards]] with a named [[ShardTask]], not a
+  * lambda. Spark's ClosureCleaner re-reads and ASM-parses the class file
+  * that defines each lambda handed to an RDD action — `RDD.class` or
+  * `SparkContext.class` for the action's own wrappers, this object's class
+  * for ours — on every job, which measured ~2.6 ms per clean and most of
+  * a warm search's fixed cost; it returns at once for a function that is
+  * not a lambda.
   */
 object Searcher {
 
@@ -79,6 +91,24 @@ object Searcher {
     private[Searcher] val dfCache =
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     def close(): Unit = shards.unpersist()
+  }
+
+  /** The per-partition body of a serving job over resident shard indexes:
+    * a named class, never a lambda, so `SparkContext.runJob` skips the
+    * closure cleaner's class-file parse (see the object docs). */
+  private abstract class ShardTask[U]
+      extends ((TaskContext, Iterator[ShardIndex]) => U) with Serializable
+
+  /** The one entry for serving jobs: one task per partition, results in
+    * partition order. */
+  private def runShards[U: ClassTag](shards: RDD[ShardIndex],
+      task: ShardTask[U]): Array[U] =
+    shards.sparkContext.runJob(shards, task)
+
+  /** The shard ids a partition holds; running it materializes the cache. */
+  private object ShardIds extends ShardTask[Array[Int]] {
+    def apply(ctx: TaskContext, it: Iterator[ShardIndex]): Array[Int] =
+      it.map(_.shard).toArray
   }
 
   /** Field-qualified key inside a multi-field shard index. NUL never occurs
@@ -203,7 +233,7 @@ object Searcher {
     val shards = sorted.rdd
       .mapPartitions(buildShardIndexes, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    shards.count() // open pays the exchange once; queries never do
+    runShards(shards, ShardIds) // open pays the exchange once; queries never do
     new MultiHandle(spark, stats, tight, shards)
   }
 
@@ -299,7 +329,7 @@ object Searcher {
     // must merge into one serving index.
     val shards = (if (batches.isEmpty) openUnshuffled(spark, io) else None)
       .getOrElse(openShuffled(spark, io))
-    shards.count() // materialize now: open pays the build, queries don't
+    runShards(shards, ShardIds) // materialize: open pays the build
     new Handle(spark, indexDir, stats, tight, shards)
   }
 
@@ -373,7 +403,7 @@ object Searcher {
     // guard: every shard must be whole within one partition (format
     // property; violation ⇒ a doc's postings would split across serving
     // indexes and scores would be partial). Shard-count-sized, tiny.
-    val ids = shards.map(_.shard).collect()
+    val ids = runShards(shards, ShardIds).flatten
     if (sys.env.contains("GRAFT_OPEN_LOG"))
       System.err.println(s"[open] unshuffled: ${shards.getNumPartitions} " +
         s"partitions, ${ids.length} shard indexes, pack=$packBytes")
@@ -453,64 +483,79 @@ object Searcher {
     }
   }
 
-  /** Tree-merged distributed top-k: each PARTITION folds its shards' hits
-    * into per-query top-k partials, partials combine pairwise
-    * (treeAggregate), and the driver receives O(queries × k) tuples at ANY
-    * shard count — the ES coordinating-node fan-in model. A flat collect
-    * of per-shard winners is k × shards × queries tuples, which at 10^6
-    * shards (10^12 docs / 2^20 shardSize) and a 20-query batch is ~10^8
-    * tuples through one driver; the tree bounds it. Hits merge on the
-    * micro-rounded (score_x6, doc_id) ordering — exactly the final
-    * ordering, so the merge is lossless. */
   /** Partition count above which the pairwise combine runs as an extra
     * tree stage (treeAggregate) instead of on the driver. Below it, a
-    * single-stage aggregate is strictly better: the per-partition fold
-    * ALREADY bounds what leaves the executors at queries × k per
-    * partition, and the extra stage costs one more task-scheduling wave
-    * per query (~40 ms of p50 at local[32] — measured, which is why this
-    * is adaptive and not always-tree). Test seam: specs force the tree
-    * path by lowering it. */
+    * single-stage job is strictly better: the per-partition fold ALREADY
+    * bounds what leaves the executors at queries × k per partition, and
+    * the extra stage costs one more task-scheduling wave per query (~40 ms
+    * of p50 at local[32] — measured, which is why this is adaptive and not
+    * always-tree). Test seam: specs force the tree path by lowering it. */
   @volatile private[graft] var treeFanInThreshold = 256
 
-  private def treeTopK(shards: RDD[ShardIndex], k: Int)(
-      perShard: ShardIndex => Iterator[(Int, Long, Double)])
-      : Map[Int, Array[(Long, Long)]] = {
-    val kk = k
-    def mergeTop(a: Array[(Long, Long)],
-                 b: Array[(Long, Long)]): Array[(Long, Long)] = {
-      val out = new Array[(Long, Long)](math.min(kk, a.length + b.length))
-      var i = 0; var j = 0; var o = 0
-      while (o < out.length) {
-        val takeA = j >= b.length || (i < a.length &&
-          (a(i)._1 > b(j)._1 || (a(i)._1 == b(j)._1 && a(i)._2 < b(j)._2)))
-        if (takeA) { out(o) = a(i); i += 1 } else { out(o) = b(j); j += 1 }
-        o += 1
-      }
-      out
+  /** Per-query top-k partials: qid → (score_x6, doc_id) hits, best first. */
+  private type TopK = Map[Int, Array[(Long, Long)]]
+
+  /** Merge two best-first hit lists into the best k under the
+    * (score_x6 desc, doc_id asc) ordering — exactly the final ordering, so
+    * the merge is lossless. */
+  private def mergeTop(k: Int, a: Array[(Long, Long)],
+      b: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val out = new Array[(Long, Long)](math.min(k, a.length + b.length))
+    var i = 0; var j = 0; var o = 0
+    while (o < out.length) {
+      val takeA = j >= b.length || (i < a.length &&
+        (a(i)._1 > b(j)._1 || (a(i)._1 == b(j)._1 && a(i)._2 < b(j)._2)))
+      if (takeA) { out(o) = a(i); i += 1 } else { out(o) = b(j); j += 1 }
+      o += 1
     }
-    val zero = Map.empty[Int, Array[(Long, Long)]]
-    val seqOp = (acc: Map[Int, Array[(Long, Long)]], si: ShardIndex) => {
-      val byQ = perShard(si).toArray.groupBy(_._1)
-      byQ.foldLeft(acc) { case (m, (qid, hs)) =>
-        val sorted = hs.map { case (_, d, s) => (math.round(s * 1e6), d) }
-          .sortBy { case (x6, d) => (-x6, d) }.take(kk)
-        m.updated(qid,
-          m.get(qid).map(mergeTop(_, sorted)).getOrElse(sorted))
+    out
+  }
+
+  /** Folds one shard's hits for every live query into the partials. Shards
+    * sharing a JVM share one θ board per (run, qid). */
+  private final class TopKFold(qs: Array[QuerySpec], k: Int, runId: String)
+      extends ((TopK, ShardIndex) => TopK) with Serializable {
+    def apply(acc: TopK, si: ShardIndex): TopK = qs.foldLeft(acc) { (m, q) =>
+      val hits = scoreOn(si, q, k,
+        BlockMaxWand.ThetaBoards.boardFor(s"$runId/${q.qid}"))
+      if (hits.isEmpty) m
+      else {
+        val sorted = hits.map { case (d, s) => (math.round(s * 1e6), d) }
+          .sortBy { case (x6, d) => (-x6, d) }.take(k)
+        m.updated(q.qid, m.get(q.qid).map(mergeTop(k, _, sorted)).getOrElse(sorted))
       }
     }
-    val combOp = (m1: Map[Int, Array[(Long, Long)]],
-                  m2: Map[Int, Array[(Long, Long)]]) =>
-      (m1.keySet ++ m2.keySet).iterator.map { q =>
-        q -> ((m1.get(q), m2.get(q)) match {
-          case (Some(a), Some(b)) => mergeTop(a, b)
-          case (Some(a), None) => a
-          case (None, Some(b)) => b
-          case _ => Array.empty[(Long, Long)]
-        })
-      }.toMap
+  }
+
+  /** Combines two partials qid by qid. */
+  private final class TopKMerge(k: Int)
+      extends ((TopK, TopK) => TopK) with Serializable {
+    def apply(m1: TopK, m2: TopK): TopK = m2.foldLeft(m1) { case (m, (q, b)) =>
+      m.updated(q, m.get(q).map(mergeTop(k, _, b)).getOrElse(b))
+    }
+  }
+
+  /** The fan-out task: one partition's shards folded into its partials. */
+  private final class TopKTask(fold: TopKFold) extends ShardTask[TopK] {
+    def apply(ctx: TaskContext, it: Iterator[ShardIndex]): TopK =
+      it.foldLeft(Map.empty: TopK)(fold)
+  }
+
+  /** Tree-merged distributed top-k: each PARTITION folds its shards' hits
+    * into per-query top-k partials ([[TopKFold]]), and the partials
+    * combine pairwise ([[TopKMerge]]) — on the driver, or above
+    * [[treeFanInThreshold]] partitions in treeAggregate stages, so the
+    * driver receives O(queries × k) tuples at ANY shard count (the ES
+    * coordinating-node fan-in model). A flat collect of per-shard winners
+    * is k × shards × queries tuples, which at 10^6 shards (10^12 docs /
+    * 2^20 shardSize) and a 20-query batch is ~10^8 tuples through one
+    * driver; the tree bounds it. */
+  private def treeTopK(shards: RDD[ShardIndex], fold: TopKFold,
+      merge: TopKMerge): TopK = {
     val parts = shards.getNumPartitions
-    if (parts <= treeFanInThreshold) shards.aggregate(zero)(seqOp, combOp)
-    else shards.treeAggregate(zero)(seqOp, combOp,
+    if (parts <= treeFanInThreshold)
+      runShards(shards, new TopKTask(fold)).foldLeft(Map.empty: TopK)(merge)
+    else shards.treeAggregate(Map.empty: TopK)(fold, merge,
       depth = math.max(2, (math.log(parts.toDouble) / math.log(64.0)).ceil.toInt))
   }
 
@@ -524,15 +569,9 @@ object Searcher {
   private def fanOutTopK(spark: SparkSession, shards: RDD[ShardIndex], k: Int,
       queries: Seq[QuerySpec]): DataFrame = {
     val qs = queries.filter(_.live).toArray
-    val runId = java.util.UUID.randomUUID().toString
-    val kk = k
-    topKFrame(spark, if (qs.isEmpty) Map.empty else treeTopK(shards, kk) { si =>
-      qs.iterator.flatMap { q =>
-        scoreOn(si, q, kk,
-          BlockMaxWand.ThetaBoards.boardFor(s"$runId/${q.qid}"))
-          .iterator.map { case (d, s) => (q.qid, d, s) }
-      }
-    })
+    topKFrame(spark, if (qs.isEmpty) Map.empty else treeTopK(shards,
+      new TopKFold(qs, k, java.util.UUID.randomUUID().toString),
+      new TopKMerge(k)))
   }
 
   /** Score one query against one shard's index — the per-query body of
@@ -651,26 +690,36 @@ object Searcher {
     * fuzzy-match rewrite and the term suggester. */
   private def fuzzyCandidates(h: Handle, uniq: Array[(String, Int)],
       max: Int): Map[String, Array[(String, Long, Int)]] = {
-    val rows: Array[(String, String, Long, Int)] = h.shards.flatMap { si =>
-      val out = mutable.ArrayBuffer.empty[(String, String, Long, Int)]
-      uniq.foreach { case (q, maxE) =>
-        if (maxE == 0) {
-          val tp = si.terms.get(q)
-          if (tp != null) out += ((q, q, tp.df, 0))
-        } else {
-          si.fuzzyDict.candidates(q, maxE).foreach { case (t, df, d) =>
-            out += ((q, t, df, d))
-          }
-        }
-      }
-      out.iterator
-    }.collect()
+    val rows = runShards(h.shards, new FuzzyTask(uniq)).flatten
     rows.groupBy(_._1).map { case (q, rs) =>
       val byTerm = rs.groupBy(_._2).map { case (t, xs) =>
         (t, xs.map(_._3).sum, xs.head._4) // dfs add; distance is global
       }.toArray
       q -> byTerm.sortBy { case (t, df, d) => (d, -df, t) }
         .take(max)
+    }
+  }
+
+  /** Per partition: (query term, dictionary term, shard-local df,
+    * distance) for each candidate of each (term, edit budget). */
+  private final class FuzzyTask(uniq: Array[(String, Int)])
+      extends ShardTask[Array[(String, String, Long, Int)]] {
+    def apply(ctx: TaskContext,
+        it: Iterator[ShardIndex]): Array[(String, String, Long, Int)] = {
+      val out = mutable.ArrayBuffer.empty[(String, String, Long, Int)]
+      it.foreach { si =>
+        uniq.foreach { case (q, maxE) =>
+          if (maxE == 0) {
+            val tp = si.terms.get(q)
+            if (tp != null) out += ((q, q, tp.df, 0))
+          } else {
+            si.fuzzyDict.candidates(q, maxE).foreach { case (t, df, d) =>
+              out += ((q, t, df, d))
+            }
+          }
+        }
+      }
+      out.toArray
     }
   }
 
@@ -752,17 +801,30 @@ object Searcher {
       uniqueTerms: Array[String]): Map[String, Long] = {
     val missing: Array[String] = uniqueTerms.filterNot(dfCache.containsKey)
     if (missing.nonEmpty) {
-      val looked = shards.flatMap { si =>
-        missing.flatMap { t =>
-          val tp = si.terms.get(t)
-          if (tp == null) None else Some((t, tp.df))
-        }
-      }.collect().groupMapReduce(_._1)(_._2)(_ + _)
-      missing.foreach(t => dfCache.put(t, Long.box(looked.getOrElse(t, 0L))))
+      val parts = runShards(shards, new DfTask(missing))
+      missing.indices.foreach(i =>
+        dfCache.put(missing(i), Long.box(parts.iterator.map(_(i)).sum)))
     }
     uniqueTerms.iterator
       .map(t => t -> dfCache.get(t).longValue())
       .filter(_._2 > 0L).toMap
+  }
+
+  /** Per partition: each term's df summed over the partition's shards,
+    * aligned with `terms` (0 = absent here). */
+  private final class DfTask(terms: Array[String]) extends ShardTask[Array[Long]] {
+    def apply(ctx: TaskContext, it: Iterator[ShardIndex]): Array[Long] = {
+      val dfs = new Array[Long](terms.length)
+      it.foreach { si =>
+        var i = 0
+        while (i < terms.length) {
+          val tp = si.terms.get(terms(i))
+          if (tp != null) dfs(i) += tp.df
+          i += 1
+        }
+      }
+      dfs
+    }
   }
 
   /** Per-doc BM25 contributions of a weighted term bag against this

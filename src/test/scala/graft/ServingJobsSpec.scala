@@ -2,6 +2,12 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.collection.mutable
+
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -16,7 +22,8 @@ import graft.query.Searcher
 /** The per-query job budget of the serving path: a warm search is one
   * fan-out job plus one df-lookup job on a df-cache miss, and collecting the
   * driver-ordered top-k frame launches nothing more. Jobs are counted by a
-  * listener filtered on this thread's job group. */
+  * listener filtered on this thread's job group. Warm serving jobs hand
+  * Spark named tasks, so no call cleans a lambda closure. */
 class ServingJobsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -57,6 +64,34 @@ class ServingJobsSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs `body`, returning the ClosureCleaner's "Cleaning indylambda
+    * closure" debug messages logged on this thread meanwhile: each is one
+    * ASM parse of the lambda's defining class file. */
+  private def lambdaCleans(body: => Unit): Seq[String] = {
+    val caller = Thread.currentThread()
+    val seen = mutable.ArrayBuffer.empty[String]
+    val appender = new AbstractAppender("closure-cleans", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (Thread.currentThread() eq caller) {
+          val msg = e.getMessage.getFormattedMessage
+          if (msg.contains("Cleaning indylambda closure")) seen += msg
+        }
+    }
+    appender.start()
+    val logger = LogManager.getLogger("org.apache.spark.util.ClosureCleaner")
+      .asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.DEBUG)
+    try { body; seen.toSeq }
+    finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+  }
+
   private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq)
 
   test("a warm search is one job on a df-cache hit and two when a term is new") {
@@ -70,6 +105,33 @@ class ServingJobsSpec extends AnyFunSuite {
     val (_, missJobs) = jobsOf(
       rows(Searcher.search(handle, Seq(1 -> "fast join merge zqxjvw"), QuerySet.K)))
     assert(missJobs === 2)
+  }
+
+  test("warm serving calls clean no lambda closure") {
+    val th = FieldedIndex.handleFor(spark, FieldedQueries.ensureFieldedIndex(spark),
+      "title")
+    val pos = Analyzer.analyzeChainPos(Analyzer.TextStop, _: String)
+    val mh = Searcher.openMulti(spark, Seq("body" -> dir))
+    try {
+      val legs = Seq(Searcher.MultiLeg("body", Map("join" -> 1, "hash" -> 1)))
+      val calls: Seq[(String, () => DataFrame)] = Seq(
+        "search" -> (() => Searcher.search(handle, Seq(1 -> "fast join merge"),
+          QuerySet.K)),
+        "fuzzySearch" -> (() => Searcher.fuzzySearch(handle,
+          Seq(1 -> "fastt joinn"), QuerySet.K)),
+        "termSuggest" -> (() => Searcher.termSuggest(handle, "joinn", 3)),
+        "phraseSearch" -> (() => Searcher.phraseSearch(th,
+          Seq(1 -> "second title"), QuerySet.K, pos)),
+        "multiSearch" -> (() => Searcher.multiSearch(mh, legs, QuerySet.K)))
+      calls.foreach { case (name, call) =>
+        assert(rows(call()).nonEmpty, name)
+        assert(lambdaCleans(rows(call())) === Seq.empty, name)
+      }
+      // a term the handle has never seen runs the df lookup job too
+      val (_, missJobs) = jobsOf(assert(lambdaCleans(rows(Searcher.search(
+        handle, Seq(1 -> "fast join qzvxkw"), QuerySet.K))) === Seq.empty))
+      assert(missJobs === 2)
+    } finally mh.close()
   }
 
   test("multiSearch on a warm multi-field handle is one job") {
