@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Round-6 optimization instrumentation (guide §1): query-phase-only timing
   * with the EXACT same session config, ensure steps, warm-up and
   * `.count()` action as [[Bench]] phase 2, plus:
-  *   - `SPARK_GRAFT_REPS` repeats per query (default 2) — min is reported;
+  *   - `SPARK_GRAFT_REPS` repeats per query (default 2) — the min over the
+  *     reps that succeeded is reported (null if none did), with a per-query
+  *     count of failed reps;
   *   - optional `.explain("formatted")` dumps per query
   *     (`SPARK_GRAFT_PLAN_DIR`) so plan claims are reviewable offline;
   *   - optional query-name filter (`SPARK_GRAFT_ONLY`, comma-separated).
@@ -81,27 +83,29 @@ object BenchExtra {
           try pw.write(plan) finally pw.close()
         } catch { case _: Throwable => () }
       }
-      val secs = (0 until reps).map { _ =>
-        val (_, sec) = timeIt {
-          try fn(spark, sfDir).count()
-          catch { case e: Throwable =>
-            // visible, unlike the frozen Bench's silent -1: a failing query
-            // must not read as a speedup in queries_min
-            System.err.println(s"[bench-extra] $name FAILED: ${e.getMessage}")
-            -1L
-          }
+      // a failed rep is counted, never timed: its (often short) elapsed
+      // time must not read as a speedup in queries_min
+      val secs = (0 until reps).flatMap { _ =>
+        try Some(timeIt(fn(spark, sfDir).count())._2)
+        catch { case e: Throwable =>
+          System.err.println(s"[bench-extra] $name FAILED: ${e.getMessage}")
+          None
         }
-        sec
       }
       spark.sparkContext.setJobDescription(null)
       name -> secs
     }
-    val qs = results.map { case (k, v) =>
-      "\"" + k + "\":" + f"${v.min}%.3f"
+    val mins = results.map { case (k, v) => k -> v.minOption }
+    val qs = mins.map { case (k, m) =>
+      "\"" + k + "\":" + m.map(x => f"$x%.3f").getOrElse("null")
     }.mkString("{", ",", "}")
-    val total = results.map(_._2.min).sum
+    val failed = results.map { case (k, v) =>
+      "\"" + k + "\":" + (reps - v.length)
+    }.mkString("{", ",", "}")
+    val total = mins.flatMap(_._2).sum
     println(s"""{"bench_extra":true,"sf":"$sfDir","reps":$reps,""" +
-      s""""queries_min":$qs,"queries_total_sec":${f"$total%.1f"}}""")
+      s""""queries_min":$qs,"queries_failed":$failed,""" +
+      s""""queries_total_sec":${f"$total%.1f"}}""")
     spark.stop()
   }
 }

@@ -182,14 +182,17 @@ object FieldedIndex {
     io
   }
 
-  /** Per-field resident handles — the serving-node model
-    * ([[Searcher.Handle]]), SNAPSHOT-AWARE: the cache key carries the
-    * field sub-index's manifest snapshot id, so a streamed ingest or a
-    * compaction (both advance the manifest) transparently reopens the
-    * handle on next access (the Lucene reopen model; the superseded
-    * handle is closed). The staleness check is one tiny file read. */
-  private val handles =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Searcher.Handle)]()
+  /** Resident serving handles ([[Searcher.Handle]]), one per (index,
+    * sorted field set) — the serving-node model. SNAPSHOT-AWARE: an entry
+    * carries its fields' manifest snapshot tokens, so a streamed ingest or
+    * a compaction of any member field (both advance the manifest)
+    * transparently reopens the handle on next access (the Lucene reopen
+    * model; the superseded handle retires). The staleness check is one tiny
+    * file read per field. An entry opened on a SparkContext that has since
+    * stopped, or that is not the caller's, is stale too: it reopens, and a
+    * stopped context's entry is dropped (its cached shards died with it). */
+  private val handles = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[String]), (String, Searcher.Handle)]()
 
   /** Superseded handles are NOT closed inline: other threads may have
     * queries in flight on them (concurrent serving shares handles), and
@@ -213,43 +216,29 @@ object FieldedIndex {
     }
   }
 
+  /** The resident handle over one field (its shard maps key bare terms). */
   def handleFor(spark: SparkSession, indexDir: String,
-                field: String): Searcher.Handle = {
-    val d = fieldDir(indexDir, field)
+                field: String): Searcher.Handle =
+    handleFor(spark, indexDir, Seq(field))
+
+  /** The resident handle over `fields` (order and repeats ignored). */
+  def handleFor(spark: SparkSession, indexDir: String,
+                fields: Seq[String]): Searcher.Handle = {
+    val fs = fields.distinct.sorted
     // the TOKEN, not the id: a compaction swap resets the id sequence and
     // the fresh directory's id can collide with the cached one
-    val snap = new TableIO(d).snapshotToken().getOrElse("")
-    drainRetired()
-    handles.compute(d, (_, cur) =>
-      if (cur != null && cur._1 == snap) cur
-      else {
-        if (cur != null)
-          retiredHandles.add((System.currentTimeMillis(), cur._2))
-        (snap, Searcher.open(spark, d))
-      })._2
-  }
-
-  /** Multi-field handle cache (the fielded SERVING open): keyed by the
-    * sorted field set, snapshot-token-aware across every member field —
-    * any member's ingest/compaction reopens the combined handle. */
-  private val multiHandles = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Searcher.MultiHandle)]()
-
-  def multiHandleFor(spark: SparkSession, indexDir: String,
-                     fields: Seq[String]): Searcher.MultiHandle = {
-    val fs = fields.distinct.sorted
-    val key = indexDir + "::" + fs.mkString(",")
     val token = fs.map(f =>
       new TableIO(fieldDir(indexDir, f)).snapshotToken().getOrElse(""))
       .mkString("|")
+    val sc = spark.sparkContext
     drainRetired()
-    multiHandles.compute(key, (_, cur) =>
-      if (cur != null && cur._1 == token) cur
+    handles.compute((indexDir, fs), (_, cur) =>
+      if (cur != null && cur._1 == token && (cur._2.spark.sparkContext eq sc))
+        cur
       else {
-        if (cur != null)
+        if (cur != null && !cur._2.spark.sparkContext.isStopped)
           retiredHandles.add((System.currentTimeMillis(), cur._2))
-        (token, Searcher.openMulti(spark,
-          fs.map(f => f -> fieldDir(indexDir, f))))
+        (token, Searcher.open(spark, fs.map(f => f -> fieldDir(indexDir, f))))
       })._2
   }
 
@@ -295,7 +284,7 @@ object FieldedIndex {
     * repeated query term contributes once per occurrence, as in Lucene).
     * The single definition keeps the kernel paths and their naive
     * rank-identity twins weighting queries identically. */
-  private def termWeights(spec: FieldSpec, text: String): Map[String, Int] =
+  private[graft] def termWeights(spec: FieldSpec, text: String): Map[String, Int] =
     Analyzer.analyzeChain(spec.chain, text)
       .groupBy(identity).view.mapValues(_.length).toMap
 
@@ -316,38 +305,10 @@ object FieldedIndex {
     val tw = termWeights(matchSpec, matchText)
     val fvals = filterValues.flatMap(v =>
       Analyzer.analyzeChain(filterSpec.chain, v)).toSeq
-    val mh = multiHandleFor(spark, indexDir,
+    val mh = handleFor(spark, indexDir,
       Seq(matchSpec.field, filterSpec.field))
     Searcher.multiSearch(mh, Seq(Searcher.MultiLeg(matchSpec.field, tw)), k,
       filter = Some((filterSpec.field, fvals)))
-  }
-
-  /** The declarative twin of [[filteredMatch]] (full score-list decode +
-    * Catalyst semi-join) — the rank-identity reference the kernel path is
-    * property-tested against; not the production plan (a high-df filter
-    * decodes wholesale here). */
-  def filteredMatchNaive(spark: SparkSession, indexDir: String,
-                         matchSpec: FieldSpec, matchText: String,
-                         filterSpec: FieldSpec, filterValues: Seq[String],
-                         k: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val tw = termWeights(matchSpec, matchText)
-    val scores = Searcher
-      .contribs(handleFor(spark, indexDir, matchSpec.field), tw)
-      .groupBy(col("doc_id"))
-      .agg(sum(col("contrib")).as("score"))
-    // no distinct(): left_semi ignores right-side duplicates, and a
-    // distinct here would only add an exchange
-    val allowed = termQuery(spark, indexDir, filterSpec, filterValues)
-      .select("doc_id")
-    scores.join(allowed, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
-      .orderBy(col("score_x6").desc, col("doc_id").asc)
-      .limit(k)
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score_x6").desc, col("doc_id").asc)))
-      .select(col("rnk").cast("long").as("rnk"), col("doc_id"), col("score_x6"))
   }
 
   /** ES bool/should multi-field match — the reference's actual client
@@ -368,7 +329,7 @@ object FieldedIndex {
     val mlegs = legs.map { case (spec, text) =>
       Searcher.MultiLeg(spec.field, termWeights(spec, text))
     }
-    val mh = multiHandleFor(spark, indexDir, legs.map(_._1.field))
+    val mh = handleFor(spark, indexDir, legs.map(_._1.field))
     Searcher.multiSearch(mh, mlegs, k, minShouldMatch)
   }
 
@@ -387,31 +348,8 @@ object FieldedIndex {
     val mlegs = legs.map { case (spec, text, boost) =>
       Searcher.MultiLeg(spec.field, termWeights(spec, text), boost)
     }
-    val mh = multiHandleFor(spark, indexDir, legs.map(_._1.field))
+    val mh = handleFor(spark, indexDir, legs.map(_._1.field))
     Searcher.multiSearch(mh, mlegs, k, minShouldMatch)
-  }
-
-  /** The declarative twin of [[multiMatchBoost]] (per-leg boosted score
-    * lists + Catalyst hash-agg sum) — rank-identity reference for the
-    * boosted kernel path. */
-  def multiMatchBoostNaive(spark: SparkSession, indexDir: String,
-                           legs: Seq[(FieldSpec, String, Double)],
-                           k: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val contribs = legs.map { case (spec, text, boost) =>
-      Searcher.contribs(handleFor(spark, indexDir, spec.field),
-        termWeights(spec, text), boost)
-    }
-    contribs.reduce(_.unionByName(_))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("contrib")).as("score"))
-      .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
-      .orderBy(col("score_x6").desc, col("doc_id").asc)
-      .limit(k)
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score_x6").desc, col("doc_id").asc)))
-      .select(col("rnk").cast("long").as("rnk"), col("doc_id"), col("score_x6"))
   }
 
   /** ES bool query mixing match should-legs and match_phrase clauses —
@@ -432,42 +370,9 @@ object FieldedIndex {
     val plegs = phraseLegs.map { case (spec, text) =>
       Searcher.PhraseLeg(spec.field, Analyzer.analyzeChainPos(spec.chain, text))
     }
-    val mh = multiHandleFor(spark, indexDir,
-      (legs.map(_._1.field) ++ phraseLegs.map(_._1.field)).distinct)
+    val mh = handleFor(spark, indexDir,
+      legs.map(_._1.field) ++ phraseLegs.map(_._1.field))
     Searcher.multiSearch(mh, mlegs, k, minShouldMatch, phraseLegs = plegs)
-  }
-
-  /** The declarative twin of [[boolQuery]] (full per-clause score lists —
-    * match legs via [[Searcher.contribs]], phrase clauses via
-    * [[Searcher.phraseContribs]] — Catalyst hash-agg sum with a
-    * matched-clause count for minimum_should_match) — the rank-identity
-    * reference for the kernel path; exact but unpruned. */
-  def boolQueryNaive(spark: SparkSession, indexDir: String,
-                     legs: Seq[(FieldSpec, String)],
-                     phraseLegs: Seq[(FieldSpec, String)], k: Int,
-                     minShouldMatch: Int = 1): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val matchC = legs.zipWithIndex.map { case ((spec, text), li) =>
-      Searcher.contribs(handleFor(spark, indexDir, spec.field),
-        termWeights(spec, text)).withColumn("leg", lit(li))
-    }
-    val phraseC = phraseLegs.zipWithIndex.map { case ((spec, text), pi) =>
-      Searcher.phraseContribs(handleFor(spark, indexDir, spec.field),
-        Analyzer.analyzeChainPos(spec.chain, text))
-        .withColumn("leg", lit(legs.size + pi))
-    }
-    (matchC ++ phraseC).reduce(_.unionByName(_))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("contrib")).as("score"),
-        countDistinct(col("leg")).as("nlegs"))
-      .where(col("nlegs") >= minShouldMatch)
-      .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
-      .orderBy(col("score_x6").desc, col("doc_id").asc)
-      .limit(k)
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score_x6").desc, col("doc_id").asc)))
-      .select(col("rnk").cast("long").as("rnk"), col("doc_id"), col("score_x6"))
   }
 
   /** ES match with `fuzziness` against one field ([[Searcher.fuzzySearch]]
@@ -555,75 +460,14 @@ object FieldedIndex {
       mustPhrases.indices.map(mlegs.length + _)
     def analyzedVals(fs: FieldSpec, vs: Seq[String]): Seq[String] =
       vs.flatMap(v => Analyzer.analyzeChain(fs.chain, v))
-    val fields = ((must ++ should ++ mustPhrases ++ shouldPhrases)
-      .map(_._1.field) ++ filter.map(_._1.field) ++ mustNot.map(_._1.field))
-      .distinct
-    val mh = multiHandleFor(spark, indexDir, fields)
+    val mh = handleFor(spark, indexDir,
+      (must ++ should ++ mustPhrases ++ shouldPhrases).map(_._1.field) ++
+        filter.map(_._1.field) ++ mustNot.map(_._1.field))
     Searcher.multiSearch(mh, mlegs, k, msmEff,
       filter.map { case (fs, vs) => (fs.field, analyzedVals(fs, vs)) },
       phraseLegs = plegs,
       mustNot = mustNot.map { case (fs, vs) => (fs.field, analyzedVals(fs, vs)) },
       requiredLegs = requiredLegs)
-  }
-
-  /** The declarative twin of [[esBool]] (full per-clause score lists +
-    * Catalyst gates: required-leg count, should-count HAVING, filter
-    * semi-join, must_not anti-join) — rank-identity reference for the
-    * kernel path; exact but unpruned. */
-  def esBoolNaive(spark: SparkSession, indexDir: String,
-                  must: Seq[(FieldSpec, String)] = Nil,
-                  should: Seq[(FieldSpec, String)] = Nil,
-                  mustPhrases: Seq[(FieldSpec, String)] = Nil,
-                  shouldPhrases: Seq[(FieldSpec, String)] = Nil,
-                  filter: Option[(FieldSpec, Seq[String])] = None,
-                  mustNot: Option[(FieldSpec, Seq[String])] = None,
-                  k: Int = 10, minShouldMatch: Int = -1): DataFrame = {
-    // bind before the functions._ import: `filter` would otherwise be
-    // ambiguous with org.apache.spark.sql.functions.filter
-    val filterOpt = filter
-    val mustNotOpt = mustNot
-    import org.apache.spark.sql.functions._
-    val msmEff =
-      if (minShouldMatch >= 0) minShouldMatch
-      else if (must.nonEmpty || mustPhrases.nonEmpty) 0
-      else 1
-    val nMatch = must.size + should.size
-    val matchC = (must ++ should).zipWithIndex.map { case ((spec, text), li) =>
-      Searcher.contribs(handleFor(spark, indexDir, spec.field),
-        termWeights(spec, text)).withColumn("leg", lit(li))
-    }
-    val phraseC = (mustPhrases ++ shouldPhrases).zipWithIndex.map {
-      case ((spec, text), pi) =>
-        Searcher.phraseContribs(handleFor(spark, indexDir, spec.field),
-          Analyzer.analyzeChainPos(spec.chain, text))
-          .withColumn("leg", lit(nMatch + pi))
-    }
-    val reqSet: Seq[Int] =
-      must.indices ++ mustPhrases.indices.map(nMatch + _)
-    val isReq =
-      if (reqSet.isEmpty) lit(false) else col("leg").isInCollection(reqSet)
-    var scored = (matchC ++ phraseC).reduce(_.unionByName(_))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("contrib")).as("score"),
-        countDistinct(when(isReq, col("leg"))).as("nreq"),
-        countDistinct(when(!isReq, col("leg"))).as("nshould"))
-      .where(col("nreq") === reqSet.size && col("nshould") >= msmEff)
-    for ((fs, vs) <- filterOpt)
-      scored = scored.join(
-        termQuery(spark, indexDir, fs, vs).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-    for ((fs, vs) <- mustNotOpt)
-      scored = scored.join(
-        termQuery(spark, indexDir, fs, vs).select("doc_id"),
-        Seq("doc_id"), "left_anti")
-    scored
-      .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
-      .orderBy(col("score_x6").desc, col("doc_id").asc)
-      .limit(k)
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score_x6").desc, col("doc_id").asc)))
-      .select(col("rnk").cast("long").as("rnk"), col("doc_id"), col("score_x6"))
   }
 
   /** ES match query with `operator: and` — every analyzed term must match
@@ -641,8 +485,8 @@ object FieldedIndex {
     val legs = terms.map { case (t, w) =>
       Searcher.MultiLeg(spec.field, Map(t -> w))
     }
-    val mh = multiHandleFor(spark, indexDir, Seq(spec.field))
-    Searcher.multiSearch(mh, legs, k, minShouldMatch = legs.length)
+    Searcher.multiSearch(handleFor(spark, indexDir, spec.field), legs, k,
+      minShouldMatch = legs.length)
   }
 
   /** ES dis_max / multi_match best_fields — the OTHER bool-family shape
@@ -659,57 +503,8 @@ object FieldedIndex {
     val mlegs = legs.map { case (spec, text) =>
       Searcher.MultiLeg(spec.field, termWeights(spec, text))
     }
-    val mh = multiHandleFor(spark, indexDir, legs.map(_._1.field))
+    val mh = handleFor(spark, indexDir, legs.map(_._1.field))
     Searcher.multiSearch(mh, mlegs, k, disMaxTieBreaker = tieBreaker)
-  }
-
-  /** The declarative twin of [[disMax]] (full per-leg decode + Catalyst
-    * max/sum) — rank-identity reference for the kernel path. */
-  def disMaxNaive(spark: SparkSession, indexDir: String,
-                  legs: Seq[(FieldSpec, String)], k: Int,
-                  tieBreaker: Double): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val perLeg = legs.map { case (spec, text) =>
-      Searcher.contribs(handleFor(spark, indexDir, spec.field),
-        termWeights(spec, text))
-        .groupBy(col("doc_id")).agg(sum(col("contrib")).as("leg_score"))
-    }
-    perLeg.reduce(_.unionByName(_))
-      .groupBy(col("doc_id"))
-      .agg((max(col("leg_score")) +
-        lit(tieBreaker) * (sum(col("leg_score")) - max(col("leg_score"))))
-        .as("score"))
-      .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
-      .orderBy(col("score_x6").desc, col("doc_id").asc)
-      .limit(k)
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score_x6").desc, col("doc_id").asc)))
-      .select(col("rnk").cast("long").as("rnk"), col("doc_id"), col("score_x6"))
-  }
-
-  /** The declarative twin of [[multiMatch]] (per-leg full score lists +
-    * Catalyst hash-agg sum) — rank-identity reference for the kernel path;
-    * exact but unpruned (a sum-ranked doc can win from middling per-field
-    * scores, so per-field top-k would be wrong and this decodes every
-    * leg's matches). */
-  def multiMatchNaive(spark: SparkSession, indexDir: String,
-                      legs: Seq[(FieldSpec, String)], k: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val contribs = legs.map { case (spec, text) =>
-      Searcher.contribs(handleFor(spark, indexDir, spec.field),
-        termWeights(spec, text))
-    }
-    contribs.reduce(_.unionByName(_))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("contrib")).as("score"))
-      .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
-      .orderBy(col("score_x6").desc, col("doc_id").asc)
-      .limit(k)
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score_x6").desc, col("doc_id").asc)))
-      .select(col("rnk").cast("long").as("rnk"), col("doc_id"), col("score_x6"))
   }
 
   // ---- Multi-term queries (Lucene MultiTermQuery rewrites) ----------------
@@ -1544,8 +1339,7 @@ object FieldedIndex {
     val msm = math.max(1, selected.length * minShouldMatchPct / 100)
     val legs = selected.toSeq.map(t =>
       Searcher.MultiLeg(spec.field, Map(t -> 1)))
-    val mh = multiHandleFor(spark, indexDir, Seq(spec.field))
-    Searcher.multiSearch(mh, legs, k + 1, minShouldMatch = msm)
+    Searcher.multiSearch(h, legs, k + 1, minShouldMatch = msm)
       .filter(col("doc_id") =!= srcId)
       .select(col("doc_id"), col("score_x6"))
       .withColumn("rnk", row_number().over(

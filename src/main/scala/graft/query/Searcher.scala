@@ -71,10 +71,31 @@ object Searcher {
     @transient lazy val fuzzyDict: FuzzyDict = FuzzyDict.build(terms)
   }
 
-  /** A query-server handle: corpus stats loaded once, shard indexes resident
-    * in executor memory. The term dictionary stays distributed (inside the
-    * shard indexes) — per-query metadata is looked up, never collected
-    * wholesale.
+  /** Field-qualified key inside a multi-field shard index. NUL never occurs
+    * in FIELD names (mapping identifiers), so the first NUL delimits the
+    * field unambiguously whatever bytes a keyword-chain term carries. */
+  val FieldSep = "\u0000"
+
+  /** The shard-map key prefix of `field` in a handle over `nFields` fields:
+    * none on a one-field handle (its maps hold bare terms), `<field><NUL>`
+    * otherwise. The one key rule: [[open]] writes keys with it and
+    * [[Handle.key]] looks them up with it. */
+  private def keyPrefix(nFields: Int, field: String): String =
+    if (nFields == 1) "" else field + FieldSep
+
+  /** One field of a handle: its sub-index directory, BM25 stats and bound
+    * mode (each field scores under its own (N, avgdl, df)). */
+  private final case class FieldState(dir: String, stats: CorpusStats,
+      tight: Boolean)
+
+  /** A query-server handle over one or more fields' sub-indexes: per-field
+    * corpus stats loaded once, and one resident index per doc shard holding
+    * every field's postings (the ES/Lucene segment shape), cached in
+    * executor memory as an RDD of [[ShardIndex]] objects. Co-location makes
+    * a multi-leg bool query one narrow kernel job ([[multiSearch]]). The
+    * term dictionary stays distributed (inside the shard indexes) —
+    * per-query metadata is looked up, never collected wholesale. The
+    * single-field accessors require a one-field handle.
     *
     * Reopen contract (the Lucene IndexReader model): a handle is a
     * snapshot of the index AT OPEN TIME. After a [[graft.streaming
@@ -83,14 +104,28 @@ object Searcher {
     * recompute against the NEW directory (different doc ids) — close and
     * reopen handles after compaction rather than serving through it. */
   final class Handle private[Searcher] (val spark: SparkSession,
-      val indexDir: String, val stats: CorpusStats, val tightBounds: Boolean,
+      private[Searcher] val fields: Map[String, FieldState],
       private[Searcher] val shards: RDD[ShardIndex]) extends AutoCloseable {
-    /** Driver-side term→df memo (misses resolved by a distributed lookup;
+    /** Driver-side key→df memo (misses resolved by a distributed lookup;
       * 0 = known-absent). Query-sized growth — only terms actually queried
       * ever reach the driver, never the vocabulary. */
     private[Searcher] val dfCache =
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    def close(): Unit = shards.unpersist()
+
+    /** The shard-map key of `term` in `field` ([[keyPrefix]]). */
+    private[Searcher] def key(field: String, term: String): String =
+      keyPrefix(fields.size, field) + term
+
+    private def only: FieldState = {
+      require(fields.size == 1, s"not a one-field handle: ${fields.keys}")
+      fields.head._2
+    }
+    def indexDir: String = only.dir
+    def stats: CorpusStats = only.stats
+    def tightBounds: Boolean = only.tight
+
+    /** Releases the resident shards; a stopped context has none left. */
+    def close(): Unit = if (!shards.sparkContext.isStopped) shards.unpersist()
   }
 
   /** The per-partition body of a serving job over resident shard indexes:
@@ -109,34 +144,6 @@ object Searcher {
   private object ShardIds extends ShardTask[Array[Int]] {
     def apply(ctx: TaskContext, it: Iterator[ShardIndex]): Array[Int] =
       it.map(_.shard).toArray
-  }
-
-  /** Field-qualified key inside a multi-field shard index. NUL never occurs
-    * in FIELD names (mapping identifiers), so the first NUL delimits the
-    * field unambiguously whatever bytes a keyword-chain term carries. */
-  val FieldSep = "\u0000"
-
-  /** A multi-FIELD serving handle: one resident shard index whose keys are
-    * `<field><NUL><term>` over the union of several per-field sub-indexes,
-    * co-located by doc shard. This is the ES/Lucene segment shape — one
-    * physical index holding every field's postings for its doc range — and
-    * it is what makes multi-leg bool queries one narrow kernel job: all
-    * legs' cursors for a doc range live in the same partition, so the
-    * combined-bound WAND walks them together with θ = kth-best SUM.
-    *
-    * The per-field build layout stays as-is (it buys per-field build
-    * concurrency and per-field stats); this open pays ONE co-locating
-    * exchange per serving generation — the cost Lucene pays at segment
-    * write time instead — amortized over every query served. Per-field BM25
-    * statistics ride along ([[fieldStats]]) since each leg scores under its
-    * own field's (N, avgdl, df). */
-  final class MultiHandle private[Searcher] (val spark: SparkSession,
-      val fieldStats: Map[String, CorpusStats],
-      val fieldTight: Map[String, Boolean],
-      private[Searcher] val shards: RDD[ShardIndex]) extends AutoCloseable {
-    private[Searcher] val dfCache =
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    def close(): Unit = shards.unpersist()
   }
 
   /** One bool/should leg: a field plus its analyzed term→weight bag.
@@ -209,44 +216,16 @@ object Searcher {
   private def aligned(occs: Seq[(String, Int)]): Phrase.Law =
     Phrase.Aligned(occs.map(_._2 - occs.head._2).toArray)
 
-  /** Open a multi-field handle over per-field sub-index directories
-    * (field → dir). Includes committed streamed segments per field; each
-    * field's bound mode is tracked separately. */
-  def openMulti(spark: SparkSession,
-                dirs: Seq[(String, String)]): MultiHandle = {
-    import spark.implicits._
-    val stats = dirs.map { case (f, d) =>
-      f -> graft.index.IndexTables.corpusStats(spark, new TableIO(d))
-    }.toMap
-    val tight = dirs.map { case (f, d) =>
-      f -> tightBoundsOf(new TableIO(d))
-    }.toMap
-    val union = dirs.map { case (f, d) =>
-      graft.index.IndexTables.postings(spark, new TableIO(d))
-        .select(BlockCols.head, BlockCols.tail: _*)
-        .withColumn("term", concat(lit(f + FieldSep), col("term")))
-    }.reduce(_.unionByName(_))
-    val sorted = union
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_shard"))
-      .sortWithinPartitions("doc_shard", "term", "first_doc_id")
-      .as[PostingBlock]
-    val shards = sorted.rdd
-      .mapPartitions(buildShardIndexes, preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    runShards(shards, ShardIds) // open pays the exchange once; queries never do
-    new MultiHandle(spark, stats, tight, shards)
-  }
-
-  /** ES bool query against a multi-field handle: `legs` are should-clauses
-    * (scored, summed per doc), `filter` is an optional (field, analyzed
-    * values) term filter in filter context (unscored, OR over values),
-    * `minShouldMatch` is the ES bool parameter counting matched clauses.
-    * One narrow kernel job over the resident multi-field shards — the
-    * combined-bound WAND ([[BlockMaxWand.scoreCursors]]) prunes with
-    * θ = kth-best SUM, so a high-df leg's posting list is skipped through,
-    * not decoded wholesale. Returns (rnk, doc_id, score_x6) under the
-    * deterministic ordering. */
-  def multiSearch(mh: MultiHandle, legs: Seq[MultiLeg], k: Int,
+  /** ES bool query against a handle: `legs` are should-clauses (scored,
+    * summed per doc), `filter` is an optional (field, analyzed values) term
+    * filter in filter context (unscored, OR over values), `minShouldMatch`
+    * is the ES bool parameter counting matched clauses. Every clause's
+    * field must be one the handle holds. One narrow kernel job over the
+    * resident shards — the combined-bound WAND ([[BlockMaxWand.scoreCursors]])
+    * prunes with θ = kth-best SUM, so a high-df leg's posting list is
+    * skipped through, not decoded wholesale. Returns (rnk, doc_id, score_x6)
+    * under the deterministic ordering. */
+  def multiSearch(h: Handle, legs: Seq[MultiLeg], k: Int,
                   minShouldMatch: Int = 1,
                   filter: Option[(String, Seq[String])] = None,
                   disMaxTieBreaker: Double = -1.0,
@@ -263,39 +242,41 @@ object Searcher {
     require(legs.forall(_.boost > 0.0) && phraseLegs.forall(_.boost > 0.0),
       "leg boost must be > 0 (a zero boost would zero the leg's bounds " +
         "but still count it for minimum_should_match — drop the leg instead)")
-    val filterKeys: Array[String] = filter.toArray.flatMap { case (f, vs) =>
-      vs.map(v => f + FieldSep + v)
-    }
-    val mustNotKeys: Array[String] = mustNot.toArray.flatMap { case (f, vs) =>
-      vs.map(v => f + FieldSep + v)
-    }
-    val legKeys = legs.flatMap(l => l.termWeights.keys.map(l.field + FieldSep + _))
-    val phraseKeys = phraseLegs.flatMap(p =>
-      p.occs.map(o => p.field + FieldSep + o._1))
-    val dfByKey = resolveDfs(mh.shards, mh.dfCache,
+    // a field the handle lacks has no keys to find: its legs would miss and
+    // its filter would match nothing, so refuse it before any job runs
+    val unheld = (legs.map(_.field) ++ phraseLegs.map(_.field) ++
+      filter.map(_._1) ++ mustNot.map(_._1)).distinct.filterNot(h.fields.contains)
+    require(unheld.isEmpty, s"field(s) ${unheld.mkString(", ")} not held " +
+      s"by this handle (it holds ${h.fields.keys.toSeq.sorted.mkString(", ")})")
+    def keys(fv: Option[(String, Seq[String])]): Array[String] =
+      fv.toArray.flatMap { case (f, vs) => vs.map(h.key(f, _)) }
+    val filterKeys = keys(filter)
+    val mustNotKeys = keys(mustNot)
+    val legKeys = legs.flatMap(l => l.termWeights.keys.map(h.key(l.field, _)))
+    val phraseKeys = phraseLegs.flatMap(p => p.occs.map(o => h.key(p.field, o._1)))
+    val dfByKey = resolveDfs(h,
       (legKeys ++ phraseKeys ++ filterKeys ++ mustNotKeys).distinct.toArray)
     // cursor order fixed as (leg, term): the kernel's FP sum order — and so
     // the exact emitted doubles — is deterministic across runs
     val specs: Array[CursorSpec] = legs.zipWithIndex.flatMap { case (l, li) =>
-      val st = mh.fieldStats(l.field)
-      l.termWeights.toSeq.sortBy(_._1).collect {
-        case (t, w) if dfByKey.contains(l.field + FieldSep + t) =>
-          CursorSpec(l.field + FieldSep + t,
-            Bm25.idf(st.n_docs, dfByKey(l.field + FieldSep + t)) * l.boost,
-            w, st.avgdl, mh.fieldTight(l.field), li)
+      val fs = h.fields(l.field)
+      l.termWeights.toSeq.sortBy(_._1).flatMap { case (t, w) =>
+        val key = h.key(l.field, t)
+        dfByKey.get(key).map(df => CursorSpec(key,
+          Bm25.idf(fs.stats.n_docs, df) * l.boost, w, fs.stats.avgdl, fs.tight, li))
       }
     }.toArray
     // phrase clauses number their legs AFTER the should-legs; a clause with
     // any corpus-absent term matches nothing (conjunction) and is dropped
     val phraseSpecs: Array[PhraseSpec] = phraseLegs.zipWithIndex.flatMap {
       case (pl, pi) =>
-        val slots =
-          pl.occs.toSeq.map(o => slot(pl.field + FieldSep + o._1, dfByKey))
-        phraseSpec(slots, mh.fieldStats(pl.field), mh.fieldTight(pl.field),
-          legs.length + pi, pl.boost)(_ => aligned(pl.occs.toSeq))
+        val fs = h.fields(pl.field)
+        val slots = pl.occs.toSeq.map(o => slot(h.key(pl.field, o._1), dfByKey))
+        phraseSpec(slots, fs.stats, fs.tight, legs.length + pi, pl.boost)(
+          _ => aligned(pl.occs.toSeq))
     }.toArray
     // single bool query ⇒ one qid (0)
-    fanOutTopK(mh.spark, mh.shards, k, Seq(QuerySpec(0, specs, phraseSpecs,
+    fanOutTopK(h.spark, h.shards, k, Seq(QuerySpec(0, specs, phraseSpecs,
       filter.map(_ => filterKeys.filter(dfByKey.contains)), mustNotKeys,
       minShouldMatch, disMaxTieBreaker,
       requiredLegs.foldLeft(0L)((m, l) => m | (1L << l))))).drop("qid")
@@ -305,14 +286,26 @@ object Searcher {
     "first_doc_id", "last_doc_id", "doc_ids", "tfs", "dls", "max_tf_norm",
     "max_tf", "enc_wall_ms", "pos")
 
-  def open(spark: SparkSession, indexDir: String): Handle = {
-    // a compaction crashed mid-swap must not leave the index unopenable
-    // until the NEXT compaction: finish (or roll back) the swap here too
-    graft.streaming.Compactor.finishInterruptedSwap(indexDir)
-    val io = new TableIO(indexDir)
-    val stats = graft.index.IndexTables.corpusStats(spark, io)
-    val tight = tightBoundsOf(io)
-    val batches = graft.index.IndexTables.activeBatches(io)
+  /** Open a one-field handle over `indexDir`; its field is unnamed (""). */
+  def open(spark: SparkSession, indexDir: String): Handle =
+    open(spark, Seq("" -> indexDir))
+
+  /** Open a handle over per-field sub-index directories (field → dir),
+    * committed streamed segments included; each field keeps its own stats
+    * and bound mode. */
+  def open(spark: SparkSession, fieldDirs: Seq[(String, String)]): Handle = {
+    require(fieldDirs.nonEmpty && fieldDirs.toMap.size == fieldDirs.length,
+      s"a handle needs distinct fields, got ${fieldDirs.map(_._1)}")
+    val ios = fieldDirs.map { case (f, d) =>
+      // a compaction crashed mid-swap must not leave the index unopenable
+      // until the NEXT compaction: finish (or roll back) the swap here too
+      graft.streaming.Compactor.finishInterruptedSwap(d)
+      f -> new TableIO(d)
+    }
+    val fields = ios.map { case (f, io) =>
+      f -> FieldState(io.indexDir,
+        graft.index.IndexTables.corpusStats(spark, io), tightBoundsOf(io))
+    }.toMap
     // Fast path (no active streamed segments — the compacted common case):
     // the encode stage hash-repartitions by doc_shard and writes one file
     // per task, so every postings FILE holds whole, internally-sorted
@@ -326,23 +319,34 @@ object Searcher {
     // format property could be violated) and falls back to the shuffle
     // path. With active segments the slow path is REQUIRED: a partially
     // filled tail shard continues into the segment's files, and its blocks
-    // must merge into one serving index.
-    val shards = (if (batches.isEmpty) openUnshuffled(spark, io) else None)
-      .getOrElse(openShuffled(spark, io))
-    runShards(shards, ShardIds) // materialize: open pays the build
-    new Handle(spark, indexDir, stats, tight, shards)
+    // must merge into one serving index. Several fields take the shuffle
+    // too: it co-locates their doc shards once per serving generation (the
+    // cost Lucene pays at segment write time instead).
+    val shards = (ios match {
+      case Seq((_, io)) if graft.index.IndexTables.activeBatches(io).isEmpty =>
+        openUnshuffled(spark, io)
+      case _ => None
+    }).getOrElse(openShuffled(spark, ios))
+    new Handle(spark, fields, shards)
   }
 
-  /** The shuffle open: co-locate each shard (base + streamed segments),
-    * stream its (term, first_doc_id)-sorted blocks into a hash index.
-    * partitions = total cores, NOT spark.sql.shuffle.partitions: per-query
-    * work per shard is microseconds, so query jobs are task-scheduling-
-    * bound — one task per core per wave is the latency-optimal width (on a
-    * cluster: one serving slot per executor core, the ES fan-out model). */
-  private def openShuffled(spark: SparkSession, io: TableIO): RDD[ShardIndex] = {
+  /** The shuffle open: co-locate each shard (base + streamed segments, of
+    * every field, keyed by [[keyPrefix]]), stream its (key, first_doc_id)-
+    * sorted blocks into a hash index. partitions = total cores, NOT
+    * spark.sql.shuffle.partitions: per-query work per shard is
+    * microseconds, so query jobs are task-scheduling-bound — one task per
+    * core per wave is the latency-optimal width (on a cluster: one serving
+    * slot per executor core, the ES fan-out model). */
+  private def openShuffled(spark: SparkSession,
+      ios: Seq[(String, TableIO)]): RDD[ShardIndex] = {
     import spark.implicits._
-    val sorted = graft.index.IndexTables.postings(spark, io)
-      .select(BlockCols.head, BlockCols.tail: _*)
+    val sorted = ios.map { case (f, io) =>
+      val blocks = graft.index.IndexTables.postings(spark, io)
+        .select(BlockCols.head, BlockCols.tail: _*)
+      val prefix = keyPrefix(ios.length, f)
+      if (prefix.isEmpty) blocks
+      else blocks.withColumn("term", concat(lit(prefix), col("term")))
+    }.reduce(_.unionByName(_))
       .repartition(spark.sparkContext.defaultParallelism, col("doc_shard"))
       .sortWithinPartitions("doc_shard", "term", "first_doc_id")
       .as[PostingBlock]
@@ -352,13 +356,15 @@ object Searcher {
     // evicted shards a local read away. Plain (deserialized) level, NOT
     // _SER: serialized-in-memory blocks re-deserialize the hash maps on
     // EVERY query (measured p50 93 → 257 ms).
-    sorted.rdd
+    val shards = sorted.rdd
       .mapPartitions(buildShardIndexes, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    runShards(shards, ShardIds) // materialize: open pays the exchange once
+    shards
   }
 
-  /** The no-shuffle open. Returns None (after cleaning up) if the
-    * shard-whole-files property does not hold. */
+  /** The no-shuffle open (its guard job materializes the shards). Returns
+    * None (after cleaning up) if the shard-whole-files property fails. */
   private def openUnshuffled(spark: SparkSession,
       io: TableIO): Option[RDD[ShardIndex]] = {
     import spark.implicits._
@@ -404,9 +410,6 @@ object Searcher {
     // property; violation ⇒ a doc's postings would split across serving
     // indexes and scores would be partial). Shard-count-sized, tiny.
     val ids = runShards(shards, ShardIds).flatten
-    if (sys.env.contains("GRAFT_OPEN_LOG"))
-      System.err.println(s"[open] unshuffled: ${shards.getNumPartitions} " +
-        s"partitions, ${ids.length} shard indexes, pack=$packBytes")
     if (ids.length == ids.distinct.length) Some(shards)
     else {
       // the fallback is correct but silently loses the no-shuffle open —
@@ -789,24 +792,18 @@ object Searcher {
   def termDfs(h: Handle, terms: Array[String]): Map[String, Long] =
     resolveDfs(h, terms)
 
-  /** Query-sized df lookup for cache misses only: |terms| hash lookups per
+  /** Query-sized df lookup for cache misses only: |keys| hash lookups per
     * shard, Σ over shards (skipped entirely once the handle has served the
-    * terms before). Returns only terms with df > 0. */
-  private def resolveDfs(h: Handle,
-      uniqueTerms: Array[String]): Map[String, Long] =
-    resolveDfs(h.shards, h.dfCache, uniqueTerms)
-
-  private def resolveDfs(shards: RDD[ShardIndex],
-      dfCache: java.util.concurrent.ConcurrentHashMap[String, java.lang.Long],
-      uniqueTerms: Array[String]): Map[String, Long] = {
-    val missing: Array[String] = uniqueTerms.filterNot(dfCache.containsKey)
+    * keys before). Returns only keys with df > 0. */
+  private def resolveDfs(h: Handle, keys: Array[String]): Map[String, Long] = {
+    val missing: Array[String] = keys.filterNot(h.dfCache.containsKey)
     if (missing.nonEmpty) {
-      val parts = runShards(shards, new DfTask(missing))
+      val parts = runShards(h.shards, new DfTask(missing))
       missing.indices.foreach(i =>
-        dfCache.put(missing(i), Long.box(parts.iterator.map(_(i)).sum)))
+        h.dfCache.put(missing(i), Long.box(parts.iterator.map(_(i)).sum)))
     }
-    uniqueTerms.iterator
-      .map(t => t -> dfCache.get(t).longValue())
+    keys.iterator
+      .map(t => t -> h.dfCache.get(t).longValue())
       .filter(_._2 > 0L).toMap
   }
 

@@ -19,8 +19,7 @@ object LatencyProbe {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       // mirror the bench session's aggressive split sizing: the no-shuffle
-      // open must engage DESPITE it (it plans on a cloned session) — run
-      // with GRAFT_OPEN_LOG=1 to see which open path served
+      // open must engage DESPITE it (it plans on a cloned session)
       .config("spark.sql.files.maxPartitionBytes", (4 << 20).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

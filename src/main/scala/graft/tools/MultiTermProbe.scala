@@ -12,9 +12,9 @@ import graft.io.TableIO
   * terms+cardinality / top_hits).
   *
   * `runMain graft.tools.MultiTermProbe [nDocs] [cores]` — reuses the
-  * [[FieldedProfile]] synthetic corpus and [[MultiMatchProbe]]'s index
-  * directory. Protocol per BASELINE.md's variance study: 3 rounds,
-  * per-arm MINIMA (contention on this host only slows runs). */
+  * [[FieldedProfile]] synthetic corpus and its fielded index directory.
+  * Protocol per BASELINE.md's variance study: 3 rounds, per-arm MINIMA
+  * (contention on this host only slows runs). */
 object MultiTermProbe {
 
   def main(args: Array[String]): Unit = {

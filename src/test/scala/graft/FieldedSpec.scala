@@ -295,22 +295,22 @@ class FieldedSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("rnk"), r.getAs[Long]("doc_id"),
         r.getAs[Long]("score_x6"))).toSeq.sorted
     assert(rows(FieldedIndex.multiMatch(spark, idx, legs, 10)) ===
-      rows(FieldedIndex.multiMatchNaive(spark, idx, legs, 10)))
+      rows(FieldedNaive.multiMatchNaive(spark, idx, legs, 10)))
     assert(rows(FieldedIndex.filteredMatch(spark, idx,
         spec("title"), FieldedQueries.FilteredMatchText,
         spec("year"), Seq(FieldedQueries.FilteredYear), 10)) ===
-      rows(FieldedIndex.filteredMatchNaive(spark, idx,
+      rows(FieldedNaive.filteredMatchNaive(spark, idx,
         spec("title"), FieldedQueries.FilteredMatchText,
         spec("year"), Seq(FieldedQueries.FilteredYear), 10)))
     for (tb <- Seq(0.0, 0.3, 1.0))
       assert(rows(FieldedIndex.disMax(spark, idx, legs, 10, tb)) ===
-        rows(FieldedIndex.disMaxNaive(spark, idx, legs, 10, tb)), s"tb=$tb")
+        rows(FieldedNaive.disMaxNaive(spark, idx, legs, 10, tb)), s"tb=$tb")
     // boosted legs: kernel == naive twin, boost=1 degenerates to the
     // unboosted path bit-for-bit, and the harness boosts actually reorder
     val blegs = FieldedQueries.MultiLegs.zip(FieldedQueries.MultiBoosts)
       .map { case ((f, t), b) => (spec(f), t, b) }
     assert(rows(FieldedIndex.multiMatchBoost(spark, idx, blegs, 10)) ===
-      rows(FieldedIndex.multiMatchBoostNaive(spark, idx, blegs, 10)))
+      rows(FieldedNaive.multiMatchBoostNaive(spark, idx, blegs, 10)))
     val unit = legs.map { case (s, t) => (s, t, 1.0) }
     assert(rows(FieldedIndex.multiMatchBoost(spark, idx, unit, 10)) ===
       rows(FieldedIndex.multiMatch(spark, idx, legs, 10)))
@@ -334,7 +334,7 @@ class FieldedSpec extends AnyFunSuite {
                        FieldedQueries.BoolPhraseSelective); msm <- Seq(1, 2)) {
       val plegs = Seq((spec("title"), phrase))
       assert(rows(FieldedIndex.boolQuery(spark, idx, mlegs, plegs, 10, msm)) ===
-        rows(FieldedIndex.boolQueryNaive(spark, idx, mlegs, plegs, 10, msm)),
+        rows(FieldedNaive.boolQueryNaive(spark, idx, mlegs, plegs, 10, msm)),
         s"phrase='$phrase' msm=$msm")
     }
     // cross-value phrase ("title second" is only adjacent across the value
@@ -414,7 +414,7 @@ class FieldedSpec extends AnyFunSuite {
          fl <- Seq(None, Some((spec("volume"), Seq("23"))))) {
       val k = FieldedIndex.esBool(spark, idx, must = Seq(bibSel),
         should = Seq(title42), filter = fl, mustNot = mn, k = 10)
-      val nv = FieldedIndex.esBoolNaive(spark, idx, must = Seq(bibSel),
+      val nv = FieldedNaive.esBoolNaive(spark, idx, must = Seq(bibSel),
         should = Seq(title42), filter = fl, mustNot = mn, k = 10)
       assert(rows(k) === rows(nv), s"mustNot=$mn filter=$fl")
       assert(k.count() > 0, s"grid cell empty: mustNot=$mn filter=$fl")
@@ -422,7 +422,7 @@ class FieldedSpec extends AnyFunSuite {
     // a must PHRASE clause: required position-confirmed match
     val kp = FieldedIndex.esBool(spark, idx, must = Seq(bibSel),
       mustPhrases = Seq(massPhrase), k = 10)
-    val np = FieldedIndex.esBoolNaive(spark, idx, must = Seq(bibSel),
+    val np = FieldedNaive.esBoolNaive(spark, idx, must = Seq(bibSel),
       mustPhrases = Seq(massPhrase), k = 10)
     assert(rows(kp) === rows(np))
     // must phrase that never confirms (cross-value): zero hits even though

@@ -1,8 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger}
@@ -11,6 +10,7 @@ import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.Analyzer
@@ -41,27 +41,33 @@ class ServingJobsSpec extends AnyFunSuite {
   }
   private lazy val handle = Searcher.open(spark, dir)
 
-  /** Runs `body`, returning its result and the number of Spark jobs it
-    * launched. */
-  private def jobsOf[T](body: => T): (T, Int) = {
+  /** Runs `body`, returning its result and the Spark jobs it launched. */
+  private def jobStartsOf[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
     val sc = spark.sparkContext
     val group = s"serving-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+          jobs.add(e)
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "serving job budget")
     try {
       val out = body
       Bridge.drainListenerBus(sc)
-      (out, jobs.get)
+      (out, jobs.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Runs `body`, returning its result and the number of Spark jobs it
+    * launched. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val (out, starts) = jobStartsOf(body)
+    (out, starts.length)
   }
 
   /** Runs `body`, returning the ClosureCleaner's "Cleaning indylambda
@@ -111,7 +117,7 @@ class ServingJobsSpec extends AnyFunSuite {
     val th = FieldedIndex.handleFor(spark, FieldedQueries.ensureFieldedIndex(spark),
       "title")
     val pos = Analyzer.analyzeChainPos(Analyzer.TextStop, _: String)
-    val mh = Searcher.openMulti(spark, Seq("body" -> dir))
+    val mh = Searcher.open(spark, Seq("body" -> dir))
     try {
       val legs = Seq(Searcher.MultiLeg("body", Map("join" -> 1, "hash" -> 1)))
       val calls: Seq[(String, () => DataFrame)] = Seq(
@@ -135,7 +141,7 @@ class ServingJobsSpec extends AnyFunSuite {
   }
 
   test("multiSearch on a warm multi-field handle is one job") {
-    val mh = Searcher.openMulti(spark, Seq("body" -> dir))
+    val mh = Searcher.open(spark, Seq("body" -> dir))
     try {
       val legs = Seq(Searcher.MultiLeg("body",
         Analyzer.analyzeStop("hash join").groupBy(identity).view
@@ -176,7 +182,7 @@ class ServingJobsSpec extends AnyFunSuite {
   }
 
   test("a bool query past 64 clauses is refused on the driver, launching no job") {
-    val mh = Searcher.openMulti(spark, Seq("body" -> dir))
+    val mh = Searcher.open(spark, Seq("body" -> dir))
     try {
       val legs = Seq.fill(65)(Searcher.MultiLeg("body", Map("join" -> 1)))
       val (e, jobs) = jobsOf(intercept[IllegalArgumentException](
@@ -237,5 +243,51 @@ class ServingJobsSpec extends AnyFunSuite {
       FieldedIndex.highlight(spark, idx, title, Seq(1 -> "record", 1 -> "title"), 2)
     }
     assert(FieldedIndex.highlight(spark, idx, title, Seq.empty, 2).collect().isEmpty)
+  }
+
+  test("a bool query on a field the handle does not hold is refused, launching no job") {
+    val mh = Searcher.open(spark, Seq("body" -> dir))
+    try {
+      val body = Seq(Searcher.MultiLeg("body", Map("join" -> 1)))
+      val calls: Seq[(String, () => DataFrame)] = Seq(
+        "leg" -> (() => Searcher.multiSearch(mh,
+          body :+ Searcher.MultiLeg("title", Map("join" -> 1)), QuerySet.K)),
+        "phrase" -> (() => Searcher.multiSearch(mh, body, QuerySet.K,
+          phraseLegs = Seq(Searcher.PhraseLeg("title", Array("join" -> 0))))),
+        "filter" -> (() => Searcher.multiSearch(mh, body, QuerySet.K,
+          filter = Some("year" -> Seq("1997")))),
+        "must_not" -> (() => Searcher.multiSearch(mh, body, QuerySet.K,
+          mustNot = Some("year" -> Seq("1997")))))
+      calls.foreach { case (name, call) =>
+        val (e, jobs) = jobsOf(intercept[IllegalArgumentException](call()))
+        assert(e.getMessage.contains("not held by this handle"), name)
+        assert(jobs === 0, name)
+      }
+    } finally mh.close()
+  }
+
+  test("match_and and more_like_this serve from the field's match handle") {
+    val idx = FieldedQueries.ensureFieldedIndex(spark)
+    val bib = FieldedIndex.CrossrefMapping.find(_.field == "bibliographic").get
+    val (mtf, mdf, mqt, pct) = FieldedQueries.MltParams
+    assert(rows(FieldedIndex.searchField(spark, idx, bib,
+      Seq(1 -> "record title journal"), QuerySet.K)).nonEmpty)
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "match_and" -> (() => FieldedIndex.matchAnd(spark, idx, bib,
+        "record title journal", QuerySet.K)),
+      "more_like_this" -> (() => FieldedIndex.moreLikeThis(spark, idx, bib,
+        FieldedQueries.MltKey, QuerySet.K, mtf, mdf, mqt, pct)))
+    calls.foreach { case (name, call) =>
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val (got, starts) = jobStartsOf(rows(call()))
+      assert(got.nonEmpty, name)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === persisted, name)
+      // an open persists its shard RDD before the job that materializes it
+      val opens = starts.filter(_.stageInfos.exists(_.rddInfos.exists(r =>
+        r.storageLevel != StorageLevel.NONE && !persisted(r.id))))
+      assert(opens.isEmpty, name)
+      // the match query already resolved match_and's terms: one fan-out job
+      if (name == "match_and") assert(starts.length === 1)
+    }
   }
 }
