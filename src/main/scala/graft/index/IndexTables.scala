@@ -117,7 +117,9 @@ object IndexTables {
 
   /** Postings blocks of the base + active segments only: partition-prunes to
     * committed groups, so a crashed batch's half-written group never reaches
-    * a reader. */
+    * a reader. Base blocks carry their term's global df as of the base
+    * build; segment blocks carry a null df (the union's df is base plus
+    * segments, which only a lookup over every block can sum). */
   def postings(spark: SparkSession, io: TableIO): DataFrame = {
     val active = activeBatches(io).map(GroupBase + _)
     spark.read.parquet(io.tablePath("postings"))

@@ -80,8 +80,9 @@ object PostingsBuilder {
     * decoder — [[ensureFormat]] wipes it so callers rebuild instead of
     * serving garbage from a stale cached directory. */
   // v3: positions tier (PostingBlock.pos); v4: term_stats sorted by term
-  // with the numeric shadow column (dictionary-range pruning)
-  val FormatStep = "format_pfor4"
+  // with the numeric shadow column (dictionary-range pruning); v5: each
+  // base block carries its term's global df (PostingBlock.df)
+  val FormatStep = "format_pfor5"
 
   /** Invalidate an index directory written under an older block format,
     * then stamp the current marker — committed BEFORE any data step, so a
@@ -200,6 +201,8 @@ object PostingsBuilder {
     // leak). df per term: terms are unique within a doc's tfs, so count(*)
     // over the exploded terms is exact df; partial aggregation caps its
     // shuffle at (vocab × input partitions) rows regardless of corpus size.
+    val termDfs = docTerms.select(explode(col("tfs.term")).as("term"))
+      .groupBy(col("term")).agg(count(lit(1)).as("df"))
     // The table is range-partitioned and sorted BY TERM so every
     // dictionary-range operation (prefix / numeric-range / wildcard
     // expansion — Lucene's MultiTermQuery rewrites, which seek the FST)
@@ -207,8 +210,7 @@ object PostingsBuilder {
     // pass; the extra exchange moves vocab-sized rows once at build time.
     val overlapped = io.stepsAsync(
       (("term_stats" -> (() =>
-        docTerms.select(explode(col("tfs.term")).as("term"))
-          .groupBy(col("term")).agg(count(lit(1)).as("df"))
+        termDfs
           // numeric shadow column: parquet min/max stats on it prune
           // numeric-range expansions (the BKD-tree analogue); null for
           // non-numeric terms
@@ -244,6 +246,15 @@ object PostingsBuilder {
             sharded.filter(pmod(col("doc_shard"), lit(cfg.shardGroups)) === g),
             stats.avgdl, cfg.blockSize,
             math.max(1, invertParts / cfg.shardGroups))
+            // every block carries its term's global df, so a serving shard
+            // computes idf from its own dictionary entry: the same exact
+            // aggregate term_stats writes, broadcast and hash-joined here.
+            // The join streams each encode partition through unchanged (no
+            // exchange, row order kept), so every postings file still holds
+            // whole doc shards; the aggregate's stage runs beside the
+            // invert exchange instead of before it.
+            .drop("df").join(broadcast(termDfs), Seq("term"), "left")
+            .select(BlockSchema.fieldNames.map(col).toSeq: _*)
             .write.mode("overwrite")
             .parquet(io.tablePath(s"postings/group=$g"))
         }
@@ -278,7 +289,7 @@ object PostingsBuilder {
     io
   }
 
-  /** PostingBlock's DataFrame schema (invertStage output). */
+  /** PostingBlock's DataFrame schema (invertStage output, df null). */
   val BlockSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[PostingBlock].schema
 
@@ -359,7 +370,7 @@ object PostingsBuilder {
           Codec.encodeTfs(java.util.Arrays.copyOf(tfs, n)),
           Codec.encodeTfs(java.util.Arrays.copyOf(dls, n)),
           maxNorm, maxTf, System.currentTimeMillis() - t0,
-          Codec.encodePositions(java.util.Arrays.copyOf(poss, n)))))
+          Codec.encodePositions(java.util.Arrays.copyOf(poss, n)), null)))
         blockId += 1
         n = 0
       }

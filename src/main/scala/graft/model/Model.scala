@@ -35,7 +35,12 @@ case class PostingBlock(
       * chains, ES parity); empty for docs/freqs-only indexes (the webtext
       * body index — ES `index_options: freqs`, the deployment choice for a
       * 100-TB body field). */
-    pos: Array[Byte] = Array.emptyByteArray)
+    pos: Array[Byte] = Array.emptyByteArray,
+    /** The term's exact df over the whole index (every shard), the same
+      * value as its `term_stats` row: written into every base block at
+      * build, so a shard can compute the term's idf without a df lookup.
+      * None on streamed segment blocks, whose df is base plus segments. */
+    df: Option[Long] = None)
 
 case class TermStat(term: String, df: Long)
 

@@ -14,7 +14,6 @@ import org.apache.spark.storage.StorageLevel
 import graft.analysis.Analyzer
 import graft.io.TableIO
 import graft.model.{CorpusStats, PostingBlock}
-import graft.query.BlockMaxWand.QueryTerm
 
 /** Top-k BM25 search over the on-disk doc-sharded index (SURVEY §3.3).
   *
@@ -24,24 +23,28 @@ import graft.query.BlockMaxWand.QueryTerm
   *
   *  1. analyze the query with the indexing chain (rank-identity
   *     precondition);
-  *  2. a query-sized df lookup for terms the handle's df cache has not
-  *     seen: one narrow job over the cached shard indexes that
-  *     hash-looks-up ONLY those terms and sums their per-shard posting
-  *     counts (df(term) = Σ_shards postings, exactly the term_stats
-  *     value — each doc contributes one posting per term). No
-  *     full-vocabulary state ever reaches the driver: at 10^12 docs the
-  *     dictionary stays sharded on the executors;
-  *  3. the scoring fan-out: one narrow job where every shard runs the
-  *     block-max WAND kernel over its own hash-map (shards are disjoint doc
-  *     ranges — embarrassingly parallel, the ES fan-out model);
-  *  4. per-shard top-k hits (k × shards × queries tuples, tiny) merge on the
+  *  2. the scoring fan-out: one narrow job, over the partitions that hold
+  *     a shard, where every shard runs the block-max WAND kernel over its
+  *     own hash-map (shards are disjoint doc ranges — embarrassingly
+  *     parallel, the ES fan-out model). Each term's idf needs its GLOBAL
+  *     df: the build writes it into every base posting block, so a shard
+  *     reads it from its own dictionary entry. No full-vocabulary state
+  *     ever reaches the driver: at 10^12 docs the dictionary stays sharded
+  *     on the executors;
+  *  3. per-shard top-k hits (k × shards × queries tuples, tiny) merge on the
   *     driver under the deterministic global ordering.
   *
-  * A warm search is one fan-out job, plus one df-lookup job on a cache
-  * miss; the top-k frame is a driver-ordered local relation, so collecting
-  * it launches nothing more. A batch in which no query keeps a scorable
-  * term launches no fan-out at all. No shuffle, no sort, no scan of
-  * non-query terms anywhere on the query path.
+  * A warm search, phrase, span_near or bool query is ONE Spark job; the
+  * top-k frame is a driver-ordered local relation, so collecting it
+  * launches nothing more. Where a shard cannot know the global df — a
+  * handle with active streamed segments (global df = base + segments),
+  * and the match_phrase_prefix union slot, whose idf sums expansions a
+  * shard may lack — the driver supplies it: a query-sized lookup job over
+  * the cached shard indexes for terms the handle's df cache has not seen,
+  * summing per-shard posting counts (df(term) = Σ_shards postings, exactly
+  * the term_stats value). A batch in which no query keeps a scorable term
+  * launches no fan-out at all. No shuffle, no sort, no scan of non-query
+  * terms anywhere on the query path.
   *
   * Every job over a handle's resident shards that returns to the driver
   * (open's materialization, the df lookup, fuzzy candidates and the
@@ -55,11 +58,19 @@ import graft.query.BlockMaxWand.QueryTerm
   */
 object Searcher {
 
-  /** One (shard, term)'s postings: shard-local df (= Σ block n) and the
+  /** One (shard, term)'s postings: shard-local df (= Σ block n), the
     * blocks in global doc order (first_doc_id asc — block_id restarts per
-    * posting group, so streamed appends interleave correctly). */
-  final class TermPostings(val df: Long, val blocks: Array[PostingBlock])
-    extends Serializable
+    * posting group, so streamed appends interleave correctly) and the
+    * term's global df from its blocks ([[PostingBlock.df]]; −1 when a block
+    * lacks it, as streamed segment blocks do). */
+  final class TermPostings(val df: Long, val blocks: Array[PostingBlock],
+      val globalDf: Long = -1L) extends Serializable {
+    /** The global df, for a query whose driver supplied none. */
+    def indexDf: Long =
+      if (globalDf >= 0) globalDf
+      else throw new IllegalStateException(
+        "a shard entry without a global df served a query with no driver df")
+  }
 
   /** One doc shard's term → postings hash index. */
   final class ShardIndex(val shard: Int,
@@ -105,7 +116,15 @@ object Searcher {
     * reopen handles after compaction rather than serving through it. */
   final class Handle private[Searcher] (val spark: SparkSession,
       private[Searcher] val fields: Map[String, FieldState],
-      private[Searcher] val shards: RDD[ShardIndex]) extends AutoCloseable {
+      private[graft] val shards: RDD[ShardIndex],
+      /** The partitions holding at least one shard: serving jobs run only
+        * these (an empty partition's task would do nothing but
+        * deserialize the task binary). */
+      private[Searcher] val parts: Array[Int],
+      /** Every field is a bare base (no active streamed segments), so each
+        * shard entry carries its term's global df and queries need no
+        * driver-side df. */
+      private[Searcher] val shardDfs: Boolean) extends AutoCloseable {
     /** Driver-side key→df memo (misses resolved by a distributed lookup;
       * 0 = known-absent). Query-sized growth — only terms actually queried
       * ever reach the driver, never the vocabulary. */
@@ -116,7 +135,7 @@ object Searcher {
     private[Searcher] def key(field: String, term: String): String =
       keyPrefix(fields.size, field) + term
 
-    private def only: FieldState = {
+    private[Searcher] def only: FieldState = {
       require(fields.size == 1, s"not a one-field handle: ${fields.keys}")
       fields.head._2
     }
@@ -134,13 +153,18 @@ object Searcher {
   private abstract class ShardTask[U]
       extends ((TaskContext, Iterator[ShardIndex]) => U) with Serializable
 
-  /** The one entry for serving jobs: one task per partition, results in
-    * partition order. */
+  /** The one entry for serving jobs: one task per listed partition, results
+    * in that order. */
   private def runShards[U: ClassTag](shards: RDD[ShardIndex],
-      task: ShardTask[U]): Array[U] =
-    shards.sparkContext.runJob(shards, task)
+      task: ShardTask[U], parts: Seq[Int]): Array[U] =
+    shards.sparkContext.runJob(shards, task, parts)
 
-  /** The shard ids a partition holds; running it materializes the cache. */
+  /** The shard ids each partition holds: one job over every partition,
+    * which materializes the cache. */
+  private def shardIds(shards: RDD[ShardIndex]): Array[Array[Int]] =
+    runShards(shards, ShardIds, shards.partitions.indices)
+
+  /** The shard ids a partition holds. */
   private object ShardIds extends ShardTask[Array[Int]] {
     def apply(ctx: TaskContext, it: Iterator[ShardIndex]): Array[Int] =
       it.map(_.shard).toArray
@@ -165,17 +189,48 @@ object Searcher {
   final case class PhraseLeg(field: String, occs: Array[(String, Int)],
                              boost: Double = 1.0)
 
-  /** Serializable per-cursor spec shipped to the scoring fan-out. */
-  private final case class CursorSpec(key: String, idf: Double, weight: Int,
-      avgdl: Double, tight: Boolean, leg: Int)
+  /** Serializable per-cursor spec shipped to the scoring fan-out. `df` is
+    * the driver-side global df, None when the shard's entry supplies it
+    * ([[Handle.shardDfs]]); either way the cursor's idf is
+    * `Bm25.idf(nDocs, df) * boost`, the one idf rule. */
+  private final case class CursorSpec(key: String, df: Option[Long],
+      nDocs: Long, boost: Double, weight: Int, avgdl: Double, tight: Boolean,
+      leg: Int) {
+    def idf(entry: TermPostings): Double =
+      Bm25.idf(nDocs, df.getOrElse(entry.indexDf)) * boost
+  }
+
+  /** A cursor spec for `key` under `field`'s stats, or None when the
+    * driver-side dfs (if any) show the key corpus-absent. */
+  private def cursorSpec(fs: FieldState, key: String,
+      dfs: Option[Map[String, Long]], weight: Int, boost: Double = 1.0,
+      leg: Int = 0): Option[CursorSpec] =
+    if (dfs.exists(!_.contains(key))) None
+    else Some(CursorSpec(key, dfs.map(_(key)), fs.stats.n_docs, boost, weight,
+      fs.stats.avgdl, fs.tight, leg))
 
   /** Serializable positional-clause spec: the keys of the clause's UNIQUE
     * terms, its position slots as indexes into them, its frequency law and
     * its scoring stats — a [[BlockMaxWand.PhraseCursor]] once a shard
-    * supplies the blocks. */
+    * supplies the blocks. `dfs` (aligned with `keys`) are driver-side
+    * global dfs, None when the shard's entries supply them. */
   private final case class PhraseSpec(keys: Array[String],
-      slots: Array[Array[Int]], law: Phrase.Law, sumIdf: Double,
-      avgdl: Double, tight: Boolean, leg: Int)
+      slots: Array[Array[Int]], law: Phrase.Law, dfs: Option[Array[Long]],
+      nDocs: Long, boost: Double, avgdl: Double, tight: Boolean, leg: Int) {
+    /** idf summed over every member, slot by slot, times boost. Without
+      * driver dfs every slot is one term, so a key this shard lacks (null
+      * entry) empties its slot: the clause matches nothing here and its
+      * idf is moot. */
+    def sumIdf(entries: Array[TermPostings]): Double = {
+      val df: Int => Long = dfs match {
+        case Some(d) => d
+        case None => entries(_).indexDf
+      }
+      if (dfs.isEmpty && entries.contains(null)) 0.0
+      else slots.iterator.map(_.iterator.map(i =>
+        Bm25.idf(nDocs, df(i))).sum).sum * boost
+    }
+  }
 
   /** One query of a scoring fan-out: term cursors, positional clauses and
     * the ES bool context. `filterKeys`: None = no filter, Some = OR over the
@@ -190,27 +245,34 @@ object Searcher {
       (terms.nonEmpty || phrases.nonEmpty) && filterKeys.forall(_.nonEmpty)
   }
 
-  /** A positional clause over `slots` of (key, df) members, or None when
-    * some slot has no corpus-present member (the conjunction matches
-    * nothing). sumIdf sums idf over every member, slot by slot, times
-    * `boost`; `law` sees the slots as indexes into the unique keys. */
-  private def phraseSpec(slots: Seq[Seq[(String, Long)]], stats: CorpusStats,
-      tight: Boolean, leg: Int, boost: Double = 1.0)(
+  /** A positional clause over `slots` of member keys, or None when the
+    * driver-side dfs show some slot with no corpus-present member (the
+    * conjunction matches nothing). A union slot (several members) needs
+    * driver dfs: its idf sums members a shard may lack. `law` sees the
+    * slots as indexes into the unique keys. */
+  private def phraseSpec(slots: Seq[Seq[String]],
+      dfs: Option[Map[String, Long]], fs: FieldState, leg: Int,
+      boost: Double = 1.0)(
       law: Array[Array[Int]] => Phrase.Law): Option[PhraseSpec] =
-    if (slots.isEmpty || slots.exists(_.forall(_._2 <= 0L))) None
+    if (slots.isEmpty ||
+        dfs.exists(m => slots.exists(_.forall(t => m.getOrElse(t, 0L) <= 0L))))
+      None
     else {
-      val keys = slots.flatten.map(_._1).distinct.toArray
+      require(dfs.nonEmpty || slots.forall(_.length == 1),
+        "a union slot needs driver-side dfs")
+      val keys = slots.flatten.distinct.toArray
       val idx = keys.zipWithIndex.toMap
-      val indexed = slots.map(_.map(m => idx(m._1)).toArray).toArray
+      val indexed = slots.map(_.map(idx).toArray).toArray
       Some(PhraseSpec(keys, indexed, law(indexed),
-        slots.iterator.map(_.iterator.map(m =>
-          Bm25.idf(stats.n_docs, m._2)).sum).sum * boost,
-        stats.avgdl, tight, leg))
+        dfs.map(m => keys.map(m.getOrElse(_, 0L))), fs.stats.n_docs, boost,
+        fs.stats.avgdl, fs.tight, leg))
     }
 
-  /** A one-term position slot with the term's df (0 = corpus-absent). */
-  private def slot(term: String, dfs: Map[String, Long]): Seq[(String, Long)] =
-    Seq(term -> dfs.getOrElse(term, 0L))
+  /** The global dfs of `keys` from the driver (the cached lookup) when the
+    * handle's shards cannot supply them; None when they can. */
+  private def driverDfs(h: Handle,
+      keys: => Array[String]): Option[Map[String, Long]] =
+    if (h.shardDfs) None else Some(resolveDfs(h, keys))
 
   /** The exact-phrase law of an analyzed (term, tokenizer position) list. */
   private def aligned(occs: Seq[(String, Int)]): Phrase.Law =
@@ -254,37 +316,33 @@ object Searcher {
     val mustNotKeys = keys(mustNot)
     val legKeys = legs.flatMap(l => l.termWeights.keys.map(h.key(l.field, _)))
     val phraseKeys = phraseLegs.flatMap(p => p.occs.map(o => h.key(p.field, o._1)))
-    val dfByKey = resolveDfs(h,
+    val dfByKey = driverDfs(h,
       (legKeys ++ phraseKeys ++ filterKeys ++ mustNotKeys).distinct.toArray)
     // cursor order fixed as (leg, term): the kernel's FP sum order — and so
     // the exact emitted doubles — is deterministic across runs
     val specs: Array[CursorSpec] = legs.zipWithIndex.flatMap { case (l, li) =>
-      val fs = h.fields(l.field)
       l.termWeights.toSeq.sortBy(_._1).flatMap { case (t, w) =>
-        val key = h.key(l.field, t)
-        dfByKey.get(key).map(df => CursorSpec(key,
-          Bm25.idf(fs.stats.n_docs, df) * l.boost, w, fs.stats.avgdl, fs.tight, li))
+        cursorSpec(h.fields(l.field), h.key(l.field, t), dfByKey, w, l.boost, li)
       }
     }.toArray
     // phrase clauses number their legs AFTER the should-legs; a clause with
-    // any corpus-absent term matches nothing (conjunction) and is dropped
+    // any corpus-absent term matches nothing (conjunction)
     val phraseSpecs: Array[PhraseSpec] = phraseLegs.zipWithIndex.flatMap {
       case (pl, pi) =>
-        val fs = h.fields(pl.field)
-        val slots = pl.occs.toSeq.map(o => slot(h.key(pl.field, o._1), dfByKey))
-        phraseSpec(slots, fs.stats, fs.tight, legs.length + pi, pl.boost)(
+        phraseSpec(pl.occs.toSeq.map(o => Seq(h.key(pl.field, o._1))), dfByKey,
+          h.fields(pl.field), legs.length + pi, pl.boost)(
           _ => aligned(pl.occs.toSeq))
     }.toArray
     // single bool query ⇒ one qid (0)
-    fanOutTopK(h.spark, h.shards, k, Seq(QuerySpec(0, specs, phraseSpecs,
-      filter.map(_ => filterKeys.filter(dfByKey.contains)), mustNotKeys,
-      minShouldMatch, disMaxTieBreaker,
+    fanOutTopK(h, k, Seq(QuerySpec(0, specs, phraseSpecs,
+      filter.map(_ => dfByKey.fold(filterKeys)(m => filterKeys.filter(m.contains))),
+      mustNotKeys, minShouldMatch, disMaxTieBreaker,
       requiredLegs.foldLeft(0L)((m, l) => m | (1L << l))))).drop("qid")
   }
 
   private val BlockCols = Seq("doc_shard", "term", "block_id", "n",
     "first_doc_id", "last_doc_id", "doc_ids", "tfs", "dls", "max_tf_norm",
-    "max_tf", "enc_wall_ms", "pos")
+    "max_tf", "enc_wall_ms", "pos", "df")
 
   /** Open a one-field handle over `indexDir`; its field is unnamed (""). */
   def open(spark: SparkSession, indexDir: String): Handle =
@@ -322,12 +380,14 @@ object Searcher {
     // must merge into one serving index. Several fields take the shuffle
     // too: it co-locates their doc shards once per serving generation (the
     // cost Lucene pays at segment write time instead).
-    val shards = (ios match {
-      case Seq((_, io)) if graft.index.IndexTables.activeBatches(io).isEmpty =>
-        openUnshuffled(spark, io)
+    val bare = ios.forall { case (_, io) =>
+      graft.index.IndexTables.activeBatches(io).isEmpty }
+    val (shards, ids) = (ios match {
+      case Seq((_, io)) if bare => openUnshuffled(spark, io)
       case _ => None
     }).getOrElse(openShuffled(spark, ios))
-    new Handle(spark, fields, shards)
+    new Handle(spark, fields, shards,
+      ids.indices.filter(ids(_).nonEmpty).toArray, shardDfs = bare)
   }
 
   /** The shuffle open: co-locate each shard (base + streamed segments, of
@@ -337,8 +397,8 @@ object Searcher {
     * microseconds, so query jobs are task-scheduling-bound — one task per
     * core per wave is the latency-optimal width (on a cluster: one serving
     * slot per executor core, the ES fan-out model). */
-  private def openShuffled(spark: SparkSession,
-      ios: Seq[(String, TableIO)]): RDD[ShardIndex] = {
+  private def openShuffled(spark: SparkSession, ios: Seq[(String, TableIO)])
+      : (RDD[ShardIndex], Array[Array[Int]]) = {
     import spark.implicits._
     val sorted = ios.map { case (f, io) =>
       val blocks = graft.index.IndexTables.postings(spark, io)
@@ -359,14 +419,15 @@ object Searcher {
     val shards = sorted.rdd
       .mapPartitions(buildShardIndexes, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    runShards(shards, ShardIds) // materialize: open pays the exchange once
-    shards
+    // materialize: open pays the exchange once
+    (shards, shardIds(shards))
   }
 
-  /** The no-shuffle open (its guard job materializes the shards). Returns
-    * None (after cleaning up) if the shard-whole-files property fails. */
+  /** The no-shuffle open (its guard job materializes the shards), with each
+    * partition's shard ids. Returns None (after cleaning up) if the
+    * shard-whole-files property fails. */
   private def openUnshuffled(spark: SparkSession,
-      io: TableIO): Option[RDD[ShardIndex]] = {
+      io: TableIO): Option[(RDD[ShardIndex], Array[Array[Int]])] = {
     import spark.implicits._
     val width = spark.sparkContext.defaultParallelism
     val dir = new org.apache.hadoop.fs.Path(io.tablePath("postings"))
@@ -409,8 +470,9 @@ object Searcher {
     // guard: every shard must be whole within one partition (format
     // property; violation ⇒ a doc's postings would split across serving
     // indexes and scores would be partial). Shard-count-sized, tiny.
-    val ids = runShards(shards, ShardIds).flatten
-    if (ids.length == ids.distinct.length) Some(shards)
+    val perPart = shardIds(shards)
+    val ids = perPart.flatten
+    if (ids.length == ids.distinct.length) Some((shards, perPart))
     else {
       // the fallback is correct but silently loses the no-shuffle open —
       // make it visible so a layout/conf regression can't hide behind it
@@ -449,11 +511,14 @@ object Searcher {
     private var curTerm: String = null
     private var curBlocks = mutable.ArrayBuffer.empty[PostingBlock]
     private var curDf = 0L
+    // the term's global df: known only if every one of its blocks carries it
+    private var curGlobalDf: Option[Long] = None
     private var map = new java.util.HashMap[String, TermPostings]()
 
     private def closeTerm(): Unit = {
       if (curTerm != null) {
-        map.put(curTerm, new TermPostings(curDf, curBlocks.toArray))
+        map.put(curTerm, new TermPostings(curDf, curBlocks.toArray,
+          curGlobalDf.getOrElse(-1L)))
         curBlocks = mutable.ArrayBuffer.empty[PostingBlock]
         curDf = 0L
       }
@@ -472,6 +537,7 @@ object Searcher {
           closeShard(); curShard = b.doc_shard; curTerm = null
         }
         if (curTerm == null || curTerm != b.term) { closeTerm(); curTerm = b.term }
+        curGlobalDf = if (curBlocks.isEmpty) b.df else curGlobalDf.filter(b.df.contains)
         curBlocks += b
         curDf += b.n
       }
@@ -553,11 +619,12 @@ object Searcher {
     * is k × shards × queries tuples, which at 10^6 shards (10^12 docs /
     * 2^20 shardSize) and a 20-query batch is ~10^8 tuples through one
     * driver; the tree bounds it. */
-  private def treeTopK(shards: RDD[ShardIndex], fold: TopKFold,
-      merge: TopKMerge): TopK = {
+  private def treeTopK(h: Handle, fold: TopKFold, merge: TopKMerge): TopK = {
+    val shards = h.shards
     val parts = shards.getNumPartitions
     if (parts <= treeFanInThreshold)
-      runShards(shards, new TopKTask(fold)).foldLeft(Map.empty: TopK)(merge)
+      runShards(shards, new TopKTask(fold), h.parts)
+        .foldLeft(Map.empty: TopK)(merge)
     else shards.treeAggregate(Map.empty: TopK)(fold, merge,
       depth = math.max(2, (math.log(parts.toDouble) / math.log(64.0)).ceil.toInt))
   }
@@ -569,10 +636,10 @@ object Searcher {
     * co-resident shard fills its heap, so a shard may return fewer than k
     * hits — only ones the merged top-k could use. A batch with no live
     * query skips the job and returns the empty frame. */
-  private def fanOutTopK(spark: SparkSession, shards: RDD[ShardIndex], k: Int,
+  private def fanOutTopK(h: Handle, k: Int,
       queries: Seq[QuerySpec]): DataFrame = {
     val qs = queries.filter(_.live).toArray
-    topKFrame(spark, if (qs.isEmpty) Map.empty else treeTopK(shards,
+    topKFrame(h.spark, if (qs.isEmpty) Map.empty else treeTopK(h,
       new TopKFold(qs, k, java.util.UUID.randomUUID().toString),
       new TopKMerge(k)))
   }
@@ -583,18 +650,18 @@ object Searcher {
     * slot loses every member matches nothing here). */
   private def scoreOn(si: ShardIndex, q: QuerySpec, k: Int,
       board: java.util.concurrent.atomic.AtomicLong): Array[(Long, Double)] = {
-    def blocks(key: String): IndexedSeq[PostingBlock] = {
-      val tp = si.terms.get(key)
+    def blocksOf(tp: TermPostings): IndexedSeq[PostingBlock] =
       if (tp == null) IndexedSeq.empty else ArraySeq.unsafeWrapArray(tp.blocks)
-    }
+    def blocks(key: String): IndexedSeq[PostingBlock] = blocksOf(si.terms.get(key))
     val cursors = q.terms.toSeq.flatMap { c =>
-      val bs = blocks(c.key)
-      if (bs.isEmpty) None
-      else Some(BlockMaxWand.Cursor(bs, c.idf, c.weight, c.avgdl, c.tight, c.leg))
+      Option(si.terms.get(c.key)).map(tp => BlockMaxWand.Cursor(blocksOf(tp),
+        c.idf(tp), c.weight, c.avgdl, c.tight, c.leg))
     }
-    val clauses = q.phrases.toSeq.map(p => BlockMaxWand.PhraseCursor(
-      ArraySeq.unsafeWrapArray(p.keys.map(blocks)), p.slots, p.law, p.sumIdf,
-      p.avgdl, p.tight, p.leg))
+    val clauses = q.phrases.toSeq.map { p =>
+      val entries = p.keys.map(si.terms.get)
+      BlockMaxWand.PhraseCursor(ArraySeq.unsafeWrapArray(entries.map(blocksOf)),
+        p.slots, p.law, p.sumIdf(entries), p.avgdl, p.tight, p.leg)
+    }
     val filters = q.filterKeys.map(_.toSeq.map(blocks).filter(_.nonEmpty))
     // filter context: a shard holding no filter doc has no qualifying doc
     if (filters.exists(_.isEmpty)) Array.empty
@@ -634,8 +701,9 @@ object Searcher {
   }
 
   /** Search via a resident handle: one fan-out job over the cached shard
-    * indexes, plus one df-lookup job on a df-cache miss; the top-k frame is
-    * a driver-ordered local relation. `chain` analyzes the query string
+    * indexes (plus, with active streamed segments, one df-lookup job on a
+    * df-cache miss); the top-k frame is a driver-ordered local relation.
+    * `chain` analyzes the query string
     * with the target field's analyzer (reference semantics: ES analyzes
     * query text with the queried field's mapped chain,
     * elastic/settings.go:87-138) — default is the stopword text chain the
@@ -648,23 +716,13 @@ object Searcher {
     val analyzed: Seq[(Int, Map[String, Int])] = rawQueries.map { case (qid, q) =>
       qid -> chain(q).groupBy(identity).view.mapValues(_.length).toMap
     }
-    val uniqueTerms: Array[String] = analyzed.flatMap(_._2.keys).distinct.toArray
-    val dfByTerm: Map[String, Long] = resolveDfs(h, uniqueTerms)
-
-    val nDocs = h.stats.n_docs
-    fanOutTopK(h.spark, h.shards, k, analyzed.map { case (qid, tw) =>
-      termQuery(h, qid, tw.toSeq.sortBy(_._1).collect {
-        case (t, w) if dfByTerm.contains(t) =>
-          QueryTerm(t, Bm25.idf(nDocs, dfByTerm(t)), w)
-      })
+    val dfs = driverDfs(h, analyzed.flatMap(_._2.keys).distinct.toArray)
+    fanOutTopK(h, k, analyzed.map { case (qid, tw) =>
+      QuerySpec(qid, tw.toSeq.sortBy(_._1).flatMap { case (t, w) =>
+        cursorSpec(h.only, t, dfs, w)
+      }.toArray)
     })
   }
-
-  /** A bag-of-terms query on a single-field handle: one leg, no bool
-    * context. */
-  private def termQuery(h: Handle, qid: Int, terms: Seq[QueryTerm]): QuerySpec =
-    QuerySpec(qid, terms.map(t => CursorSpec(t.term, t.idf, t.weight,
-      h.stats.avgdl, h.tightBounds, 0)).toArray)
 
   /** ES match with `fuzziness` (the Lucene FuzzyQuery rewrite): each
     * analyzed query term expands to the dictionary terms within its edit
@@ -693,7 +751,7 @@ object Searcher {
     * fuzzy-match rewrite and the term suggester. */
   private def fuzzyCandidates(h: Handle, uniq: Array[(String, Int)],
       max: Int): Map[String, Array[(String, Long, Int)]] = {
-    val rows = runShards(h.shards, new FuzzyTask(uniq)).flatten
+    val rows = runShards(h.shards, new FuzzyTask(uniq), h.parts).flatten
     rows.groupBy(_._1).map { case (q, rs) =>
       val byTerm = rs.groupBy(_._2).map { case (t, xs) =>
         (t, xs.map(_._3).sum, xs.head._4) // dfs add; distance is global
@@ -766,14 +824,14 @@ object Searcher {
       .map(t => t -> (if (fuzziness >= 0) math.min(fuzziness, 2)
                       else Fuzzy.autoEdits(t))).toArray
     val cands = fuzzyCandidates(h, uniq, maxExpansions)
-    val nDocs = h.stats.n_docs
-    // cursor order (query term, expansion term): deterministic FP sums
-    fanOutTopK(h.spark, h.shards, k, analyzed.map { case (qid, tw) =>
-      termQuery(h, qid, tw.toSeq.sortBy(_._1).flatMap { case (q, w) =>
-        cands.getOrElse(q, Array.empty).sortBy(_._1).map { case (t, df, dd) =>
-          QueryTerm(t, Fuzzy.boost(q, t, dd) * Bm25.idf(nDocs, df), w)
+    // cursor order (query term, expansion term): deterministic FP sums; the
+    // candidates job already summed each expansion's global df
+    fanOutTopK(h, k, analyzed.map { case (qid, tw) =>
+      QuerySpec(qid, tw.toSeq.sortBy(_._1).flatMap { case (q, w) =>
+        cands.getOrElse(q, Array.empty).sortBy(_._1).flatMap { case (t, df, dd) =>
+          cursorSpec(h.only, t, Some(Map(t -> df)), w, Fuzzy.boost(q, t, dd))
         }
-      })
+      }.toArray)
     })
   }
 
@@ -798,7 +856,7 @@ object Searcher {
   private def resolveDfs(h: Handle, keys: Array[String]): Map[String, Long] = {
     val missing: Array[String] = keys.filterNot(h.dfCache.containsKey)
     if (missing.nonEmpty) {
-      val parts = runShards(h.shards, new DfTask(missing))
+      val parts = runShards(h.shards, new DfTask(missing), h.parts)
       missing.indices.foreach(i =>
         h.dfCache.put(missing(i), Long.box(parts.iterator.map(_(i)).sum)))
     }
@@ -912,17 +970,18 @@ object Searcher {
                      boost: Double = 1.0): DataFrame = {
     import h.spark.implicits._
     val dfByTerm = resolveDfs(h, occs.map(_._1).distinct)
-    val q = clauseQuery(h, 0, occs.toSeq.map(o => slot(o._1, dfByTerm)),
+    val q = clauseQuery(h, 0, occs.toSeq.map(o => Seq(o._1)), Some(dfByTerm),
       boost)(_ => aligned(occs.toSeq))
     h.shards.flatMap(scoreOn(_, q, Int.MaxValue, null))
       .toDF("doc_id", "contrib")
   }
 
   /** One standalone positional query on a single-field handle. */
-  private def clauseQuery(h: Handle, qid: Int, slots: Seq[Seq[(String, Long)]],
-      boost: Double = 1.0)(law: Array[Array[Int]] => Phrase.Law): QuerySpec =
+  private def clauseQuery(h: Handle, qid: Int, slots: Seq[Seq[String]],
+      dfs: Option[Map[String, Long]], boost: Double = 1.0)(
+      law: Array[Array[Int]] => Phrase.Law): QuerySpec =
     QuerySpec(qid, Array.empty,
-      phraseSpec(slots, h.stats, h.tightBounds, 0, boost)(law).toArray)
+      phraseSpec(slots, dfs, h.only, 0, boost)(law).toArray)
 
   /** ES match_phrase against a positioned index: analyze each phrase with
     * the field's chain keeping tokenizer positions, then score it as one
@@ -935,11 +994,9 @@ object Searcher {
       chain: String => Array[(String, Int)]): DataFrame = {
     requireDistinctQids(rawQueries.map(_._1))
     val analyzed = rawQueries.map { case (qid, q) => qid -> chain(q).toSeq }
-    val dfByTerm = resolveDfs(h,
-      analyzed.flatMap(_._2.map(_._1)).distinct.toArray)
-    fanOutTopK(h.spark, h.shards, k, analyzed.map { case (qid, occs) =>
-      clauseQuery(h, qid, occs.map(o => slot(o._1, dfByTerm)))(
-        _ => aligned(occs))
+    val dfs = driverDfs(h, analyzed.flatMap(_._2.map(_._1)).distinct.toArray)
+    fanOutTopK(h, k, analyzed.map { case (qid, occs) =>
+      clauseQuery(h, qid, occs.map(o => Seq(o._1)), dfs)(_ => aligned(occs))
     })
   }
 
@@ -957,9 +1014,9 @@ object Searcher {
     val analyzed = rawQueries.map { case (qid, q, slop) =>
       (qid, chain(q).toSeq, slop)
     }
-    val dfByTerm = resolveDfs(h, analyzed.flatMap(_._2).distinct.toArray)
-    fanOutTopK(h.spark, h.shards, k, analyzed.map { case (qid, ts, slop) =>
-      clauseQuery(h, qid, ts.map(slot(_, dfByTerm))) { slots =>
+    val dfs = driverDfs(h, analyzed.flatMap(_._2).distinct.toArray)
+    fanOutTopK(h, k, analyzed.map { case (qid, ts, slop) =>
+      clauseQuery(h, qid, ts.map(Seq(_)), dfs) { slots =>
         if (inOrder) Phrase.OrderedSpan(slop)
         else Phrase.UnorderedSpan(slop, slots.map(_(0)))
       }
@@ -981,15 +1038,21 @@ object Searcher {
       expand: String => Seq[(String, Long)]): DataFrame = {
     requireDistinctQids(rawQueries.map(_._1))
     val analyzed = rawQueries.map { case (qid, q) => qid -> chain(q).toSeq }
+    // driver-side dfs on any handle: the union slot's idf sums expansions
+    // a shard may lack (the expansions carry their dfs from `expand`)
     val dfByTerm = resolveDfs(h,
       analyzed.flatMap(_._2.dropRight(1).map(_._1)).distinct.toArray)
-    fanOutTopK(h.spark, h.shards, k, analyzed.map { case (qid, occs) =>
-      val fixed = occs.dropRight(1).map(o => slot(o._1, dfByTerm))
+    fanOutTopK(h, k, analyzed.map { case (qid, occs) =>
+      val fixed = occs.dropRight(1).map(_._1)
       // expand only a prefix whose fixed terms can all match
-      val slots =
-        if (occs.isEmpty || fixed.exists(_.head._2 == 0L)) Seq.empty
-        else fixed :+ expand(occs.last._1)
-      clauseQuery(h, qid, slots)(_ => aligned(occs))
+      val (slots, dfs) =
+        if (occs.isEmpty || !fixed.forall(dfByTerm.contains))
+          (Seq.empty, dfByTerm)
+        else {
+          val ex = expand(occs.last._1)
+          (fixed.map(Seq(_)) :+ ex.map(_._1), dfByTerm ++ ex)
+        }
+      clauseQuery(h, qid, slots, Some(dfs))(_ => aligned(occs))
     })
   }
 

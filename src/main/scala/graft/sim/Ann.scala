@@ -237,11 +237,12 @@ object Ann {
     * query's nprobe cell probe is parquet PARTITION PRUNING at the
     * source — at nlist = 65536 a 2-probe query reads 2/65536 of the
     * corpus directly off the directory layout, no filter scan, no index
-    * lookup. Idempotent via the _ivf_done marker. */
+    * lookup. Idempotent via the [[IvfMarker]], which holds a fresh
+    * generation id per build (the centroid cache's key). */
   def ensureIvf(spark: org.apache.spark.sql.SparkSession, emb: DataFrame,
                 dir: String, lloydRounds: Int = IvfLloydRounds): String = {
-    val done = new java.io.File(s"$dir/_ivf_done_v2")
-    if (!done.exists()) {
+    val done = java.nio.file.Paths.get(dir, IvfMarker)
+    if (!java.nio.file.Files.exists(done)) {
       val cents = ivfCentroids(emb, lloydRounds)
       cents.write.mode("overwrite").parquet(s"$dir/centroids")
       assignCells(emb, cents)
@@ -255,10 +256,14 @@ object Ann {
         .select(col("vec_id"), col("embedding"), col("nrm"))
         .sort("vec_id")
         .write.mode("overwrite").parquet(s"$dir/vectors")
-      done.createNewFile()
+      java.nio.file.Files.writeString(done,
+        java.util.UUID.randomUUID().toString)
     }
     dir
   }
+
+  /** The completion marker of a persisted IVF index. */
+  val IvfMarker = "_ivf_done_v2"
 
   /** Same left-to-right float→double fold as the codegen DotExpr kernel —
     * the driver-side probe ordering must reproduce the engine's cosine
@@ -270,28 +275,43 @@ object Ann {
     s
   }
 
-  /** Driver-resident coarse-quantizer cache: (marker mtime, centroid
-    * rows) per index dir. The coarse quantizer IS driver-resident in every
-    * IVF serving design; re-collecting its C rows per query was one whole
-    * Spark job of pure overhead (round-6 measurement). Invalidation rides
-    * the `_ivf_done_v2` marker's mtime — [[ensureIvf]] rewrites it on any
-    * rebuild. */
-  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Array[(Long, Array[Float], Double)])]()
+  /** One index dir's cached centroid rows, with the SparkContext and the
+    * marker generation they were read under. */
+  private final case class CachedCentroids(
+      sc: java.lang.ref.WeakReference[org.apache.spark.SparkContext],
+      generation: String, rows: Array[(Long, Array[Float], Double)])
 
-  private def centroidsFor(spark: org.apache.spark.sql.SparkSession,
+  /** Driver-resident coarse-quantizer cache per index dir. The coarse
+    * quantizer IS driver-resident in every IVF serving design;
+    * re-collecting its C rows per query was one whole Spark job of pure
+    * overhead (round-6 measurement). An entry serves only the SparkContext
+    * that read it and only the marker generation it was read under —
+    * [[ensureIvf]] writes a fresh one on every build, so a rebuild within
+    * one file-timestamp tick still invalidates it. */
+  private val centroidCache =
+    new java.util.concurrent.ConcurrentHashMap[String, CachedCentroids]()
+
+  private[graft] def centroidsFor(spark: org.apache.spark.sql.SparkSession,
       dir: String): Array[(Long, Array[Float], Double)] = {
     def read() = spark.read.parquet(s"$dir/centroids").collect().map { r =>
       (r.getAs[Long]("cid"),
         r.getAs[scala.collection.Seq[Float]]("c_emb").toArray,
         r.getAs[Double]("c_nrm"))
     }
-    val stamp = new java.io.File(s"$dir/_ivf_done_v2").lastModified()
-    // marker absent (stamp 0: external/partial build) ⇒ no residency —
-    // read fresh each probe rather than caching an unverifiable snapshot
-    if (stamp == 0L) return read()
+    val marker = java.nio.file.Paths.get(dir, IvfMarker)
+    val generation =
+      if (java.nio.file.Files.exists(marker))
+        java.nio.file.Files.readString(marker).trim
+      else ""
+    // no marker or no generation in it (external/partial build) ⇒ no
+    // residency — read fresh each probe rather than caching an
+    // unverifiable snapshot
+    if (generation.isEmpty) return read()
+    val sc = spark.sparkContext
     centroidCache.compute(dir, (_, cur) =>
-      if (cur != null && cur._1 == stamp) cur else (stamp, read()))._2
+      if (cur != null && (cur.sc.get eq sc) && cur.generation == generation) cur
+      else CachedCentroids(new java.lang.ref.WeakReference(sc), generation,
+        read())).rows
   }
 
   /** Serving-side IVF query against a persisted index ([[ensureIvf]]):

@@ -88,10 +88,39 @@ class PipelineSpec extends AnyFunSuite {
     assert(plan.contains("PartitionFilters") && plan.contains("cid"),
       s"no partition pruning in:\n$plan")
     // idempotent ensure: second call must not rebuild (marker present)
-    val marker = new java.io.File(s"$dir/_ivf_done")
-    val stamp = marker.lastModified()
+    val marker = java.nio.file.Paths.get(dir, Ann.IvfMarker)
+    val generation = java.nio.file.Files.readString(marker)
+    assert(generation.nonEmpty)
     Ann.ensureIvf(spark, emb, dir)
-    assert(marker.lastModified() === stamp)
+    assert(java.nio.file.Files.readString(marker) === generation)
+  }
+
+  test("an IVF rebuild within one marker mtime tick serves the new centroids") {
+    val dir = s"${sys.props("user.dir")}/target/test-ivf-regen"
+    def probe(): Seq[(Long, Long)] = Ann.ivfProbe(spark, dir, 0L, 10).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def inline(rounds: Int): Seq[(Long, Long)] =
+      Ann.ivfTopK(emb, 0L, 10, lloydRounds = rounds).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def stored(): Seq[(Long, Seq[Float])] = spark.read.parquet(s"$dir/centroids")
+      .collect().map(r => (r.getAs[Long]("cid"),
+        r.getAs[scala.collection.Seq[Float]]("c_emb").toSeq)).toSeq.sortBy(_._1)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    Ann.ensureIvf(spark, emb, dir)
+    assert(probe() === inline(Ann.IvfLloydRounds)) // caches the centroids
+    val trained = stored()
+    val marker = new java.io.File(s"$dir/${Ann.IvfMarker}")
+    val stamp = marker.lastModified()
+    // rebuild with untrained centroids, then put the old mtime back: a
+    // rebuild inside the filesystem's timestamp granularity
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    Ann.ensureIvf(spark, emb, dir, lloydRounds = 0)
+    assert(marker.setLastModified(stamp) && marker.lastModified() === stamp)
+    val untrained = stored()
+    assert(untrained !== trained)
+    assert(Ann.centroidsFor(spark, dir).map(c => (c._1, c._2.toSeq)).toSeq
+      .sortBy(_._1) === untrained)
+    assert(probe() === inline(0))
   }
 
   test("LSH hit scores match brute-force scores for shared vec_ids") {

@@ -1,0 +1,82 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.index.{IndexTables, PostingsBuilder}
+import graft.io.TableIO
+import graft.streaming.{Compactor, IncrementalIndexer}
+import graft.web.{WebIndex, WebtextGen}
+
+/** The v5 postings format: every base block carries its term's exact global
+  * df (the `term_stats` value), written at build and rewritten by
+  * compaction; streamed segment blocks carry none; an index stamped with an
+  * older format marker reads as incomplete and rebuilds. */
+class PostingsFormatSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private def root = s"${sys.props("user.dir")}/target/test-idx/postings-format"
+  private val cfg = PostingsBuilder.Config(shardSize = 256)
+
+  private def docs(lo: Long, hi: Long): DataFrame = {
+    import spark.implicits._
+    spark.range(lo, hi, 1, 4).mapPartitions(_.map(i =>
+      WebtextGen.rowFor(i, StreamSpec.Big))).toDF()
+  }
+
+  /** Base postings rows (groups below the streamed range) whose df differs
+    * from the committed union term_stats df, or is missing. */
+  private def dfMismatches(io: TableIO): Long = {
+    val ts = IndexTables.termStats(spark, io).select(col("term"),
+      col("df").as("ts_df"))
+    IndexTables.postings(spark, io).where(col("group") < IndexTables.GroupBase)
+      .join(ts, Seq("term"), "left")
+      .where(col("df").isNull || col("ts_df").isNull || col("df") =!= col("ts_df"))
+      .count()
+  }
+
+  test("base blocks carry the global df; segment blocks none; compaction rewrites it") {
+    val dir = s"$root/stream"
+    new TableIO(dir).deleteAll()
+    WebIndex.build(spark, docs(0, 600), dir, cfg)
+    val io = new TableIO(dir)
+    assert(IndexTables.postings(spark, io).count() > 0)
+    assert(dfMismatches(io) === 0)
+
+    IncrementalIndexer.ingestBatch(spark, docs(600, 800), dir, 0L, cfg)
+    val seg = IndexTables.postings(spark, io)
+      .where(col("group") >= IndexTables.GroupBase)
+    assert(seg.count() > 0)
+    assert(seg.where(col("df").isNotNull).count() === 0)
+
+    assert(Compactor.compact(spark, dir, cfg))
+    val compacted = new TableIO(dir)
+    assert(IndexTables.activeBatches(compacted).isEmpty)
+    assert(IndexTables.postings(spark, compacted)
+      .where(col("group") >= IndexTables.GroupBase).count() === 0)
+    assert(dfMismatches(compacted) === 0)
+  }
+
+  test("a directory stamped only with format_pfor4 is incomplete and rebuilds") {
+    val dir = s"$root/old-format"
+    new TableIO(dir).deleteAll()
+    WebIndex.build(spark, docs(0, 300), dir, cfg)
+    assert(PostingsBuilder.isComplete(dir))
+    val io = new TableIO(dir)
+    io.commit(io.committedSteps() - PostingsBuilder.FormatStep + "format_pfor4")
+    assert(!PostingsBuilder.isComplete(dir))
+
+    WebIndex.build(spark, docs(0, 300), dir, cfg)
+    val steps = new TableIO(dir).committedSteps()
+    assert(steps.contains(PostingsBuilder.FormatStep))
+    assert(!steps.contains("format_pfor4"))
+    assert(PostingsBuilder.isComplete(dir))
+    assert(dfMismatches(new TableIO(dir)) === 0)
+  }
+}

@@ -15,15 +15,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.Analyzer
 import graft.harness.{FieldedQueries, QuerySet, TextQueries}
-import graft.index.{FieldedIndex, PostingsBuilder}
+import graft.index.{FieldedIndex, IndexTables, PostingsBuilder}
 import graft.io.TableIO
 import graft.query.Searcher
+import graft.streaming.{Compactor, IncrementalIndexer}
+import graft.web.{WebIndex, WebtextGen}
 
-/** The per-query job budget of the serving path: a warm search is one
-  * fan-out job plus one df-lookup job on a df-cache miss, and collecting the
-  * driver-ordered top-k frame launches nothing more. Jobs are counted by a
-  * listener filtered on this thread's job group. Warm serving jobs hand
-  * Spark named tasks, so no call cleans a lambda closure. */
+/** The per-query job budget of the serving path: on a handle without active
+  * streamed segments a warm search is one fan-out job, new terms included
+  * (each shard reads a term's global df from its own dictionary), with one
+  * task per shard-holding partition; with active segments a df-cache miss
+  * adds one df-lookup job. Collecting the driver-ordered top-k frame
+  * launches nothing more. Jobs are counted by a listener filtered on this
+  * thread's job group. Warm serving jobs hand Spark named tasks, so no call
+  * cleans a lambda closure. */
 class ServingJobsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -100,17 +105,83 @@ class ServingJobsSpec extends AnyFunSuite {
 
   private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq)
 
-  test("a warm search is one job on a df-cache hit and two when a term is new") {
+  /** Tasks of the given jobs' result stages (a job also lists the skipped
+    * stages of its lineage, such as an open's shuffle). */
+  private def tasksOf(starts: Seq[SparkListenerJobStart]): Int =
+    starts.map(_.stageInfos.maxBy(_.stageId).numTasks).sum
+
+  /** Generated web pages with doc ids `[lo, hi)`. */
+  private def pages(lo: Long, hi: Long): DataFrame = {
+    import spark.implicits._
+    spark.range(lo, hi, 1, 4).mapPartitions(_.map(i =>
+      WebtextGen.rowFor(i, StreamSpec.Big))).toDF()
+  }
+
+  /** Partitions of a handle's resident RDD that hold at least one shard. */
+  private def holding(h: Searcher.Handle): Int =
+    h.shards.mapPartitions(it => Iterator(it.hasNext)).collect().count(identity)
+
+  test("a warm search is one job, also when a term is new") {
     val q = Seq(1 -> "fast join merge")
     val first = rows(Searcher.search(handle, q, QuerySet.K))
     assert(first.nonEmpty)
     val (hit, hitJobs) = jobsOf(rows(Searcher.search(handle, q, QuerySet.K)))
     assert(hitJobs === 1)
     assert(hit === first)
-    // a term the handle has never looked up costs the df-lookup job too
+    // a term the handle has never seen: each shard reads its global df from
+    // its own dictionary entry, so no df-lookup job runs
     val (_, missJobs) = jobsOf(
       rows(Searcher.search(handle, Seq(1 -> "fast join merge zqxjvw"), QuerySet.K)))
-    assert(missJobs === 2)
+    assert(missJobs === 1)
+  }
+
+  test("a warm serving job runs one task per shard-holding partition") {
+    val q = Seq(1 -> "fast join merge")
+    rows(Searcher.search(handle, q, QuerySet.K))
+    val (_, starts) = jobStartsOf(rows(Searcher.search(handle, q, QuerySet.K)))
+    assert(starts.length === 1)
+    assert(tasksOf(starts) === holding(handle))
+    // two fields over a one-shard index: the shuffle open spreads one shard
+    // over every core's partition, and only its partition runs a task
+    val small = s"${sys.props("user.dir")}/target/test-idx/serving-jobs-one-shard"
+    new TableIO(small).deleteAll()
+    WebIndex.build(spark, pages(0, 64), small)
+    val mh = Searcher.open(spark, Seq("a" -> small, "b" -> small))
+    try {
+      val legs = Seq(Searcher.MultiLeg("a", Map("w1" -> 1)),
+        Searcher.MultiLeg("b", Map("w2" -> 1)))
+      val first = rows(Searcher.multiSearch(mh, legs, QuerySet.K))
+      assert(first.nonEmpty)
+      val (hit, starts) = jobStartsOf(rows(Searcher.multiSearch(mh, legs, QuerySet.K)))
+      assert(hit === first)
+      assert(mh.shards.getNumPartitions === 4)
+      assert(holding(mh) === 1)
+      assert(starts.length === 1 && tasksOf(starts) === 1)
+    } finally mh.close()
+  }
+
+  test("an active streamed segment keeps the df-lookup job until compaction") {
+    val root = s"${sys.props("user.dir")}/target/test-idx/serving-jobs-stream"
+    new TableIO(root).deleteAll()
+    val cfg = PostingsBuilder.Config(shardSize = 256)
+    WebIndex.build(spark, pages(0, 600), root, cfg)
+    IncrementalIndexer.ingestBatch(spark, pages(600, 800), root, 0L, cfg)
+    assert(IndexTables.activeBatches(new TableIO(root)) === Seq(0L))
+    def budget(h: Searcher.Handle): (Int, Int) = {
+      val q = Seq(1 -> "w1 w2 w3")
+      rows(Searcher.search(h, q, QuerySet.K))
+      val (_, hitJobs) = jobsOf(rows(Searcher.search(h, q, QuerySet.K)))
+      val (_, missJobs) = jobsOf(rows(Searcher.search(h, Seq(1 -> "w1 w7"),
+        QuerySet.K)))
+      (hitJobs, missJobs)
+    }
+    val seg = Searcher.open(spark, root)
+    try assert(budget(seg) === (1, 2))
+    finally seg.close()
+    assert(Compactor.compact(spark, root, cfg))
+    val compacted = Searcher.open(spark, root)
+    try assert(budget(compacted) === (1, 1))
+    finally compacted.close()
   }
 
   test("warm serving calls clean no lambda closure") {
@@ -133,10 +204,10 @@ class ServingJobsSpec extends AnyFunSuite {
         assert(rows(call()).nonEmpty, name)
         assert(lambdaCleans(rows(call())) === Seq.empty, name)
       }
-      // a term the handle has never seen runs the df lookup job too
+      // a term the handle has never seen is still one job
       val (_, missJobs) = jobsOf(assert(lambdaCleans(rows(Searcher.search(
         handle, Seq(1 -> "fast join qzvxkw"), QuerySet.K))) === Seq.empty))
-      assert(missJobs === 2)
+      assert(missJobs === 1)
     } finally mh.close()
   }
 
