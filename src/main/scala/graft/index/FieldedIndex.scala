@@ -151,7 +151,7 @@ object FieldedIndex {
     }
     val staged = spark.read.parquet(io.tablePath("docs_lww"))
 
-    if (!io.committedSteps().contains("doc_map")) {
+    io.stepProps("doc_map") {
       staged.select(col("doc_id"),
           col("_key").as(Option(docMapKeyName).getOrElse(keyCol)))
         .write.mode("overwrite").parquet(io.tablePath("doc_map"))
@@ -160,8 +160,7 @@ object FieldedIndex {
       // micro-batch. The max ASSIGNED id always survives the LWW window
       // (within a key group the winner IS the highest doc_id), so the max
       // over the winners equals the top of the id space. −1 = empty corpus.
-      io.commitStep("doc_map", Map("max_doc_id" ->
-        IndexTables.maxDocId(staged, default = -1L).toString))
+      Map("max_doc_id" -> IndexTables.maxDocId(staged, default = -1L).toString)
     }
 
     // per-field sub-indexes build CONCURRENTLY — independent directories,

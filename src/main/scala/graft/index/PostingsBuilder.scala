@@ -177,7 +177,7 @@ object PostingsBuilder {
     // stats is the ONLY derivation gating the postings stage (avgdl
     // normalizes the block-max bounds): a tiny full-pass aggregate, run
     // alone so its single task is not queued behind sibling stages.
-    if (!io.committedSteps().contains("stats")) {
+    io.stepProps("stats") {
       TextIndex.corpusStats(docTerms.select(col("doc_id"), col("dl")))
         .write.mode("overwrite").parquet(io.tablePath("stats"))
       // max_doc_id rides the manifest as a snapshot property so streamed
@@ -186,8 +186,7 @@ object PostingsBuilder {
       // corpus). Computed from doc_terms (which has EVERY doc, including
       // zero-token ones that never reach postings/lineage); the agg is one
       // column-pruned scan folded into the build.
-      io.commitStep("stats", Map("max_doc_id" ->
-        IndexTables.maxDocId(docTerms, default = -1L).toString))
+      Map("max_doc_id" -> IndexTables.maxDocId(docTerms, default = -1L).toString)
     }
     // na.fill: an EMPTY corpus (legal for a fielded build whose field has
     // no values anywhere) aggregates avg/sum to null — decode as zeros

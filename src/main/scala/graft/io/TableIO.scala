@@ -118,11 +118,15 @@ final class TableIO(val indexDir: String) extends Serializable {
   /** Run `body` unless `step` is already committed; commit it after.
     * Per-step wall time goes to stderr when GRAFT_STEP_TIMING is set —
     * the knob the scaling benchmark uses to find serial sections. */
-  def step(name: String)(body: => Unit): Unit = {
+  def step(name: String)(body: => Unit): Unit =
+    stepProps(name) { body; Map.empty }
+
+  /** [[step]] for a body that returns snapshot properties: they commit in
+    * the same snapshot as the step (see [[commitStep]]). */
+  def stepProps(name: String)(body: => Map[String, String]): Unit = {
     if (!committedSteps().contains(name)) {
       val t0 = System.nanoTime()
-      body
-      commitStep(name)
+      commitStep(name, body)
       if (sys.env.contains("GRAFT_STEP_TIMING"))
         System.err.println(
           f"[TableIO] step $name%-14s ${(System.nanoTime() - t0) / 1e9}%7.2fs")

@@ -8,6 +8,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ResidentView
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
@@ -55,6 +56,15 @@ import graft.model.{CorpusStats, PostingBlock}
   * for ours — on every job, which measured ~2.6 ms per clean and most of
   * a warm search's fixed cost; it returns at once for a function that is
   * not a lambda.
+  *
+  * Serving jobs run on a [[ResidentView]] of the materialized shard RDD,
+  * not on the RDD itself, so a task binary carries the view (no
+  * dependencies, ~2 KB) and the task, not open's parquet-scan lineage
+  * and its generated code (~38 KB, deserialized again by every task of
+  * every job). A view task reads its shard block from the block manager;
+  * only when the block was evicted or lost does it deserialize that
+  * lineage, broadcast once per handle, and recompute (and re-cache) the
+  * partition.
   */
 object Searcher {
 
@@ -102,7 +112,10 @@ object Searcher {
   /** A query-server handle over one or more fields' sub-indexes: per-field
     * corpus stats loaded once, and one resident index per doc shard holding
     * every field's postings (the ES/Lucene segment shape), cached in
-    * executor memory as an RDD of [[ShardIndex]] objects. Co-location makes
+    * executor memory as an RDD of [[ShardIndex]] objects and served through
+    * its [[ResidentView]] (`shards`): every job over the handle ships the
+    * view's small task binary, and a task whose block is gone recomputes
+    * it from open's lineage. Co-location makes
     * a multi-leg bool query one narrow kernel job ([[multiSearch]]). The
     * term dictionary stays distributed (inside the shard indexes) —
     * per-query metadata is looked up, never collected wholesale. The
@@ -116,7 +129,7 @@ object Searcher {
     * reopen handles after compaction rather than serving through it. */
   final class Handle private[Searcher] (val spark: SparkSession,
       private[Searcher] val fields: Map[String, FieldState],
-      private[graft] val shards: RDD[ShardIndex],
+      private[graft] val shards: ResidentView[ShardIndex],
       /** The partitions holding at least one shard: serving jobs run only
         * these (an empty partition's task would do nothing but
         * deserialize the task binary). */
@@ -143,8 +156,9 @@ object Searcher {
     def stats: CorpusStats = only.stats
     def tightBounds: Boolean = only.tight
 
-    /** Releases the resident shards; a stopped context has none left. */
-    def close(): Unit = if (!shards.sparkContext.isStopped) shards.unpersist()
+    /** Releases the resident shards (the view's persisted source); a
+      * stopped context has none left. */
+    def close(): Unit = if (!shards.sparkContext.isStopped) shards.release()
   }
 
   /** The per-partition body of a serving job over resident shard indexes:
@@ -386,7 +400,7 @@ object Searcher {
       case Seq((_, io)) if bare => openUnshuffled(spark, io)
       case _ => None
     }).getOrElse(openShuffled(spark, ios))
-    new Handle(spark, fields, shards,
+    new Handle(spark, fields, new ResidentView(shards),
       ids.indices.filter(ids(_).nonEmpty).toArray, shardDfs = bare)
   }
 
@@ -709,7 +723,11 @@ object Searcher {
     * elastic/settings.go:87-138) — default is the stopword text chain the
     * single-field indexes use. */
   def search(h: Handle, rawQueries: Seq[(Int, String)], k: Int,
-             chain: String => Array[String] = Analyzer.analyzeStop): DataFrame = {
+             chain: String => Array[String] = Analyzer.analyzeStop): DataFrame =
+    fanOutTopK(h, k, searchSpecs(h, rawQueries, chain))
+
+  private def searchSpecs(h: Handle, rawQueries: Seq[(Int, String)],
+      chain: String => Array[String]): Seq[QuerySpec] = {
     requireDistinctQids(rawQueries.map(_._1))
     // analyzed terms with query-occurrence weights (Lucene: a repeated query
     // term contributes once per occurrence)
@@ -717,12 +735,20 @@ object Searcher {
       qid -> chain(q).groupBy(identity).view.mapValues(_.length).toMap
     }
     val dfs = driverDfs(h, analyzed.flatMap(_._2.keys).distinct.toArray)
-    fanOutTopK(h, k, analyzed.map { case (qid, tw) =>
+    analyzed.map { case (qid, tw) =>
       QuerySpec(qid, tw.toSeq.sortBy(_._1).flatMap { case (t, w) =>
         cursorSpec(h.only, t, dfs, w)
       }.toArray)
-    })
+    }
   }
+
+  /** The task a [[search]] fan-out runs on `h.shards`: with the view, what
+    * its job serializes into the task binary (`ServingJobsSpec` pins the
+    * size). */
+  private[graft] def searchTask(h: Handle, rawQueries: Seq[(Int, String)],
+      k: Int): AnyRef =
+    new TopKTask(new TopKFold(searchSpecs(h, rawQueries, Analyzer.analyzeStop)
+      .filter(_.live).toArray, k, java.util.UUID.randomUUID().toString))
 
   /** ES match with `fuzziness` (the Lucene FuzzyQuery rewrite): each
     * analyzed query term expands to the dictionary terms within its edit

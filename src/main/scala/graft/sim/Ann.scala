@@ -53,11 +53,13 @@ object Ann {
     // partitioning — a small parquet file reads as ONE split, serializing
     // the whole n²/2 dot workload on a single task. Spread the stream side
     // across the cores when the scan under-partitions (never shrink an
-    // already-wide layout; the exchange moves only n rows).
+    // already-wide layout; the exchange moves only n rows). The width comes
+    // from this frame's own physical plan: `.rdd` would plan a second,
+    // deserializing query just to count partitions.
     val spark = emb.sparkSession
     val width = spark.sparkContext.defaultParallelism
     val aSide =
-      if (withN.rdd.getNumPartitions >= width) withN
+      if (withN.queryExecution.toRdd.getNumPartitions >= width) withN
       else withN.repartition(width)
     val a = aSide.as("a"); val b = withN.as("b")
     a.crossJoin(b)

@@ -9,8 +9,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 /** Spark 4 made the Column ⇄ Expression bridge `private[sql]`
   * (columnNodeSupport.scala); third-party Catalyst extensions reach it by
   * living in a subpackage of org.apache.spark.sql — the established pattern
-  * for expression libraries. This is the only file outside the graft
-  * namespace. */
+  * for expression libraries. This package holds the only code outside the
+  * graft namespace: this object and [[ResidentView]], the serving handle's
+  * lineage-free view of its cached shards (it reads blocks through the
+  * `private[spark]` block manager). */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -219,6 +219,17 @@ class FieldedStreamSpec extends AnyFunSuite {
     assert(io.prop("y") === Some("z 9")) // values may contain spaces
   }
 
+  test("stepProps commits a step and its body's properties in one snapshot, once") {
+    val io = new TableIO(s"$root/step-props")
+    io.deleteAll()
+    var runs = 0
+    io.stepProps("s") { runs += 1; Map("x" -> "1") }
+    assert(io.currentSnapshotId() === Some("0"))
+    assert(io.committedSteps() === Set("s") && io.prop("x") === Some("1"))
+    io.stepProps("s") { runs += 1; Map("x" -> "2") }
+    assert(runs === 1 && io.prop("x") === Some("1"))
+  }
+
   test("schema drift: a batch without a field column REPLACES the doc (field drops)") {
     import spark.implicits._
     val dir = s"$root/idx-drift"

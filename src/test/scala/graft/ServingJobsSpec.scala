@@ -9,9 +9,11 @@ import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graftbridge.{Bridge, CachedBlocks}
 import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.analysis.Analyzer
 import graft.harness.{FieldedQueries, QuerySet, TextQueries}
@@ -28,7 +30,8 @@ import graft.web.{WebIndex, WebtextGen}
   * adds one df-lookup job. Collecting the driver-ordered top-k frame
   * launches nothing more. Jobs are counted by a listener filtered on this
   * thread's job group. Warm serving jobs hand Spark named tasks, so no call
-  * cleans a lambda closure. */
+  * cleans a lambda closure, and run on the lineage-free view of the
+  * resident shards, so their task binary stays small. */
 class ServingJobsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -117,6 +120,17 @@ class ServingJobsSpec extends AnyFunSuite {
       WebtextGen.rowFor(i, StreamSpec.Big))).toDF()
   }
 
+  /** A fresh index at `name`: a 600-page base with one active streamed
+    * segment of 200 pages (so a handle over it takes the shuffle open). */
+  private def segmented(name: String, cfg: PostingsBuilder.Config): String = {
+    val root = s"${sys.props("user.dir")}/target/test-idx/$name"
+    new TableIO(root).deleteAll()
+    WebIndex.build(spark, pages(0, 600), root, cfg)
+    IncrementalIndexer.ingestBatch(spark, pages(600, 800), root, 0L, cfg)
+    assert(IndexTables.activeBatches(new TableIO(root)) === Seq(0L))
+    root
+  }
+
   /** Partitions of a handle's resident RDD that hold at least one shard. */
   private def holding(h: Searcher.Handle): Int =
     h.shards.mapPartitions(it => Iterator(it.hasNext)).collect().count(identity)
@@ -161,12 +175,8 @@ class ServingJobsSpec extends AnyFunSuite {
   }
 
   test("an active streamed segment keeps the df-lookup job until compaction") {
-    val root = s"${sys.props("user.dir")}/target/test-idx/serving-jobs-stream"
-    new TableIO(root).deleteAll()
     val cfg = PostingsBuilder.Config(shardSize = 256)
-    WebIndex.build(spark, pages(0, 600), root, cfg)
-    IncrementalIndexer.ingestBatch(spark, pages(600, 800), root, 0L, cfg)
-    assert(IndexTables.activeBatches(new TableIO(root)) === Seq(0L))
+    val root = segmented("serving-jobs-stream", cfg)
     def budget(h: Searcher.Handle): (Int, Int) = {
       val q = Seq(1 -> "w1 w2 w3")
       rows(Searcher.search(h, q, QuerySet.K))
@@ -359,6 +369,42 @@ class ServingJobsSpec extends AnyFunSuite {
       assert(opens.isEmpty, name)
       // the match query already resolved match_and's terms: one fan-out job
       if (name == "match_and") assert(starts.length === 1)
+    }
+  }
+
+  test("a search fan-out's task binary stays under 4 KB on both open paths") {
+    // the closure-serialized (rdd, task) pair is what the scheduler
+    // broadcasts for every job; serving from the persisted shard RDD itself
+    // would carry open's whole scan lineage (38-40 KB)
+    val seg = Searcher.open(spark,
+      segmented("serving-jobs-binary", PostingsBuilder.Config(shardSize = 256)))
+    try Seq("unshuffled" -> handle, "shuffle" -> seg).foreach { case (name, h) =>
+      val task = Searcher.searchTask(h, Seq(1 -> "fast join w1 w2"), QuerySet.K)
+      assert(CachedBlocks.closureBytes(spark.sparkContext, (h.shards, task)) < 4096,
+        name)
+    } finally seg.close()
+  }
+
+  test("close releases the resident shards on both open paths") {
+    val sc = spark.sparkContext
+    val seg = segmented("serving-jobs-close", PostingsBuilder.Config(shardSize = 256))
+    Seq(dir, seg).foreach { d =>
+      val persisted = sc.getPersistentRDDs.keySet.toSet
+      val h = Searcher.open(spark, d)
+      val (id, n) = (h.shards.sourceId, h.shards.getNumPartitions)
+      assert(sc.getPersistentRDDs.size === persisted.size + 1, d)
+      assert(rows(Searcher.search(h, Seq(1 -> "fast join w1 w2"), QuerySet.K)).nonEmpty, d)
+      val lazyDocs = Searcher.termDocs(h, Seq("join", "w1"))
+      val docs = lazyDocs.count()
+      assert(docs > 0, d)
+      h.close()
+      assert(sc.getPersistentRDDs.keySet.toSet === persisted, d)
+      eventually(timeout(30.seconds))(assert(CachedBlocks.of(sc, id, n).isEmpty, d))
+      // a lazy frame over a closed handle still computes, from the lineage,
+      // and caches no block again
+      assert(lazyDocs.count() === docs, d)
+      assert(CachedBlocks.of(sc, id, n).isEmpty, d)
+      assert(sc.getPersistentRDDs.keySet.toSet === persisted, d)
     }
   }
 }
