@@ -8,8 +8,8 @@ import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ResidentView
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.{DriverRows, ResidentView}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.analysis.Analyzer
@@ -37,15 +37,19 @@ import graft.model.{CorpusStats, PostingBlock}
   *
   * A warm search, phrase, span_near or bool query is ONE Spark job; the
   * top-k frame is a driver-ordered local relation, so collecting it
-  * launches nothing more. Where a shard cannot know the global df — a
-  * handle with active streamed segments (global df = base + segments),
-  * and the match_phrase_prefix union slot, whose idf sums expansions a
-  * shard may lack — the driver supplies it: a query-sized lookup job over
-  * the cached shard indexes for terms the handle's df cache has not seen,
-  * summing per-shard posting counts (df(term) = Σ_shards postings, exactly
-  * the term_stats value). A batch in which no query keeps a scorable term
-  * launches no fan-out at all. No shuffle, no sort, no scan of non-query
-  * terms anywhere on the query path.
+  * launches nothing more. It is a [[DriverRows]] frame, so `collect`,
+  * `count` and the other driver-returning actions answer from the merged
+  * rows without Catalyst: planning and tracking a local scan of ~10 rows
+  * cost more than the fan-out's own driver work (Catalyst's `count` of it
+  * runs two jobs). Where a shard cannot know the global df — a handle
+  * with active streamed segments (global df = base + segments), and the
+  * match_phrase_prefix union slot, whose idf sums expansions a shard may
+  * lack — the driver supplies it: a query-sized lookup job over the
+  * cached shard indexes for terms the handle's df cache has not seen,
+  * summing per-shard posting counts (df(term) = Σ_shards postings,
+  * exactly the term_stats value). A batch in which no query keeps a
+  * scorable term launches no fan-out at all. No shuffle, no sort, no scan
+  * of non-query terms anywhere on the query path.
   *
   * Every job over a handle's resident shards that returns to the driver
   * (open's materialization, the df lookup, fuzzy candidates and the
@@ -351,7 +355,7 @@ object Searcher {
     fanOutTopK(h, k, Seq(QuerySpec(0, specs, phraseSpecs,
       filter.map(_ => dfByKey.fold(filterKeys)(m => filterKeys.filter(m.contains))),
       mustNotKeys, minShouldMatch, disMaxTieBreaker,
-      requiredLegs.foldLeft(0L)((m, l) => m | (1L << l))))).drop("qid")
+      requiredLegs.foldLeft(0L)((m, l) => m | (1L << l)))), withQid = false)
   }
 
   private val BlockCols = Seq("doc_shard", "term", "block_id", "n",
@@ -651,11 +655,11 @@ object Searcher {
     * hits — only ones the merged top-k could use. A batch with no live
     * query skips the job and returns the empty frame. */
   private def fanOutTopK(h: Handle, k: Int,
-      queries: Seq[QuerySpec]): DataFrame = {
+      queries: Seq[QuerySpec], withQid: Boolean = true): DataFrame = {
     val qs = queries.filter(_.live).toArray
     topKFrame(h.spark, if (qs.isEmpty) Map.empty else treeTopK(h,
       new TopKFold(qs, k, java.util.UUID.randomUUID().toString),
-      new TopKMerge(k)))
+      new TopKMerge(k)), withQid)
   }
 
   /** Score one query against one shard's index — the per-query body of
@@ -684,26 +688,37 @@ object Searcher {
       q.mustNotKeys.toSeq.map(blocks).filter(_.nonEmpty), q.requiredMask)
   }
 
-  /** Build the (qid, rnk, doc_id, score_x6) frame from merged top-k: a local
-    * relation whose rows are already in (qid, rnk) order, so collecting it
-    * runs no job (a cluster sort here would add a sampling job, a shuffle-map
-    * job and a result job to every search). */
+  private val TopKSchema = StructType(Seq(
+    StructField("qid", LongType, nullable = false),
+    StructField("rnk", LongType, nullable = false),
+    StructField("doc_id", LongType, nullable = false),
+    StructField("score_x6", LongType, nullable = false)))
+
+  /** A single bool query's frame ([[multiSearch]]) has no qid column. */
+  private val BoolTopKSchema = StructType(TopKSchema.fields.tail)
+
+  /** Build the (qid, rnk, doc_id, score_x6) frame from merged top-k (without
+    * qid for a single bool query): a [[DriverRows]] local relation whose
+    * rows are already in (qid, rnk) order. Collecting it runs no job (a
+    * cluster sort here would add a sampling job, a shuffle-map job and a
+    * result job to every search) and no Catalyst planning either:
+    * `collect`, `count` and the other driver-returning actions answer from
+    * the rows held here, where Catalyst would spend several milliseconds
+    * planning and tracking a local scan of them (and two jobs on `count`).
+    * A transformation of the frame plans through Catalyst as any DataFrame
+    * does. */
   private def topKFrame(spark: SparkSession,
-      merged: Map[Int, Array[(Long, Long)]]): DataFrame = {
-    val rows = new java.util.ArrayList[Row]()
+      merged: Map[Int, Array[(Long, Long)]], withQid: Boolean): DataFrame = {
+    val rows = mutable.ArrayBuffer.empty[Row]
     merged.toSeq.sortBy(_._1).foreach { case (qid, ranked) =>
       var i = 0
       while (i < ranked.length) {
-        rows.add(Row(qid.toLong, (i + 1).toLong, ranked(i)._2, ranked(i)._1))
+        val (rnk, doc, x6) = ((i + 1).toLong, ranked(i)._2, ranked(i)._1)
+        rows += (if (withQid) Row(qid.toLong, rnk, doc, x6) else Row(rnk, doc, x6))
         i += 1
       }
     }
-    val schema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("rnk", LongType, nullable = false),
-      StructField("doc_id", LongType, nullable = false),
-      StructField("score_x6", LongType, nullable = false)))
-    spark.createDataFrame(rows, schema)
+    DriverRows(spark, if (withQid) TopKSchema else BoolTopKSchema, rows)
   }
 
   /** One batch ranks each qid once: hits merge by qid ([[treeTopK]]) and θ
@@ -810,6 +825,13 @@ object Searcher {
     }
   }
 
+  private val SuggestSchema = StructType(Seq(
+    StructField("input", StringType),
+    StructField("rnk", LongType, nullable = false),
+    StructField("suggestion", StringType),
+    StructField("df", LongType, nullable = false),
+    StructField("distance", LongType, nullable = false)))
+
   /** ES term suggester (`suggest_mode: missing`, the default): for each
     * analyzed input term ABSENT from the dictionary, the closest
     * dictionary terms within its AUTO edit budget, ranked (distance asc,
@@ -818,7 +840,6 @@ object Searcher {
     * `missing` means). Returns (input, rnk, suggestion, df, distance). */
   def termSuggest(h: Handle, text: String, size: Int,
       chain: String => Array[String] = Analyzer.analyzeStop): DataFrame = {
-    import h.spark.implicits._
     // Spark's string order (UTF-8 bytes, not UTF-16 units), so the rows
     // below come out in the order a sort on `input` would give
     val terms = chain(text).distinct
@@ -832,11 +853,11 @@ object Searcher {
       else fuzzyCandidates(h, missing, size)
     val rows = missing.flatMap { case (q, _) =>
       cands.getOrElse(q, Array.empty).zipWithIndex.map {
-        case ((t, df, d), i) => (q, (i + 1).toLong, t, df, d.toLong)
+        case ((t, df, d), i) => Row(q, (i + 1).toLong, t, df, d.toLong)
       }
-    }.toSeq
+    }
     // already in (input, rnk) order: terms are sorted, ranks ascend
-    rows.toDF("input", "rnk", "suggestion", "df", "distance")
+    DriverRows(h.spark, SuggestSchema, rows)
   }
 
   def fuzzySearch(h: Handle, rawQueries: Seq[(Int, String)], k: Int,

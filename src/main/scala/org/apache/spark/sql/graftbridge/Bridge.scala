@@ -10,9 +10,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   * (columnNodeSupport.scala); third-party Catalyst extensions reach it by
   * living in a subpackage of org.apache.spark.sql — the established pattern
   * for expression libraries. This package holds the only code outside the
-  * graft namespace: this object and [[ResidentView]], the serving handle's
-  * lineage-free view of its cached shards (it reads blocks through the
-  * `private[spark]` block manager). */
+  * graft namespace, in three files: this object; [[ResidentView]], the
+  * serving handle's lineage-free view of its cached shards (it reads blocks
+  * through the `private[spark]` block manager); and [[DriverRows]], the
+  * serving frames' DataFrame that answers `collect` and `count` from the
+  * rows the driver holds (it subclasses the `private[sql]` Dataset
+  * constructor). */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -7,8 +7,9 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.{Bridge, CachedBlocks}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.concurrent.Eventually._
@@ -27,11 +28,13 @@ import graft.web.{WebIndex, WebtextGen}
   * streamed segments a warm search is one fan-out job, new terms included
   * (each shard reads a term's global df from its own dictionary), with one
   * task per shard-holding partition; with active segments a df-cache miss
-  * adds one df-lookup job. Collecting the driver-ordered top-k frame
-  * launches nothing more. Jobs are counted by a listener filtered on this
-  * thread's job group. Warm serving jobs hand Spark named tasks, so no call
-  * cleans a lambda closure, and run on the lineage-free view of the
-  * resident shards, so their task binary stays small. */
+  * adds one df-lookup job. Collecting or counting the driver-ordered top-k
+  * frame launches nothing more and starts no SQL execution: it answers
+  * from the rows the driver merged. Jobs and SQL executions are counted by
+  * a listener filtered on this thread's job group. Warm serving jobs hand
+  * Spark named tasks, so no call cleans a lambda closure, and run on the
+  * lineage-free view of the resident shards, so their task binary stays
+  * small. */
 class ServingJobsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -49,26 +52,40 @@ class ServingJobsSpec extends AnyFunSuite {
   }
   private lazy val handle = Searcher.open(spark, dir)
 
-  /** Runs `body`, returning its result and the Spark jobs it launched. */
-  private def jobStartsOf[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+  /** Runs `body`, returning its result, the Spark jobs it launched and the
+    * SQL executions it started. */
+  private def launchesOf[T](body: => T)
+      : (T, Seq[SparkListenerJobStart], Seq[SparkListenerSQLExecutionStart]) = {
     val sc = spark.sparkContext
     val group = s"serving-jobs-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    val sqls = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerSQLExecutionStart]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
           jobs.add(e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          sqls.add(s)
+        case _ =>
+      }
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "serving job budget")
     try {
       val out = body
       Bridge.drainListenerBus(sc)
-      (out, jobs.asScala.toSeq)
+      (out, jobs.asScala.toSeq, sqls.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Runs `body`, returning its result and the Spark jobs it launched. */
+  private def jobStartsOf[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val (out, jobs, _) = launchesOf(body)
+    (out, jobs)
   }
 
   /** Runs `body`, returning its result and the number of Spark jobs it
@@ -147,6 +164,29 @@ class ServingJobsSpec extends AnyFunSuite {
     val (_, missJobs) = jobsOf(
       rows(Searcher.search(handle, Seq(1 -> "fast join merge zqxjvw"), QuerySet.K)))
     assert(missJobs === 1)
+  }
+
+  test("count of a warm search frame is the fan-out job alone") {
+    val q = Seq(1 -> "fast join merge")
+    val n = Searcher.search(handle, q, QuerySet.K).count()
+    assert(n > 0)
+    val (again, jobs) = jobsOf(Searcher.search(handle, q, QuerySet.K).count())
+    assert(again === n)
+    // Catalyst's count of the local relation would add two aggregate jobs
+    assert(jobs === 1)
+  }
+
+  test("collecting a search frame starts no SQL execution; a transformation does") {
+    val q = Seq(1 -> "fast join merge")
+    rows(Searcher.search(handle, q, QuerySet.K))
+    val df = Searcher.search(handle, q, QuerySet.K)
+    val (got, jobs, sqls) = launchesOf(rows(df))
+    assert(got.nonEmpty)
+    assert(jobs.isEmpty && sqls.isEmpty)
+    // the listener sees a Catalyst action over the same frame
+    val (filtered, _, filterSqls) = launchesOf(rows(df.filter("rnk <= 3")))
+    assert(filtered === got.take(3))
+    assert(filterSqls.nonEmpty)
   }
 
   test("a warm serving job runs one task per shard-holding partition") {
