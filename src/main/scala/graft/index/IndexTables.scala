@@ -119,7 +119,8 @@ object IndexTables {
     * committed groups, so a crashed batch's half-written group never reaches
     * a reader. Base blocks carry their term's global df as of the base
     * build; segment blocks carry a null df (the union's df is base plus
-    * segments, which only a lookup over every block can sum). */
+    * segments, which only a sum over every block can give: a serving open
+    * sums it once for each term a segment holds). */
   def postings(spark: SparkSession, io: TableIO): DataFrame = {
     val active = activeBatches(io).map(GroupBase + _)
     spark.read.parquet(io.tablePath("postings"))

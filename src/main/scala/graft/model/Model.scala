@@ -15,8 +15,11 @@ case class TfRow(doc_shard: Int, term: String, doc_id: Long, tf: Int, dl: Int,
   * max_tf_norm is the exact per-block max of tf/(tf+k1(1-b+b·dl/avgdl)) —
   * the block-max WAND pruning bound — computed with the avgdl at encode
   * time; max_tf additionally enables the avgdl-independent fallback bound
-  * tf/(tf+k1(1−b)) that stays valid after streaming appends shift avgdl. enc_wall_ms is the encode task's wall
-  * time (same value on every row the task emits; lineage takes max). */
+  * tf/(tf+k1(1−b)) that stays valid after streaming appends shift avgdl.
+  * enc_wall_ms is the wall time, in ms, from the start of the encode task
+  * to this block's emission, so it differs from row to row and from run to
+  * run (lineage takes the max as the task's build wall). It is why two
+  * builds of the same input do not write the same bytes. */
 case class PostingBlock(
     doc_shard: Int,
     term: String,
@@ -39,7 +42,9 @@ case class PostingBlock(
     /** The term's exact df over the whole index (every shard), the same
       * value as its `term_stats` row: written into every base block at
       * build, so a shard can compute the term's idf without a df lookup.
-      * None on streamed segment blocks, whose df is base plus segments. */
+      * None on streamed segment blocks, whose df is base plus segments: a
+      * serving open sums the blocks of every term a segment holds once,
+      * and serves that sum instead of any base block's df. */
     df: Option[Long] = None)
 
 case class TermStat(term: String, df: Long)

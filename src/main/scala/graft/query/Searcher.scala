@@ -41,15 +41,18 @@ import graft.model.{CorpusStats, PostingBlock}
   * `count` and the other driver-returning actions answer from the merged
   * rows without Catalyst: planning and tracking a local scan of ~10 rows
   * cost more than the fan-out's own driver work (Catalyst's `count` of it
-  * runs two jobs). Where a shard cannot know the global df — a handle
-  * with active streamed segments (global df = base + segments), and the
-  * match_phrase_prefix union slot, whose idf sums expansions a shard may
-  * lack — the driver supplies it: a query-sized lookup job over the
-  * cached shard indexes for terms the handle's df cache has not seen,
-  * summing per-shard posting counts (df(term) = Σ_shards postings,
-  * exactly the term_stats value). A batch in which no query keeps a
-  * scorable term launches no fan-out at all. No shuffle, no sort, no scan
-  * of non-query terms anywhere on the query path.
+  * runs two jobs). Where a shard cannot know the global df, the driver
+  * supplies it from the handle's df cache, with no job at query time. On a
+  * handle with active streamed segments (global df = base + segments) the
+  * keys whose entries hold a segment block are exactly the ones whose df a
+  * shard lacks, or has only in part in another shard: [[open]] resolves
+  * all of them in one lookup job (df(key) = Σ_shards postings, exactly the
+  * term_stats value) and seeds the cache with them. Every other key's df is
+  * its base blocks'. The match_phrase_prefix union slot, whose idf sums
+  * expansions a shard may lack, gets every member's df from the driver. A
+  * batch in which no query keeps a scorable term launches no fan-out at
+  * all. No shuffle, no sort, no scan of non-query terms anywhere on the
+  * query path.
   *
   * Every job over a handle's resident shards that returns to the driver
   * (open's materialization, the df lookup, fuzzy candidates and the
@@ -79,7 +82,9 @@ object Searcher {
     * lacks it, as streamed segment blocks do). */
   final class TermPostings(val df: Long, val blocks: Array[PostingBlock],
       val globalDf: Long = -1L) extends Serializable {
-    /** The global df, for a query whose driver supplied none. */
+    /** The global df, for a query whose driver supplied none. [[open]]
+      * caches the df of every key with an entry that lacks one, so this
+      * throws only if that invariant breaks. */
     def indexDf: Long =
       if (globalDf >= 0) globalDf
       else throw new IllegalStateException(
@@ -137,16 +142,19 @@ object Searcher {
       /** The partitions holding at least one shard: serving jobs run only
         * these (an empty partition's task would do nothing but
         * deserialize the task binary). */
-      private[Searcher] val parts: Array[Int],
-      /** Every field is a bare base (no active streamed segments), so each
-        * shard entry carries its term's global df and queries need no
-        * driver-side df. */
-      private[Searcher] val shardDfs: Boolean) extends AutoCloseable {
-    /** Driver-side key→df memo (misses resolved by a distributed lookup;
-      * 0 = known-absent). Query-sized growth — only terms actually queried
-      * ever reach the driver, never the vocabulary. */
+      private[Searcher] val parts: Array[Int]) extends AutoCloseable {
+    /** Driver-side key→global df (0 = known-absent), never evicted. [[open]]
+      * seeds it with every key whose shard entries lack a global df: the
+      * keys of active streamed segments, bounded by what was ingested since
+      * the last compaction, not by the base's vocabulary. [[resolveDfs]]
+      * adds the keys it looks up. */
     private[Searcher] val dfCache =
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+    /** The df a search ships for `key`: the cached global df, or None when
+      * the shard entry's own ([[TermPostings.indexDf]]) serves. */
+    private[graft] def df(key: String): Option[Long] =
+      Option(dfCache.get(key)).map(_.longValue)
 
     /** The shard-map key of `term` in `field` ([[keyPrefix]]). */
     private[Searcher] def key(field: String, term: String): String =
@@ -177,15 +185,25 @@ object Searcher {
       task: ShardTask[U], parts: Seq[Int]): Array[U] =
     shards.sparkContext.runJob(shards, task, parts)
 
-  /** The shard ids each partition holds: one job over every partition,
-    * which materializes the cache. */
-  private def shardIds(shards: RDD[ShardIndex]): Array[Array[Int]] =
-    runShards(shards, ShardIds, shards.partitions.indices)
+  /** What open learns of one partition: the shard ids it holds, and the
+    * keys of its entries that lack a global df (they hold a streamed
+    * segment block). */
+  private final case class PartInfo(ids: Array[Int], noDf: Array[String])
 
-  /** The shard ids a partition holds. */
-  private object ShardIds extends ShardTask[Array[Int]] {
-    def apply(ctx: TaskContext, it: Iterator[ShardIndex]): Array[Int] =
-      it.map(_.shard).toArray
+  /** One job over every partition, which materializes the cache. */
+  private def partInfos(shards: RDD[ShardIndex]): Array[PartInfo] =
+    runShards(shards, PartInfos, shards.partitions.indices)
+
+  private object PartInfos extends ShardTask[PartInfo] {
+    def apply(ctx: TaskContext, it: Iterator[ShardIndex]): PartInfo = {
+      val ids = mutable.ArrayBuffer.empty[Int]
+      val noDf = mutable.ArrayBuffer.empty[String]
+      it.foreach { si =>
+        ids += si.shard
+        si.terms.forEach((key, tp) => if (tp.globalDf < 0) noDf += key)
+      }
+      PartInfo(ids.toArray, noDf.toArray)
+    }
   }
 
   /** One bool/should leg: a field plus its analyzed term→weight bag.
@@ -209,7 +227,7 @@ object Searcher {
 
   /** Serializable per-cursor spec shipped to the scoring fan-out. `df` is
     * the driver-side global df, None when the shard's entry supplies it
-    * ([[Handle.shardDfs]]); either way the cursor's idf is
+    * ([[Handle.df]]); either way the cursor's idf is
     * `Bm25.idf(nDocs, df) * boost`, the one idf rule. */
   private final case class CursorSpec(key: String, df: Option[Long],
       nDocs: Long, boost: Double, weight: Int, avgdl: Double, tight: Boolean,
@@ -218,36 +236,30 @@ object Searcher {
       Bm25.idf(nDocs, df.getOrElse(entry.indexDf)) * boost
   }
 
-  /** A cursor spec for `key` under `field`'s stats, or None when the
-    * driver-side dfs (if any) show the key corpus-absent. */
-  private def cursorSpec(fs: FieldState, key: String,
-      dfs: Option[Map[String, Long]], weight: Int, boost: Double = 1.0,
-      leg: Int = 0): Option[CursorSpec] =
-    if (dfs.exists(!_.contains(key))) None
-    else Some(CursorSpec(key, dfs.map(_(key)), fs.stats.n_docs, boost, weight,
+  /** A cursor spec for `key` under `field`'s stats, or None when its
+    * driver-side df shows the key corpus-absent. */
+  private def cursorSpec(fs: FieldState, key: String, df: Option[Long],
+      weight: Int, boost: Double = 1.0, leg: Int = 0): Option[CursorSpec] =
+    if (df.contains(0L)) None
+    else Some(CursorSpec(key, df, fs.stats.n_docs, boost, weight,
       fs.stats.avgdl, fs.tight, leg))
 
   /** Serializable positional-clause spec: the keys of the clause's UNIQUE
     * terms, its position slots as indexes into them, its frequency law and
     * its scoring stats — a [[BlockMaxWand.PhraseCursor]] once a shard
     * supplies the blocks. `dfs` (aligned with `keys`) are driver-side
-    * global dfs, None when the shard's entries supply them. */
+    * global dfs, None where the shard's entry supplies it. */
   private final case class PhraseSpec(keys: Array[String],
-      slots: Array[Array[Int]], law: Phrase.Law, dfs: Option[Array[Long]],
+      slots: Array[Array[Int]], law: Phrase.Law, dfs: Array[Option[Long]],
       nDocs: Long, boost: Double, avgdl: Double, tight: Boolean, leg: Int) {
-    /** idf summed over every member, slot by slot, times boost. Without
-      * driver dfs every slot is one term, so a key this shard lacks (null
-      * entry) empties its slot: the clause matches nothing here and its
-      * idf is moot. */
-    def sumIdf(entries: Array[TermPostings]): Double = {
-      val df: Int => Long = dfs match {
-        case Some(d) => d
-        case None => entries(_).indexDf
-      }
-      if (dfs.isEmpty && entries.contains(null)) 0.0
+    /** idf summed over every member, slot by slot, times boost. A member
+      * without a driver df is alone in its slot, so when this shard lacks
+      * it (null entry) the slot is empty: the clause matches nothing here
+      * and its idf is moot. */
+    def sumIdf(entries: Array[TermPostings]): Double =
+      if (keys.indices.exists(i => dfs(i).isEmpty && entries(i) == null)) 0.0
       else slots.iterator.map(_.iterator.map(i =>
-        Bm25.idf(nDocs, df(i))).sum).sum * boost
-    }
+        Bm25.idf(nDocs, dfs(i).getOrElse(entries(i).indexDf))).sum).sum * boost
   }
 
   /** One query of a scoring fan-out: term cursors, positional clauses and
@@ -264,33 +276,27 @@ object Searcher {
   }
 
   /** A positional clause over `slots` of member keys, or None when the
-    * driver-side dfs show some slot with no corpus-present member (the
-    * conjunction matches nothing). A union slot (several members) needs
-    * driver dfs: its idf sums members a shard may lack. `law` sees the
-    * slots as indexes into the unique keys. */
-  private def phraseSpec(slots: Seq[Seq[String]],
-      dfs: Option[Map[String, Long]], fs: FieldState, leg: Int,
-      boost: Double = 1.0)(
+    * driver-side dfs (`df`) show some slot with no corpus-present member
+    * (the conjunction matches nothing). A union slot (several members)
+    * needs a driver df for each: its idf sums members a shard may lack.
+    * `law` sees the slots as indexes into the unique keys. */
+  private def phraseSpec(slots: Seq[Seq[String]], df: String => Option[Long],
+      fs: FieldState, leg: Int, boost: Double = 1.0)(
       law: Array[Array[Int]] => Phrase.Law): Option[PhraseSpec] =
-    if (slots.isEmpty ||
-        dfs.exists(m => slots.exists(_.forall(t => m.getOrElse(t, 0L) <= 0L))))
-      None
+    if (slots.isEmpty || slots.exists(_.forall(df(_).contains(0L)))) None
     else {
-      require(dfs.nonEmpty || slots.forall(_.length == 1),
+      require(slots.forall(s => s.length == 1 || s.forall(df(_).nonEmpty)),
         "a union slot needs driver-side dfs")
       val keys = slots.flatten.distinct.toArray
       val idx = keys.zipWithIndex.toMap
       val indexed = slots.map(_.map(idx).toArray).toArray
-      Some(PhraseSpec(keys, indexed, law(indexed),
-        dfs.map(m => keys.map(m.getOrElse(_, 0L))), fs.stats.n_docs, boost,
-        fs.stats.avgdl, fs.tight, leg))
+      Some(PhraseSpec(keys, indexed, law(indexed), keys.map(df),
+        fs.stats.n_docs, boost, fs.stats.avgdl, fs.tight, leg))
     }
 
-  /** The global dfs of `keys` from the driver (the cached lookup) when the
-    * handle's shards cannot supply them; None when they can. */
-  private def driverDfs(h: Handle,
-      keys: => Array[String]): Option[Map[String, Long]] =
-    if (h.shardDfs) None else Some(resolveDfs(h, keys))
+  /** Driver dfs from a looked-up map: a key it lacks is corpus-absent. */
+  private def looked(dfs: Map[String, Long]): String => Option[Long] =
+    t => Some(dfs.getOrElse(t, 0L))
 
   /** The exact-phrase law of an analyzed (term, tokenizer position) list. */
   private def aligned(occs: Seq[(String, Int)]): Phrase.Law =
@@ -328,33 +334,29 @@ object Searcher {
       filter.map(_._1) ++ mustNot.map(_._1)).distinct.filterNot(h.fields.contains)
     require(unheld.isEmpty, s"field(s) ${unheld.mkString(", ")} not held " +
       s"by this handle (it holds ${h.fields.keys.toSeq.sorted.mkString(", ")})")
-    def keys(fv: Option[(String, Seq[String])]): Array[String] =
-      fv.toArray.flatMap { case (f, vs) => vs.map(h.key(f, _)) }
-    val filterKeys = keys(filter)
-    val mustNotKeys = keys(mustNot)
-    val legKeys = legs.flatMap(l => l.termWeights.keys.map(h.key(l.field, _)))
-    val phraseKeys = phraseLegs.flatMap(p => p.occs.map(o => h.key(p.field, o._1)))
-    val dfByKey = driverDfs(h,
-      (legKeys ++ phraseKeys ++ filterKeys ++ mustNotKeys).distinct.toArray)
+    def keys(fv: (String, Seq[String])): Array[String] =
+      fv._2.map(h.key(fv._1, _)).toArray
     // cursor order fixed as (leg, term): the kernel's FP sum order — and so
     // the exact emitted doubles — is deterministic across runs
     val specs: Array[CursorSpec] = legs.zipWithIndex.flatMap { case (l, li) =>
       l.termWeights.toSeq.sortBy(_._1).flatMap { case (t, w) =>
-        cursorSpec(h.fields(l.field), h.key(l.field, t), dfByKey, w, l.boost, li)
+        val key = h.key(l.field, t)
+        cursorSpec(h.fields(l.field), key, h.df(key), w, l.boost, li)
       }
     }.toArray
     // phrase clauses number their legs AFTER the should-legs; a clause with
     // any corpus-absent term matches nothing (conjunction)
     val phraseSpecs: Array[PhraseSpec] = phraseLegs.zipWithIndex.flatMap {
       case (pl, pi) =>
-        phraseSpec(pl.occs.toSeq.map(o => Seq(h.key(pl.field, o._1))), dfByKey,
+        phraseSpec(pl.occs.toSeq.map(o => Seq(h.key(pl.field, o._1))), h.df,
           h.fields(pl.field), legs.length + pi, pl.boost)(
           _ => aligned(pl.occs.toSeq))
     }.toArray
-    // single bool query ⇒ one qid (0)
+    // single bool query ⇒ one qid (0); a filter or exclusion key a shard
+    // lacks drops there
     fanOutTopK(h, k, Seq(QuerySpec(0, specs, phraseSpecs,
-      filter.map(_ => dfByKey.fold(filterKeys)(m => filterKeys.filter(m.contains))),
-      mustNotKeys, minShouldMatch, disMaxTieBreaker,
+      filter.map(keys), mustNot.fold(Array.empty[String])(keys),
+      minShouldMatch, disMaxTieBreaker,
       requiredLegs.foldLeft(0L)((m, l) => m | (1L << l)))), withQid = false)
   }
 
@@ -368,7 +370,9 @@ object Searcher {
 
   /** Open a handle over per-field sub-index directories (field → dir),
     * committed streamed segments included; each field keeps its own stats
-    * and bound mode. */
+    * and bound mode. With active segments, open also resolves the global df
+    * of every key a segment holds, in one lookup job, so no search on the
+    * handle needs one. */
   def open(spark: SparkSession, fieldDirs: Seq[(String, String)]): Handle = {
     require(fieldDirs.nonEmpty && fieldDirs.toMap.size == fieldDirs.length,
       s"a handle needs distinct fields, got ${fieldDirs.map(_._1)}")
@@ -400,12 +404,20 @@ object Searcher {
     // cost Lucene pays at segment write time instead).
     val bare = ios.forall { case (_, io) =>
       graft.index.IndexTables.activeBatches(io).isEmpty }
-    val (shards, ids) = (ios match {
+    val (shards, infos) = (ios match {
       case Seq((_, io)) if bare => openUnshuffled(spark, io)
       case _ => None
     }).getOrElse(openShuffled(spark, ios))
-    new Handle(spark, fields, new ResidentView(shards),
-      ids.indices.filter(ids(_).nonEmpty).toArray, shardDfs = bare)
+    val h = new Handle(spark, fields, new ResidentView(shards),
+      infos.indices.filter(infos(_).ids.nonEmpty).toArray)
+    // A key an active segment holds has, in some shard, an entry without a
+    // global df, and where its base blocks sit in another shard their df
+    // misses the segments' postings. Resolving exactly these keys leaves
+    // every other key's base df exact: no search on the handle runs a df
+    // job. A bare base has none of them.
+    val noDf = infos.flatMap(_.noDf).distinct
+    if (noDf.nonEmpty) cacheDfs(h, noDf)
+    h
   }
 
   /** The shuffle open: co-locate each shard (base + streamed segments, of
@@ -416,7 +428,7 @@ object Searcher {
     * core per wave is the latency-optimal width (on a cluster: one serving
     * slot per executor core, the ES fan-out model). */
   private def openShuffled(spark: SparkSession, ios: Seq[(String, TableIO)])
-      : (RDD[ShardIndex], Array[Array[Int]]) = {
+      : (RDD[ShardIndex], Array[PartInfo]) = {
     import spark.implicits._
     val sorted = ios.map { case (f, io) =>
       val blocks = graft.index.IndexTables.postings(spark, io)
@@ -438,14 +450,14 @@ object Searcher {
       .mapPartitions(buildShardIndexes, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // materialize: open pays the exchange once
-    (shards, shardIds(shards))
+    (shards, partInfos(shards))
   }
 
-  /** The no-shuffle open (its guard job materializes the shards), with each
-    * partition's shard ids. Returns None (after cleaning up) if the
+  /** The no-shuffle open (its guard job materializes the shards), with what
+    * it learned of each partition. Returns None (after cleaning up) if the
     * shard-whole-files property fails. */
   private def openUnshuffled(spark: SparkSession,
-      io: TableIO): Option[(RDD[ShardIndex], Array[Array[Int]])] = {
+      io: TableIO): Option[(RDD[ShardIndex], Array[PartInfo])] = {
     import spark.implicits._
     val width = spark.sparkContext.defaultParallelism
     val dir = new org.apache.hadoop.fs.Path(io.tablePath("postings"))
@@ -488,9 +500,9 @@ object Searcher {
     // guard: every shard must be whole within one partition (format
     // property; violation ⇒ a doc's postings would split across serving
     // indexes and scores would be partial). Shard-count-sized, tiny.
-    val perPart = shardIds(shards)
-    val ids = perPart.flatten
-    if (ids.length == ids.distinct.length) Some((shards, perPart))
+    val infos = partInfos(shards)
+    val ids = infos.flatMap(_.ids)
+    if (ids.length == ids.distinct.length) Some((shards, infos))
     else {
       // the fallback is correct but silently loses the no-shuffle open —
       // make it visible so a layout/conf regression can't hide behind it
@@ -730,8 +742,9 @@ object Searcher {
   }
 
   /** Search via a resident handle: one fan-out job over the cached shard
-    * indexes (plus, with active streamed segments, one df-lookup job on a
-    * df-cache miss); the top-k frame is a driver-ordered local relation.
+    * indexes, new terms and active streamed segments included (each key's
+    * df is the handle's cached one or its shard entry's, [[Handle.df]]);
+    * the top-k frame is a driver-ordered local relation.
     * `chain` analyzes the query string
     * with the target field's analyzer (reference semantics: ES analyzes
     * query text with the queried field's mapped chain,
@@ -749,10 +762,9 @@ object Searcher {
     val analyzed: Seq[(Int, Map[String, Int])] = rawQueries.map { case (qid, q) =>
       qid -> chain(q).groupBy(identity).view.mapValues(_.length).toMap
     }
-    val dfs = driverDfs(h, analyzed.flatMap(_._2.keys).distinct.toArray)
     analyzed.map { case (qid, tw) =>
       QuerySpec(qid, tw.toSeq.sortBy(_._1).flatMap { case (t, w) =>
-        cursorSpec(h.only, t, dfs, w)
+        cursorSpec(h.only, t, h.df(t), w)
       }.toArray)
     }
   }
@@ -876,7 +888,7 @@ object Searcher {
     fanOutTopK(h, k, analyzed.map { case (qid, tw) =>
       QuerySpec(qid, tw.toSeq.sortBy(_._1).flatMap { case (q, w) =>
         cands.getOrElse(q, Array.empty).sortBy(_._1).flatMap { case (t, df, dd) =>
-          cursorSpec(h.only, t, Some(Map(t -> df)), w, Fuzzy.boost(q, t, dd))
+          cursorSpec(h.only, t, Some(df), w, Fuzzy.boost(q, t, dd))
         }
       }.toArray)
     })
@@ -899,17 +911,25 @@ object Searcher {
 
   /** Query-sized df lookup for cache misses only: |keys| hash lookups per
     * shard, Σ over shards (skipped entirely once the handle has served the
-    * keys before). Returns only keys with df > 0. */
+    * keys before). Returns only keys with df > 0. Kept for the callers that
+    * need a df on the driver itself: [[termSuggest]] and [[termDfs]] (which
+    * terms exist, idf ranking), the naive twins [[contribs]], [[explainDoc]]
+    * and [[phraseContribs]], and [[phrasePrefixSearch]]'s fixed terms (a
+    * union slot's idf sums every member's df). */
   private def resolveDfs(h: Handle, keys: Array[String]): Map[String, Long] = {
     val missing: Array[String] = keys.filterNot(h.dfCache.containsKey)
-    if (missing.nonEmpty) {
-      val parts = runShards(h.shards, new DfTask(missing), h.parts)
-      missing.indices.foreach(i =>
-        h.dfCache.put(missing(i), Long.box(parts.iterator.map(_(i)).sum)))
-    }
+    if (missing.nonEmpty) cacheDfs(h, missing)
     keys.iterator
       .map(t => t -> h.dfCache.get(t).longValue())
       .filter(_._2 > 0L).toMap
+  }
+
+  /** Caches the global dfs of `keys` (0 = absent): one job, |keys| hash
+    * lookups per shard, Σ over shards. */
+  private def cacheDfs(h: Handle, keys: Array[String]): Unit = {
+    val parts = runShards(h.shards, new DfTask(keys), h.parts)
+    keys.indices.foreach(i =>
+      h.dfCache.put(keys(i), Long.box(parts.iterator.map(_(i)).sum)))
   }
 
   /** Per partition: each term's df summed over the partition's shards,
@@ -1017,7 +1037,7 @@ object Searcher {
                      boost: Double = 1.0): DataFrame = {
     import h.spark.implicits._
     val dfByTerm = resolveDfs(h, occs.map(_._1).distinct)
-    val q = clauseQuery(h, 0, occs.toSeq.map(o => Seq(o._1)), Some(dfByTerm),
+    val q = clauseQuery(h, 0, occs.toSeq.map(o => Seq(o._1)), looked(dfByTerm),
       boost)(_ => aligned(occs.toSeq))
     h.shards.flatMap(scoreOn(_, q, Int.MaxValue, null))
       .toDF("doc_id", "contrib")
@@ -1025,10 +1045,10 @@ object Searcher {
 
   /** One standalone positional query on a single-field handle. */
   private def clauseQuery(h: Handle, qid: Int, slots: Seq[Seq[String]],
-      dfs: Option[Map[String, Long]], boost: Double = 1.0)(
+      df: String => Option[Long], boost: Double = 1.0)(
       law: Array[Array[Int]] => Phrase.Law): QuerySpec =
     QuerySpec(qid, Array.empty,
-      phraseSpec(slots, dfs, h.only, 0, boost)(law).toArray)
+      phraseSpec(slots, df, h.only, 0, boost)(law).toArray)
 
   /** ES match_phrase against a positioned index: analyze each phrase with
     * the field's chain keeping tokenizer positions, then score it as one
@@ -1041,9 +1061,8 @@ object Searcher {
       chain: String => Array[(String, Int)]): DataFrame = {
     requireDistinctQids(rawQueries.map(_._1))
     val analyzed = rawQueries.map { case (qid, q) => qid -> chain(q).toSeq }
-    val dfs = driverDfs(h, analyzed.flatMap(_._2.map(_._1)).distinct.toArray)
     fanOutTopK(h, k, analyzed.map { case (qid, occs) =>
-      clauseQuery(h, qid, occs.map(o => Seq(o._1)), dfs)(_ => aligned(occs))
+      clauseQuery(h, qid, occs.map(o => Seq(o._1)), h.df)(_ => aligned(occs))
     })
   }
 
@@ -1061,9 +1080,8 @@ object Searcher {
     val analyzed = rawQueries.map { case (qid, q, slop) =>
       (qid, chain(q).toSeq, slop)
     }
-    val dfs = driverDfs(h, analyzed.flatMap(_._2).distinct.toArray)
     fanOutTopK(h, k, analyzed.map { case (qid, ts, slop) =>
-      clauseQuery(h, qid, ts.map(Seq(_)), dfs) { slots =>
+      clauseQuery(h, qid, ts.map(Seq(_)), h.df) { slots =>
         if (inOrder) Phrase.OrderedSpan(slop)
         else Phrase.UnorderedSpan(slop, slots.map(_(0)))
       }
@@ -1099,7 +1117,7 @@ object Searcher {
           val ex = expand(occs.last._1)
           (fixed.map(Seq(_)) :+ ex.map(_._1), dfByTerm ++ ex)
         }
-      clauseQuery(h, qid, slots, Some(dfs))(_ => aligned(occs))
+      clauseQuery(h, qid, slots, looked(dfs))(_ => aligned(occs))
     })
   }
 

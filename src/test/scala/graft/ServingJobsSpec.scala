@@ -21,20 +21,20 @@ import graft.harness.{FieldedQueries, QuerySet, TextQueries}
 import graft.index.{FieldedIndex, IndexTables, PostingsBuilder}
 import graft.io.TableIO
 import graft.query.Searcher
-import graft.streaming.{Compactor, IncrementalIndexer}
+import graft.streaming.{Compactor, FieldedStreaming, IncrementalIndexer}
 import graft.web.{WebIndex, WebtextGen}
 
-/** The per-query job budget of the serving path: on a handle without active
-  * streamed segments a warm search is one fan-out job, new terms included
-  * (each shard reads a term's global df from its own dictionary), with one
-  * task per shard-holding partition; with active segments a df-cache miss
-  * adds one df-lookup job. Collecting or counting the driver-ordered top-k
-  * frame launches nothing more and starts no SQL execution: it answers
-  * from the rows the driver merged. Jobs and SQL executions are counted by
-  * a listener filtered on this thread's job group. Warm serving jobs hand
-  * Spark named tasks, so no call cleans a lambda closure, and run on the
-  * lineage-free view of the resident shards, so their task binary stays
-  * small. */
+/** The per-query job budget of the serving path: a warm search is one
+  * fan-out job, new terms included, with one task per shard-holding
+  * partition. Each shard reads a term's global df from its own dictionary,
+  * and on a handle with active streamed segments open has already resolved
+  * the df of every key a segment holds. Collecting or counting the
+  * driver-ordered top-k frame launches nothing more and starts no SQL
+  * execution: it answers from the rows the driver merged. Jobs and SQL
+  * executions are counted by a listener filtered on this thread's job
+  * group. Warm serving jobs hand Spark named tasks, so no call cleans a
+  * lambda closure, and run on the lineage-free view of the resident
+  * shards, so their task binary stays small. */
 class ServingJobsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -214,7 +214,7 @@ class ServingJobsSpec extends AnyFunSuite {
     } finally mh.close()
   }
 
-  test("an active streamed segment keeps the df-lookup job until compaction") {
+  test("a new term on a segment handle is one job, before and after compaction") {
     val cfg = PostingsBuilder.Config(shardSize = 256)
     val root = segmented("serving-jobs-stream", cfg)
     def budget(h: Searcher.Handle): (Int, Int) = {
@@ -225,13 +225,60 @@ class ServingJobsSpec extends AnyFunSuite {
         QuerySet.K)))
       (hitJobs, missJobs)
     }
+    // open resolves the segment keys' dfs, so no search looks one up
     val seg = Searcher.open(spark, root)
-    try assert(budget(seg) === (1, 2))
-    finally seg.close()
+    try {
+      assert(budget(seg) === (1, 1))
+      // a segment handle's first search on any key pays no df job
+      val (_, jobs) = jobsOf(rows(Searcher.search(seg, Seq(1 -> "w11 w13 zqxjvw"),
+        QuerySet.K)))
+      assert(jobs === 1)
+    } finally seg.close()
     assert(Compactor.compact(spark, root, cfg))
     val compacted = Searcher.open(spark, root)
     try assert(budget(compacted) === (1, 1))
     finally compacted.close()
+  }
+
+  test("bool, phrase and span_near searches on a segment handle are one job") {
+    // a positioned one-field index (a fielded title) with one active
+    // streamed batch
+    val root = s"${sys.props("user.dir")}/target/test-idx/serving-jobs-fielded-stream"
+    new TableIO(root).deleteAll()
+    val title = FieldedIndex.FieldSpec("title", Analyzer.TextStop)
+    val cfg = PostingsBuilder.Config(shardSize = 64)
+    def docs(lo: Int, hi: Int): DataFrame = {
+      import spark.implicits._
+      (lo until hi).map(i => (s"k$i", s"record $i title second title $i"))
+        .toDF("k", "title")
+    }
+    FieldedIndex.build(spark, docs(0, 300), root, Seq(title), "k", cfg)
+    FieldedStreaming.ingestBatch(spark, docs(300, 400), root, Seq(title), "k",
+      0L, cfg)
+    val dir = FieldedIndex.fieldDir(root, "title")
+    assert(IndexTables.activeBatches(new TableIO(dir)) === Seq(0L))
+    val pos = Analyzer.analyzeChainPos(Analyzer.TextStop, _: String)
+    val mh = Searcher.open(spark, Seq("title" -> dir))
+    val h = Searcher.open(spark, dir)
+    try {
+      // every call's terms are new to its handle: ids of the base (7), of
+      // the segment (350) and of both (title), and one absent (zqxjvw)
+      val calls: Seq[(String, () => DataFrame)] = Seq(
+        "multiSearch" -> (() => Searcher.multiSearch(mh, Seq(
+          Searcher.MultiLeg("title", Map("7" -> 1, "350" -> 1, "zqxjvw" -> 1))),
+          QuerySet.K, phraseLegs = Seq(Searcher.PhraseLeg("title",
+            pos("title 350"))))),
+        "phraseSearch" -> (() => Searcher.phraseSearch(h,
+          Seq(1 -> "second title 8", 2 -> "title 351 zqxjvw"), QuerySet.K, pos)),
+        "spanNearSearch" -> (() => Searcher.spanNearSearch(h,
+          Seq((1, "record 9", 1), (2, "352 second", 2)), QuerySet.K,
+          Analyzer.analyzeStop)))
+      calls.foreach { case (name, call) =>
+        val (got, jobs) = jobsOf(rows(call()))
+        assert(got.nonEmpty, name)
+        assert(jobs === 1, name)
+      }
+    } finally { mh.close(); h.close() }
   }
 
   test("warm serving calls clean no lambda closure") {
