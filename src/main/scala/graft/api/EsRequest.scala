@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.index.FieldedIndex
-import graft.index.FieldedIndex.FieldSpec
+import graft.index.FieldedIndex.{FieldSpec, Query}
 
 /** The ES `_search` REQUEST BODY, parsed and executed — what the
   * reference's clients actually POST (SURVEY §3.3: Biblio-Glutton sends a
@@ -18,14 +18,19 @@ import graft.index.FieldedIndex.FieldSpec
   * Parsing is STRICT like ES's: an unknown query type, an unknown field,
   * an unrecognized parameter key, or a malformed clause fails loudly with
   * the offending path — never silently ignored (ES `parsing_exception`
-  * behavior). Supported query nodes (each dispatches to the gated engine
-  * implementation — this layer adds parsing, never semantics):
-  * match (operator / fuzziness / boost), match_phrase (slop refused with a
+  * behavior). This layer adds parsing, never semantics.
+  *
+  * The bool family parses into [[FieldedIndex.Query]], the tree that
+  * [[FieldedIndex.query]] alone lowers to the bool kernel (and refuses,
+  * before any job, where the kernel cannot serve it): match (bare text, or
+  * `query` with `operator` / `boost`), match_phrase (slop refused with a
   * pointer at span_near — this engine's proximity contract lives there),
-  * match_phrase_prefix, match_bool_prefix, term, terms, range, prefix,
-  * wildcard, regexp, exists, fuzzy, bool (must / should / filter /
-  * must_not / minimum_should_match), dis_max, span_near (span_term
-  * clauses), more_like_this, boosting, constant_score.
+  * term (a match of one value), bool (match / match_phrase must and should
+  * leaves, one term / terms / range filter and must_not,
+  * minimum_should_match) and dis_max. The other nodes keep their typed
+  * engine calls: match with fuzziness, fuzzy, match_phrase_prefix,
+  * match_bool_prefix, terms, range, prefix, wildcard, regexp, exists,
+  * span_near, more_like_this, boosting, constant_score, function_score.
   *
   * Scored nodes return the engine's (rnk, doc_id, score_x6); pure filter
   * nodes at the top level return the ES constant-score shape (every hit
@@ -58,23 +63,27 @@ object EsRequest {
     v.asText()
   }
 
+  // scalar rules: an integer is an integral JSON number in range (1.7 is
+  // not 1, "2" is not 2), a number is any JSON number
+  private def int(v: JsonNode, what: String): Int =
+    if (v.isIntegralNumber && v.canConvertToInt) v.asInt()
+    else fail(s"$what must be an integer")
+
+  private def long(v: JsonNode, what: String): Long =
+    if (v.isIntegralNumber && v.canConvertToLong) v.asLong()
+    else fail(s"$what must be an integer")
+
+  private def num(v: JsonNode, what: String): Double =
+    if (v.isNumber) v.asDouble() else fail(s"$what must be a number")
+
   private def optInt(n: JsonNode, key: String): Option[Int] =
-    Option(n.get(key)).map { v =>
-      if (!v.canConvertToInt) fail(s"'$key' must be an integer")
-      v.asInt()
-    }
+    Option(n.get(key)).map(int(_, s"'$key'"))
 
   private def optNum(n: JsonNode, key: String): Option[Double] =
-    Option(n.get(key)).map { v =>
-      if (!v.isNumber) fail(s"'$key' must be a number")
-      v.asDouble()
-    }
+    Option(n.get(key)).map(num(_, s"'$key'"))
 
   private def optLong(n: JsonNode, key: String): Option[Long] =
-    Option(n.get(key)).map { v =>
-      if (!v.canConvertToLong) fail(s"'$key' must be an integer")
-      v.asLong()
-    }
+    Option(n.get(key)).map(long(_, s"'$key'"))
 
   /** The single (field → body) entry of a one-field query node. */
   private def oneField(n: JsonNode, where: String): (String, JsonNode) = {
@@ -89,6 +98,18 @@ object EsRequest {
                         textKey: String = "query"): String =
     if (v.isTextual || v.isNumber) v.asText()
     else text(obj(v, where), textKey, where)
+
+  /** ES `fuzziness`, for match and fuzzy alike: absent or "AUTO" (−1), or
+    * an edit count 0, 1 or 2. */
+  private def fuzziness(n: JsonNode, where: String): Int =
+    Option(n.get("fuzziness")) match {
+      case None => -1
+      case Some(x) if x.isTextual && x.asText() == "AUTO" => -1
+      case Some(x) if x.isIntegralNumber && x.canConvertToInt &&
+          x.asInt() >= 0 && x.asInt() <= 2 => x.asInt()
+      case Some(x) => fail(s"$where.fuzziness must be AUTO or an edit count " +
+        s"0, 1 or 2, got [$x]")
+    }
 
   /** ES array-or-single clause lists: `"must": {...}` ≡ `"must": [{...}]`. */
   private def clauseList(n: JsonNode): Seq[JsonNode] =
@@ -141,12 +162,7 @@ object EsRequest {
     if (deco.nonEmpty && from != 0)
       fail(s"'from' does not compose with ${deco.head} " +
         "(the cursor/window owns the paging law)")
-    def matchQuery(): (FieldSpec, String) =
-      scoredClause(mapping, qn, "query") match {
-        case ("match", fs, t) => (fs, t)
-        case (other, _, _) =>
-          fail(s"${deco.head} decorates a match query, got [$other]")
-      }
+    def matchQuery(): (FieldSpec, String) = plainMatch(mapping, qn, "query")
     deco.headOption match {
       case Some("sort") =>
         // sort serves a filter cohort in doc-value order (constant-score
@@ -158,14 +174,13 @@ object EsRequest {
         val order = queryText(v, s"sort.$f", "order")
         if (order != "asc" && order != "desc")
           fail(s"sort.$f.order must be asc/desc, got [$order]")
-        val (cohortFs, vals) =
-          filterClause(spark, indexDir, mapping, qn, "query")
-        return FieldedIndex.sortByField(spark, indexDir, cohortFs, vals,
-          spec(mapping, f), descending = order == "desc", size)
+        val cohort = filterClause(spark, indexDir, mapping, qn, "query")
+        return FieldedIndex.sortByField(spark, indexDir, cohort.spec,
+          cohort.values, spec(mapping, f), descending = order == "desc", size)
       case Some("search_after") =>
         val sa = root.get("search_after")
-        if (!sa.isArray || sa.size() != 2 ||
-            !sa.get(0).canConvertToLong || !sa.get(1).canConvertToLong)
+        if (!sa.isArray || sa.size() != 2 || !sa.asScala.forall(v =>
+            v.isIntegralNumber && v.canConvertToLong))
           fail("search_after expects two integers [score_x6, doc_id] " +
             "(the engine's deterministic sort key)")
         val (fs, t) = matchQuery()
@@ -195,11 +210,12 @@ object EsRequest {
         val rq = obj(rn.get("query"), "rescore.query")
         known(rq, Set("rescore_query", "query_weight",
           "rescore_query_weight"), "rescore.query")
-        val (rk, rfs, rt) = scoredClause(mapping, rq.get("rescore_query"),
-          "rescore.query.rescore_query")
-        if (rk != "match_phrase")
-          fail("rescore_query must be a match_phrase (the windowed " +
+        val (rfs, rt) = leaf(mapping, rq.get("rescore_query"),
+            "rescore.query.rescore_query") match {
+          case Query.Phrase(rfs, rt) => (rfs, rt)
+          case _ => fail("rescore_query must be a match_phrase (the windowed " +
             "phrase re-ranker)")
+        }
         val (fs, t) = matchQuery()
         if (rfs.field != fs.field)
           fail("rescore_query must target the matched field")
@@ -238,36 +254,62 @@ object EsRequest {
         lit(math.round(boost * 1e6)).as("score_x6"))
   }
 
-  /** A scored (match / match_phrase) clause for bool/dis_max contexts. */
-  private def scoredClause(mapping: Seq[FieldSpec], n: JsonNode,
-      where: String): (String, FieldSpec, String) = {
-    obj(n, where)
-    val (kind, body) = oneField(n, where)
-    kind match {
-      case "match" | "match_phrase" =>
-        val (f, v) = oneField(obj(body, s"$where.$kind"), s"$where.$kind")
-        if (v.isObject) known(v, Set("query"), s"$where.$kind.$f")
-        (kind, spec(mapping, f), queryText(v, s"$where.$kind.$f"))
-      case other =>
-        fail(s"$where supports match / match_phrase clauses, got [$other]")
+  /** A match or match_phrase leaf of the query tree (`n` is
+    * `{kind: {field: …}}`): a match in any form (bare text, or `query` with
+    * `operator` / `boost`), or an exact phrase (slop is span_near's). */
+  private def leaf(mapping: Seq[FieldSpec], n: JsonNode,
+      where: String): Query = {
+    val (kind, body) = oneField(obj(n, where), where)
+    if (kind != "match" && kind != "match_phrase")
+      fail(s"$where supports match / match_phrase clauses, got [$kind]")
+    val (f, v) = oneField(obj(body, s"$where.$kind"), s"$where.$kind")
+    val at = s"$where.$kind.$f"
+    if (kind == "match_phrase") {
+      if (v.isObject) {
+        known(v, Set("query", "slop"), at)
+        if (optInt(v, "slop").exists(_ > 0))
+          fail(s"$at: slop is served by span_near in this engine " +
+            "(quantized sloppyFreq contract) — post a span_near query")
+      }
+      Query.Phrase(spec(mapping, f), queryText(v, at))
+    } else if (!v.isObject) Query.Match(spec(mapping, f), queryText(v, at))
+    else {
+      known(v, Set("query", "operator", "boost"), at)
+      val and = Option(v.get("operator")).map(_.asText()) match {
+        case None | Some("or") => false
+        case Some("and") => true
+        case Some(other) => fail(s"$at.operator must be or/and, got [$other]")
+      }
+      Query.Match(spec(mapping, f), text(v, "query", at),
+        optNum(v, "boost").getOrElse(1.0), and)
     }
   }
 
-  /** A filter-context clause: analyzed term values of one field. */
+  /** The field and text of a match with no boost and no operator: the
+    * shapes outside the tree (the decorations, boosting, function_score)
+    * score a plain match. */
+  private def plainMatch(mapping: Seq[FieldSpec], n: JsonNode,
+      where: String): (FieldSpec, String) = leaf(mapping, n, where) match {
+    case Query.Match(fs, t, 1.0, false) => (fs, t)
+    case _ => fail(s"$where must be a match with no boost or operator here")
+  }
+
+  /** A filter-context clause: the term values of one field. */
   private def filterClause(spark: SparkSession, indexDir: String,
-      mapping: Seq[FieldSpec], n: JsonNode,
-      where: String): (FieldSpec, Seq[String]) = {
-    obj(n, where)
-    val (kind, body) = oneField(n, where)
+      mapping: Seq[FieldSpec], n: JsonNode, where: String): Query.Terms = {
+    val (kind, body) = oneField(obj(n, where), where)
     kind match {
       case "term" =>
         val (f, v) = oneField(obj(body, s"$where.term"), s"$where.term")
         if (v.isObject) known(v, Set("value"), s"$where.term.$f")
-        (spec(mapping, f), Seq(queryText(v, s"$where.term.$f", "value")))
+        Query.Terms(spec(mapping, f),
+          Seq(queryText(v, s"$where.term.$f", "value")))
       case "terms" =>
         val (f, v) = oneField(obj(body, s"$where.terms"), s"$where.terms")
         if (!v.isArray) fail(s"$where.terms.$f must be an array")
-        (spec(mapping, f), v.elements().asScala.map(_.asText()).toSeq)
+        Query.Terms(spec(mapping, f), v.elements().asScala.map(e =>
+          if (e.isTextual || e.isNumber) e.asText()
+          else fail(s"$where.terms.$f values must be strings or numbers")).toSeq)
       case "range" =>
         val (f, v) = oneField(obj(body, s"$where.range"), s"$where.range")
         known(obj(v, s"$where.range.$f"), Set("gte", "lte", "gt", "lt"),
@@ -275,7 +317,7 @@ object EsRequest {
         val fs = spec(mapping, f)
         // rewrite to the capped dictionary expansion (the engine's range
         // law); terms re-analyze idempotently under the keyword chains
-        (fs, FieldedIndex.rangeTerms(spark, indexDir, fs,
+        Query.Terms(fs, FieldedIndex.rangeTerms(spark, indexDir, fs,
           optLong(v, "gte"), optLong(v, "lte"),
           optLong(v, "gt"), optLong(v, "lt")))
       case other =>
@@ -283,58 +325,67 @@ object EsRequest {
     }
   }
 
+  /** The query tree of a top-level match / match_phrase / term / bool /
+    * dis_max node (`n` is `{kind: body}`). */
+  private def tree(spark: SparkSession, indexDir: String,
+      mapping: Seq[FieldSpec], n: JsonNode): Query = {
+    val (kind, body) = oneField(n, "query")
+    def clauses(key: String): Seq[Query] =
+      clauseList(body.get(key)).map(leaf(mapping, _, s"$kind.$key"))
+    kind match {
+      case "term" =>
+        val (f, v) = oneField(obj(body, "term"), "term")
+        if (v.isObject) known(v, Set("value"), s"term.$f")
+        Query.Match(spec(mapping, f), queryText(v, s"term.$f", "value"))
+      case "bool" =>
+        known(obj(body, "bool"), Set("must", "should", "filter", "must_not",
+          "minimum_should_match"), "bool")
+        def terms(key: String): Option[Query.Terms] =
+          clauseList(body.get(key)) match {
+            case Seq() => None
+            case Seq(c) =>
+              Some(filterClause(spark, indexDir, mapping, c, s"bool.$key"))
+            case _ => fail(s"bool.$key: one $key clause per bool " +
+              "(compose further values as terms of the same field)")
+          }
+        Query.Bool(clauses("must"), clauses("should"), terms("filter"),
+          terms("must_not"),
+          optInt(body, "minimum_should_match").getOrElse(-1))
+      case "dis_max" =>
+        known(obj(body, "dis_max"), Set("queries", "tie_breaker"), "dis_max")
+        Query.DisMax(clauses("queries"),
+          optNum(body, "tie_breaker").getOrElse(0.0))
+      case _ => leaf(mapping, n, "query")
+    }
+  }
+
+  /** A match with fuzziness, or a fuzzy node, through the typed fuzzy
+    * call; `v` holds the `fuzziness` and `max_expansions` keys. */
+  private def fuzzy(spark: SparkSession, indexDir: String, fs: FieldSpec,
+      q: String, v: JsonNode, where: String, k: Int): DataFrame =
+    dropQid(FieldedIndex.fuzzyMatch(spark, indexDir, fs, Seq(1 -> q), k,
+      fuzziness = fuzziness(v, where),
+      maxExpansions = optInt(v, "max_expansions").getOrElse(50)))
+
   private def exec(spark: SparkSession, indexDir: String,
       mapping: Seq[FieldSpec], qn: JsonNode, k: Int): DataFrame = {
     obj(qn, "query")
     val (kind, body) = oneField(qn, "query")
     kind match {
-      case "match" =>
-        val (f, v) = oneField(obj(body, "match"), "match")
-        val fs = spec(mapping, f)
-        if (v.isTextual || v.isNumber)
-          return dropQid(FieldedIndex.searchField(spark, indexDir, fs,
-            Seq(1 -> v.asText()), k))
-        known(obj(v, s"match.$f"), Set("query", "operator", "boost",
-          "fuzziness", "max_expansions"), s"match.$f")
-        val q = text(v, "query", s"match.$f")
-        val op = Option(v.get("operator")).map(_.asText()).getOrElse("or")
-        val boost = optNum(v, "boost").getOrElse(1.0)
-        val fuzz = Option(v.get("fuzziness")).map(x =>
-          if (x.isTextual && x.asText() == "AUTO") -1
-          else if (x.canConvertToInt) x.asInt()
-          else fail(s"match.$f.fuzziness must be AUTO or an integer"))
-        if (fuzz.nonEmpty && (op != "or" || boost != 1.0))
+      case "match" if oneField(obj(body, "match"), "match")._2
+          .has("fuzziness") =>
+        val (f, v) = oneField(body, "match")
+        known(v, Set("query", "operator", "boost", "fuzziness",
+          "max_expansions"), s"match.$f")
+        if (Option(v.get("operator")).exists(_.asText() != "or") ||
+            optNum(v, "boost").exists(_ != 1.0))
           fail(s"match.$f: fuzziness composes with neither operator nor boost")
-        op match {
-          case "and" =>
-            if (boost != 1.0) fail(s"match.$f: operator=and with boost " +
-              "is not supported — boost legs inside a bool instead")
-            FieldedIndex.matchAnd(spark, indexDir, fs, q, k)
-          case "or" =>
-            fuzz match {
-              case Some(e) => dropQid(FieldedIndex.fuzzyMatch(spark,
-                indexDir, fs, Seq(1 -> q), k, fuzziness = e,
-                maxExpansions = optInt(v, "max_expansions").getOrElse(50)))
-              case None if boost == 1.0 =>
-                dropQid(FieldedIndex.searchField(spark, indexDir, fs,
-                  Seq(1 -> q), k))
-              case None =>
-                FieldedIndex.multiMatchBoost(spark, indexDir,
-                  Seq((fs, q, boost)), k)
-            }
-          case other => fail(s"match.$f.operator must be or/and, got [$other]")
-        }
+        fuzzy(spark, indexDir, spec(mapping, f), text(v, "query", s"match.$f"),
+          v, s"match.$f", k)
 
-      case "match_phrase" =>
-        val (f, v) = oneField(obj(body, "match_phrase"), "match_phrase")
-        if (v.isObject) {
-          known(v, Set("query", "slop"), s"match_phrase.$f")
-          if (optInt(v, "slop").exists(_ > 0))
-            fail(s"match_phrase.$f: slop is served by span_near in this " +
-              "engine (quantized sloppyFreq contract) — post a span_near query")
-        }
-        dropQid(FieldedIndex.phraseMatch(spark, indexDir, spec(mapping, f),
-          Seq(1 -> queryText(v, s"match_phrase.$f")), k))
+      case "match" | "match_phrase" | "term" | "bool" | "dis_max" =>
+        FieldedIndex.query(spark, indexDir,
+          tree(spark, indexDir, mapping, qn), k)
 
       case "match_phrase_prefix" =>
         val (f, v) = oneField(obj(body, "match_phrase_prefix"),
@@ -348,19 +399,9 @@ object EsRequest {
         FieldedIndex.matchBoolPrefix(spark, indexDir, spec(mapping, f),
           queryText(v, s"match_bool_prefix.$f"), k)
 
-      case "term" =>
-        val (f, v) = oneField(obj(body, "term"), "term")
-        if (v.isObject) known(v, Set("value"), s"term.$f")
-        dropQid(FieldedIndex.searchField(spark, indexDir, spec(mapping, f),
-          Seq(1 -> queryText(v, s"term.$f", "value")), k))
-
-      case "terms" =>
-        val (fs, vals) = filterClause(spark, indexDir, mapping, qn, "terms")
-        constDocs(FieldedIndex.termQuery(spark, indexDir, fs, vals), k)
-
-      case "range" =>
-        val (fs, terms) = filterClause(spark, indexDir, mapping, qn, "range")
-        constDocs(FieldedIndex.termQuery(spark, indexDir, fs, terms), k)
+      case "terms" | "range" =>
+        val t = filterClause(spark, indexDir, mapping, qn, "query")
+        constDocs(FieldedIndex.termQuery(spark, indexDir, t.spec, t.values), k)
 
       case "prefix" =>
         val (f, v) = oneField(obj(body, "prefix"), "prefix")
@@ -389,50 +430,8 @@ object EsRequest {
         val (f, v) = oneField(obj(body, "fuzzy"), "fuzzy")
         known(obj(v, s"fuzzy.$f"), Set("value", "fuzziness", "max_expansions"),
           s"fuzzy.$f")
-        val e = Option(v.get("fuzziness")).map(x =>
-          if (x.isTextual && x.asText() == "AUTO") -1 else x.asInt())
-          .getOrElse(-1)
-        dropQid(FieldedIndex.fuzzyMatch(spark, indexDir, spec(mapping, f),
-          Seq(1 -> text(v, "value", s"fuzzy.$f")), k, fuzziness = e,
-          maxExpansions = optInt(v, "max_expansions").getOrElse(50)))
-
-      case "bool" =>
-        known(obj(body, "bool"), Set("must", "should", "filter", "must_not",
-          "minimum_should_match"), "bool")
-        val must = clauseList(body.get("must"))
-          .map(scoredClause(mapping, _, "bool.must"))
-        val should = clauseList(body.get("should"))
-          .map(scoredClause(mapping, _, "bool.should"))
-        val filters = clauseList(body.get("filter"))
-          .map(filterClause(spark, indexDir, mapping, _, "bool.filter"))
-        val nots = clauseList(body.get("must_not"))
-          .map(filterClause(spark, indexDir, mapping, _, "bool.must_not"))
-        if (filters.size > 1) fail("bool.filter: one filter clause per bool " +
-          "(compose further filters as terms of the same field)")
-        if (nots.size > 1) fail("bool.must_not: one must_not clause per bool")
-        def split(cs: Seq[(String, FieldSpec, String)]) = (
-          cs.collect { case ("match", fs, t) => (fs, t) },
-          cs.collect { case ("match_phrase", fs, t) => (fs, t) })
-        val (mustM, mustP) = split(must)
-        val (shouldM, shouldP) = split(should)
-        FieldedIndex.esBool(spark, indexDir,
-          must = mustM, should = shouldM,
-          mustPhrases = mustP, shouldPhrases = shouldP,
-          filter = filters.headOption, mustNot = nots.headOption,
-          k = k,
-          minShouldMatch = optInt(body, "minimum_should_match").getOrElse(-1))
-
-      case "dis_max" =>
-        known(obj(body, "dis_max"), Set("queries", "tie_breaker"), "dis_max")
-        val legs = clauseList(body.get("queries"))
-          .map(scoredClause(mapping, _, "dis_max.queries")).map {
-            case ("match", fs, t) => (fs, t)
-            case (other, _, _) =>
-              fail(s"dis_max.queries supports match legs, got [$other]")
-          }
-        if (legs.isEmpty) fail("dis_max needs ≥ 1 query")
-        FieldedIndex.disMax(spark, indexDir, legs, k,
-          optNum(body, "tie_breaker").getOrElse(0.0))
+        fuzzy(spark, indexDir, spec(mapping, f), text(v, "value", s"fuzzy.$f"),
+          v, s"fuzzy.$f", k)
 
       case "span_near" =>
         known(obj(body, "span_near"), Set("clauses", "slop", "in_order"),
@@ -473,10 +472,11 @@ object EsRequest {
           fail("more_like_this: 'like' must be one {\"_id\": …} document")
         known(likes.head, Set("_id"), "more_like_this.like")
         val msmPct = Option(body.get("minimum_should_match")).map { m =>
-          val s = m.asText()
-          if (!s.endsWith("%")) fail(
-            "more_like_this.minimum_should_match must be a percent string")
-          s.dropRight(1).toInt
+          val s = if (m.isTextual) m.asText() else ""
+          s.stripSuffix("%").toIntOption
+            .filter(p => s.endsWith("%") && p >= 0 && p <= 100)
+            .getOrElse(fail("more_like_this.minimum_should_match must be a " +
+              s"percent string from 0% to 100%, got [$m]"))
         }.getOrElse(30)
         FieldedIndex.moreLikeThis(spark, indexDir,
           spec(mapping, fields.head),
@@ -489,12 +489,10 @@ object EsRequest {
       case "boosting" =>
         known(obj(body, "boosting"), Set("positive", "negative",
           "negative_boost"), "boosting")
-        val (pk, pos, pt) = scoredClause(mapping, body.get("positive"),
+        val (pos, pt) = plainMatch(mapping, body.get("positive"),
           "boosting.positive")
-        val (nk, neg, nt) = scoredClause(mapping, body.get("negative"),
+        val (neg, nt) = plainMatch(mapping, body.get("negative"),
           "boosting.negative")
-        if (pk != "match" || nk != "match")
-          fail("boosting supports match positive/negative legs")
         val nb = optNum(obj(body, "boosting"), "negative_boost")
           .getOrElse(fail("boosting needs negative_boost"))
         FieldedIndex.boostingQuery(spark, indexDir, pos, pt, neg, nt, nb, k)
@@ -504,9 +502,9 @@ object EsRequest {
           "constant_score")
         val fn = body.get("filter")
         if (fn == null) fail("constant_score needs a filter")
-        val (fs, vals) = filterClause(spark, indexDir, mapping, fn,
+        val t = filterClause(spark, indexDir, mapping, fn,
           "constant_score.filter")
-        constDocs(FieldedIndex.termQuery(spark, indexDir, fs, vals), k,
+        constDocs(FieldedIndex.termQuery(spark, indexDir, t.spec, t.values), k,
           optNum(body, "boost").getOrElse(1.0))
 
       case "function_score" =>
@@ -514,9 +512,7 @@ object EsRequest {
           "score_mode", "boost_mode"), "function_score")
         val inner = body.get("query")
         if (inner == null) fail("function_score needs an inner query")
-        val (ik, fs, itext) = scoredClause(mapping, inner,
-          "function_score.query")
-        if (ik != "match") fail("function_score.query must be a match")
+        val (fs, itext) = plainMatch(mapping, inner, "function_score.query")
         val fns = clauseList(body.get("functions")).map(parseFunction(mapping, _))
         if (fns.isEmpty) fail("function_score needs ≥ 1 function")
         FieldedIndex.functionScore(spark, indexDir, fs, itext, fns, k,
@@ -536,8 +532,7 @@ object EsRequest {
     val (kind, body) = oneField(n, "function_score.functions")
     kind match {
       case "weight" =>
-        if (!body.isNumber) fail("weight must be a number")
-        FieldedIndex.ScoreFunction.Weight(body.asDouble())
+        FieldedIndex.ScoreFunction.Weight(num(body, "weight"))
       case "field_value_factor" =>
         known(obj(body, "field_value_factor"), Set("field", "factor",
           "modifier", "missing"), "field_value_factor")
@@ -619,7 +614,8 @@ object EsRequest {
         known(obj(body, "percentiles"), Set("field", "percents"),
           "percentiles agg")
         val fs = spec(mapping, text(body, "field", "percentiles agg"))
-        val ps = clauseList(body.get("percents")).map(_.asDouble() / 100.0)
+        val ps = clauseList(body.get("percents"))
+          .map(num(_, "percentiles.percents[]") / 100.0)
         if (ps.isEmpty) FieldedIndex.percentilesAgg(spark, indexDir, fs)
         else FieldedIndex.percentilesAgg(spark, indexDir, fs, ps)
       case "percentile_ranks" =>
@@ -627,17 +623,16 @@ object EsRequest {
           "percentile_ranks agg")
         FieldedIndex.percentileRanksAgg(spark, indexDir,
           spec(mapping, text(body, "field", "percentile_ranks agg")),
-          clauseList(body.get("values")).map(_.asLong()))
+          clauseList(body.get("values")).map(long(_, "percentile_ranks.values[]")))
       case "missing" =>
         known(obj(body, "missing"), Set("field"), "missing agg")
         FieldedIndex.missingAgg(spark, indexDir,
           spec(mapping, text(body, "field", "missing agg")))
       case "filter" =>
-        val (fs, vals) = filterClause(spark, indexDir, mapping, body,
-          "filter agg")
+        val t = filterClause(spark, indexDir, mapping, body, "filter agg")
         subMetric() match {
           case Some(("stats", sub)) =>
-            FieldedIndex.filterStatsAgg(spark, indexDir, fs, vals, sub)
+            FieldedIndex.filterStatsAgg(spark, indexDir, t.spec, t.values, sub)
           case other => fail("filter agg needs a stats sub-aggregation, " +
             s"got [${other.map(_._1).getOrElse("none")}]")
         }

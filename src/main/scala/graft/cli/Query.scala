@@ -116,7 +116,8 @@ object Query {
       case "match" =>
         run(spark, a).map { case (r, k2, s) => s"$r $k2 $s" }
       case "match_and" =>
-        keyed(FieldedIndex.matchAnd(spark, a.indexDir, spec, a.query, a.k),
+        keyed(FieldedIndex.query(spark, a.indexDir,
+          FieldedIndex.Query.Match(spec, a.query, and = true), a.k),
           Seq("rnk"), ranked)
       case "phrase" =>
         keyed(FieldedIndex.phraseMatch(spark, a.indexDir, spec,
@@ -128,8 +129,9 @@ object Query {
         keyed(FieldedIndex.fuzzyMatch(spark, a.indexDir, spec,
           Seq(1 -> a.query), a.k), Seq("rnk"), ranked)
       case "qstring" =>
-        keyed(FieldedIndex.simpleQueryString(spark, a.indexDir, spec,
-          a.query, a.k), Seq("rnk"), ranked)
+        keyed(FieldedIndex.query(spark, a.indexDir,
+          FieldedIndex.parseSimpleQuery(a.query).tree(spec), a.k),
+          Seq("rnk"), ranked)
       case "term" =>
         keyed(FieldedIndex.termQuery(spark, a.indexDir, spec,
           a.query.split("\\s+").toSeq), Seq("term"), Seq("term", "_key"))

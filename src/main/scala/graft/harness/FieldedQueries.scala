@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
 import graft.extract.{Crossref, CrossrefFixtures, CrossrefReader}
 import graft.index.FieldedIndex
+import graft.index.FieldedIndex.Query
 import graft.io.TableIO
 
 /** Fielded-index oracle queries over the crossref fixture: the reference's
@@ -131,12 +132,16 @@ object FieldedQueries {
       .orderBy("qid", "rnk")
   }
 
+  /** (field, text) legs such as [[MultiLegs]] as match leaves. */
+  private def multiLeaves(legs: Seq[(String, String)]): Seq[Query] =
+    legs.map { case (f, text) => Query.Match(spec(f), text) }
+
   /** Multi-field bool/should: per-leg BM25 under each field's own stats,
     * summed per doc, deterministic top-k (combined-bound WAND path). */
   def fieldMulti(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureFieldedIndex(spark)
-    val legs = MultiLegs.map { case (f, text) => (spec(f), text) }
-    FieldedIndex.multiMatch(spark, dir, legs, K)
+    FieldedIndex.query(spark, dir,
+      Query.Bool(should = multiLeaves(MultiLegs)), K)
       .join(docMap(spark, dir), "doc_id")
       .select(col("rnk"), col("doi"), col("score_x6"))
       .orderBy("rnk")
@@ -147,8 +152,8 @@ object FieldedQueries {
     * only ONE leg are excluded however well they score. */
   def fieldMsm(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureFieldedIndex(spark)
-    val legs = MsmLegs.map { case (f, text) => (spec(f), text) }
-    FieldedIndex.multiMatch(spark, dir, legs, K, minShouldMatch = 2)
+    FieldedIndex.query(spark, dir,
+      Query.Bool(should = multiLeaves(MsmLegs), minShouldMatch = 2), K)
       .join(docMap(spark, dir), "doc_id")
       .select(col("rnk"), col("doi"), col("score_x6"))
       .orderBy("rnk")
@@ -170,9 +175,9 @@ object FieldedQueries {
   def fieldBoost(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureFieldedIndex(spark)
     val legs = MultiLegs.zip(MultiBoosts).map { case ((f, text), b) =>
-      (spec(f), text, b)
+      Query.Match(spec(f), text, b)
     }
-    FieldedIndex.multiMatchBoost(spark, dir, legs, K)
+    FieldedIndex.query(spark, dir, Query.Bool(should = legs), K)
       .join(docMap(spark, dir), "doc_id")
       .select(col("rnk"), col("doi"), col("score_x6"))
       .orderBy("rnk")
@@ -185,7 +190,8 @@ object FieldedQueries {
 
   def fieldMatchAnd(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureFieldedIndex(spark)
-    FieldedIndex.matchAnd(spark, dir, spec("title"), MatchAndQuery, K)
+    FieldedIndex.query(spark, dir,
+      Query.Match(spec("title"), MatchAndQuery, and = true), K)
       .join(docMap(spark, dir), "doc_id")
       .select(col("rnk"), col("doi"), col("score_x6"))
       .orderBy("rnk")
@@ -232,8 +238,8 @@ object FieldedQueries {
     * rank by max(leg) + tie_breaker·Σ(others). */
   def fieldDisMax(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureFieldedIndex(spark)
-    val legs = MultiLegs.map { case (f, text) => (spec(f), text) }
-    FieldedIndex.disMax(spark, dir, legs, K, DisMaxTieBreaker)
+    FieldedIndex.query(spark, dir,
+      Query.DisMax(multiLeaves(MultiLegs), DisMaxTieBreaker), K)
       .join(docMap(spark, dir), "doc_id")
       .select(col("rnk"), col("doi"), col("score_x6"))
       .orderBy("rnk")
@@ -303,7 +309,7 @@ object FieldedQueries {
 
   /** The ES request BODY itself, through the strict DSL parser — the
     * reference's actual client shape (a bool/should of per-field matches)
-    * must parse+execute to the same ranking the typed multiMatch serves,
+    * must parse+execute to the same ranking [[fieldMulti]] serves,
     * gated by the SAME oracle SQL as q_field_multi. */
   val GluttonBody: String =
     """{"query":{"bool":{"should":[
@@ -352,12 +358,13 @@ object FieldedQueries {
 
   def fieldBoolPhrase(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureFieldedIndex(spark)
-    val bib = Seq((spec("bibliographic"), MultiLegs(0)._2))
-    val q1 = FieldedIndex.boolQuery(spark, dir, bib,
-      Seq((spec("title"), BoolPhraseMass)), K)
+    val bib = multiLeaves(MultiLegs.take(1))
+    val q1 = FieldedIndex.query(spark, dir, Query.Bool(should =
+      bib :+ Query.Phrase(spec("title"), BoolPhraseMass)), K)
       .withColumn("qid", lit(1L))
-    val q2 = FieldedIndex.boolQuery(spark, dir, bib,
-      Seq((spec("title"), BoolPhraseSelective)), K, minShouldMatch = 2)
+    val q2 = FieldedIndex.query(spark, dir, Query.Bool(should =
+      bib :+ Query.Phrase(spec("title"), BoolPhraseSelective),
+      minShouldMatch = 2), K)
       .withColumn("qid", lit(2L))
     q1.unionByName(q2)
       .join(docMap(spark, dir), "doc_id")
@@ -376,11 +383,10 @@ object FieldedQueries {
 
   def fieldBoolFull(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureFieldedIndex(spark)
-    FieldedIndex.esBool(spark, dir,
-      must = Seq((spec("bibliographic"), BoolFullMust)),
-      should = Seq((spec("title"), BoolFullShould)),
-      mustNot = Some((spec("year"), Seq(BoolFullMustNotYear))),
-      k = K)
+    FieldedIndex.query(spark, dir, Query.Bool(
+      must = Seq(Query.Match(spec("bibliographic"), BoolFullMust)),
+      should = Seq(Query.Match(spec("title"), BoolFullShould)),
+      mustNot = Some(Query.Terms(spec("year"), Seq(BoolFullMustNotYear)))), K)
       .join(docMap(spark, dir), "doc_id")
       .select(col("rnk"), col("doi"), col("score_x6"))
       .orderBy("rnk")
@@ -436,8 +442,9 @@ object FieldedQueries {
     * year-1997 cohort. */
   def fieldFiltered(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureFieldedIndex(spark)
-    FieldedIndex.filteredMatch(spark, dir,
-      spec("title"), FilteredMatchText, spec("year"), Seq(FilteredYear), K)
+    FieldedIndex.query(spark, dir, Query.Bool(
+      should = Seq(Query.Match(spec("title"), FilteredMatchText)),
+      filter = Some(Query.Terms(spec("year"), Seq(FilteredYear)))), K)
       .join(docMap(spark, dir), "doc_id")
       .select(col("rnk"), col("doi"), col("score_x6"))
       .orderBy("rnk")
@@ -457,9 +464,9 @@ object FieldedQueries {
     val dir = ensureFieldedIndex(spark)
     val terms = FieldedIndex.rangeTerms(spark, dir, spec("year"),
       gte = Some(RangeGte), lte = Some(RangeLte))
-    FieldedIndex.esBool(spark, dir,
-      must = Seq((spec("title"), RangeMatchText)),
-      filter = Some((spec("year"), terms)), k = K)
+    FieldedIndex.query(spark, dir, Query.Bool(
+      must = Seq(Query.Match(spec("title"), RangeMatchText)),
+      filter = Some(Query.Terms(spec("year"), terms))), K)
       .join(docMap(spark, dir), "doc_id")
       .select(col("rnk"), col("doi"), col("score_x6"))
       .orderBy("rnk")

@@ -287,92 +287,145 @@ object FieldedIndex {
     Analyzer.analyzeChain(spec.chain, text)
       .groupBy(identity).view.mapValues(_.length).toMap
 
-  /** ES bool filter+must — a match leg scored in query context, restricted
-    * to docs passing a keyword term filter on ANOTHER field (filter
-    * context: unscored, like `{"bool":{"must":[match],"filter":[term]}}`).
-    * The top-k must be of the FILTERED set, so the filter semi-joins the
-    * full distributed score list BEFORE ranking — a post-filter of an
-    * unfiltered top-k would under-fill. Shapes: the filter doc set stays
-    * distributed (a term's postings are corpus-sized at scale) and the
-    * semi-join runs on doc_id; AQE picks broadcast when the filter side is
-    * small (a DOI lookup) and shuffle-hash when it is not (a year
-    * cohort). Returns (rnk, doc_id, score_x6). */
+  /** An ES scored query as a tree: the bool family the reference's clients
+    * post (Biblio-Glutton sends a bool/should of per-field matches), which
+    * [[query]] alone lowers to the bool kernel. A compound node holds
+    * leaves only: the kernel serves one bool level. */
+  sealed trait Query
+  object Query {
+    /** ES match: `text` analyzed with the field's chain, BM25 under the
+      * field's stats, times `boost`. `and` is `operator: and` (every
+      * analyzed term required), a top-level form only. */
+    final case class Match(spec: FieldSpec, text: String, boost: Double = 1.0,
+                           and: Boolean = false) extends Query
+    /** ES match_phrase: exact adjacency under the field's chain, keeping
+      * tokenizer positions (stopword gaps, the multi-value gap). */
+    final case class Phrase(spec: FieldSpec, text: String) extends Query
+    /** ES bool. `must` and `should` are scored Match/Phrase leaves; each
+      * clause scores under its own field's stats and a hit's score is the
+      * clause sum. `filter` (required) and `mustNot` (excluded) are
+      * unscored term sets. `minShouldMatch` counts should clauses; −1 is
+      * the ES default, 0 with a must clause, else 1. */
+    final case class Bool(must: Seq[Query] = Nil, should: Seq[Query] = Nil,
+                          filter: Option[Terms] = None,
+                          mustNot: Option[Terms] = None,
+                          minShouldMatch: Int = -1) extends Query
+    /** ES dis_max (multi_match best_fields): a hit scores
+      * max(leg) + tieBreaker · Σ(other legs), tieBreaker in [0, 1]. */
+    final case class DisMax(queries: Seq[Query], tieBreaker: Double)
+      extends Query
+    /** Filter context (ES term / terms / range): docs holding any of
+      * `values`, each analyzed with the field's chain. */
+    final case class Terms(spec: FieldSpec, values: Seq[String])
+  }
+
+  /** Run a scored [[Query]] tree: the one place that analyzes its clauses,
+    * opens the handle over every field they name, resolves ES's defaults
+    * and calls the bool kernel ([[Searcher.multiSearch]]), one combined-
+    * bound WAND walk with θ = the kth-best clause sum. Leg ids, and so the
+    * kernel's FP sum order, are the match legs (must, then should), then
+    * the phrase legs (must, then should). A top-level `and` match runs one
+    * leg per distinct analyzed term, in term order, with
+    * minimum_should_match = their count: the leg split changes only the
+    * match requirement, not the score. Shapes the kernel cannot serve fail
+    * with IllegalArgumentException before any job: a nested compound, an
+    * `and` leaf below the top level, a boost that is not finite and > 0
+    * (a zero boost would zero the leg's bounds but still count it for
+    * minimum_should_match), a tie breaker outside [0, 1], a compound with
+    * no scored clause (a filter-only bool is constant-score: use
+    * [[termQuery]]), and more than 64 legs (the kernel's leg bitmask).
+    * Returns (rnk, doc_id, score_x6) under the deterministic ordering. */
+  def query(spark: SparkSession, indexDir: String, q: Query,
+            k: Int): DataFrame = {
+    import Query._
+    def refuse(why: String): Nothing = throw new IllegalArgumentException(why)
+    val (b, tieBreaker, and) = q match {
+      case b: Bool => (b, -1.0, false)
+      case DisMax(qs, tb) =>
+        if (!(tb >= 0.0 && tb <= 1.0))
+          refuse(s"dis_max tie_breaker must be in [0, 1], got $tb")
+        (Bool(should = qs), tb, false)
+      case m: Match => (Bool(should = Seq(m.copy(and = false))), -1.0, m.and)
+      case p: Phrase => (Bool(should = Seq(p)), -1.0, false)
+    }
+    if (b.must.isEmpty && b.should.isEmpty)
+      refuse("a bool or dis_max query needs ≥ 1 scored clause (a " +
+        "filter/must_not-only bool is constant-score: use termQuery)")
+    def leaves(qs: Seq[Query]): (Seq[Match], Seq[Phrase]) = {
+      qs.foreach {
+        case _: Bool | _: DisMax => refuse("a bool or dis_max clause must " +
+          "be a match or match_phrase leaf: nested compounds are not served")
+        case m: Match if m.and => refuse("operator=and is a top-level match " +
+          "form: below it the terms would not all be required")
+        case Match(_, _, boost, _) if !(boost > 0.0 && !boost.isInfinite) =>
+          refuse(s"match boost must be finite and > 0, got $boost (a " +
+            "zero boost would zero the leg's bounds but still count it for " +
+            "minimum_should_match: drop the clause instead)")
+        case _ =>
+      }
+      (qs.collect { case m: Match => m }, qs.collect { case p: Phrase => p })
+    }
+    val (mustM, mustP) = leaves(b.must)
+    val (shouldM, shouldP) = leaves(b.should)
+    val legs = (mustM ++ shouldM).flatMap { m =>
+      val tw = termWeights(m.spec, m.text)
+      if (and) tw.toSeq.sortBy(_._1).map { case (t, w) =>
+        Searcher.MultiLeg(m.spec.field, Map(t -> w), m.boost) }
+      else Seq(Searcher.MultiLeg(m.spec.field, tw, m.boost))
+    }
+    val phrases = (mustP ++ shouldP).map(p => Searcher.PhraseLeg(p.spec.field,
+      Analyzer.analyzeChainPos(p.spec.chain, p.text)))
+    if (legs.length + phrases.length > 64)
+      refuse(s"a bool query takes at most 64 clauses (an and match one per " +
+        s"distinct term), got ${legs.length + phrases.length}")
+    val msm =
+      if (and) legs.length
+      else if (b.minShouldMatch >= 0) b.minShouldMatch
+      else if (b.must.nonEmpty) 0
+      else 1
+    def analyzed(t: Terms): (String, Seq[String]) = (t.spec.field,
+      t.values.flatMap(v => Analyzer.analyzeChain(t.spec.chain, v)))
+    val fields = (mustM ++ shouldM).map(_.spec.field) ++
+      (mustP ++ shouldP).map(_.spec.field) ++
+      (b.filter ++ b.mustNot).map(_.spec.field)
+    Searcher.multiSearch(handleFor(spark, indexDir, fields), legs, k, msm,
+      filter = b.filter.map(analyzed), disMaxTieBreaker = tieBreaker,
+      phraseLegs = phrases, mustNot = b.mustNot.map(analyzed),
+      requiredLegs = mustM.indices ++ mustP.indices.map(legs.length + _))
+  }
+
+  // The three typed bool shapes below stay as one-line lowerings only
+  // because `graft.Bench`, kept byte-identical, warms its handles with them.
+
+  /** ES bool filter+must: a match scored in query context, top-k of the
+    * docs passing a term filter on another field ([[query]]). Returns
+    * (rnk, doc_id, score_x6). */
   def filteredMatch(spark: SparkSession, indexDir: String,
                     matchSpec: FieldSpec, matchText: String,
                     filterSpec: FieldSpec, filterValues: Seq[String],
-                    k: Int): DataFrame = {
-    val tw = termWeights(matchSpec, matchText)
-    val fvals = filterValues.flatMap(v =>
-      Analyzer.analyzeChain(filterSpec.chain, v)).toSeq
-    val mh = handleFor(spark, indexDir,
-      Seq(matchSpec.field, filterSpec.field))
-    Searcher.multiSearch(mh, Seq(Searcher.MultiLeg(matchSpec.field, tw)), k,
-      filter = Some((filterSpec.field, fvals)))
-  }
+                    k: Int): DataFrame =
+    query(spark, indexDir, Query.Bool(should = Seq(Query.Match(matchSpec,
+      matchText)), filter = Some(Query.Terms(filterSpec, filterValues))), k)
 
-  /** ES bool/should multi-field match — the reference's actual client
-    * pattern (Biblio-Glutton posts a bool of per-field matches against the
-    * mapped index and ranks by the SUM of clause scores): each leg
-    * analyzes its text with its field's chain and scores BM25 under that
-    * field's own stats; docs rank by the SUM of leg scores. Served by the
-    * combined-bound WAND over the multi-field handle — all legs' cursors
-    * walk one doc-ordered pivot with θ = kth-best sum (Lucene's
-    * bool/should WANDScorer, which is what the reference's ES runs), so a
-    * high-df leg (a year cohort) is skipped through, never decoded
-    * wholesale. `minShouldMatch` is the ES bool parameter (≥ that many
-    * legs must match). Returns (rnk, doc_id, score_x6) under the usual
-    * deterministic ordering. */
+  /** ES bool/should multi-field match, the Biblio-Glutton pattern: docs
+    * rank by the sum of per-field BM25 legs ([[query]]);
+    * `minShouldMatch` legs must match. Returns (rnk, doc_id, score_x6). */
   def multiMatch(spark: SparkSession, indexDir: String,
                  legs: Seq[(FieldSpec, String)], k: Int,
-                 minShouldMatch: Int = 1): DataFrame = {
-    val mlegs = legs.map { case (spec, text) =>
-      Searcher.MultiLeg(spec.field, termWeights(spec, text))
-    }
-    val mh = handleFor(spark, indexDir, legs.map(_._1.field))
-    Searcher.multiSearch(mh, mlegs, k, minShouldMatch)
-  }
+                 minShouldMatch: Int = 1): DataFrame =
+    query(spark, indexDir, Query.Bool(should = legs.map { case (s, t) =>
+      Query.Match(s, t) }, minShouldMatch = minShouldMatch), k)
 
-  /** [[multiMatch]] with ES per-field boosts — the
-    * `fields: ["title^2", "journal"]` / bool clause `boost` knob the
-    * reference's Biblio-Glutton-style clients apply (elastic/settings.go's
-    * fields exist precisely to be weighted differently per request). ES
-    * semantics: leg score × boost, summed. Each leg is (field spec,
-    * query text, boost); the boost folds into the leg's cursor idf
-    * ([[Searcher.MultiLeg.boost]]), so the combined-bound WAND kernel,
-    * its θ pruning and every block bound carry it with no kernel change
-    * and rank-identity to the boosted naive twin holds exactly. */
-  def multiMatchBoost(spark: SparkSession, indexDir: String,
-                      legs: Seq[(FieldSpec, String, Double)], k: Int,
-                      minShouldMatch: Int = 1): DataFrame = {
-    val mlegs = legs.map { case (spec, text, boost) =>
-      Searcher.MultiLeg(spec.field, termWeights(spec, text), boost)
-    }
-    val mh = handleFor(spark, indexDir, legs.map(_._1.field))
-    Searcher.multiSearch(mh, mlegs, k, minShouldMatch)
-  }
-
-  /** ES bool query mixing match should-legs and match_phrase clauses —
-    * Lucene's bool-over-phrase: a PhraseQuery is a clause scorer like any
-    * other, so phrase clauses ride the SAME combined-bound WAND pivot walk
-    * as the match legs (their approximation is the term conjunction,
-    * positions confirm lazily — the TwoPhaseIterator model), θ = kth-best
-    * sum over ALL clauses. Each clause analyzes with its field's chain and
-    * scores under that field's stats; `minShouldMatch` counts phrase
-    * clauses too. Returns (rnk, doc_id, score_x6). */
+  /** ES bool/should of match legs and match_phrase clauses ([[query]]);
+    * `minShouldMatch` counts phrase clauses too. Returns
+    * (rnk, doc_id, score_x6). */
   def boolQuery(spark: SparkSession, indexDir: String,
                 legs: Seq[(FieldSpec, String)],
                 phraseLegs: Seq[(FieldSpec, String)], k: Int,
-                minShouldMatch: Int = 1): DataFrame = {
-    val mlegs = legs.map { case (spec, text) =>
-      Searcher.MultiLeg(spec.field, termWeights(spec, text))
-    }
-    val plegs = phraseLegs.map { case (spec, text) =>
-      Searcher.PhraseLeg(spec.field, Analyzer.analyzeChainPos(spec.chain, text))
-    }
-    val mh = handleFor(spark, indexDir,
-      legs.map(_._1.field) ++ phraseLegs.map(_._1.field))
-    Searcher.multiSearch(mh, mlegs, k, minShouldMatch, phraseLegs = plegs)
-  }
+                minShouldMatch: Int = 1): DataFrame =
+    query(spark, indexDir, Query.Bool(should = legs.map { case (s, t) =>
+      Query.Match(s, t) } ++ phraseLegs.map { case (s, t) => Query.Phrase(s, t) },
+      minShouldMatch = minShouldMatch), k)
 
   /** ES match with `fuzziness` against one field ([[Searcher.fuzzySearch]]
     * semantics: AUTO or explicit edits, full Damerau-Levenshtein,
@@ -420,90 +473,6 @@ object FieldedIndex {
     IndexTables.termStats(spark, new TableIO(fieldDir(indexDir, spec.field)))
       .select(col("term"), col("df"))
       .orderBy(col("df").desc, col("term").asc).limit(size)
-  }
-
-  /** Full ES bool query — all four clause contexts over ONE combined-bound
-    * WAND walk: `must` (scored, every clause required; match or
-    * match_phrase), `should`/`shouldPhrases` (scored, optional;
-    * `minShouldMatch` counts SHOULD clauses only, ES semantics — default −1
-    * resolves to ES's default: 0 when must-clauses exist, else 1), `filter`
-    * (unscored, required — top-k OF the filtered set), `mustNot` (unscored
-    * exclusion; lists decode only around candidate pivots). Scores are the
-    * clause sum (must + matching should), each clause under its own field's
-    * stats. Required legs gate at scoring (Lucene runs must clauses as a
-    * conjunction driver; the θ-sum pruning here subsumes the asymptotic
-    * win — a non-qualifying doc is never offered, and bound sums shrink as
-    * cursors exhaust). Returns (rnk, doc_id, score_x6). */
-  def esBool(spark: SparkSession, indexDir: String,
-             must: Seq[(FieldSpec, String)] = Nil,
-             should: Seq[(FieldSpec, String)] = Nil,
-             mustPhrases: Seq[(FieldSpec, String)] = Nil,
-             shouldPhrases: Seq[(FieldSpec, String)] = Nil,
-             filter: Option[(FieldSpec, Seq[String])] = None,
-             mustNot: Option[(FieldSpec, Seq[String])] = None,
-             k: Int = 10, minShouldMatch: Int = -1): DataFrame = {
-    require(must.nonEmpty || should.nonEmpty || mustPhrases.nonEmpty ||
-      shouldPhrases.nonEmpty, "ES bool needs ≥1 scored clause " +
-      "(filter/must_not-only bools are constant-score — use termQuery)")
-    val msmEff =
-      if (minShouldMatch >= 0) minShouldMatch
-      else if (must.nonEmpty || mustPhrases.nonEmpty) 0
-      else 1
-    val mlegs = (must ++ should).map { case (spec, text) =>
-      Searcher.MultiLeg(spec.field, termWeights(spec, text))
-    }
-    val plegs = (mustPhrases ++ shouldPhrases).map { case (spec, text) =>
-      Searcher.PhraseLeg(spec.field, Analyzer.analyzeChainPos(spec.chain, text))
-    }
-    val requiredLegs = must.indices ++
-      mustPhrases.indices.map(mlegs.length + _)
-    def analyzedVals(fs: FieldSpec, vs: Seq[String]): Seq[String] =
-      vs.flatMap(v => Analyzer.analyzeChain(fs.chain, v))
-    val mh = handleFor(spark, indexDir,
-      (must ++ should ++ mustPhrases ++ shouldPhrases).map(_._1.field) ++
-        filter.map(_._1.field) ++ mustNot.map(_._1.field))
-    Searcher.multiSearch(mh, mlegs, k, msmEff,
-      filter.map { case (fs, vs) => (fs.field, analyzedVals(fs, vs)) },
-      phraseLegs = plegs,
-      mustNot = mustNot.map { case (fs, vs) => (fs.field, analyzedVals(fs, vs)) },
-      requiredLegs = requiredLegs)
-  }
-
-  /** ES match query with `operator: and` — every analyzed term must match
-    * (the default `or` is [[searchField]]). Expressed through the bool
-    * kernel: each term is its own should-leg of the SAME field and
-    * minimum_should_match = the term count, so the conjunction rides the
-    * combined-bound pivot walk (scores are the ordinary BM25 sum — the leg
-    * split changes only the match requirement, not the score). Returns
-    * (rnk, doc_id, score_x6). */
-  def matchAnd(spark: SparkSession, indexDir: String, spec: FieldSpec,
-               text: String, k: Int): DataFrame = {
-    val terms = termWeights(spec, text).toSeq.sortBy(_._1)
-    require(terms.size <= 64,
-      "operator=and supports up to 64 distinct terms (msm leg bitmask)")
-    val legs = terms.map { case (t, w) =>
-      Searcher.MultiLeg(spec.field, Map(t -> w))
-    }
-    Searcher.multiSearch(handleFor(spark, indexDir, spec.field), legs, k,
-      minShouldMatch = legs.length)
-  }
-
-  /** ES dis_max / multi_match best_fields — the OTHER bool-family shape
-    * citation clients post: per-leg BM25 under each field's own stats,
-    * ranked by max(leg) + tie_breaker · Σ(other legs) (tie_breaker 0 = pure
-    * best_fields, 1 ≡ bool/should). Served by the same combined-bound WAND
-    * walk — for tie_breaker ≤ 1 the combined score is ≤ the leg sum, so the
-    * sum-based θ bounds stay valid. Returns (rnk, doc_id, score_x6). */
-  def disMax(spark: SparkSession, indexDir: String,
-             legs: Seq[(FieldSpec, String)], k: Int,
-             tieBreaker: Double): DataFrame = {
-    require(tieBreaker >= 0.0 && tieBreaker <= 1.0,
-      "dis_max tie_breaker must be in [0, 1]")
-    val mlegs = legs.map { case (spec, text) =>
-      Searcher.MultiLeg(spec.field, termWeights(spec, text))
-    }
-    val mh = handleFor(spark, indexDir, legs.map(_._1.field))
-    Searcher.multiSearch(mh, mlegs, k, disMaxTieBreaker = tieBreaker)
   }
 
   // ---- Multi-term queries (Lucene MultiTermQuery rewrites) ----------------
@@ -569,7 +538,7 @@ object FieldedIndex {
     * comparison on the parsed term value, the ES semantics for a numeric
     * field; non-numeric terms never match). Bounds: `gte`/`lte` inclusive,
     * `gt`/`lt` exclusive — any subset, like the ES body. Feed the result
-    * to [[esBool]]'s filter context (the usual client shape,
+    * to a [[Query.Bool]] filter ([[Query.Terms]]; the usual client shape,
     * `{"bool":{"filter":[{"range":{"year":{...}}}]}}`) or to
     * [[termQuery]]-style constant-score retrieval via [[rangeQuery]].
     * An empty expansion is an unsatisfiable filter — the kernel already
@@ -876,7 +845,16 @@ object FieldedIndex {
   final case class SimpleQuery(must: Seq[String], should: Seq[String],
                                mustPhrases: Seq[String],
                                shouldPhrases: Seq[String],
-                               mustNot: Seq[String])
+                               mustNot: Seq[String]) {
+    /** This query over one field: `+` terms and phrases must, bare ones
+      * should, `-` terms must_not. */
+    def tree(spec: FieldSpec): Query.Bool = Query.Bool(
+      must = must.map(Query.Match(spec, _)) ++
+        mustPhrases.map(Query.Phrase(spec, _)),
+      should = should.map(Query.Match(spec, _)) ++
+        shouldPhrases.map(Query.Phrase(spec, _)),
+      mustNot = Option.when(mustNot.nonEmpty)(Query.Terms(spec, mustNot)))
+  }
 
   private[graft] def parseSimpleQuery(q: String): SimpleQuery = {
     val must = Seq.newBuilder[String]; val should = Seq.newBuilder[String]
@@ -915,24 +893,13 @@ object FieldedIndex {
       not.result())
   }
 
-  /** ES `simple_query_string` against one field: parse the flagged syntax
-    * ([[parseSimpleQuery]]) and run it through the SAME combined-bound
-    * bool kernel as [[esBool]] — must/should match clauses, phrase
-    * clauses as two-phase cursors, `-` terms as the must_not exclusion
-    * list (analyzed with the field's chain). default_operator OR, ES's
-    * minimum_should_match defaulting (0 with any must clause, else 1).
-    * Returns (rnk, doc_id, score_x6). */
+  /** ES `simple_query_string` against one field: the flagged syntax
+    * ([[parseSimpleQuery]]) run as its [[SimpleQuery.tree]] by [[query]]
+    * (default_operator OR, ES's minimum_should_match default). Returns
+    * (rnk, doc_id, score_x6). */
   def simpleQueryString(spark: SparkSession, indexDir: String,
-                        spec: FieldSpec, q: String, k: Int): DataFrame = {
-    val p = parseSimpleQuery(q)
-    esBool(spark, indexDir,
-      must = p.must.map(spec -> _),
-      should = p.should.map(spec -> _),
-      mustPhrases = p.mustPhrases.map(spec -> _),
-      shouldPhrases = p.shouldPhrases.map(spec -> _),
-      mustNot = if (p.mustNot.isEmpty) None else Some((spec, p.mustNot)),
-      k = k)
-  }
+                        spec: FieldSpec, q: String, k: Int): DataFrame =
+    query(spark, indexDir, parseSimpleQuery(q).tree(spec), k)
 
   /** ES `_count` (hit count without scoring): docs matching the analyzed
     * match query — distinct union of the terms' posting lists. Returns a

@@ -55,17 +55,16 @@ object MultiTermProbe {
     val rt = FieldedIndex.rangeTerms(spark, dir, year,
       gte = Some(1993L), lte = Some(1995L))
     require(rt == Seq("1993", "1994", "1995"), s"range expansion: $rt")
-    FieldedIndex.esBool(spark, dir,
-      must = Seq((title, "second title 123456")),
-      filter = Some((year, rt)), k = 10).count() // warm
+    val rangeBool = FieldedIndex.Query.Bool(
+      must = Seq(FieldedIndex.Query.Match(title, "second title 123456")),
+      filter = Some(FieldedIndex.Query.Terms(year, rt)))
+    FieldedIndex.query(spark, dir, rangeBool, 10).count() // warm
     val tExpand = best(3) {
       FieldedIndex.rangeTerms(spark, dir, year,
         gte = Some(1993L), lte = Some(1995L))
     }
     val tRangeBool = best(3) {
-      FieldedIndex.esBool(spark, dir,
-        must = Seq((title, "second title 123456")),
-        filter = Some((year, rt)), k = 10).count()
+      FieldedIndex.query(spark, dir, rangeBool, 10).count()
     }
     System.err.println(
       f"[mt] range expand=$tExpand%.3fs rangeBool(3-term filter, n/10 cohort)=$tRangeBool%.3fs")

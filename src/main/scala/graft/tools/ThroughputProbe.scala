@@ -12,8 +12,8 @@ import graft.query.Searcher
   * [seconds]`. Each client thread loops the 20-query webtext set against
   * ONE shared resident handle — the serving-node model under load (cached
   * shard partitions, per-query θ boards are (run, qid)-keyed so concurrent
-  * queries never share state). Complements LatencyProbe's sequential
-  * latency numbers with a saturation datapoint. */
+  * queries never share state). Complements perfbench `serve`'s
+  * one-client latency numbers with a saturation datapoint. */
 object ThroughputProbe {
   def main(args: Array[String]): Unit = {
     val idxDir =

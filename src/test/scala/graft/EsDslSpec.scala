@@ -8,9 +8,11 @@ import graft.harness.FieldedQueries
 import graft.index.FieldedIndex
 
 /** The ES request-body surface: every DSL node must execute to EXACTLY the
-  * typed engine call it parses to (row-for-row equality over the fixture
-  * index), and malformed bodies must fail loudly with the offending path —
-  * the ES parsing_exception contract, no silent key-dropping. */
+  * engine call it parses to (row-for-row equality over the fixture index;
+  * for the bool family, whose typed calls share the query tree's lowering,
+  * the declarative naive twins of [[FieldedNaive]]), and malformed bodies
+  * must fail loudly with the offending path — the ES parsing_exception
+  * contract, no silent key-dropping or coercion. */
 class EsDslSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -38,17 +40,29 @@ class EsDslSpec extends AnyFunSuite {
     assert(run("""{"query":{"match":{"title":"title 42"}}}""") ===
       rows(dropQid(FieldedIndex.searchField(spark, idx, spec("title"),
         Seq(1 -> "title 42"), 10))))
+    // operator=and: every term a required leg of the naive bool
     assert(run(
       """{"query":{"match":{"title":{"query":"record 42","operator":"and"}}},"size":5}""") ===
-      rows(FieldedIndex.matchAnd(spark, idx, spec("title"), "record 42", 5)))
+      rows(FieldedNaive.esBoolNaive(spark, idx,
+        must = Seq(spec("title") -> "record", spec("title") -> "42"), k = 5)))
+    // only doc 42 holds both terms, and it tops the boosted OR ranking
+    assert(run(
+      """{"query":{"match":{"title":{"query":"record 42","operator":"and",
+        |"boost":2.0}}}}""".stripMargin) ===
+      rows(FieldedNaive.multiMatchBoostNaive(spark, idx,
+        Seq((spec("title"), "record 42", 2.0)), 1)))
     assert(run(
       """{"query":{"match":{"title":{"query":"recrod","fuzziness":1}}}}""") ===
       rows(dropQid(FieldedIndex.fuzzyMatch(spark, idx, spec("title"),
         Seq(1 -> "recrod"), 10, fuzziness = 1))))
     assert(run(
       """{"query":{"match":{"title":{"query":"title 42","boost":2.0}}}}""") ===
-      rows(FieldedIndex.multiMatchBoost(spark, idx,
+      rows(FieldedNaive.multiMatchBoostNaive(spark, idx,
         Seq((spec("title"), "title 42", 2.0)), 10)))
+    // term: a match of the one value
+    assert(run("""{"query":{"term":{"year":{"value":"1997"}}}}""") ===
+      rows(dropQid(FieldedIndex.searchField(spark, idx, spec("year"),
+        Seq(1 -> "1997"), 10))))
     assert(run("""{"query":{"match_phrase":{"title":"title 42"}}}""") ===
       rows(dropQid(FieldedIndex.phraseMatch(spark, idx, spec("title"),
         Seq(1 -> "title 42"), 10))))
@@ -65,7 +79,7 @@ class EsDslSpec extends AnyFunSuite {
         |  {"match":{"volume":"23"}}]}},
         | "size":10}""".stripMargin
     val legs = FieldedQueries.MultiLegs.map { case (f, t) => (spec(f), t) }
-    assert(run(body) === rows(FieldedIndex.multiMatch(spark, idx, legs, 10)))
+    assert(run(body) === rows(FieldedNaive.multiMatchNaive(spark, idx, legs, 10)))
     // the cited doc tops, as in the gated q_field_multi
     assert(run(body).head._1 === 1L)
   }
@@ -75,7 +89,7 @@ class EsDslSpec extends AnyFunSuite {
       """{"query":{"bool":{
         |  "should":[{"match":{"title":"title 7"}}],
         |  "filter":[{"term":{"year":"1997"}}]}}}""".stripMargin
-    assert(run(filtered) === rows(FieldedIndex.filteredMatch(spark, idx,
+    assert(run(filtered) === rows(FieldedNaive.filteredMatchNaive(spark, idx,
       spec("title"), "title 7", spec("year"), Seq("1997"), 10)))
     val msm =
       """{"query":{"bool":{
@@ -84,7 +98,7 @@ class EsDslSpec extends AnyFunSuite {
         |  "minimum_should_match":2}}}""".stripMargin
     val legs = FieldedQueries.MsmLegs.map { case (f, t) => (spec(f), t) }
     assert(run(msm) ===
-      rows(FieldedIndex.multiMatch(spark, idx, legs, 10, minShouldMatch = 2)))
+      rows(FieldedNaive.boolQueryNaive(spark, idx, legs, Nil, 10, 2)))
     val notBody =
       """{"query":{"bool":{
         |  "should":[{"match":{"title":"title 7"}}],
@@ -130,7 +144,7 @@ class EsDslSpec extends AnyFunSuite {
         |  {"match":{"year":"1993"}},{"match":{"volume":"23"}}],
         |  "tie_breaker":0.3}}}""".stripMargin
     val legs = FieldedQueries.MultiLegs.map { case (f, t) => (spec(f), t) }
-    assert(run(dm) === rows(FieldedIndex.disMax(spark, idx, legs, 10, 0.3)))
+    assert(run(dm) === rows(FieldedNaive.disMaxNaive(spark, idx, legs, 10, 0.3)))
     val mlt =
       """{"query":{"more_like_this":{"fields":["bibliographic"],
         |  "like":[{"_id":"10.1/nd.123"}],"min_term_freq":1,
@@ -303,5 +317,28 @@ class EsDslSpec extends AnyFunSuite {
       "match / match_phrase")
     bad("""{"not json""", "malformed JSON")
     bad("""{"query":{"match":{"title":"x"}},"size":0}""", "size")
+    bad("""{"query":{"match":{"title":"x"}},"size":1.5}""", "integer")
+    // fuzziness: AUTO or 0, 1, 2 edits, on match and fuzzy alike; anything
+    // else refuses rather than becoming some edit count
+    for (f <- Seq("\"two\"", "\"AUTO:3,6\"", "true", "1.7", "3", "-1")) {
+      bad(s"""{"query":{"match":{"title":{"query":"recrod","fuzziness":$f}}}}""",
+        "fuzziness")
+      bad(s"""{"query":{"fuzzy":{"title":{"value":"recrod","fuzziness":$f}}}}""",
+        "fuzziness")
+    }
+    // array elements and percent strings follow the scalar rules
+    bad("""{"aggs":{"p":{"percentiles":{"field":"year","percents":["abc"]}}}}""",
+      "percents")
+    bad("""{"aggs":{"p":{"percentile_ranks":{"field":"year","values":["abc"]}}}}""",
+      "values")
+    bad("""{"aggs":{"p":{"percentile_ranks":{"field":"year","values":[1995.5]}}}}""",
+      "values")
+    bad("""{"query":{"bool":{"should":[{"match":{"title":"x"}}],
+      |"filter":[{"terms":{"year":[{"a":1}]}}]}}}""".stripMargin,
+      "strings or numbers")
+    for (pct <- Seq("\"abc%\"", "\"150%\"", "\"30\"", "30"))
+      bad(s"""{"query":{"more_like_this":{"fields":["bibliographic"],
+        |"like":[{"_id":"10.1/nd.123"}],"minimum_should_match":$pct}}}""".stripMargin,
+        "percent string")
   }
 }

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.analysis.Analyzer
 import graft.harness.FieldedQueries
 import graft.index.{FieldedIndex, PostingsBuilder}
+import graft.index.FieldedIndex.Query
 import graft.io.TableIO
 import graft.query.Searcher
 
@@ -23,6 +24,9 @@ class FieldedSpec extends AnyFunSuite {
 
   private lazy val idx = FieldedQueries.ensureFieldedIndex(spark)
   private def spec(f: String) = FieldedIndex.CrossrefMapping.find(_.field == f).get
+  private def served(q: Query, k: Int = 10) = FieldedIndex.query(spark, idx, q, k)
+  private def matches(legs: Seq[(FieldedIndex.FieldSpec, String)]): Seq[Query] =
+    legs.map { case (s, t) => Query.Match(s, t) }
 
   test("every mapped SimplifiedPublication field builds a complete sub-index") {
     for (f <- Seq("DOI", "title", "journal", "abbreviated_journal", "volume",
@@ -294,38 +298,43 @@ class FieldedSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("rnk"), r.getAs[Long]("doc_id"),
         r.getAs[Long]("score_x6"))).toSeq.sorted
-    assert(rows(FieldedIndex.multiMatch(spark, idx, legs, 10)) ===
+    assert(rows(served(Query.Bool(should = matches(legs)))) ===
       rows(FieldedNaive.multiMatchNaive(spark, idx, legs, 10)))
-    assert(rows(FieldedIndex.filteredMatch(spark, idx,
-        spec("title"), FieldedQueries.FilteredMatchText,
-        spec("year"), Seq(FieldedQueries.FilteredYear), 10)) ===
+    assert(rows(served(Query.Bool(
+        should = Seq(Query.Match(spec("title"), FieldedQueries.FilteredMatchText)),
+        filter = Some(Query.Terms(spec("year"), Seq(FieldedQueries.FilteredYear)))))) ===
       rows(FieldedNaive.filteredMatchNaive(spark, idx,
         spec("title"), FieldedQueries.FilteredMatchText,
         spec("year"), Seq(FieldedQueries.FilteredYear), 10)))
     for (tb <- Seq(0.0, 0.3, 1.0))
-      assert(rows(FieldedIndex.disMax(spark, idx, legs, 10, tb)) ===
+      assert(rows(served(Query.DisMax(matches(legs), tb))) ===
         rows(FieldedNaive.disMaxNaive(spark, idx, legs, 10, tb)), s"tb=$tb")
-    // boosted legs: kernel == naive twin, boost=1 degenerates to the
-    // unboosted path bit-for-bit, and the harness boosts actually reorder
+    // boosted legs: kernel == naive twin, boost=1 through the boosted twin
+    // equals the unboosted kernel, and the harness boosts actually reorder
     val blegs = FieldedQueries.MultiLegs.zip(FieldedQueries.MultiBoosts)
       .map { case ((f, t), b) => (spec(f), t, b) }
-    assert(rows(FieldedIndex.multiMatchBoost(spark, idx, blegs, 10)) ===
+    val boosted = Query.Bool(should = blegs.map { case (s, t, b) =>
+      Query.Match(s, t, b) })
+    assert(rows(served(boosted)) ===
       rows(FieldedNaive.multiMatchBoostNaive(spark, idx, blegs, 10)))
     val unit = legs.map { case (s, t) => (s, t, 1.0) }
-    assert(rows(FieldedIndex.multiMatchBoost(spark, idx, unit, 10)) ===
-      rows(FieldedIndex.multiMatch(spark, idx, legs, 10)))
-    assert(rows(FieldedIndex.multiMatchBoost(spark, idx, blegs, 10))
-      .map(_._2) !== rows(FieldedIndex.multiMatch(spark, idx, legs, 10))
-      .map(_._2), "harness boosts must change the ranked doc set/order")
+    assert(rows(FieldedNaive.multiMatchBoostNaive(spark, idx, unit, 10)) ===
+      rows(served(Query.Bool(should = matches(legs)))))
+    assert(rows(served(boosted)).map(_._2) !==
+      rows(served(Query.Bool(should = matches(legs)))).map(_._2),
+      "harness boosts must change the ranked doc set/order")
     // a zero boost is refused (it would zero bounds yet count for msm)
     intercept[IllegalArgumentException] {
-      FieldedIndex.multiMatchBoost(spark, idx,
-        legs.map { case (s, t) => (s, t, 0.0) }, 10).collect()
+      served(Query.Bool(should = legs.map { case (s, t) =>
+        Query.Match(s, t, 0.0) })).collect()
     }
   }
 
   test("bool-with-phrase: kernel == naive twin; msm counts confirmed phrases only") {
     val mlegs = FieldedQueries.MultiLegs.take(1).map { case (f, t) => (spec(f), t) }
+    def bool(phrase: (FieldedIndex.FieldSpec, String), msm: Int) =
+      served(Query.Bool(should = matches(mlegs) :+ Query.Phrase(phrase._1, phrase._2),
+        minShouldMatch = msm))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("rnk"), r.getAs[Long]("doc_id"),
         r.getAs[Long]("score_x6"))).toSeq.sorted
@@ -333,7 +342,7 @@ class FieldedSpec extends AnyFunSuite {
     for (phrase <- Seq(FieldedQueries.BoolPhraseMass,
                        FieldedQueries.BoolPhraseSelective); msm <- Seq(1, 2)) {
       val plegs = Seq((spec("title"), phrase))
-      assert(rows(FieldedIndex.boolQuery(spark, idx, mlegs, plegs, 10, msm)) ===
+      assert(rows(bool(plegs.head, msm)) ===
         rows(FieldedNaive.boolQueryNaive(spark, idx, mlegs, plegs, 10, msm)),
         s"phrase='$phrase' msm=$msm")
     }
@@ -341,10 +350,10 @@ class FieldedSpec extends AnyFunSuite {
     // boundary): the clause term-CONJUNCTION holds everywhere but positions
     // never confirm — msm=2 must yield nothing, msm=1 must degrade to the
     // match leg alone
-    val crossVal = Seq((spec("title"), "title second"))
-    assert(FieldedIndex.boolQuery(spark, idx, mlegs, crossVal, 10, 2).count() === 0L)
-    assert(rows(FieldedIndex.boolQuery(spark, idx, mlegs, crossVal, 10, 1)) ===
-      rows(FieldedIndex.multiMatch(spark, idx, mlegs, 10)))
+    val crossVal = (spec("title"), "title second")
+    assert(bool(crossVal, 2).count() === 0L)
+    assert(rows(bool(crossVal, 1)) ===
+      rows(FieldedNaive.multiMatchNaive(spark, idx, mlegs, 10)))
   }
 
   test("exists + terms agg: presence set and df ranking on a field-sparse corpus") {
@@ -401,7 +410,7 @@ class FieldedSpec extends AnyFunSuite {
         Seq(7 -> "record"), 10, fuzziness = 0)))
   }
 
-  test("esBool: must/should/filter/must_not grid, kernel == naive twin") {
+  test("bool tree: must/should/filter/must_not grid, kernel == naive twin") {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("rnk"), r.getAs[Long]("doc_id"),
         r.getAs[Long]("score_x6"))).toSeq.sorted
@@ -410,28 +419,30 @@ class FieldedSpec extends AnyFunSuite {
     val massPhrase = (spec("title"), "second title")
     // must restricts to the 3 cited docs; should adds the title leg;
     // must_not (year 1993) excludes doc 123 of them
+    def terms(t: Option[(FieldedIndex.FieldSpec, Seq[String])]) =
+      t.map { case (s, vs) => Query.Terms(s, vs) }
     for (mn <- Seq(None, Some((spec("year"), Seq("1993"))));
          fl <- Seq(None, Some((spec("volume"), Seq("23"))))) {
-      val k = FieldedIndex.esBool(spark, idx, must = Seq(bibSel),
-        should = Seq(title42), filter = fl, mustNot = mn, k = 10)
+      val k = served(Query.Bool(must = matches(Seq(bibSel)),
+        should = matches(Seq(title42)), filter = terms(fl), mustNot = terms(mn)))
       val nv = FieldedNaive.esBoolNaive(spark, idx, must = Seq(bibSel),
         should = Seq(title42), filter = fl, mustNot = mn, k = 10)
       assert(rows(k) === rows(nv), s"mustNot=$mn filter=$fl")
       assert(k.count() > 0, s"grid cell empty: mustNot=$mn filter=$fl")
     }
     // a must PHRASE clause: required position-confirmed match
-    val kp = FieldedIndex.esBool(spark, idx, must = Seq(bibSel),
-      mustPhrases = Seq(massPhrase), k = 10)
+    val kp = served(Query.Bool(must = matches(Seq(bibSel)) :+
+      Query.Phrase(massPhrase._1, massPhrase._2)))
     val np = FieldedNaive.esBoolNaive(spark, idx, must = Seq(bibSel),
       mustPhrases = Seq(massPhrase), k = 10)
     assert(rows(kp) === rows(np))
     // must phrase that never confirms (cross-value): zero hits even though
     // its term conjunction holds everywhere
-    assert(FieldedIndex.esBool(spark, idx, must = Seq(bibSel),
-      mustPhrases = Seq((spec("title"), "title second")), k = 10).count() === 0L)
+    assert(served(Query.Bool(must = matches(Seq(bibSel)) :+
+      Query.Phrase(spec("title"), "title second"))).count() === 0L)
     // must_not excludes doc 123 (year 1993) from the must cohort
-    val excl = FieldedIndex.esBool(spark, idx, must = Seq(bibSel), k = 10,
-      mustNot = Some((spec("year"), Seq("1993"))))
+    val excl = served(Query.Bool(must = matches(Seq(bibSel)),
+      mustNot = Some(Query.Terms(spec("year"), Seq("1993")))))
       .join(spark.read.parquet(s"$idx/doc_map"), "doc_id")
       .select("doi").collect().map(_.getString(0)).toSet
     assert(!excl.exists(_.endsWith("nd.123")) && excl.size === 2)
@@ -439,8 +450,8 @@ class FieldedSpec extends AnyFunSuite {
 
   test("match operator=and: all terms required, score is the ordinary BM25 sum") {
     // "second title 42": OR-match hits every doc; AND-match only doc 42
-    val and = FieldedIndex.matchAnd(spark, idx, spec("title"),
-      FieldedQueries.MatchAndQuery, 10)
+    val and = served(Query.Match(spec("title"), FieldedQueries.MatchAndQuery,
+      and = true))
       .join(spark.read.parquet(s"$idx/doc_map"), "doc_id").collect()
     assert(and.length === 1)
     assert(and.head.getAs[String]("doi") === "10.1/nd.42")
@@ -466,8 +477,8 @@ class FieldedSpec extends AnyFunSuite {
       "10.1/nd.123")
     // the single-leg year cohort (e.g. doc 933: year 1993 only) scores
     // high under plain bool but is excluded here
-    val plain = FieldedIndex.multiMatch(spark, idx,
-      FieldedQueries.MsmLegs.map { case (f, t) => (spec(f), t) }, 20)
+    val plain = served(Query.Bool(should = matches(
+      FieldedQueries.MsmLegs.map { case (f, t) => (spec(f), t) })), 20)
       .join(spark.read.parquet(s"$idx/doc_map"), "doc_id")
       .collect().map(_.getAs[String]("doi")).toSet
     assert((plain -- expected).nonEmpty, "fixture too weak: msm a no-op")
@@ -488,9 +499,8 @@ class FieldedSpec extends AnyFunSuite {
     val empty = FieldedIndex.rangeTerms(spark, idx, y,
       gt = Some(2019L))
     assert(empty.isEmpty)
-    assert(FieldedIndex.esBool(spark, idx,
-      must = Seq((spec("title"), "record")),
-      filter = Some((y, empty)), k = 5).count() === 0L)
+    assert(served(Query.Bool(must = Seq(Query.Match(spec("title"), "record")),
+      filter = Some(Query.Terms(y, empty))), 5).count() === 0L)
     // constant-score retrieval: the 3-year cohort (i%30 ∈ {3,4,5}, each
     // remainder < 10 gets 34 docs in 0..999) is 102 docs
     assert(FieldedIndex.rangeQuery(spark, idx, y,

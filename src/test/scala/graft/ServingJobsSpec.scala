@@ -441,8 +441,8 @@ class ServingJobsSpec extends AnyFunSuite {
     assert(rows(FieldedIndex.searchField(spark, idx, bib,
       Seq(1 -> "record title journal"), QuerySet.K)).nonEmpty)
     val calls: Seq[(String, () => DataFrame)] = Seq(
-      "match_and" -> (() => FieldedIndex.matchAnd(spark, idx, bib,
-        "record title journal", QuerySet.K)),
+      "match_and" -> (() => FieldedIndex.query(spark, idx, FieldedIndex.Query
+        .Match(bib, "record title journal", and = true), QuerySet.K)),
       "more_like_this" -> (() => FieldedIndex.moreLikeThis(spark, idx, bib,
         FieldedQueries.MltKey, QuerySet.K, mtf, mdf, mqt, pct)))
     calls.foreach { case (name, call) =>
@@ -456,6 +456,68 @@ class ServingJobsSpec extends AnyFunSuite {
       assert(opens.isEmpty, name)
       // the match query already resolved match_and's terms: one fan-out job
       if (name == "match_and") assert(starts.length === 1)
+    }
+  }
+
+  test("each query tree shape is one fan-out job on a warm handle") {
+    import FieldedIndex.Query._
+    val idx = FieldedQueries.ensureFieldedIndex(spark)
+    def spec(f: String) = FieldedIndex.CrossrefMapping.find(_.field == f).get
+    val shapes: Seq[(String, FieldedIndex.Query)] = Seq(
+      "boosted match" -> Match(spec("title"), "title 42", 2.0),
+      "and match" -> Match(spec("title"), "second title 42", and = true),
+      "bool" -> Bool(
+        must = Seq(Match(spec("bibliographic"), "fam123 fam223 fam323")),
+        should = Seq(Phrase(spec("title"), "second title")),
+        filter = Some(Terms(spec("volume"), Seq("23"))),
+        mustNot = Some(Terms(spec("year"), Seq("1993")))),
+      "dis_max" -> DisMax(FieldedQueries.MultiLegs.map { case (f, t) =>
+        Match(spec(f), t) }, 0.3))
+    shapes.foreach { case (name, q) =>
+      val first = rows(FieldedIndex.query(spark, idx, q, QuerySet.K))
+      assert(first.nonEmpty, name)
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val (hit, jobs) = jobsOf(rows(FieldedIndex.query(spark, idx, q, QuerySet.K)))
+      assert(jobs === 1, name)
+      assert(hit === first, name)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === persisted, name)
+    }
+  }
+
+  test("a query tree the kernel cannot serve is refused before any job") {
+    import FieldedIndex.Query._
+    val idx = FieldedQueries.ensureFieldedIndex(spark)
+    def spec(f: String) = FieldedIndex.CrossrefMapping.find(_.field == f).get
+    // the trees name `issue` (the and match `journal`), field sets no other
+    // query opens: a refusal after the handle open would persist a shard RDD
+    val issue = Match(spec("issue"), "3")
+    val title = Match(spec("title"), "title 42")
+    val shapes: Seq[(String, FieldedIndex.Query, String)] = Seq(
+      ("and leaf in a bool", Bool(should = Seq(issue, title.copy(and = true))),
+        "top-level"),
+      ("and leaf in a dis_max", DisMax(Seq(issue, title.copy(and = true)), 0.0),
+        "top-level"),
+      ("nested bool", Bool(must = Seq(issue, Bool(should = Seq(title)))),
+        "nested"),
+      ("dis_max in a bool", Bool(should = Seq(issue, DisMax(Seq(title), 0.5))),
+        "nested"),
+      ("bool in a dis_max", DisMax(Seq(issue, Bool(should = Seq(title))), 0.5),
+        "nested"),
+      ("zero boost", Bool(should = Seq(issue, title.copy(boost = 0.0))), "boost"),
+      ("zero boost at the top", issue.copy(boost = 0.0), "boost"),
+      ("65 clauses", Bool(should = issue +: Seq.fill(64)(title)), "at most 64"),
+      ("and match of 65 terms", Match(spec("journal"),
+        (1 to 65).map(i => s"w$i").mkString(" "), and = true), "at most 64"),
+      ("tie breaker above 1", DisMax(Seq(issue, title), 1.5), "tie_breaker"),
+      ("filter-only bool", Bool(filter = Some(Terms(spec("issue"), Seq("3")))),
+        "scored clause"))
+    shapes.foreach { case (name, q, frag) =>
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val (e, jobs) = jobsOf(intercept[IllegalArgumentException](
+        FieldedIndex.query(spark, idx, q, QuerySet.K)))
+      assert(e.getMessage.contains(frag), s"$name: ${e.getMessage}")
+      assert(jobs === 0, name)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === persisted, name)
     }
   }
 
