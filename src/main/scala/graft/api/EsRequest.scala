@@ -350,7 +350,7 @@ object EsRequest {
           }
         Query.Bool(clauses("must"), clauses("should"), terms("filter"),
           terms("must_not"),
-          optInt(body, "minimum_should_match").getOrElse(-1))
+          optInt(body, "minimum_should_match"))
       case "dis_max" =>
         known(obj(body, "dis_max"), Set("queries", "tie_breaker"), "dis_max")
         Query.DisMax(clauses("queries"),

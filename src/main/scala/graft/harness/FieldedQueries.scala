@@ -153,7 +153,7 @@ object FieldedQueries {
   def fieldMsm(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureFieldedIndex(spark)
     FieldedIndex.query(spark, dir,
-      Query.Bool(should = multiLeaves(MsmLegs), minShouldMatch = 2), K)
+      Query.Bool(should = multiLeaves(MsmLegs), minShouldMatch = Some(2)), K)
       .join(docMap(spark, dir), "doc_id")
       .select(col("rnk"), col("doi"), col("score_x6"))
       .orderBy("rnk")
@@ -364,7 +364,7 @@ object FieldedQueries {
       .withColumn("qid", lit(1L))
     val q2 = FieldedIndex.query(spark, dir, Query.Bool(should =
       bib :+ Query.Phrase(spec("title"), BoolPhraseSelective),
-      minShouldMatch = 2), K)
+      minShouldMatch = Some(2)), K)
       .withColumn("qid", lit(2L))
     q1.unionByName(q2)
       .join(docMap(spark, dir), "doc_id")

@@ -304,12 +304,13 @@ object FieldedIndex {
     /** ES bool. `must` and `should` are scored Match/Phrase leaves; each
       * clause scores under its own field's stats and a hit's score is the
       * clause sum. `filter` (required) and `mustNot` (excluded) are
-      * unscored term sets. `minShouldMatch` counts should clauses; −1 is
-      * the ES default, 0 with a must clause, else 1. */
+      * unscored term sets. `minShouldMatch` counts should clauses as ES
+      * does: N ≥ 0 requires N, −N requires all but N (at least 0), and
+      * unset is 0 with a must clause, else 1. */
     final case class Bool(must: Seq[Query] = Nil, should: Seq[Query] = Nil,
                           filter: Option[Terms] = None,
                           mustNot: Option[Terms] = None,
-                          minShouldMatch: Int = -1) extends Query
+                          minShouldMatch: Option[Int] = None) extends Query
     /** ES dis_max (multi_match best_fields): a hit scores
       * max(leg) + tieBreaker · Σ(other legs), tieBreaker in [0, 1]. */
     final case class DisMax(queries: Seq[Query], tieBreaker: Double)
@@ -380,9 +381,11 @@ object FieldedIndex {
         s"distinct term), got ${legs.length + phrases.length}")
     val msm =
       if (and) legs.length
-      else if (b.minShouldMatch >= 0) b.minShouldMatch
-      else if (b.must.nonEmpty) 0
-      else 1
+      else b.minShouldMatch match {
+        case Some(n) if n >= 0 => n
+        case Some(n) => math.max(0, b.should.length + n)
+        case None => if (b.must.nonEmpty) 0 else 1
+      }
     def analyzed(t: Terms): (String, Seq[String]) = (t.spec.field,
       t.values.flatMap(v => Analyzer.analyzeChain(t.spec.chain, v)))
     val fields = (mustM ++ shouldM).map(_.spec.field) ++
@@ -414,7 +417,7 @@ object FieldedIndex {
                  legs: Seq[(FieldSpec, String)], k: Int,
                  minShouldMatch: Int = 1): DataFrame =
     query(spark, indexDir, Query.Bool(should = legs.map { case (s, t) =>
-      Query.Match(s, t) }, minShouldMatch = minShouldMatch), k)
+      Query.Match(s, t) }, minShouldMatch = Some(minShouldMatch)), k)
 
   /** ES bool/should of match legs and match_phrase clauses ([[query]]);
     * `minShouldMatch` counts phrase clauses too. Returns
@@ -425,7 +428,7 @@ object FieldedIndex {
                 minShouldMatch: Int = 1): DataFrame =
     query(spark, indexDir, Query.Bool(should = legs.map { case (s, t) =>
       Query.Match(s, t) } ++ phraseLegs.map { case (s, t) => Query.Phrase(s, t) },
-      minShouldMatch = minShouldMatch), k)
+      minShouldMatch = Some(minShouldMatch)), k)
 
   /** ES match with `fuzziness` against one field ([[Searcher.fuzzySearch]]
     * semantics: AUTO or explicit edits, full Damerau-Levenshtein,
@@ -1546,7 +1549,7 @@ object FieldedIndex {
                           size: Int): DataFrame = {
     val fgSet = fgDocs.select("doc_id").distinct()
     val fgTotal = fgSet.count().toDouble
-    val bgTotal = IndexTables.corpusStats(spark,
+    val bgTotal = IndexTables.corpusStats(
       new TableIO(fieldDir(indexDir, spec.field))).n_docs.toDouble
     require(fgTotal > 0 && bgTotal > 0, "empty foreground or background")
     val fg = docValues(spark, indexDir, spec.field)

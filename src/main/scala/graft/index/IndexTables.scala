@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.io.TableIO
 import graft.model.CorpusStats
@@ -9,12 +10,12 @@ import graft.model.CorpusStats
 /** Committed-only union views over the base index plus streamed segments.
   *
   * Storage model (the Lucene-segment / LSM shape): the batch build writes an
-  * immutable BASE (`doc_lens`, `doc_map`, `term_stats`, `stats`,
+  * immutable BASE (`doc_terms`, `doc_map`, `term_stats`,
   * `postings/group=<g<1000>`), and each streamed micro-batch `b` writes an
   * immutable SEGMENT — `stream_segments/batch=b/{doc_lens,doc_map,
-  * term_stats,stats}` + `postings/group=<1000+b>` — with `overwrite`
-  * semantics, then commits the `stream_g<b>` manifest step LAST. Nothing is
-  * ever appended in place and nothing merged in place, so a replayed batch
+  * term_stats}` + `postings/group=<1000+b>` — with `overwrite` semantics,
+  * then commits the `stream_g<b>` manifest step LAST. Nothing is ever
+  * appended in place and nothing merged in place, so a replayed batch
   * (crash anywhere before the manifest commit) rewrites byte-identical
   * segment files: ingest is idempotent BY CONSTRUCTION, and the manifest
   * commit is the single visibility point.
@@ -25,9 +26,14 @@ import graft.model.CorpusStats
   * after which `compact_e<N>` in the manifest retires segments ≤ N from the
   * active set.
   *
-  * The additive tables stay exact under this model: N and total_dl sum over
-  * segments; df(term) sums over per-segment partial df (doc sets are
-  * disjoint — each streamed doc gets a fresh id past the current max).
+  * Corpus stats (N, total_dl, avgdl) are no table: they are snapshot
+  * properties committed in the same snapshot as the step that makes them
+  * true (the build's `stats` step, each batch's `stream_g<b>`), so the
+  * committed manifest always holds the stats of the committed view and
+  * [[corpusStats]] reads them without a job. The additive tables stay
+  * exact under this model: N and total_dl sum over segments; df(term) sums
+  * over per-segment partial df (doc sets are disjoint — each streamed doc
+  * gets a fresh id past the current max).
   */
 object IndexTables {
 
@@ -96,24 +102,28 @@ object IndexTables {
       .groupBy("term").agg(sum("df").as("df"))
   }
 
-  /** Merged exact corpus stats: N and total_dl additive over segments,
-    * avgdl derived. Segment `stats` rows carry batch-local (n_docs,
-    * total_dl); their avgdl field is ignored. */
-  def corpusStats(spark: SparkSession, io: TableIO): CorpusStats = {
-    import spark.implicits._
-    val batches = activeBatches(io)
-    if (batches.isEmpty)
-      // na.fill: an empty (sub-)index stores null avg/sum aggregates
-      spark.read.parquet(io.tablePath("stats"))
-        .na.fill(0.0, Seq("avgdl")).na.fill(0L, Seq("total_dl"))
-        .as[CorpusStats].head()
-    else {
-      val r = unionView(spark, io, "stats", batches)
-        .agg(sum("n_docs").as("n"), sum("total_dl").as("dl")).head()
-      val n = r.getLong(0); val dl = r.getLong(1)
-      CorpusStats(n, dl.toDouble / n, dl)
-    }
+  /** The exact corpus stats of the committed view (base + active
+    * segments), read from the current snapshot's properties: no job. */
+  def corpusStats(io: TableIO): CorpusStats = {
+    val p = io.props()
+    def get(key: String): String = p.getOrElse(key,
+      throw new IllegalStateException(s"${io.indexDir} has no `$key` " +
+        s"snapshot property: it predates ${PostingsBuilder.FormatStep}, " +
+        "which keeps corpus stats in the manifest; rebuild the index"))
+    CorpusStats(get("n_docs").toLong, get("avgdl").toDouble,
+      get("total_dl").toLong)
   }
+
+  /** `stats` as the snapshot properties [[corpusStats]] reads. */
+  def statsProps(stats: CorpusStats): Map[String, String] = Map(
+    "n_docs" -> stats.n_docs.toString,
+    "total_dl" -> stats.total_dl.toString,
+    "avgdl" -> java.lang.Double.toString(stats.avgdl))
+
+  /** The postings table's schema: the block columns plus the `group`
+    * partition column. Reads pass it so no schema-inference job runs. */
+  val PostingsSchema: StructType =
+    PostingsBuilder.BlockSchema.add("group", IntegerType)
 
   /** Postings blocks of the base + active segments only: partition-prunes to
     * committed groups, so a crashed batch's half-written group never reaches
@@ -123,7 +133,7 @@ object IndexTables {
     * sums it once for each term a segment holds). */
   def postings(spark: SparkSession, io: TableIO): DataFrame = {
     val active = activeBatches(io).map(GroupBase + _)
-    spark.read.parquet(io.tablePath("postings"))
+    spark.read.schema(PostingsSchema).parquet(io.tablePath("postings"))
       .where(col("group") < GroupBase || col("group").isin(active: _*))
   }
 }

@@ -48,6 +48,9 @@ import graft.query.Bm25
   *    groups subdivide the postings stage. A killed build resumes from the
   *    last committed step via the [[TableIO]] manifest. Lineage rows
   *    (shard, doc range, bytes, wall-time) land in a metrics table.
+  *  - **Reproducibility**: every index table is a function of the input
+  *    alone; the only run-dependent values are wall times, which the
+  *    driver measures and writes to `lineage` and the manifest.
   */
 object PostingsBuilder {
 
@@ -81,8 +84,10 @@ object PostingsBuilder {
     * serving garbage from a stale cached directory. */
   // v3: positions tier (PostingBlock.pos); v4: term_stats sorted by term
   // with the numeric shadow column (dictionary-range pruning); v5: each
-  // base block carries its term's global df (PostingBlock.df)
-  val FormatStep = "format_pfor5"
+  // base block carries its term's global df (PostingBlock.df); v6: corpus
+  // stats are snapshot properties, not a `stats` table, and blocks carry no
+  // encode wall time
+  val FormatStep = "format_pfor6"
 
   /** Invalidate an index directory written under an older block format,
     * then stamp the current marker — committed BEFORE any data step, so a
@@ -105,7 +110,7 @@ object PostingsBuilder {
 
   /** Build the postings index. `concurrentSteps` (e.g. the caller's doc_map
     * write) run in parallel with the postings stage — they may depend on
-    * any table staged BEFORE postings (doc_terms, stats). `docTermFn` maps
+    * any table staged BEFORE postings (doc_terms). `docTermFn` maps
     * the input corpus to the per-doc (doc_id, dl, tfs[]) relation — the
     * default analyzes a `text` column with the stopword chain; fielded
     * builds ([[FieldedIndex]]) pass a chain-specific variant. */
@@ -113,7 +118,6 @@ object PostingsBuilder {
             cfg: Config = Config(),
             concurrentSteps: Seq[(String, () => Unit)] = Nil,
             docTermFn: DataFrame => DataFrame = TextIndex.docTermFreqs(_)): TableIO = {
-    import spark.implicits._
     val io = new TableIO(indexDir)
     // idempotent re-run: complete only when FinalStep AND every concurrent
     // step committed — async members commit independently, so a crash after
@@ -175,24 +179,24 @@ object PostingsBuilder {
     val docTerms = spark.read.parquet(io.tablePath("doc_terms"))
 
     // stats is the ONLY derivation gating the postings stage (avgdl
-    // normalizes the block-max bounds): a tiny full-pass aggregate, run
-    // alone so its single task is not queued behind sibling stages.
+    // normalizes the block-max bounds): one tiny column-pruned aggregate
+    // over doc_terms (which has EVERY doc, including zero-token ones that
+    // never reach postings/lineage), run alone so its single task is not
+    // queued behind sibling stages. Its results are snapshot properties:
+    // the corpus stats every reader takes from the manifest, and
+    // max_doc_id, the next free id streamed ingest reads instead of
+    // scanning a corpus-sized table per micro-batch (−1 = empty corpus).
     io.stepProps("stats") {
-      TextIndex.corpusStats(docTerms.select(col("doc_id"), col("dl")))
-        .write.mode("overwrite").parquet(io.tablePath("stats"))
-      // max_doc_id rides the manifest as a snapshot property so streamed
-      // ingest reads the next free id from one tiny metadata file instead
-      // of scanning a corpus-sized table per micro-batch (−1 = empty
-      // corpus). Computed from doc_terms (which has EVERY doc, including
-      // zero-token ones that never reach postings/lineage); the agg is one
-      // column-pruned scan folded into the build.
-      Map("max_doc_id" -> IndexTables.maxDocId(docTerms, default = -1L).toString)
+      val r = docTerms.agg(count(lit(1)), avg(col("dl")),
+        sum(col("dl")).cast("long"), max(col("doc_id"))).head()
+      // an EMPTY corpus (legal for a fielded build whose field has no
+      // values anywhere) aggregates avg/sum/max to null
+      def orElse[T](i: Int, zero: T): T =
+        if (r.isNullAt(i)) zero else r.getAs[T](i)
+      IndexTables.statsProps(CorpusStats(r.getLong(0), orElse(1, 0.0),
+        orElse(2, 0L))) + ("max_doc_id" -> orElse(3, -1L).toString)
     }
-    // na.fill: an EMPTY corpus (legal for a fielded build whose field has
-    // no values anywhere) aggregates avg/sum to null — decode as zeros
-    val stats = spark.read.parquet(io.tablePath("stats"))
-      .na.fill(0.0, Seq("avgdl")).na.fill(0L, Seq("total_dl"))
-      .as[CorpusStats].head()
+    val stats = IndexTables.corpusStats(io)
 
     // Every other derivation OVERLAPS the heavy postings stage below
     // instead of serializing before it (the round-1 barrier structure cost
@@ -235,7 +239,8 @@ object PostingsBuilder {
 
     try {
       for (g <- 0 until cfg.shardGroups) {
-        io.step(s"postings_g$g") {
+        io.stepProps(s"postings_g$g") {
+          val t0 = System.nanoTime()
           // flat layout (no partitionBy): queries prune by TERM via row-group
           // min/max stats (rows are term-sorted within files), and every query
           // touches every doc shard anyway — directory partitioning by shard
@@ -256,6 +261,9 @@ object PostingsBuilder {
             .select(BlockSchema.fieldNames.map(col).toSeq: _*)
             .write.mode("overwrite")
             .parquet(io.tablePath(s"postings/group=$g"))
+          // the group's wall time, measured on the driver so no block
+          // carries a run-dependent value; lineage reports it per shard
+          Map(wallProp(g) -> ((System.nanoTime() - t0) / 1000000L).toString)
         }
         cfg.failAfterGroup.filter(_ == g).foreach { _ =>
           throw new RuntimeException(s"injected failure after group $g")
@@ -271,7 +279,11 @@ object PostingsBuilder {
     overlapped.join() // term_stats + caller steps done before completion
     io.step(FinalStep) {
       val snapId = io.currentSnapshotId().getOrElse("0")
-      spark.read.parquet(io.tablePath("postings"))
+      val props = io.props()
+      val walls = typedLit((0 until cfg.shardGroups).map(g =>
+        g -> props.get(wallProp(g)).fold(0L)(_.toLong)).toMap)
+      spark.read.schema(IndexTables.PostingsSchema)
+        .parquet(io.tablePath("postings"))
         .groupBy(col("doc_shard"))
         .agg(
           min(col("first_doc_id")).as("doc_lo"),
@@ -280,13 +292,17 @@ object PostingsBuilder {
           count(lit(1)).as("n_blocks"),
           sum(length(col("doc_ids")) + length(col("tfs")) +
             length(col("dls")) + length(col("pos")))
-            .cast("long").as("postings_bytes"),
-          max(col("enc_wall_ms")).as("build_wall_ms"))
+            .cast("long").as("postings_bytes"))
+        .withColumn("build_wall_ms", element_at(walls,
+          pmod(col("doc_shard"), lit(cfg.shardGroups))))
         .withColumn("snapshot_id", lit(snapId))
         .write.mode("overwrite").parquet(io.tablePath("lineage"))
     }
     io
   }
+
+  /** The manifest property holding postings group `g`'s build wall ms. */
+  private def wallProp(g: Int): String = s"postings_g${g}_wall_ms"
 
   /** PostingBlock's DataFrame schema (invertStage output, df null). */
   val BlockSchema: org.apache.spark.sql.types.StructType =
@@ -340,7 +356,6 @@ object PostingsBuilder {
       import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
       import org.apache.spark.unsafe.types.UTF8String
 
-      private val t0 = System.currentTimeMillis()
       private val ids = new Array[Long](blockSize)
       private val tfs = new Array[Int](blockSize)
       private val dls = new Array[Int](blockSize)
@@ -368,7 +383,7 @@ object PostingsBuilder {
           Codec.encodeDocIds(java.util.Arrays.copyOf(ids, n)),
           Codec.encodeTfs(java.util.Arrays.copyOf(tfs, n)),
           Codec.encodeTfs(java.util.Arrays.copyOf(dls, n)),
-          maxNorm, maxTf, System.currentTimeMillis() - t0,
+          maxNorm, maxTf,
           Codec.encodePositions(java.util.Arrays.copyOf(poss, n)), null)))
         blockId += 1
         n = 0
@@ -405,7 +420,6 @@ object PostingsBuilder {
     * kernel must agree with (asserted in IndexSpec round-trips). */
   def encodePartition(avgdl: Double, blockSize: Int)(
       rows: Iterator[TfRow]): Iterator[PostingBlock] = new Iterator[PostingBlock] {
-    private val t0 = System.currentTimeMillis()
     private val ids = new Array[Long](blockSize)
     private val tfs = new Array[Int](blockSize)
     private val dls = new Array[Int](blockSize)
@@ -432,7 +446,7 @@ object PostingsBuilder {
         Codec.encodeDocIds(java.util.Arrays.copyOf(ids, n)),
         Codec.encodeTfs(java.util.Arrays.copyOf(tfs, n)),
         Codec.encodeTfs(java.util.Arrays.copyOf(dls, n)),
-        maxNorm, maxTf, System.currentTimeMillis() - t0,
+        maxNorm, maxTf,
         Codec.encodePositions(java.util.Arrays.copyOf(poss, n)))
       blockId += 1
       n = 0

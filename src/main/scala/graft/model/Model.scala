@@ -16,10 +16,8 @@ case class TfRow(doc_shard: Int, term: String, doc_id: Long, tf: Int, dl: Int,
   * the block-max WAND pruning bound — computed with the avgdl at encode
   * time; max_tf additionally enables the avgdl-independent fallback bound
   * tf/(tf+k1(1−b)) that stays valid after streaming appends shift avgdl.
-  * enc_wall_ms is the wall time, in ms, from the start of the encode task
-  * to this block's emission, so it differs from row to row and from run to
-  * run (lineage takes the max as the task's build wall). It is why two
-  * builds of the same input do not write the same bytes. */
+  * Every field is a function of the input, so two builds of the same input
+  * write the same blocks. */
 case class PostingBlock(
     doc_shard: Int,
     term: String,
@@ -32,7 +30,6 @@ case class PostingBlock(
     dls: Array[Byte],
     max_tf_norm: Double,
     max_tf: Int,
-    enc_wall_ms: Long,
     /** PFor-encoded per-doc token positions (Codec.encodePositions) —
       * present when the build stores positions (fielded text/keyword
       * chains, ES parity); empty for docs/freqs-only indexes (the webtext
@@ -50,7 +47,8 @@ case class PostingBlock(
 case class TermStat(term: String, df: Long)
 
 /** total_dl keeps the exact token sum so streaming appends can merge
-  * avgdl without accumulating FP error: avgdl = total_dl / n_docs. */
+  * avgdl without accumulating FP error: avgdl = total_dl / n_docs. An index
+  * stores its stats as snapshot properties ([[graft.index.IndexTables]]). */
 case class CorpusStats(n_docs: Long, avgdl: Double, total_dl: Long)
 
 /** Per-shard lineage/metrics row (north_rule: partition id, doc range,

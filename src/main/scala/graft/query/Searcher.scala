@@ -360,9 +360,7 @@ object Searcher {
       requiredLegs.foldLeft(0L)((m, l) => m | (1L << l)))), withQid = false)
   }
 
-  private val BlockCols = Seq("doc_shard", "term", "block_id", "n",
-    "first_doc_id", "last_doc_id", "doc_ids", "tfs", "dls", "max_tf_norm",
-    "max_tf", "enc_wall_ms", "pos", "df")
+  private val BlockCols = graft.index.PostingsBuilder.BlockSchema.fieldNames.toSeq
 
   /** Open a one-field handle over `indexDir`; its field is unnamed (""). */
   def open(spark: SparkSession, indexDir: String): Handle =
@@ -384,7 +382,7 @@ object Searcher {
     }
     val fields = ios.map { case (f, io) =>
       f -> FieldState(io.indexDir,
-        graft.index.IndexTables.corpusStats(spark, io), tightBoundsOf(io))
+        graft.index.IndexTables.corpusStats(io), tightBoundsOf(io))
     }.toMap
     // Fast path (no active streamed segments — the compacted common case):
     // the encode stage hash-repartitions by doc_shard and writes one file
@@ -486,6 +484,7 @@ object Searcher {
     openSession.conf.set("spark.sql.files.openCostInBytes",
       (1L << 20).toString)
     val blocks = openSession.read
+      .schema(graft.index.IndexTables.PostingsSchema)
       .parquet(io.tablePath("postings"))
       .where(col("group") < graft.index.IndexTables.GroupBase)
       .select(BlockCols.head, BlockCols.tail: _*)

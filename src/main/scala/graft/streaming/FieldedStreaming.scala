@@ -22,8 +22,9 @@ import graft.io.TableIO
   *  2. one segment PER FIELD sub-index via the shared
   *     [[IncrementalIndexer.appendSegment]] core — per-field stats merge
   *     additively inside each sub-index exactly as in the single-index
-  *     model, and each field dir commits its own `stream_g<b>` step, so a
-  *     crashed batch resumes by redoing only the unfinished fields;
+  *     model, and each field dir commits its own `stream_g<b>` step with
+  *     its merged stats, so a crashed batch resumes by redoing only the
+  *     unfinished fields;
   *  3. the TOP manifest's `stream_g<b>` commit — the batch-level
   *     visibility point (the doc_map segment and "batch happened" fact).
   *
@@ -111,9 +112,10 @@ object FieldedStreaming {
             val corpus = withIds.select(col("doc_id"), cleaned.as("vals"))
               .where(size(col("vals")) > 0)
             val docTerms = TextIndex.fieldDocTermFreqs(corpus, f.chain).cache()
-            IncrementalIndexer.appendSegment(spark, fio, docTerms, batchId, cfg)
+            val stats =
+              IncrementalIndexer.appendSegment(spark, fio, docTerms, batchId, cfg)
             docTerms.unpersist()
-            fio.commitStep(step)
+            fio.commitStep(step, IndexTables.statsProps(stats))
           }
         } catch { case e: Throwable => failures.put(f.field, e) }
       }, s"graft-ingest-${f.field}")

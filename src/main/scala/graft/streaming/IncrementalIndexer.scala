@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.index.{DocIds, IndexTables, PostingsBuilder, TextIndex}
 import graft.io.TableIO
+import graft.model.CorpusStats
 
 /** Structured-Streaming incremental index ingest: `readStream` over a
   * directory of input_hint parquet (new crawl files) → `foreachBatch` →
@@ -13,14 +14,15 @@ import graft.io.TableIO
   *
   * Append model (doc-sharded index): a batch's docs get fresh dense ids past
   * the current max, so its shards are DISJOINT from existing ones. The batch
-  * writes an immutable SEGMENT — batch-keyed doc_lens/doc_map/term_stats/
-  * stats tables plus its own postings group — ALL with overwrite semantics
-  * (see [[graft.index.IndexTables]] for the storage model), and commits the
-  * `stream_g<batchId>` manifest step LAST. Exactly-once follows without any
-  * merge bookkeeping: a replayed batch (crash anywhere before the commit)
-  * recomputes the same inputs — the committed view cannot have advanced,
-  * micro-batches are sequential — and overwrites byte-identical segment
-  * files; a replay AFTER the commit no-ops on the step check. Readers union
+  * writes an immutable SEGMENT — batch-keyed doc_lens/doc_map/term_stats
+  * tables plus its own postings group — ALL with overwrite semantics (see
+  * [[graft.index.IndexTables]] for the storage model), and commits the
+  * `stream_g<batchId>` manifest step LAST, with the merged corpus stats.
+  * Exactly-once follows without any merge bookkeeping: a replayed batch
+  * (crash anywhere before the commit) recomputes the same inputs — the
+  * committed view cannot have advanced, micro-batches are sequential — and
+  * overwrites byte-identical segment files; a replay AFTER the commit
+  * no-ops on the step check. Readers union
   * base + committed segments, so global statistics stay exact (N, total_dl,
   * df all additive over disjoint doc sets) and query-time scores — always
   * computed from stored (tf, dl) + merged stats — remain exact BM25 over
@@ -73,28 +75,30 @@ object IncrementalIndexer {
     // one tokenization pass for the batch — row-local tf (no token shuffle,
     // no tf⋈dl join; same kernel as the batch build)
     val docTerms = TextIndex.docTermFreqs(withIds).cache()
-    appendSegment(spark, io, docTerms, batchId, cfg,
+    val stats = appendSegment(spark, io, docTerms, batchId, cfg,
       docMapKeys = Some(withIds.select(col("doc_id"), col("url"))))
     // new top of the id space from the cached batch-sized relation (empty
     // batch keeps the old max), committed atomically with the batch step
     val newMax = IndexTables.maxDocId(docTerms, default = nextId - 1)
     docTerms.unpersist()
-    // the single visibility point (atomic RMW of step + max_doc_id)
-    io.commitStep(step, Map("max_doc_id" -> newMax.toString))
+    // the single visibility point (atomic RMW of step, max_doc_id and the
+    // merged corpus stats)
+    io.commitStep(step, IndexTables.statsProps(stats) +
+      ("max_doc_id" -> newMax.toString))
   }
 
   /** The reusable segment-append core: write one immutable batch segment
-    * (doc_lens / term_stats / stats [+ doc_map when the index keeps one] +
-    * its postings group) for an already-id-assigned per-doc tf relation.
+    * (doc_lens / term_stats [+ doc_map when the index keeps one] + its
+    * postings group) for an already-id-assigned per-doc tf relation, and
+    * return the corpus stats of the index with the segment merged in.
     * Everything is an idempotent overwrite; the caller commits the
-    * `stream_g<batchId>` visibility step (per sub-index — the fielded
-    * ingest appends one segment per field dir, each committing its own
-    * step so replay skips exactly the finished fields). */
+    * `stream_g<batchId>` visibility step with those stats (per sub-index —
+    * the fielded ingest appends one segment per field dir, each committing
+    * its own step so replay skips exactly the finished fields). */
   private[streaming] def appendSegment(spark: SparkSession, io: TableIO,
       docTerms: DataFrame, batchId: Long, cfg: PostingsBuilder.Config,
-      docMapKeys: Option[DataFrame] = None): Unit = {
-    import spark.implicits._
-    val stats0 = IndexTables.corpusStats(spark, io)
+      docMapKeys: Option[DataFrame] = None): CorpusStats = {
+    val stats0 = IndexTables.corpusStats(io)
     val dl = docTerms.select(col("doc_id"), col("dl"))
 
     // batch-local stats (the segment's additive delta; avgdl of the MERGED
@@ -104,7 +108,7 @@ object IncrementalIndexer {
     val dl1 = if (batchAgg.isNullAt(1)) 0L else batchAgg.getLong(1)
     val nMerged = stats0.n_docs + n1
     // an empty merged corpus (a field nothing has values for) has no
-    // meaningful avgdl; 0.0 keeps the encode total and the stats row sane
+    // meaningful avgdl; 0.0 keeps the encode total and the stats sane
     val avgdlNew =
       if (nMerged == 0) 0.0 else (stats0.total_dl + dl1).toDouble / nMerged
 
@@ -119,8 +123,6 @@ object IncrementalIndexer {
     docTerms.select(explode(col("tfs.term")).as("term"))
       .groupBy("term").agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(seg("term_stats"))
-    Seq(graft.model.CorpusStats(n1, 0.0, dl1)).toDF()
-      .write.mode("overwrite").parquet(seg("stats"))
 
     // batch postings: new group (disjoint from build groups); same shuffle
     // shape as the batch build — fat per-doc rows by doc_shard, explode
@@ -133,6 +135,7 @@ object IncrementalIndexer {
         ((n1 + cfg.invertPartitionDocs - 1) / cfg.invertPartitionDocs).toInt))
       .write.mode("overwrite")
       .parquet(io.tablePath(s"postings/group=${IndexTables.GroupBase + batchId}"))
+    CorpusStats(nMerged, avgdlNew, stats0.total_dl + dl1)
   }
 
   /** Start the streaming ingest over a directory of input_hint parquet. */

@@ -99,6 +99,15 @@ class EsDslSpec extends AnyFunSuite {
     val legs = FieldedQueries.MsmLegs.map { case (f, t) => (spec(f), t) }
     assert(run(msm) ===
       rows(FieldedNaive.boolQueryNaive(spark, idx, legs, Nil, 10, 2)))
+    // a negative count leaves that many should clauses optional: −1 over
+    // the 3 clauses requires 2, not the default 1
+    val negative = msm.replace("\"minimum_should_match\":2",
+      "\"minimum_should_match\":-1")
+    assert(negative !== msm)
+    assert(run(negative) ===
+      rows(FieldedNaive.boolQueryNaive(spark, idx, legs, Nil, 10, 2)))
+    assert(run(negative) !==
+      rows(FieldedNaive.boolQueryNaive(spark, idx, legs, Nil, 10, 1)))
     val notBody =
       """{"query":{"bool":{
         |  "should":[{"match":{"title":"title 7"}}],

@@ -109,16 +109,14 @@ object FieldedNaive {
                   shouldPhrases: Seq[(FieldSpec, String)] = Nil,
                   filter: Option[(FieldSpec, Seq[String])] = None,
                   mustNot: Option[(FieldSpec, Seq[String])] = None,
-                  k: Int = 10, minShouldMatch: Int = -1): DataFrame = {
+                  k: Int = 10, minShouldMatch: Option[Int] = None): DataFrame = {
     // bind before the functions._ import: `filter` would otherwise be
     // ambiguous with org.apache.spark.sql.functions.filter
     val filterOpt = filter
     val mustNotOpt = mustNot
     import org.apache.spark.sql.functions._
-    val msmEff =
-      if (minShouldMatch >= 0) minShouldMatch
-      else if (must.nonEmpty || mustPhrases.nonEmpty) 0
-      else 1
+    val msmEff = minShouldMatch.getOrElse(
+      if (must.nonEmpty || mustPhrases.nonEmpty) 0 else 1)
     val nMatch = must.size + should.size
     val matchC = (must ++ should).zipWithIndex.map { case ((spec, text), li) =>
       Searcher.contribs(handleFor(spark, indexDir, spec.field),

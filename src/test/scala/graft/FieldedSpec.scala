@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.Analyzer
 import graft.harness.FieldedQueries
-import graft.index.{FieldedIndex, PostingsBuilder}
+import graft.index.{FieldedIndex, IndexTables, PostingsBuilder}
 import graft.index.FieldedIndex.Query
 import graft.io.TableIO
 import graft.query.Searcher
@@ -40,10 +40,10 @@ class FieldedSpec extends AnyFunSuite {
   test("per-field BM25 stats: the title field's own N/avgdl/df, not the doc's") {
     // every fixture title is ["Record $i title", "second title $i"]:
     // 6 tokens/doc, 'title' tf=2 in every doc
-    val stats = spark.read.parquet(
-      s"${FieldedIndex.fieldDir(idx, "title")}/stats").head()
-    assert(stats.getAs[Long]("n_docs") === 1000L)
-    assert(stats.getAs[Double]("avgdl") === 6.0)
+    val stats = IndexTables.corpusStats(
+      new TableIO(FieldedIndex.fieldDir(idx, "title")))
+    assert(stats.n_docs === 1000L)
+    assert(stats.avgdl === 6.0)
     val df = spark.read.parquet(
         s"${FieldedIndex.fieldDir(idx, "title")}/term_stats")
       .where(col("term") === "title").head().getAs[Long]("df")
@@ -334,7 +334,7 @@ class FieldedSpec extends AnyFunSuite {
     val mlegs = FieldedQueries.MultiLegs.take(1).map { case (f, t) => (spec(f), t) }
     def bool(phrase: (FieldedIndex.FieldSpec, String), msm: Int) =
       served(Query.Bool(should = matches(mlegs) :+ Query.Phrase(phrase._1, phrase._2),
-        minShouldMatch = msm))
+        minShouldMatch = Some(msm)))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("rnk"), r.getAs[Long]("doc_id"),
         r.getAs[Long]("score_x6"))).toSeq.sorted

@@ -64,7 +64,7 @@ class FieldedStreamSpec extends AnyFunSuite {
     assert(bodyDocs(dir, "w0") === 8L) // k000's OLD body still present
     // per-field stats merged additively (N over the union)
     val bio = new TableIO(FieldedIndex.fieldDir(dir, "body"))
-    assert(graft.index.IndexTables.corpusStats(spark, bio).n_docs === 65L)
+    assert(graft.index.IndexTables.corpusStats(bio).n_docs === 65L)
     assert(!Searcher.tightBoundsOf(bio)) // streamed appends ⇒ safe bounds
 
     // replay is a no-op (top marker committed)

@@ -9,10 +9,11 @@ import graft.io.TableIO
 import graft.streaming.{Compactor, IncrementalIndexer}
 import graft.web.{WebIndex, WebtextGen}
 
-/** The v5 postings format: every base block carries its term's exact global
-  * df (the `term_stats` value), written at build and rewritten by
+/** The postings format: every base block carries its term's exact global
+  * df (the `term_stats` value, since v5), written at build and rewritten by
   * compaction; streamed segment blocks carry none; an index stamped with an
-  * older format marker reads as incomplete and rebuilds. */
+  * older format marker reads as incomplete and rebuilds (v6 keeps corpus
+  * stats in the manifest, which a v5 directory lacks). */
 class PostingsFormatSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -63,20 +64,42 @@ class PostingsFormatSpec extends AnyFunSuite {
     assert(dfMismatches(compacted) === 0)
   }
 
-  test("a directory stamped only with format_pfor4 is incomplete and rebuilds") {
-    val dir = s"$root/old-format"
+  /** An index whose manifest names only the `old` format marker reads as
+    * incomplete, and the next build rebuilds it at the current format. */
+  private def rebuildsFrom(old: String): Unit = {
+    val dir = s"$root/old-format-$old"
     new TableIO(dir).deleteAll()
     WebIndex.build(spark, docs(0, 300), dir, cfg)
     assert(PostingsBuilder.isComplete(dir))
     val io = new TableIO(dir)
-    io.commit(io.committedSteps() - PostingsBuilder.FormatStep + "format_pfor4")
+    io.commit(io.committedSteps() - PostingsBuilder.FormatStep + old)
     assert(!PostingsBuilder.isComplete(dir))
 
     WebIndex.build(spark, docs(0, 300), dir, cfg)
     val steps = new TableIO(dir).committedSteps()
     assert(steps.contains(PostingsBuilder.FormatStep))
-    assert(!steps.contains("format_pfor4"))
+    assert(!steps.contains(old))
     assert(PostingsBuilder.isComplete(dir))
     assert(dfMismatches(new TableIO(dir)) === 0)
+    assert(IndexTables.corpusStats(new TableIO(dir)).n_docs === 300L)
+  }
+
+  test("a directory stamped only with format_pfor4 is incomplete and rebuilds") {
+    rebuildsFrom("format_pfor4")
+  }
+
+  test("a directory stamped only with format_pfor5 is incomplete and rebuilds") {
+    rebuildsFrom("format_pfor5")
+  }
+
+  test("corpus stats of a directory without stats properties name the rebuild") {
+    // what a v5 directory's manifest holds: steps, max_doc_id, no stats
+    val io = new TableIO(s"$root/no-stats")
+    io.deleteAll()
+    io.commit(Set("format_pfor5", "stats", PostingsBuilder.FinalStep),
+      Map("max_doc_id" -> "299"))
+    val e = intercept[IllegalStateException](IndexTables.corpusStats(io))
+    assert(e.getMessage.contains("rebuild"))
+    assert(e.getMessage.contains(PostingsBuilder.FormatStep))
   }
 }

@@ -152,6 +152,21 @@ class ServingJobsSpec extends AnyFunSuite {
   private def holding(h: Searcher.Handle): Int =
     h.shards.mapPartitions(it => Iterator(it.hasNext)).collect().count(identity)
 
+  test("open is one job on a bare base, at most three with active segments") {
+    // corpus stats come from the manifest and postings are read with their
+    // known schema, so a bare open's one job materializes the shards
+    val base = dir
+    val (bare, bareJobs) = jobsOf(Searcher.open(spark, base))
+    bare.close()
+    assert(bareJobs === 1)
+    // the shuffle open: the exchange's map stage, the shard build and the
+    // df lookup of the keys a segment holds
+    val root = segmented("serving-jobs-open", PostingsBuilder.Config(shardSize = 256))
+    val (seg, segJobs) = jobsOf(Searcher.open(spark, root))
+    seg.close()
+    assert(segJobs <= 3, s"$segJobs jobs")
+  }
+
   test("a warm search is one job, also when a term is new") {
     val q = Seq(1 -> "fast join merge")
     val first = rows(Searcher.search(handle, q, QuerySet.K))

@@ -77,8 +77,8 @@ class StreamSpec extends AnyFunSuite {
 
     // stats merged exactly (committed union view)
     val io = new TableIO(idxDir)
-    val a = IndexTables.corpusStats(spark, io)
-    val b = IndexTables.corpusStats(spark, new TableIO(refDir))
+    val a = IndexTables.corpusStats(io)
+    val b = IndexTables.corpusStats(new TableIO(refDir))
     assert(a.n_docs === b.n_docs)
     assert(a.total_dl === b.total_dl)
     assert(a.avgdl === b.avgdl)
@@ -89,21 +89,28 @@ class StreamSpec extends AnyFunSuite {
     assert(IndexTables.docLens(spark, io).count() === before)
 
     // crash-replay: simulate a failure AFTER the segment writes but BEFORE
-    // the manifest commit by ingesting a further batch and retracting its
-    // step. The segment is invisible while uncommitted, and the replay
-    // overwrites it — no double counting anywhere.
-    val statsBefore = IndexTables.corpusStats(spark, io)
+    // the manifest commit by ingesting a further batch and pointing CURRENT
+    // back at the snapshot before it — what a crash before the atomic
+    // commit leaves: the previous snapshot's steps AND properties. The
+    // segment is invisible while uncommitted, and the replay overwrites it
+    // — no double counting anywhere.
+    val statsBefore = IndexTables.corpusStats(io)
+    val (snapBefore, maxBefore) = (io.currentSnapshotId().get, io.prop("max_doc_id"))
     IncrementalIndexer.ingestBatch(spark, docsRange(2000, 2500), idxDir, 100L, cfg)
-    val committedStats = IndexTables.corpusStats(spark, io)
+    val committedStats = IndexTables.corpusStats(io)
+    val committedMax = io.prop("max_doc_id")
     assert(committedStats.n_docs === statsBefore.n_docs + 500)
-    io.commit(io.committedSteps() - "stream_g100")
-    val retracted = IndexTables.corpusStats(spark, io)
+    Files.writeString(Paths.get(idxDir, "_snapshot", "CURRENT"), snapBefore)
+    assert(!io.committedSteps().contains("stream_g100"))
+    val retracted = IndexTables.corpusStats(io)
     assert(retracted.n_docs === statsBefore.n_docs) // segment invisible
     assert(retracted.total_dl === statsBefore.total_dl)
+    assert(io.prop("max_doc_id") === maxBefore)
     IncrementalIndexer.ingestBatch(spark, docsRange(2000, 2500), idxDir, 100L, cfg)
-    val replayed = IndexTables.corpusStats(spark, io)
+    val replayed = IndexTables.corpusStats(io)
     assert(replayed.n_docs === committedStats.n_docs)
     assert(replayed.total_dl === committedStats.total_dl)
+    assert(io.prop("max_doc_id") === committedMax)
     assert(IndexTables.docLens(spark, io).count() === before + 500)
 
     // the index advertises streamed groups (searcher switches to safe bounds)
