@@ -244,15 +244,9 @@ object EsRequest {
 
   /** ES constant-score hit shape: every match scores boost, doc order. */
   private def constDocs(docs: DataFrame, k: Int,
-                        boost: Double = 1.0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    docs.select(col("doc_id")).distinct()
-      .orderBy(col("doc_id").asc).limit(k)
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("doc_id").asc)).cast("long"))
-      .select(col("rnk"), col("doc_id"),
-        lit(math.round(boost * 1e6)).as("score_x6"))
-  }
+                        boost: Double = 1.0): DataFrame =
+    FieldedIndex.rankTop(docs.select(col("doc_id")).distinct()
+      .withColumn("score_x6", lit(math.round(boost * 1e6))), k)
 
   /** A match or match_phrase leaf of the query tree (`n` is
     * `{kind: {field: …}}`): a match in any form (bare text, or `query` with

@@ -2,6 +2,8 @@ package graft.cli
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.SparkSession
+
 /** CLI/config layer — the engine analogue of the reference's kong-based CLI
   * (`config/config.go:15-24` flag surface, `:27-53` parse + validator chain,
   * `:55-73` path/format/compression validators; env binding per field as in
@@ -108,6 +110,17 @@ object Cli {
     validate(cfg)
     cfg
   }
+
+  /** The Spark session every CLI main runs on: `master`, `appName`, 32
+    * shuffle partitions, UTC session time, no UI. */
+  def session(master: String, appName: String): SparkSession =
+    SparkSession.builder()
+      .master(master)
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
 
   /** The reference's validator chain (`config/config.go:55-73`). */
   private def validate(c: Config): Unit = {

@@ -99,13 +99,7 @@ object Main {
           System.err.println(e.getMessage)
           sys.exit(2)
       }
-    val spark = SparkSession.builder()
-      .master(cfg("master"))
-      .appName("graft-crossref-index")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Cli.session(cfg("master"), "graft-crossref-index")
     spark.sparkContext.setLogLevel(cfg("loglevel").toUpperCase)
     try run(spark, cfg)
     finally spark.stop()

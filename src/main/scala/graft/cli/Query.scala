@@ -201,13 +201,7 @@ object Query {
       catch {
         case e: Cli.CliError => System.err.println(e.getMessage); sys.exit(2)
       }
-    val spark = SparkSession.builder()
-      .master(a.master)
-      .appName("graft-query")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Cli.session(a.master, "graft-query")
     spark.sparkContext.setLogLevel("WARN")
     try runAny(spark, a).foreach(println)
     catch {

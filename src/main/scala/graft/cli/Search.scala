@@ -76,13 +76,7 @@ object Search {
       catch {
         case e: Cli.CliError => System.err.println(e.getMessage); sys.exit(2)
       }
-    val spark = SparkSession.builder()
-      .master(a.master)
-      .appName("graft-search")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Cli.session(a.master, "graft-search")
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, a).foreach(println)
     catch {

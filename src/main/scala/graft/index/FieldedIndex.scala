@@ -1,6 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
@@ -142,8 +143,7 @@ object FieldedIndex {
     io.step("docs_lww") {
       val rawStaged = spark.read.parquet(io.tablePath("docs"))
       val resolved = DocIds.resolveWith(rawStaged, DocIds.offsets(rawStaged))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("_key")).orderBy(col("doc_id").desc)
+      val w = Window.partitionBy(col("_key")).orderBy(col("doc_id").desc)
       resolved
         .withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1).drop("_rn")
@@ -937,10 +937,9 @@ object FieldedIndex {
         col("doc_id").asc)
       .limit(k)
     ordered
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(
-          if (descending) col("sort_value").desc else col("sort_value").asc,
-          col("doc_id").asc)).cast("long"))
+      .withColumn("rnk", row_number().over(Window.orderBy(
+        if (descending) col("sort_value").desc else col("sort_value").asc,
+        col("doc_id").asc)).cast("long"))
       .select(col("rnk"), col("doc_id"), col("sort_value"))
   }
 
@@ -958,20 +957,27 @@ object FieldedIndex {
     * absolute ranks for search_after). */
   def searchAfter(spark: SparkSession, indexDir: String, spec: FieldSpec,
                   text: String, k: Int, afterScoreX6: Long,
-                  afterDocId: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scores = Searcher.contribs(
-      handleFor(spark, indexDir, spec.field), termWeights(spec, text))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("contrib")).as("score"))
-      .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
-    scores
+                  afterDocId: Long): DataFrame =
+    rankTop(scoresX6(handleFor(spark, indexDir, spec.field),
+        termWeights(spec, text))
       .where(col("score_x6") < afterScoreX6 ||
-        (col("score_x6") === afterScoreX6 && col("doc_id") > afterDocId))
-      .orderBy(col("score_x6").desc, col("doc_id").asc).limit(k)
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("score_x6").desc, col("doc_id").asc)).cast("long"))
-      .select(col("rnk"), col("doc_id"), col("score_x6"))
+        (col("score_x6") === afterScoreX6 && col("doc_id") > afterDocId)), k)
+
+  /** A match's (doc_id, score_x6) list: [[Searcher.scores]] micro-rounded. */
+  private def scoresX6(h: Searcher.Handle, tw: Map[String, Int]): DataFrame =
+    Searcher.scores(h, tw)
+      .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
+
+  /** The deterministic top-k cut of a scored relation: its best `k` rows by
+    * (score_x6 desc, doc_id asc) as one TakeOrdered, numbered `rnk` 1..k (a
+    * long), as (rnk, doc_id, `extraCols`…, score_x6). Lazy: nothing runs
+    * until the frame does. Every relational shape ranks through it. */
+  private[graft] def rankTop(scored: DataFrame, k: Int,
+      extraCols: String*): DataFrame = {
+    val order = Seq(col("score_x6").desc, col("doc_id").asc)
+    scored.orderBy(order: _*).limit(k)
+      .withColumn("rnk", row_number().over(Window.orderBy(order: _*)).cast("long"))
+      .select((Seq("rnk", "doc_id") ++ extraCols :+ "score_x6").map(col): _*)
   }
 
   /** An open ES scroll context ([[FieldedIndex.scroll]]): deep, snapshot-
@@ -1027,26 +1033,16 @@ object FieldedIndex {
     def next(): Seq[(Long, Long, Long)] = {
       if (exhausted) { close(); return Seq.empty }
       if (scored == null)
-        scored = Searcher.contribs(h, tw)
-          .groupBy(col("doc_id"))
-          .agg(sum(col("contrib")).as("score"))
-          .select(col("doc_id"),
-            TextIndex.microRound(col("score")).as("score_x6"))
+        scored = scoresX6(h, tw)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val base = scored
       val filtered = after match {
         case Some((s6, d)) =>
-          base.where(col("score_x6") < s6 ||
+          scored.where(col("score_x6") < s6 ||
             (col("score_x6") === s6 && col("doc_id") > d))
-        case None => base
+        case None => scored
       }
-      val rows = filtered
-        .orderBy(col("score_x6").desc, col("doc_id").asc).limit(pageSize)
-        .collect()
-        .zipWithIndex
-        .map { case (r, i) =>
-          ((i + 1).toLong, r.getLong(0), r.getLong(1)) }
-        .toSeq
+      val rows = rankTop(filtered, pageSize).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       if (rows.length < pageSize) close()
       rows.lastOption.foreach { case (_, d, s6) => after = Some((s6, d)) }
       rows
@@ -1091,13 +1087,8 @@ object FieldedIndex {
   def topHitsAgg(spark: SparkSession, indexDir: String,
                  bucketSpec: FieldSpec, matchSpec: FieldSpec,
                  matchText: String, size: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scores = Searcher.contribs(
-      handleFor(spark, indexDir, matchSpec.field),
+    val scores = scoresX6(handleFor(spark, indexDir, matchSpec.field),
       termWeights(matchSpec, matchText))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("contrib")).as("score"))
-      .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
     val w = Window.partitionBy(col("term"))
       .orderBy(col("score_x6").desc, col("doc_id").asc)
     scores.join(docValues(spark, indexDir, bucketSpec.field)
@@ -1122,20 +1113,16 @@ object FieldedIndex {
                     matchText: String, phraseText: String, k: Int,
                     windowSize: Int, queryWeight: Double = 1.0,
                     rescoreWeight: Double = 1.0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k <= windowSize, "k beyond the rescore window would mix " +
       "rescored and unrescored ranks — ES appends unrescored tail hits; " +
       "serve that shape with searchFieldPaged past the window instead")
     val h = handleFor(spark, indexDir, spec.field)
-    val base = Searcher.contribs(h, termWeights(spec, matchText))
-      .groupBy(col("doc_id")).agg(sum(col("contrib")).as("base_score"))
-    // window cut as a distributed TakeOrdered (orderBy+limit) — a global
-    // row_number window would route the whole match-sized score list
-    // through ONE task; the ordering is the same deterministic rule
-    val windowed = base
-      .orderBy(TextIndex.microRound(col("base_score")).desc,
-        col("doc_id").asc)
-      .limit(windowSize)
+    val base = Searcher.scores(h, termWeights(spec, matchText))
+      .select(col("doc_id"), col("score").as("base_score"),
+        TextIndex.microRound(col("score")).as("score_x6"))
+    // window cut as a distributed TakeOrdered — a global row_number window
+    // would route the whole match-sized score list through ONE task
+    val windowed = rankTop(base, windowSize, "base_score")
     val phrase = Searcher.phraseContribs(h,
       Analyzer.analyzeChainPos(spec.chain, phraseText))
       .withColumnRenamed("contrib", "phrase_score")
@@ -1144,11 +1131,7 @@ object FieldedIndex {
         col("base_score") * lit(queryWeight) +
           coalesce(col("phrase_score"), lit(0.0)) * lit(rescoreWeight))
       .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
-    combined
-      .orderBy(col("score_x6").desc, col("doc_id").asc).limit(k)
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("score_x6").desc, col("doc_id").asc)).cast("long"))
-      .select(col("rnk"), col("doc_id"), col("score_x6"))
+    rankTop(combined, k)
   }
 
   /** ES `_explain`: why a document scores what it scores for a match
@@ -1194,24 +1177,18 @@ object FieldedIndex {
                     posSpec: FieldSpec, posText: String,
                     negSpec: FieldSpec, negText: String,
                     negativeBoost: Double, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(negativeBoost >= 0 && negativeBoost <= 1,
       "negative_boost must be in [0, 1]")
-    val pos = Searcher.contribs(handleFor(spark, indexDir, posSpec.field),
-        termWeights(posSpec, posText))
-      .groupBy(col("doc_id")).agg(sum(col("contrib")).as("qscore"))
+    val pos = Searcher.scores(handleFor(spark, indexDir, posSpec.field),
+      termWeights(posSpec, posText))
     val negTerms = termWeights(negSpec, negText).keys.toSeq
     val neg = Searcher.termDocs(handleFor(spark, indexDir, negSpec.field),
         negTerms)
       .select(col("doc_id")).distinct().withColumn("_neg", lit(1))
-    pos.join(neg, Seq("doc_id"), "left")
+    rankTop(pos.join(neg, Seq("doc_id"), "left")
       .select(col("doc_id"), TextIndex.microRound(
-        when(col("_neg").isNotNull, col("qscore") * lit(negativeBoost))
-          .otherwise(col("qscore"))).as("score_x6"))
-      .orderBy(col("score_x6").desc, col("doc_id").asc).limit(k)
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("score_x6").desc, col("doc_id").asc)).cast("long"))
-      .select(col("rnk"), col("doc_id"), col("score_x6"))
+        when(col("_neg").isNotNull, col("score") * lit(negativeBoost))
+          .otherwise(col("score"))).as("score_x6")), k)
   }
 
   /** ES `match_bool_prefix` (the search-as-you-type query): the analyzed
@@ -1234,7 +1211,6 @@ object FieldedIndex {
   def matchBoolPrefix(spark: SparkSession, indexDir: String, spec: FieldSpec,
                       text: String, k: Int,
                       maxExpansions: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = Analyzer.analyzeChain(spec.chain, text)
     require(toks.nonEmpty, "match_bool_prefix: query analyzed to nothing")
     val full = toks.dropRight(1)
@@ -1247,19 +1223,14 @@ object FieldedIndex {
       if (full.isEmpty) pdocs.select(col("doc_id"), col("_p").as("score"))
       else {
         val tw = full.groupBy(identity).view.mapValues(_.length).toMap
-        Searcher.contribs(h, tw)
-          .groupBy(col("doc_id")).agg(sum(col("contrib")).as("qscore"))
+        Searcher.scores(h, tw).withColumnRenamed("score", "qscore")
           .join(pdocs, Seq("doc_id"), "full_outer")
           .select(col("doc_id"),
             (coalesce(col("qscore"), lit(0.0)) +
               coalesce(col("_p"), lit(0.0))).as("score"))
       }
-    scored
-      .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
-      .orderBy(col("score_x6").desc, col("doc_id").asc).limit(k)
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("score_x6").desc, col("doc_id").asc)).cast("long"))
-      .select(col("rnk"), col("doc_id"), col("score_x6"))
+    rankTop(scored.select(col("doc_id"),
+      TextIndex.microRound(col("score")).as("score_x6")), k)
   }
 
   /** ES `more_like_this` with `like` = one indexed document: fetch the
@@ -1280,7 +1251,6 @@ object FieldedIndex {
                    key: String, k: Int, minTermFreq: Int = 2,
                    minDocFreq: Int = 5, maxQueryTerms: Int = 25,
                    minShouldMatchPct: Int = 30): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dm = docMap(spark, indexDir)
     val keyCol = dm.columns.filter(_ != "doc_id").head
     val ids = dm.filter(col(keyCol) === key).select(col("doc_id")).collect()
@@ -1308,13 +1278,8 @@ object FieldedIndex {
     val msm = math.max(1, selected.length * minShouldMatchPct / 100)
     val legs = selected.toSeq.map(t =>
       Searcher.MultiLeg(spec.field, Map(t -> 1)))
-    Searcher.multiSearch(h, legs, k + 1, minShouldMatch = msm)
-      .filter(col("doc_id") =!= srcId)
-      .select(col("doc_id"), col("score_x6"))
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("score_x6").desc, col("doc_id").asc)).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("rnk"), col("doc_id"), col("score_x6"))
+    rankTop(Searcher.multiSearch(h, legs, k + 1, minShouldMatch = msm)
+      .filter(col("doc_id") =!= srcId), k)
   }
 
   /** One ES function_score function. Field-based functions require a
@@ -1369,11 +1334,10 @@ object FieldedIndex {
                     text: String, functions: Seq[ScoreFunction], k: Int,
                     scoreMode: String = "multiply",
                     boostMode: String = "multiply"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(functions.nonEmpty, "function_score needs at least one function")
     val h = handleFor(spark, indexDir, spec.field)
-    var cur = Searcher.contribs(h, termWeights(spec, text))
-      .groupBy(col("doc_id")).agg(sum(col("contrib")).as("qscore"))
+    var cur = Searcher.scores(h, termWeights(spec, text))
+      .withColumnRenamed("score", "qscore")
     def joinValues(fs: FieldSpec, name: String): Unit = {
       requireSingleValued(fs, "function_score")
       val dv = docValues(spark, indexDir, fs.field)
@@ -1433,11 +1397,8 @@ object FieldedIndex {
       case other => throw new IllegalArgumentException(
         s"unknown boost_mode '$other'")
     }
-    cur.select(col("doc_id"), TextIndex.microRound(combined).as("score_x6"))
-      .orderBy(col("score_x6").desc, col("doc_id").asc).limit(k)
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("score_x6").desc, col("doc_id").asc)).cast("long"))
-      .select(col("rnk"), col("doc_id"), col("score_x6"))
+    rankTop(cur.select(col("doc_id"),
+      TextIndex.microRound(combined).as("score_x6")), k)
   }
 
   /** ES term suggester against one field (`suggest_mode: missing`, the
@@ -1461,13 +1422,8 @@ object FieldedIndex {
   def collapseSearch(spark: SparkSession, indexDir: String,
                      matchSpec: FieldSpec, text: String,
                      collapseSpec: FieldSpec, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scores = Searcher.contribs(
-      handleFor(spark, indexDir, matchSpec.field),
+    val scores = scoresX6(handleFor(spark, indexDir, matchSpec.field),
       termWeights(matchSpec, text))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("contrib")).as("score"))
-      .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
     val groupW = Window.partitionBy(col("collapse_value"))
       .orderBy(col("score_x6").desc, col("doc_id").asc)
     val leaders = scores
@@ -1475,11 +1431,7 @@ object FieldedIndex {
         .withColumnRenamed("value", "collapse_value"), Seq("doc_id"))
       .withColumn("grn", row_number().over(groupW))
       .where(col("grn") === 1)
-    leaders
-      .orderBy(col("score_x6").desc, col("doc_id").asc).limit(k)
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("score_x6").desc, col("doc_id").asc)).cast("long"))
-      .select(col("rnk"), col("doc_id"), col("collapse_value"), col("score_x6"))
+    rankTop(leaders, k, "collapse_value")
   }
 
   /** ES highlighting (the plain-highlighter shape): re-analyze each stored

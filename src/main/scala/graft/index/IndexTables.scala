@@ -47,8 +47,8 @@ object IndexTables {
 
   /** max(doc_id) over a relation with the empty-relation guard: the
     * aggregate is null on zero rows (a legal empty corpus/batch) and a
-    * bare getLong would NPE. Every max_doc_id writer/reader goes through
-    * here so the guard cannot be forgotten at a new call site. */
+    * bare getLong would NPE. The max_doc_id writers that scan a relation
+    * go through here so the guard cannot be forgotten at a new call site. */
   def maxDocId(df: DataFrame, default: Long): Long = {
     val mx = df.agg(max(col("doc_id"))).head()
     if (mx.isNullAt(0)) default else mx.getLong(0)
@@ -106,13 +106,24 @@ object IndexTables {
     * segments), read from the current snapshot's properties: no job. */
   def corpusStats(io: TableIO): CorpusStats = {
     val p = io.props()
-    def get(key: String): String = p.getOrElse(key,
-      throw new IllegalStateException(s"${io.indexDir} has no `$key` " +
-        s"snapshot property: it predates ${PostingsBuilder.FormatStep}, " +
-        "which keeps corpus stats in the manifest; rebuild the index"))
-    CorpusStats(get("n_docs").toLong, get("avgdl").toDouble,
-      get("total_dl").toLong)
+    CorpusStats(required(io, p, "n_docs").toLong,
+      required(io, p, "avgdl").toDouble, required(io, p, "total_dl").toLong)
   }
+
+  /** The next free doc id of a complete index: one past its `max_doc_id`
+    * property (−1 on an empty corpus), which the build writes and each
+    * committed batch advances, so no ingest scans for it. */
+  def nextDocId(io: TableIO): Long =
+    required(io, io.props(), "max_doc_id").toLong + 1
+
+  /** Snapshot property `key` of `io` (its properties `p`). Every
+    * current-format index carries the ones read here, so a directory
+    * without one is refused with the rebuild it needs. */
+  private def required(io: TableIO, p: Map[String, String],
+      key: String): String =
+    p.getOrElse(key, throw new IllegalStateException(s"${io.indexDir} has " +
+      s"no `$key` snapshot property, which every ${PostingsBuilder.FormatStep} " +
+      "index carries; rebuild the index"))
 
   /** `stats` as the snapshot properties [[corpusStats]] reads. */
   def statsProps(stats: CorpusStats): Map[String, String] = Map(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.TableIO
-import graft.model.{CorpusStats, PostingBlock, TfRow}
+import graft.model.{CorpusStats, PostingBlock}
 import graft.query.Bm25
 
 /** Builds the on-disk inverted index from a corpus DataFrame (doc_id, text).
@@ -414,66 +414,4 @@ object PostingsBuilder {
         out.removeHead()
       }
     }
-
-  /** Streaming block encoder over the exploded (doc_shard, term, doc_id)-
-    * sorted posting relation — the typed reference formulation the invert
-    * kernel must agree with (asserted in IndexSpec round-trips). */
-  def encodePartition(avgdl: Double, blockSize: Int)(
-      rows: Iterator[TfRow]): Iterator[PostingBlock] = new Iterator[PostingBlock] {
-    private val ids = new Array[Long](blockSize)
-    private val tfs = new Array[Int](blockSize)
-    private val dls = new Array[Int](blockSize)
-    private val poss = new Array[Array[Int]](blockSize)
-    private var n = 0
-    private var curShard = -1
-    private var curTerm: String = null
-    private var blockId = 0
-    private var pending: PostingBlock = null
-    private var lookahead: TfRow = null
-
-    private def flush(): Unit = {
-      if (n == 0) return
-      var maxNorm = 0.0
-      var maxTf = 0
-      var i = 0
-      while (i < n) {
-        val norm = Bm25.tfNorm(tfs(i).toDouble, dls(i).toDouble, avgdl)
-        if (norm > maxNorm) maxNorm = norm
-        if (tfs(i) > maxTf) maxTf = tfs(i)
-        i += 1
-      }
-      pending = PostingBlock(curShard, curTerm, blockId, n, ids(0), ids(n - 1),
-        Codec.encodeDocIds(java.util.Arrays.copyOf(ids, n)),
-        Codec.encodeTfs(java.util.Arrays.copyOf(tfs, n)),
-        Codec.encodeTfs(java.util.Arrays.copyOf(dls, n)),
-        maxNorm, maxTf,
-        Codec.encodePositions(java.util.Arrays.copyOf(poss, n)))
-      blockId += 1
-      n = 0
-    }
-
-    private def advance(): Unit = {
-      while (pending == null && (lookahead != null || rows.hasNext)) {
-        val r = if (lookahead != null) { val x = lookahead; lookahead = null; x }
-                else rows.next()
-        if (r.doc_shard != curShard || r.term != curTerm) {
-          if (n > 0) { lookahead = r; flush() }
-          else { curShard = r.doc_shard; curTerm = r.term; blockId = 0; buffer(r) }
-        } else buffer(r)
-      }
-      if (pending == null && n > 0) flush()
-    }
-
-    private def buffer(r: TfRow): Unit = {
-      ids(n) = r.doc_id; tfs(n) = r.tf; dls(n) = r.dl; poss(n) = r.pos
-      n += 1
-      if (n == blockSize) flush()
-    }
-
-    override def hasNext: Boolean = { if (pending == null) advance(); pending != null }
-    override def next(): PostingBlock = {
-      if (!hasNext) throw new NoSuchElementException
-      val b = pending; pending = null; b
-    }
-  }
 }

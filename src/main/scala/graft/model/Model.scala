@@ -2,14 +2,6 @@ package graft.model
 
 /** Core engine row types (SURVEY.md §1.4 target data model). */
 
-/** One posting enriched with its doc length — the encode kernel's input.
-  * dl is denormalized into the posting stream so posting blocks are fully
-  * self-contained at query time (score = f(tf, dl, idf, avgdl); no doc-side
-  * join on the query path). Costs ~1 varbyte/posting vs Lucene's 1-byte
-  * lossy norm; the north_rule demands exact dl, so we pay it. */
-case class TfRow(doc_shard: Int, term: String, doc_id: Long, tf: Int, dl: Int,
-    pos: Array[Int] = Array.emptyIntArray)
-
 /** A compressed posting block: up to Codec.BlockSize postings of one term
   * within one doc shard. doc_ids are delta-gap varbyte; tfs/dls varbyte.
   * max_tf_norm is the exact per-block max of tf/(tf+k1(1-b+b·dl/avgdl)) —

@@ -54,6 +54,11 @@ import graft.model.{CorpusStats, PostingBlock}
   * all. No shuffle, no sort, no scan of non-query terms anywhere on the
   * query path.
   *
+  * The relational ES shapes (search_after, scroll, rescore, function_score
+  * and the like) rank a doc's full score, not a top-k: [[scores]] runs the
+  * same walk unbounded and returns every matching doc's (doc_id, score)
+  * row, with the same dfs and the same doubles as a search.
+  *
   * Every job over a handle's resident shards that returns to the driver
   * (open's materialization, the df lookup, fuzzy candidates and the
   * fan-out) goes through [[runShards]] with a named [[ShardTask]], not a
@@ -761,12 +766,17 @@ object Searcher {
     val analyzed: Seq[(Int, Map[String, Int])] = rawQueries.map { case (qid, q) =>
       qid -> chain(q).groupBy(identity).view.mapValues(_.length).toMap
     }
-    analyzed.map { case (qid, tw) =>
-      QuerySpec(qid, tw.toSeq.sortBy(_._1).flatMap { case (t, w) =>
-        cursorSpec(h.only, t, h.df(t), w)
-      }.toArray)
-    }
+    analyzed.map { case (qid, tw) => QuerySpec(qid, termSpecs(h, tw)) }
   }
+
+  /** The cursor specs of a weighted term bag on a one-field handle, in term
+    * order (the kernel's FP sum order), each key's df from [[Handle.df]]:
+    * the one term rule of [[search]] and [[scores]]. */
+  private def termSpecs(h: Handle, termWeights: Map[String, Int],
+      boost: Double = 1.0): Array[CursorSpec] =
+    termWeights.toSeq.sortBy(_._1).flatMap { case (t, w) =>
+      cursorSpec(h.only, t, h.df(t), w, boost)
+    }.toArray
 
   /** The task a [[search]] fan-out runs on `h.shards`: with the view, what
     * its job serializes into the task binary (`ServingJobsSpec` pins the
@@ -912,9 +922,11 @@ object Searcher {
     * shard, Σ over shards (skipped entirely once the handle has served the
     * keys before). Returns only keys with df > 0. Kept for the callers that
     * need a df on the driver itself: [[termSuggest]] and [[termDfs]] (which
-    * terms exist, idf ranking), the naive twins [[contribs]], [[explainDoc]]
-    * and [[phraseContribs]], and [[phrasePrefixSearch]]'s fixed terms (a
-    * union slot's idf sums every member's df). */
+    * terms exist, idf ranking; the tests' independent decoder takes its dfs
+    * from [[termDfs]]), [[explainDoc]] and [[phraseContribs]], and
+    * [[phrasePrefixSearch]]'s fixed terms (a union slot's idf sums every
+    * member's df). A score list ([[scores]]) needs none: its shards read
+    * each key's df as a search does. */
   private def resolveDfs(h: Handle, keys: Array[String]): Map[String, Long] = {
     val missing: Array[String] = keys.filterNot(h.dfCache.containsKey)
     if (missing.nonEmpty) cacheDfs(h, missing)
@@ -948,43 +960,23 @@ object Searcher {
     }
   }
 
-  /** Per-doc BM25 contributions of a weighted term bag against this
-    * handle's index: (doc_id, contrib) with contrib = weight · idf ·
-    * tfNorm under THIS index's stats — the building block of multi-field
-    * (ES bool/should) scoring, where per-field score lists must be summed
-    * across sub-indexes rather than top-k'd per field (a doc can win the
-    * sum without being in any single field's top-k). Distributed end to
-    * end: one narrow decode job per handle, rows stay on executors for the
-    * downstream sum. The doubles are the WAND kernel's own (same
-    * [[Bm25.idf]]/[[Bm25.tfNorm]] calls), so micro-rounded sums agree with
-    * the oracle's exactly like the single-field paths. */
-  def contribs(h: Handle, termWeights: Map[String, Int],
-               boost: Double = 1.0): DataFrame = {
+  /** Every matching doc's exact BM25 score for a weighted term bag on a
+    * one-field handle: (doc_id, score) from the [[scoreOn]] WAND walk a
+    * [[search]] runs, unbounded (k = Int.MaxValue, no θ board), so no doc
+    * is pruned. The relational ES shapes (search_after, scroll, top_hits,
+    * rescore, boosting, match_bool_prefix, function_score, collapse)
+    * combine and rank these rows with Catalyst. Each key's df is the
+    * handle's cached one or its shard entry's ([[Handle.df]]), so no
+    * df-lookup job runs; a doc's postings sit in one shard, so each doc is
+    * one row, no exchange sums it, and its score is the double the kernel
+    * serves. `boost` scales every term's idf, as [[MultiLeg.boost]] does.
+    * Memory per task: one heap entry per matching doc of the shard, as in
+    * [[phraseContribs]]. */
+  def scores(h: Handle, termWeights: Map[String, Int],
+             boost: Double = 1.0): DataFrame = {
     import h.spark.implicits._
-    val dfByTerm = resolveDfs(h, termWeights.keys.toArray)
-    val n = h.stats.n_docs
-    val avgdl = h.stats.avgdl
-    // boost folds into idf BEFORE the weight multiply — the same FP order
-    // as the kernel's pre-multiplied cursor idf, so micro-rounded sums
-    // agree exactly; ×1.0 is the IEEE identity (unboosted callers
-    // unchanged bit-for-bit)
-    val idfW: Array[(String, Double)] = termWeights.toArray.collect {
-      case (t, w) if dfByTerm.contains(t) =>
-        t -> w * (Bm25.idf(n, dfByTerm(t)) * boost)
-    }
-    h.shards.flatMap { si =>
-      idfW.iterator.flatMap { case (t, iw) =>
-        val tp = si.terms.get(t)
-        if (tp == null) Iterator.empty
-        else tp.blocks.iterator.flatMap { b =>
-          val ids = graft.index.Codec.decodeDocIds(b.doc_ids, b.n)
-          val tfs = graft.index.Codec.decodeTfs(b.tfs, b.n)
-          val dls = graft.index.Codec.decodeTfs(b.dls, b.n)
-          (0 until b.n).iterator.map(i =>
-            (ids(i), iw * Bm25.tfNorm(tfs(i).toDouble, dls(i).toDouble, avgdl)))
-        }
-      }
-    }.toDF("doc_id", "contrib")
+    val q = QuerySpec(0, termSpecs(h, termWeights, boost))
+    h.shards.flatMap(scoreOn(_, q, Int.MaxValue, null)).toDF("doc_id", "score")
   }
 
   /** ES `_explain` backbone: the per-term BM25 decomposition of ONE doc

@@ -59,13 +59,8 @@ object FieldedStreaming {
     // next free doc id from the manifest property (one tiny metadata read;
     // written by build and advanced atomically with each batch's top
     // commit, so a replayed batch — crash anywhere before that commit —
-    // recomputes the SAME ids). Pre-property indexes (older builds) fall
-    // back to the doc_map scan once; the null guard covers a
-    // complete-but-EMPTY base (legal build output), whose max() aggregate
-    // is null.
-    val nextId = io.prop("max_doc_id").map(_.toLong + 1).getOrElse(
-      IndexTables.maxDocId(FieldedIndex.docMap(spark, indexDir),
-        default = -1L) + 1)
+    // recomputes the SAME ids)
+    val nextId = IndexTables.nextDocId(io)
 
     // stage (idempotent overwrite), resolve ids from the persisted _mid,
     // within-batch LWW by key on arrival order — same semantics as build
@@ -112,7 +107,7 @@ object FieldedStreaming {
             val corpus = withIds.select(col("doc_id"), cleaned.as("vals"))
               .where(size(col("vals")) > 0)
             val docTerms = TextIndex.fieldDocTermFreqs(corpus, f.chain).cache()
-            val stats =
+            val (stats, _) =
               IncrementalIndexer.appendSegment(spark, fio, docTerms, batchId, cfg)
             docTerms.unpersist()
             fio.commitStep(step, IndexTables.statsProps(stats))

@@ -52,11 +52,8 @@ object IncrementalIndexer {
 
     // next free doc id from the manifest property (one tiny metadata read,
     // not an O(corpus) doc_lens scan per micro-batch; advanced atomically
-    // with this batch's commit below so replay recomputes the same ids).
-    // Fallback scan for pre-property indexes; null guard for a
-    // complete-but-empty base whose max() aggregate is null.
-    val nextId = io.prop("max_doc_id").map(_.toLong + 1).getOrElse(
-      IndexTables.maxDocId(IndexTables.docLens(spark, io), default = -1L) + 1)
+    // with this batch's commit below so replay recomputes the same ids)
+    val nextId = IndexTables.nextDocId(io)
 
     // extract + within-batch LWW dedup (the same row_number-window dedup as
     // the batch build), then dense ids continuing the id space — DocIds
@@ -75,11 +72,11 @@ object IncrementalIndexer {
     // one tokenization pass for the batch — row-local tf (no token shuffle,
     // no tf⋈dl join; same kernel as the batch build)
     val docTerms = TextIndex.docTermFreqs(withIds).cache()
-    val stats = appendSegment(spark, io, docTerms, batchId, cfg,
+    val (stats, batchMax) = appendSegment(spark, io, docTerms, batchId, cfg,
       docMapKeys = Some(withIds.select(col("doc_id"), col("url"))))
-    // new top of the id space from the cached batch-sized relation (empty
-    // batch keeps the old max), committed atomically with the batch step
-    val newMax = IndexTables.maxDocId(docTerms, default = nextId - 1)
+    // new top of the id space (an empty batch keeps the old max), committed
+    // atomically with the batch step
+    val newMax = batchMax.getOrElse(nextId - 1)
     docTerms.unpersist()
     // the single visibility point (atomic RMW of step, max_doc_id and the
     // merged corpus stats)
@@ -90,22 +87,25 @@ object IncrementalIndexer {
   /** The reusable segment-append core: write one immutable batch segment
     * (doc_lens / term_stats [+ doc_map when the index keeps one] + its
     * postings group) for an already-id-assigned per-doc tf relation, and
-    * return the corpus stats of the index with the segment merged in.
+    * return the corpus stats of the index with the segment merged in, and
+    * the batch's max doc_id (None for an empty batch).
     * Everything is an idempotent overwrite; the caller commits the
     * `stream_g<batchId>` visibility step with those stats (per sub-index —
     * the fielded ingest appends one segment per field dir, each committing
     * its own step so replay skips exactly the finished fields). */
   private[streaming] def appendSegment(spark: SparkSession, io: TableIO,
       docTerms: DataFrame, batchId: Long, cfg: PostingsBuilder.Config,
-      docMapKeys: Option[DataFrame] = None): CorpusStats = {
+      docMapKeys: Option[DataFrame] = None): (CorpusStats, Option[Long]) = {
     val stats0 = IndexTables.corpusStats(io)
     val dl = docTerms.select(col("doc_id"), col("dl"))
 
-    // batch-local stats (the segment's additive delta; avgdl of the MERGED
-    // corpus is what the posting encode normalizes with)
-    val batchAgg = dl.agg(count(lit(1)), sum("dl")).head()
+    // batch-local stats in one aggregate (the segment's additive delta;
+    // avgdl of the MERGED corpus is what the posting encode normalizes
+    // with); sum and max are null on an empty batch
+    val batchAgg = dl.agg(count(lit(1)), sum("dl"), max("doc_id")).head()
     val n1 = batchAgg.getLong(0)
     val dl1 = if (batchAgg.isNullAt(1)) 0L else batchAgg.getLong(1)
+    val max1 = if (batchAgg.isNullAt(2)) None else Some(batchAgg.getLong(2))
     val nMerged = stats0.n_docs + n1
     // an empty merged corpus (a field nothing has values for) has no
     // meaningful avgdl; 0.0 keeps the encode total and the stats sane
@@ -135,7 +135,7 @@ object IncrementalIndexer {
         ((n1 + cfg.invertPartitionDocs - 1) / cfg.invertPartitionDocs).toInt))
       .write.mode("overwrite")
       .parquet(io.tablePath(s"postings/group=${IndexTables.GroupBase + batchId}"))
-    CorpusStats(nMerged, avgdlNew, stats0.total_dl + dl1)
+    (CorpusStats(nMerged, avgdlNew, stats0.total_dl + dl1), max1)
   }
 
   /** Start the streaming ingest over a directory of input_hint parquet. */

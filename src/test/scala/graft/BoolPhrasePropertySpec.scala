@@ -8,8 +8,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.Analyzer
-import graft.index.PostingsBuilder
-import graft.model.{PostingBlock, TfRow}
+import graft.model.PostingBlock
 import graft.query.{BlockMaxWand, Bm25, Phrase}
 import graft.query.BlockMaxWand.{Cursor, PhraseCursor}
 
@@ -176,7 +175,7 @@ class BoolPhrasePropertySpec extends AnyFunSuite {
         : Map[Int, Map[String, IndexedSeq[PostingBlock]]] =
       rows.groupBy(_.doc_shard).map { case (shard, rs) =>
         val sorted = rs.sortBy(r => (r.term, r.doc_id))
-        val blocks = PostingsBuilder.encodePartition(avgdl, blockSize)(
+        val blocks = ReferenceEncoder.encodePartition(avgdl, blockSize)(
           sorted.iterator).toIndexedSeq
         shard -> blocks.groupBy(b => f + Sep + b.term).view
           .mapValues(_.sortBy(_.block_id).toIndexedSeq).toMap

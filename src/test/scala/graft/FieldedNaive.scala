@@ -5,14 +5,53 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.analysis.Analyzer
 import graft.index.FieldedIndex._
 import graft.index.TextIndex
-import graft.query.Searcher
+import graft.query.{Bm25, Searcher}
 
 /** The declarative twins of the fielded bool-family kernel paths: full
-  * per-clause score lists from [[Searcher.contribs]] /
-  * [[Searcher.phraseContribs]] combined by Catalyst, exact but unpruned —
-  * the rank-identity references `FieldedSpec` compares each
-  * [[graft.index.FieldedIndex]] kernel path against. */
+  * per-clause score lists from [[contribs]] / [[Searcher.phraseContribs]]
+  * combined by Catalyst, exact but unpruned — the rank-identity references
+  * `FieldedSpec` and `EsDslSpec` compare each [[graft.index.FieldedIndex]]
+  * kernel path against. */
 object FieldedNaive {
+
+  /** Per-doc BM25 contributions of a weighted term bag against this
+    * handle's index: (doc_id, contrib) with contrib = weight · idf ·
+    * tfNorm under THIS index's stats — an independent decoder of the
+    * handle's blocks, with dfs resolved on the driver ([[Searcher.termDfs]]),
+    * so the twins and `SegmentDfSpec` check the kernel's walk and its df
+    * rule against a path that shares neither. A doc's rows are summed
+    * downstream (per field, or across sub-indexes for multi-field twins).
+    * The doubles are the WAND kernel's own (same
+    * [[graft.query.Bm25.idf]]/[[graft.query.Bm25.tfNorm]] calls), so
+    * micro-rounded sums agree with the kernel's exactly. */
+  def contribs(h: Searcher.Handle, termWeights: Map[String, Int],
+               boost: Double = 1.0): DataFrame = {
+    import h.spark.implicits._
+    val dfByTerm = Searcher.termDfs(h, termWeights.keys.toArray)
+    val n = h.stats.n_docs
+    val avgdl = h.stats.avgdl
+    // boost folds into idf BEFORE the weight multiply — the same FP order
+    // as the kernel's pre-multiplied cursor idf, so micro-rounded sums
+    // agree exactly; ×1.0 is the IEEE identity (unboosted callers
+    // unchanged bit-for-bit)
+    val idfW: Array[(String, Double)] = termWeights.toArray.collect {
+      case (t, w) if dfByTerm.contains(t) =>
+        t -> w * (Bm25.idf(n, dfByTerm(t)) * boost)
+    }
+    h.shards.flatMap { si =>
+      idfW.iterator.flatMap { case (t, iw) =>
+        val tp = si.terms.get(t)
+        if (tp == null) Iterator.empty
+        else tp.blocks.iterator.flatMap { b =>
+          val ids = graft.index.Codec.decodeDocIds(b.doc_ids, b.n)
+          val tfs = graft.index.Codec.decodeTfs(b.tfs, b.n)
+          val dls = graft.index.Codec.decodeTfs(b.dls, b.n)
+          (0 until b.n).iterator.map(i =>
+            (ids(i), iw * Bm25.tfNorm(tfs(i).toDouble, dls(i).toDouble, avgdl)))
+        }
+      }
+    }.toDF("doc_id", "contrib")
+  }
 
   /** The declarative twin of [[filteredMatch]] (full score-list decode +
     * Catalyst semi-join) — the rank-identity reference the kernel path is
@@ -24,8 +63,7 @@ object FieldedNaive {
                          k: Int): DataFrame = {
     import org.apache.spark.sql.functions._
     val tw = termWeights(matchSpec, matchText)
-    val scores = Searcher
-      .contribs(handleFor(spark, indexDir, matchSpec.field), tw)
+    val scores = contribs(handleFor(spark, indexDir, matchSpec.field), tw)
       .groupBy(col("doc_id"))
       .agg(sum(col("contrib")).as("score"))
     // no distinct(): left_semi ignores right-side duplicates, and a
@@ -42,18 +80,18 @@ object FieldedNaive {
       .select(col("rnk").cast("long").as("rnk"), col("doc_id"), col("score_x6"))
   }
 
-  /** The declarative twin of [[multiMatchBoost]] (per-leg boosted score
-    * lists + Catalyst hash-agg sum) — rank-identity reference for the
-    * boosted kernel path. */
+  /** The declarative twin of a boosted multi-field [[query]] (a bool of
+    * per-field matches with `boost`: per-leg boosted score lists + Catalyst
+    * hash-agg sum) — rank-identity reference for the boosted kernel path. */
   def multiMatchBoostNaive(spark: SparkSession, indexDir: String,
                            legs: Seq[(FieldSpec, String, Double)],
                            k: Int): DataFrame = {
     import org.apache.spark.sql.functions._
-    val contribs = legs.map { case (spec, text, boost) =>
-      Searcher.contribs(handleFor(spark, indexDir, spec.field),
+    val perLeg = legs.map { case (spec, text, boost) =>
+      contribs(handleFor(spark, indexDir, spec.field),
         termWeights(spec, text), boost)
     }
-    contribs.reduce(_.unionByName(_))
+    perLeg.reduce(_.unionByName(_))
       .groupBy(col("doc_id"))
       .agg(sum(col("contrib")).as("score"))
       .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))
@@ -66,7 +104,7 @@ object FieldedNaive {
   }
 
   /** The declarative twin of [[boolQuery]] (full per-clause score lists —
-    * match legs via [[Searcher.contribs]], phrase clauses via
+    * match legs via [[contribs]], phrase clauses via
     * [[Searcher.phraseContribs]] — Catalyst hash-agg sum with a
     * matched-clause count for minimum_should_match) — the rank-identity
     * reference for the kernel path; exact but unpruned. */
@@ -76,7 +114,7 @@ object FieldedNaive {
                      minShouldMatch: Int = 1): DataFrame = {
     import org.apache.spark.sql.functions._
     val matchC = legs.zipWithIndex.map { case ((spec, text), li) =>
-      Searcher.contribs(handleFor(spark, indexDir, spec.field),
+      contribs(handleFor(spark, indexDir, spec.field),
         termWeights(spec, text)).withColumn("leg", lit(li))
     }
     val phraseC = phraseLegs.zipWithIndex.map { case ((spec, text), pi) =>
@@ -119,7 +157,7 @@ object FieldedNaive {
       if (must.nonEmpty || mustPhrases.nonEmpty) 0 else 1)
     val nMatch = must.size + should.size
     val matchC = (must ++ should).zipWithIndex.map { case ((spec, text), li) =>
-      Searcher.contribs(handleFor(spark, indexDir, spec.field),
+      contribs(handleFor(spark, indexDir, spec.field),
         termWeights(spec, text)).withColumn("leg", lit(li))
     }
     val phraseC = (mustPhrases ++ shouldPhrases).zipWithIndex.map {
@@ -163,7 +201,7 @@ object FieldedNaive {
                   tieBreaker: Double): DataFrame = {
     import org.apache.spark.sql.functions._
     val perLeg = legs.map { case (spec, text) =>
-      Searcher.contribs(handleFor(spark, indexDir, spec.field),
+      contribs(handleFor(spark, indexDir, spec.field),
         termWeights(spec, text))
         .groupBy(col("doc_id")).agg(sum(col("contrib")).as("leg_score"))
     }
@@ -189,11 +227,11 @@ object FieldedNaive {
   def multiMatchNaive(spark: SparkSession, indexDir: String,
                       legs: Seq[(FieldSpec, String)], k: Int): DataFrame = {
     import org.apache.spark.sql.functions._
-    val contribs = legs.map { case (spec, text) =>
-      Searcher.contribs(handleFor(spark, indexDir, spec.field),
+    val perLeg = legs.map { case (spec, text) =>
+      contribs(handleFor(spark, indexDir, spec.field),
         termWeights(spec, text))
     }
-    contribs.reduce(_.unionByName(_))
+    perLeg.reduce(_.unionByName(_))
       .groupBy(col("doc_id"))
       .agg(sum(col("contrib")).as("score"))
       .select(col("doc_id"), TextIndex.microRound(col("score")).as("score_x6"))

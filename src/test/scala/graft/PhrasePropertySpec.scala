@@ -9,8 +9,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.Analyzer
-import graft.index.PostingsBuilder
-import graft.model.{PostingBlock, TfRow}
+import graft.model.PostingBlock
 import graft.query.{BlockMaxWand, Bm25, Phrase}
 import graft.query.BlockMaxWand.PhraseCursor
 
@@ -109,7 +108,7 @@ class PhrasePropertySpec extends AnyFunSuite {
     val byShard: Map[Int, Map[String, Array[PostingBlock]]] =
       rows.groupBy(_.doc_shard).map { case (shard, rs) =>
         val sorted = rs.sortBy(r => (r.term, r.doc_id))
-        val blocks = PostingsBuilder.encodePartition(avgdl, blockSize)(
+        val blocks = ReferenceEncoder.encodePartition(avgdl, blockSize)(
           sorted.iterator).toIndexedSeq
         shard -> blocks.groupBy(_.term).view
           .mapValues(_.sortBy(_.block_id).toArray).toMap
@@ -221,7 +220,7 @@ class PhrasePropertySpec extends AnyFunSuite {
         val byShard: Map[Int, Map[String, Array[PostingBlock]]] =
           rows.groupBy(_.doc_shard).map { case (shard, rs) =>
             val sorted = rs.sortBy(r => (r.term, r.doc_id))
-            val blocks = PostingsBuilder.encodePartition(avgdl, blockSize)(
+            val blocks = ReferenceEncoder.encodePartition(avgdl, blockSize)(
               sorted.iterator).toIndexedSeq
             shard -> blocks.groupBy(_.term).view
               .mapValues(_.sortBy(_.block_id).toArray).toMap

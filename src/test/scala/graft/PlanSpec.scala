@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -232,6 +233,24 @@ class PlanSpec extends AnyFunSuite {
       s"bool_prefix plans a cartesian:\n$p")
     assert(p.contains("TakeOrderedAndProject"),
       s"bool_prefix top-k is a global sort, not TakeOrdered:\n$p")
+  }
+
+  test("search_after ranks the kernel's score rows: no exchange or hash aggregate below its TakeOrdered") {
+    val idx = graft.harness.FieldedQueries.ensureFieldedIndex(spark)
+    val title = graft.index.FieldedIndex.CrossrefMapping.find(_.field == "title").get
+    val df = graft.index.FieldedIndex.searchAfter(spark, idx, title,
+      "second title 42", 10, Long.MaxValue, -1L)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val top = nodes(df.queryExecution.executedPlan)
+      .collect { case t: TakeOrderedAndProjectExec => t }
+    assert(top.length === 1, s"search_after has no single TakeOrdered:\n${planString(df)}")
+    // a doc is one score row: nothing below the cut regroups or moves rows
+    assert(!nodes(top.head).tail.exists(n =>
+        n.isInstanceOf[Exchange] || n.isInstanceOf[HashAggregateExec]),
+      s"search_after sums or shuffles its score rows:\n${planString(df)}")
   }
 
   test("doc-values projections prune the doc_terms scan to the term subfield") {

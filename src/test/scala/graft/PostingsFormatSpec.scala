@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.{IndexTables, PostingsBuilder}
+import graft.analysis.Analyzer
+import graft.index.{FieldedIndex, IndexTables, PostingsBuilder}
 import graft.io.TableIO
-import graft.streaming.{Compactor, IncrementalIndexer}
+import graft.streaming.{Compactor, FieldedStreaming, IncrementalIndexer}
 import graft.web.{WebIndex, WebtextGen}
 
 /** The postings format: every base block carries its term's exact global
@@ -101,5 +102,42 @@ class PostingsFormatSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](IndexTables.corpusStats(io))
     assert(e.getMessage.contains("rebuild"))
     assert(e.getMessage.contains(PostingsBuilder.FormatStep))
+  }
+
+  test("ingest into a complete directory without max_doc_id names the rebuild") {
+    // rewrites `dir`'s manifest with every step and property but max_doc_id
+    def dropMaxDocId(dir: String): Unit = {
+      val io = new TableIO(dir)
+      val (steps, props) = (io.committedSteps(), io.props())
+      assert(props.contains("max_doc_id"))
+      val snap = java.nio.file.Paths.get(dir, "_snapshot")
+      java.nio.file.Files.walk(snap).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+      io.commit(steps, props - "max_doc_id")
+    }
+    def refused(ingest: => Unit): Unit = {
+      val e = intercept[IllegalStateException](ingest)
+      assert(e.getMessage.contains("max_doc_id"))
+      assert(e.getMessage.contains("rebuild"))
+    }
+    val dir = s"$root/no-max-doc-id"
+    new TableIO(dir).deleteAll()
+    WebIndex.build(spark, docs(0, 300), dir, cfg)
+    dropMaxDocId(dir)
+    assert(PostingsBuilder.isComplete(dir))
+    refused(IncrementalIndexer.ingestBatch(spark, docs(300, 350), dir, 0L, cfg))
+
+    val fielded = s"$root/no-max-doc-id-fielded"
+    new TableIO(fielded).deleteAll()
+    val title = FieldedIndex.FieldSpec("title", Analyzer.TextStop)
+    def titles(lo: Int, hi: Int): DataFrame = {
+      import spark.implicits._
+      (lo until hi).map(i => (s"k$i", s"title $i")).toDF("k", "title")
+    }
+    FieldedIndex.build(spark, titles(0, 50), fielded, Seq(title), "k", cfg)
+    dropMaxDocId(fielded)
+    assert(FieldedIndex.isComplete(fielded))
+    refused(FieldedStreaming.ingestBatch(spark, titles(50, 60), fielded,
+      Seq(title), "k", 0L, cfg))
   }
 }

@@ -19,8 +19,11 @@ import graft.streaming.FieldedStreaming
   * segment only, base and segment in one shard, base and segment in
   * different shards) that rule gives every key its exact `term_stats` df,
   * and `search` and `phraseSearch` rank exactly as their unpruned twins
-  * over [[Searcher.contribs]] and [[Searcher.phraseContribs]], also after
-  * every cached shard block was dropped. */
+  * over [[FieldedNaive.contribs]] and [[Searcher.phraseContribs]], also
+  * after every cached shard block was dropped. [[Searcher.scores]], the
+  * score list of the relational shapes, gives each doc one row whose score
+  * equals the twin's sum and every search hit's score, on that handle and
+  * on a bare base's. */
 class SegmentDfSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -58,6 +61,15 @@ class SegmentDfSpec extends AnyFunSuite {
     FieldedIndex.build(spark, docs(baseRows), d, Seq(body), "k", cfg)
     FieldedStreaming.ingestBatch(spark, docs(batch0), d, Seq(body), "k", 0L, cfg)
     FieldedStreaming.ingestBatch(spark, docs(batch1), d, Seq(body), "k", 1L, cfg)
+    FieldedIndex.fieldDir(d, body.field)
+  }
+
+  /** The base alone, with no streamed segment: a handle over it takes the
+    * unshuffled open. */
+  private lazy val bareDir: String = {
+    val d = s"${sys.props("user.dir")}/target/test-idx/segment-df-bare"
+    new TableIO(d).deleteAll()
+    FieldedIndex.build(spark, docs(baseRows), d, Seq(body), "k", cfg)
     FieldedIndex.fieldDir(d, body.field)
   }
 
@@ -131,19 +143,38 @@ class SegmentDfSpec extends AnyFunSuite {
     } finally h.close()
   }
 
+  /** Checks `h`'s search and phrase rows against their twins, and each
+    * query's [[Searcher.scores]] rows against both: one row per doc, its
+    * micro-rounded score the twin's per-doc sum micro-rounded and every
+    * search hit's score_x6. Returns the served rows. */
+  private def twinsAgree(h: Searcher.Handle): (Map[Long, Seq[Seq[Any]]],
+      Map[Long, Seq[Seq[Any]]]) = {
+    def weights(q: String) = chain(q).groupBy(identity).view.mapValues(_.length).toMap
+    val (search, phrase) = served(h)
+    // every score list before any twin: a twin's driver df lookup caches
+    // its terms' dfs on the handle
+    val scoreLists = queries.map { case (_, q) => contribs(Searcher.scores(h, weights(q))) }
+    queries.zip(scoreLists).foreach { case ((qid, q), scored) =>
+      val twin = contribs(FieldedNaive.contribs(h, weights(q)))
+      val hits = search.getOrElse(qid.toLong, Seq.empty)
+      assert(hits === ranked(twin), q)
+      assert(scored.map(_._1).distinct.length === scored.length, q)
+      val x6 = scored.map { case (d, s) => d -> math.round(s * 1e6) }.toMap
+      assert(x6 === twin.groupBy(_._1).map { case (d, cs) =>
+        d -> math.round(cs.map(_._2).sum * 1e6) }, q)
+      hits.foreach { case Seq(_, d, s6) => assert(s6 === x6(d.asInstanceOf[Long]), q) }
+    }
+    phrases.foreach { case (qid, q) =>
+      assert(phrase.getOrElse(qid.toLong, Seq.empty) ===
+        ranked(contribs(Searcher.phraseContribs(h, pos(q)))), q)
+    }
+    (search, phrase)
+  }
+
   test("segment-handle search and phrase rows equal their contribs twins") {
     val h = Searcher.open(spark, dir)
     try {
-      val (search, phrase) = served(h)
-      queries.foreach { case (qid, q) =>
-        val tw = chain(q).groupBy(identity).view.mapValues(_.length).toMap
-        assert(search.getOrElse(qid.toLong, Seq.empty) ===
-          ranked(contribs(Searcher.contribs(h, tw))), q)
-      }
-      phrases.foreach { case (qid, q) =>
-        assert(phrase.getOrElse(qid.toLong, Seq.empty) ===
-          ranked(contribs(Searcher.phraseContribs(h, pos(q)))), q)
-      }
+      val (search, phrase) = twinsAgree(h)
       // only the phrase with a corpus-absent term matches nothing
       assert(search.keySet === queries.map(_._1.toLong).toSet)
       assert(phrase.keySet === phrases.map(_._1.toLong).toSet - 8L)
@@ -152,7 +183,13 @@ class SegmentDfSpec extends AnyFunSuite {
       val (id, n) = (h.shards.sourceId, h.shards.getNumPartitions)
       CachedBlocks.drop(sc, id)
       assert(CachedBlocks.of(sc, id, n).isEmpty)
-      assert(served(h) === ((search, phrase)))
+      assert(twinsAgree(h) === ((search, phrase)))
     } finally h.close()
+    val bare = Searcher.open(spark, bareDir)
+    try {
+      assert(IndexTables.activeBatches(new TableIO(bareDir)).isEmpty)
+      val (search, _) = twinsAgree(bare)
+      assert(search.nonEmpty)
+    } finally bare.close()
   }
 }

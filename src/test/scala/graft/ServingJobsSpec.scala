@@ -296,6 +296,31 @@ class ServingJobsSpec extends AnyFunSuite {
     } finally { mh.close(); h.close() }
   }
 
+  test("search_after on a freshly opened handle runs no df-lookup job") {
+    // an index of its own, so the handle search_after serves from has
+    // answered no query yet and its df cache is empty
+    val root = s"${sys.props("user.dir")}/target/test-idx/serving-jobs-search-after"
+    new TableIO(root).deleteAll()
+    val title = FieldedIndex.FieldSpec("title", Analyzer.TextStop)
+    val docs = {
+      import spark.implicits._
+      (0 until 200).map(i => (s"k$i", s"record $i title second title $i"))
+        .toDF("k", "title")
+    }
+    FieldedIndex.build(spark, docs, root, Seq(title), "k",
+      PostingsBuilder.Config(shardSize = 64))
+    val h = FieldedIndex.handleFor(spark, root, "title")
+    val text = "second title 42"
+    val (got, jobs) = jobsOf(rows(FieldedIndex.searchAfter(spark, root, title,
+      text, QuerySet.K, Long.MaxValue, -1L)))
+    assert(got.length === QuerySet.K)
+    // the score rows are one job over the resident shards, each key's df
+    // read from its shard entry: a driver df lookup would add a job and
+    // leave the terms in the handle's df cache
+    assert(jobs === 1)
+    assert(FieldedIndex.termWeights(title, text).keys.forall(h.df(_).isEmpty))
+  }
+
   test("warm serving calls clean no lambda closure") {
     val th = FieldedIndex.handleFor(spark, FieldedQueries.ensureFieldedIndex(spark),
       "title")

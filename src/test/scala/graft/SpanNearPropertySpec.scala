@@ -6,8 +6,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.Analyzer
-import graft.index.PostingsBuilder
-import graft.model.{PostingBlock, TfRow}
+import graft.model.PostingBlock
 import graft.query.{Bm25, Phrase}
 
 /** Randomized exactness property for the span_near clause: random
@@ -115,7 +114,7 @@ class SpanNearPropertySpec extends AnyFunSuite {
     val byShard: Map[Int, Map[String, Array[PostingBlock]]] =
       rows.groupBy(_.doc_shard).map { case (shard, rs) =>
         val sorted = rs.sortBy(r => (r.term, r.doc_id))
-        val blocks = PostingsBuilder.encodePartition(avgdl, blockSize)(
+        val blocks = ReferenceEncoder.encodePartition(avgdl, blockSize)(
           sorted.iterator).toIndexedSeq
         shard -> blocks.groupBy(_.term).view
           .mapValues(_.sortBy(_.block_id).toArray).toMap

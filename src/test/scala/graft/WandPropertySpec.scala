@@ -5,8 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.PostingsBuilder
-import graft.model.{PostingBlock, TfRow}
+import graft.model.PostingBlock
 import graft.query.{BlockMaxWand, Bm25}
 import graft.query.BlockMaxWand.{QueryTerm, WandQuery}
 
@@ -47,7 +46,7 @@ class WandPropertySpec extends AnyFunSuite {
     } yield TfRow(id / shardSize, term, id.toLong, tf, dls(id))
     rows.groupBy(_.doc_shard).map { case (shard, rs) =>
       val sorted = rs.sortBy(r => (r.term, r.doc_id))
-      val blocks = PostingsBuilder.encodePartition(avgdl, blockSize)(
+      val blocks = ReferenceEncoder.encodePartition(avgdl, blockSize)(
         sorted.iterator).toIndexedSeq
       shard -> blocks.groupBy(_.term).view.mapValues(_.sortBy(_.block_id)
         .toIndexedSeq).toMap
